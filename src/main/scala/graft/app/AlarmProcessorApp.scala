@@ -166,12 +166,7 @@ object AlarmProcessorApp {
     val fkQ = startFkQuery(spark, paths, trigger)
     val regQ = startRegQuery(spark, paths, trigger)
 
-    // GRAFT_STATE_API=tws runs the chain on transformWithState (state v2,
-    // RocksDB required); default is the FMGWS form. Same step fold either way.
-    val chainOut =
-      if (sys.env.get("GRAFT_STATE_API").contains("tws"))
-        UnifiedAlarmRule.runTws(unifiedInputs(spark, paths))
-      else UnifiedAlarmRule.run(unifiedInputs(spark, paths))
+    val chainOut = UnifiedAlarmRule.run(unifiedInputs(spark, paths))
 
     // T8/T9 expiration branch: overrides stream -> processing-time timers ->
     // tombstone emissions, unioned into the same sink/feedback path.

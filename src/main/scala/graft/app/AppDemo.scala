@@ -22,11 +22,6 @@ object AppDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_STATE_API=tws reruns the whole demo on transformWithState,
-    // which requires the RocksDB state store.
-    if (sys.env.get("GRAFT_STATE_API").contains("tws"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val root = Files.createTempDirectory("graft-app").toString

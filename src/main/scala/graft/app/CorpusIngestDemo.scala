@@ -21,19 +21,11 @@ import graft.functions.{Dedup, TextFunctions}
  */
 object CorpusIngestDemo {
   def main(args: Array[String]): Unit = {
-    // GRAFT_STATE_API=tws reruns the scripted scenario with the near-dup
-    // bucket on transformWithState (state v2 + RocksDB, event-time
-    // eviction timers) instead of flatMapGroupsWithState — the same
-    // switch the alarm demos honor.
-    val useTws = sys.env.get("GRAFT_STATE_API").contains("tws")
-    val builder = SparkSession.builder().master("local[4]")
+    val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    if (useTws) builder.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
@@ -59,14 +51,8 @@ object CorpusIngestDemo {
       .option("checkpointLocation", s"$root/chk1").start()
 
     // Query 2: cross-batch near-dup flags (banded minhash bucket state).
-    val nearDups =
-      if (useTws)
-        Dedup.nearDupStreamTws(src, "doc_id", "text", "ts",
-          watermark = "10 minutes", threshold = 0.5)
-      else
-        Dedup.nearDupStream(src, "doc_id", "text", "ts",
-          watermark = "10 minutes", threshold = 0.5)
-    val q2 = nearDups
+    val q2 = Dedup.nearDupStream(src, "doc_id", "text", "ts",
+        watermark = "10 minutes", threshold = 0.5)
       .writeStream.format("parquet").outputMode("append")
       .option("path", pairsDir)
       .option("checkpointLocation", s"$root/chk2").start()
@@ -106,7 +92,7 @@ object CorpusIngestDemo {
     assert((1L, 4L) match { case p => flagged.contains(p) },
       s"exact re-crawl also collides in every band: $flagged")
 
-    println(s"[demo] CorpusIngestDemo PASS (${if (useTws) "tws" else "fmgws"}): " +
+    println("[demo] CorpusIngestDemo PASS: " +
       "junk gated, re-crawl suppressed within watermark, cross-batch " +
       "near-dup flagged, manifest = " + manifest.toSeq.sorted.mkString(","))
     q1.stop(); q2.stop()

@@ -18,11 +18,6 @@ object RecoveryDemo {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_STATE_API=tws replays the kill/restart scenario with the chain
-    // on transformWithState (RocksDB-checkpointed named state).
-    if (sys.env.get("GRAFT_STATE_API").contains("tws"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val root = Files.createTempDirectory("graft-recovery").toString

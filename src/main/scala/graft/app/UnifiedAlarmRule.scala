@@ -132,51 +132,14 @@ object UnifiedAlarmRule {
   }
 
   /**
-   * [[run]] on the `transformWithState` API (state v2, RocksDB): the whole
-   * per-alarm chain state in one named ValueState, the same seq-ordered
-   * [[step]] fold — selected in the app via `GRAFT_STATE_API=tws`.
+   * The streaming operator: union of changelogs in, tagged outputs out.
+   *
+   * Within a micro-batch a group's iterator is UNORDERED, so each alarm's
+   * records are sorted by `(seq, subSeq)` (the Kafka (partition, offset)
+   * analogue) before the [[step]] fold — the reference gets this ordering
+   * for free from Kafka partition order (`ActivationRule.java:25-27`
+   * javadoc).
    */
-  def runTws(inputs: Dataset[AlarmInput]): Dataset[ChainOutput] = {
-    val spark = inputs.sparkSession
-    import spark.implicits._
-    inputs.groupByKey(_.name)
-      .transformWithState(
-        new ChainProcessor,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
-  }
-
-  private final class ChainProcessor
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, AlarmInput, ChainOutput] {
-
-    @transient private var st:
-      org.apache.spark.sql.streaming.ValueState[AlarmKeyState] = _
-
-    override def init(
-        outputMode: OutputMode,
-        timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      st = getHandle.getValueState[AlarmKeyState]("chain",
-        org.apache.spark.sql.Encoders.product[AlarmKeyState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[AlarmInput],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[ChainOutput] = {
-      var cur = if (st.exists()) st.get() else AlarmKeyState()
-      val out = Seq.newBuilder[ChainOutput]
-      rows.toSeq.sortBy(r => (r.seq, r.subSeq)).foreach { in =>
-        val (st2, o) = step(cur, in, System.currentTimeMillis())
-        cur = st2
-        out ++= o
-      }
-      st.update(cur)
-      out.result().iterator
-    }
-  }
-
-  /** The streaming operator: union of changelogs in, tagged outputs out. */
   def run(inputs: Dataset[AlarmInput]): Dataset[ChainOutput] = {
     val spark = inputs.sparkSession
     import spark.implicits._

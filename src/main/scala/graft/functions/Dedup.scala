@@ -253,45 +253,22 @@ object Dedup {
   private def bandKeyOf(sig: Array[Long], b: Int): String =
     sig.slice(b * RowsPerBand, (b + 1) * RowsPerBand).mkString("_")
 
-  /** Per-bucket streaming state: (doc id, minhash signature) pairs. */
-  /** FMGWS bucket state: remembered docs plus the newest event time seen
-    * ACROSS batches — the eviction anchor. Tracking it in state (not just
-    * the current batch's max) keeps the timeout monotone when a later
-    * batch delivers older non-late rows; a batch-max-only
-    * `setTimeoutTimestamp` would REGRESS the timeout and evict early,
-    * diverging from the TWS twin (which anchors on the same running max).
+  /** Per-bucket streaming state: remembered (doc id, minhash signature)
+    * pairs plus the newest event time seen ACROSS batches — the eviction
+    * anchor. Tracking it in state (not just the current batch's max)
+    * keeps the timeout monotone when a later batch delivers older
+    * non-late rows; a batch-max-only `setTimeoutTimestamp` would REGRESS
+    * the timeout and evict early, missing pairs with rows that arrive
+    * inside the true (maxTs, maxTs + delay] window.
     *
     * CHECKPOINT COMPATIBILITY: adding `newestTs` (round 6) changed the
-    * state encoder schema, and the TWS twin re-anchored its timers at
-    * `newestTs + delayMs`. A [[nearDupStream]]/[[nearDupStreamTws]] query
-    * restarted from a PRE-round-6 checkpoint will fail (or misdecode) on
-    * state restore / fire orphaned timers armed at the bare timestamp —
+    * state encoder schema. A [[nearDupStream]] query restarted from a
+    * PRE-round-6 checkpoint will fail (or misdecode) on state restore —
     * restart such queries with a FRESH checkpoint directory. */
   final case class NearDupBucket(docs: Seq[(Long, Seq[Long])], newestTs: Long = 0L)
 
-  /**
-   * STREAMING near-dup detection: each arriving document's minhash
-   * signature lands in its NumBands (band, key) buckets; a bucket
-   * remembers (id, signature) of documents inside the watermark horizon
-   * and a new arrival emits a match against each remembered document
-   * whose signature similarity (fraction of agreeing minhash slots —
-   * the unbiased Jaccard estimator) clears `threshold`.
-   *
-   * Output: (band, id_a, id_b, est_jaccard, ts), id_a = the earlier
-   * arrival. Emissions are AT-LEAST-ONCE per colliding band by design:
-   * a second stateful operator behind flatMapGroupsWithState is not
-   * supported in one query, so cross-band dedup belongs downstream
-   * (sink-side distinct, or dropDuplicatesWithinWatermark across a
-   * topic hop — the AlarmProcessorApp pattern).
-   *
-   * State is bounded two ways: the event-time timeout evicts a bucket
-   * once the watermark passes its newest arrival, and `maxPerBucket`
-   * caps a degenerate hot bucket (a stream of identical documents) —
-   * the streaming analogue of the batch RowsPerBand dial; oldest
-   * entries fall out first.
-   */
-  /** The banded (band, key, id, sig, ts) stream both streaming forms
-    * consume — one minhash pass, watermarked on the event-time column. */
+  /** The banded (band, key, id, sig, ts) stream [[nearDupStream]]
+    * consumes — one minhash pass, watermarked on the event-time column. */
   private def bandedStream(
       df: DataFrame, idCol: String, textCol: String, tsCol: String,
       watermark: String): org.apache.spark.sql.Dataset[
@@ -315,8 +292,8 @@ object Dedup {
       .as[(Int, String, Long, Seq[Long], java.sql.Timestamp)]
   }
 
-  /** Match emission against the remembered bucket — the one comparison
-    * loop both streaming forms run. Returns (matches, updated docs). */
+  /** Match emission against the remembered bucket — [[nearDupStream]]'s
+    * comparison loop. Returns (matches, updated docs). */
   private[functions] def bucketStep(
       docs: Vector[(Long, Seq[Long])],
       rows: Seq[(Int, String, Long, Seq[Long], java.sql.Timestamp)],
@@ -344,6 +321,31 @@ object Dedup {
     (out.result(), cur)
   }
 
+  /**
+   * STREAMING near-dup detection: each arriving document's minhash
+   * signature lands in its NumBands (band, key) buckets; a bucket
+   * remembers (id, signature) of documents inside the watermark horizon
+   * and a new arrival emits a match against each remembered document
+   * whose signature similarity (fraction of agreeing minhash slots —
+   * the unbiased Jaccard estimator) clears `threshold`.
+   *
+   * Output: (band, id_a, id_b, est_jaccard, ts), id_a = the earlier
+   * arrival. Emissions are AT-LEAST-ONCE per colliding band by design:
+   * a second stateful operator behind flatMapGroupsWithState is not
+   * supported in one query, so cross-band dedup belongs downstream
+   * (sink-side distinct, or dropDuplicatesWithinWatermark across a
+   * topic hop — the AlarmProcessorApp pattern).
+   *
+   * State is bounded two ways: the event-time timeout evicts a bucket
+   * once the watermark passes its newest arrival PLUS the watermark
+   * delay (`setTimeoutTimestamp(maxTs, watermark)`) — so a non-late row
+   * with event time in (maxTs, maxTs + delay] still finds the bucket
+   * alive; a bare-maxTs timeout would evict a full delay earlier and
+   * silently miss those pairs — and `maxPerBucket`
+   * caps a degenerate hot bucket (a stream of identical documents) —
+   * the streaming analogue of the batch RowsPerBand dial; oldest
+   * entries fall out first.
+   */
   def nearDupStream(
       df: DataFrame,
       idCol: String,
@@ -369,8 +371,7 @@ object Dedup {
             val rowSeq = rows.toSeq
             // Anchor eviction on the newest event time EVER seen, not the
             // batch max: an out-of-order batch of older rows must not
-            // pull the timeout backward (the TWS twin keeps the same
-            // running max, so the two forms stay in lockstep).
+            // pull the timeout backward.
             val maxTs = math.max(
               prev.map(_.newestTs).getOrElse(0L),
               rowSeq.iterator.map(_._5.getTime).max)
@@ -380,55 +381,6 @@ object Dedup {
             out.iterator
           }
       }
-      .toDF("band", "id_a", "id_b", "est_jaccard", "ts")
-  }
-
-  /** Per-bucket state for the transformWithState form: remembered docs
-    * plus the newest arrival's event time (eviction bookkeeping). */
-  final case class NearDupBucketTws(docs: Seq[(Long, Seq[Long])], newestTs: Long)
-
-  /** The watermark delay as milliseconds — parsed with the same interval
-    * parser `Dataset.withWatermark` uses, so the TWS eviction timer can be
-    * armed at newestTs + delay, the instant FMGWS's
-    * `setTimeoutTimestamp(ts, delay)` fires at. Month-based intervals are
-    * rejected (no fixed millisecond width), as withWatermark itself does. */
-  private[functions] def watermarkDelayMs(watermark: String): Long = {
-    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-      .fromIntervalString(watermark)
-    require(iv.months == 0,
-      s"watermark '$watermark': month intervals have no fixed ms width")
-    iv.days * org.apache.spark.sql.catalyst.util.DateTimeConstants.MILLIS_PER_DAY +
-      iv.microseconds / 1000
-  }
-
-  /**
-   * [[nearDupStream]] on the modern `transformWithState` API (state v2,
-   * named ValueState + EVENT-TIME timers on RocksDB): same banded pass,
-   * same [[bucketStep]] comparison loop, so the two forms cannot diverge
-   * semantically. Eviction uses a real event-time timer re-armed at each
-   * bucket's newest arrival PLUS the watermark delay — the exact instant
-   * the FMGWS form's `setTimeoutTimestamp(maxTs, watermark)` fires at, so
-   * a non-late row with event time in (maxTs, maxTs + delay] still finds
-   * the bucket alive on both APIs (a bare-maxTs timer would evict a full
-   * delay earlier and silently miss those pairs).
-   */
-  def nearDupStreamTws(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      tsCol: String,
-      watermark: String,
-      threshold: Double,
-      maxPerBucket: Int = 64): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    bandedStream(df, idCol, textCol, tsCol, watermark)
-      .groupByKey(r => (r._1, r._2))
-      .transformWithState(
-        new NearDupBucketProcessor(threshold, maxPerBucket,
-          watermarkDelayMs(watermark)),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
       .toDF("band", "id_a", "id_b", "est_jaccard", "ts")
   }
 
@@ -2011,12 +1963,11 @@ object Dedup {
    *    remains the intended shape for index MAINTENANCE; this operator
    *    is the low-latency read path over the same artifact.
    *
-   * There is intentionally NO FMGWS/TWS twin: the screen keeps no
-   * cross-doc state — a stateless enrich plus one built-in aggregation —
-   * so a custom stateful processor would only re-implement the
-   * aggregation's watermark bookkeeping (contrast [[nearDupStream]],
-   * whose bucket memory is genuinely cross-doc and therefore exists on
-   * both state APIs).
+   * There is intentionally NO custom stateful processor: the screen
+   * keeps no cross-doc state — a stateless enrich plus one built-in
+   * aggregation — so one would only re-implement the aggregation's
+   * watermark bookkeeping (contrast [[nearDupStream]], whose bucket
+   * memory is genuinely cross-doc).
    */
   def chunkScreenStream(
       df: DataFrame,
@@ -2193,67 +2144,5 @@ object Dedup {
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
         coalesce(col("lm_score_micro"), lit(0L)).as("lm_score_micro"))
-  }
-}
-
-/**
- * `StatefulProcessor` form of the banded near-dup bucket for
- * [[Dedup.nearDupStreamTws]]: the remembered (id, signature) docs live in
- * a named ValueState; an event-time timer re-armed at each newest
- * arrival's timestamp + the watermark delay evicts the bucket at the same
- * instant the FMGWS form's `setTimeoutTimestamp(maxTs, watermark)` would
- * (the state-v2 EventTimeTimeout analogue — TWS timers take an absolute
- * instant, so the delay the FMGWS API adds implicitly is added here
- * explicitly). Match emission is [[Dedup.bucketStep]], shared verbatim
- * with the FMGWS form.
- */
-private final class NearDupBucketProcessor(
-    threshold: Double, maxPerBucket: Int, delayMs: Long)
-  extends org.apache.spark.sql.streaming.StatefulProcessor[
-    (Int, String),
-    (Int, String, Long, Seq[Long], java.sql.Timestamp),
-    (Int, Long, Long, Double, java.sql.Timestamp)] {
-
-  @transient private var bucket:
-    org.apache.spark.sql.streaming.ValueState[Dedup.NearDupBucketTws] = _
-
-  override def init(
-      outputMode: org.apache.spark.sql.streaming.OutputMode,
-      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-    bucket = getHandle.getValueState[Dedup.NearDupBucketTws]("bucket",
-      org.apache.spark.sql.Encoders.product[Dedup.NearDupBucketTws],
-      org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-  override def handleInputRows(
-      key: (Int, String),
-      rows: Iterator[(Int, String, Long, Seq[Long], java.sql.Timestamp)],
-      timerValues: org.apache.spark.sql.streaming.TimerValues)
-      : Iterator[(Int, Long, Long, Double, java.sql.Timestamp)] = {
-    val prev = if (bucket.exists()) Some(bucket.get()) else None
-    val rowSeq = rows.toSeq
-    val maxTs = math.max(
-      prev.map(_.newestTs).getOrElse(0L),
-      rowSeq.iterator.map(_._5.getTime).max)
-    val (out, next) = Dedup.bucketStep(
-      prev.map(_.docs.toVector).getOrElse(Vector.empty),
-      rowSeq, threshold, maxPerBucket, key._1)
-    prev.filter(_.newestTs < maxTs)
-      .foreach(p => getHandle.deleteTimer(p.newestTs + delayMs))
-    bucket.update(Dedup.NearDupBucketTws(next, maxTs))
-    getHandle.registerTimer(maxTs + delayMs)
-    out.iterator
-  }
-
-  override def handleExpiredTimer(
-      key: (Int, String),
-      timerValues: org.apache.spark.sql.streaming.TimerValues,
-      expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-      : Iterator[(Int, Long, Long, Double, java.sql.Timestamp)] = {
-    // Only the CURRENT newest arrival's timer evicts; a stale timer from
-    // a superseded arrival (already deleted, but belt-and-braces) no-ops.
-    if (bucket.exists() &&
-        bucket.get().newestTs + delayMs <= expiredTimerInfo.getExpiryTimeInMs())
-      bucket.clear()
-    Iterator.empty
   }
 }

@@ -356,22 +356,28 @@ object BinFamily {
       // exports are independent jobs — overlap them on driver threads
       // (guide §2.6): the later epochs' tasks back-fill the cores the
       // earlier epochs' stage tails leave idle. Job descriptions are
-      // thread-local, so each export labels its own jobs.
+      // thread-local, so each export labels its own jobs — and restores
+      // the thread's previous label, since the serial path runs on the
+      // caller's thread.
       def exportOne(i: Int): Unit = {
         val (epochId, packedBatch) = group(i)
         val b = base + i.toLong * shardsPerEpoch
-        spark.sparkContext.setJobDescription(
+        val sc = spark.sparkContext
+        val callerDescription = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(
           s"$fn: epoch $epochId span [$b, ${b + shardsPerEpoch})")
-        val shifted = packedBatch
-          .withColumn("shard", col("shard").cast("long") + b)
-        if (sft)
-          BinShards.exportSftShardFiles(shifted, genDir, budget,
-            shardsPerEpoch, confSer, minShard = b,
-            maxShardExcl = b + shardsPerEpoch)
-        else
-          BinShards.exportPackedShardFiles(shifted, genDir, budget,
-            shardsPerEpoch, confSer, minShard = b,
-            maxShardExcl = b + shardsPerEpoch)
+        try {
+          val shifted = packedBatch
+            .withColumn("shard", col("shard").cast("long") + b)
+          if (sft)
+            BinShards.exportSftShardFiles(shifted, genDir, budget,
+              shardsPerEpoch, confSer, minShard = b,
+              maxShardExcl = b + shardsPerEpoch)
+          else
+            BinShards.exportPackedShardFiles(shifted, genDir, budget,
+              shardsPerEpoch, confSer, minShard = b,
+              maxShardExcl = b + shardsPerEpoch)
+        } finally sc.setJobDescription(callerDescription)
       }
       val inFlight = math.min(group.size, maxConcurrent(spark))
       if (inFlight == 1) group.indices.foreach(exportOne)

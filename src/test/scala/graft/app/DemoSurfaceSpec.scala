@@ -29,7 +29,7 @@ class DemoSurfaceSpec extends AnyFunSuite {
     IncrementalIngestDemo.main(Array.empty)
   }
 
-  test("CorpusIngestDemo: streaming ingest screens on both state APIs", Slow) {
+  test("CorpusIngestDemo: streaming ingest screens: quality gate, re-crawl suppression, near-dup flags", Slow) {
     CorpusIngestDemo.main(Array.empty)
   }
 

@@ -280,6 +280,19 @@ class BinFamilySpec extends AnyFunSuite {
       compactEvery = 2) == -1L)
   }
 
+  test("append restores the caller's job description after the serial export") {
+    val sc = spark.sparkContext
+    val root = Files.createTempDirectory("binfam-desc-").toString
+    sc.setJobDescription("caller label")
+    try {
+      BinFamily.appendEpoch(pack(0), root, budget, span, "e0")
+      assert(sc.getLocalProperty("spark.job.description") == "caller label")
+    } finally sc.setJobDescription(null)
+    // An unlabelled caller stays unlabelled.
+    BinFamily.appendEpoch(pack(1), root, budget, span, "e1")
+    assert(sc.getLocalProperty("spark.job.description") == null)
+  }
+
   test("repackSequences validates the packed invariant loud") {
     val bad = Seq((0L, 0L, Array(1, 2), 2L), (0L, 1L, Array(3, 4, 5), 3L))
       .toDF("shard", "seq", "ids", "n_ids") // non-final short at budget 3

@@ -2,18 +2,30 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.app.UnifiedAlarmRule
+import graft.app.UnifiedAlarmRule.{AlarmInput, AlarmKeyState, ChainOutput, Kind}
 import graft.model._
 
 /**
  * MemoryStream ports of the reference's TopologyTestDriver scenarios
- * (SURVEY.md §5): transition sequences (ActivationRuleTest:222-275), latch
- * start/stop (LatchRuleTest), oneshot idempotence (OneShotRuleTest:148-168),
+ * (SURVEY.md §5), run through the app's monolog chain
+ * ([[UnifiedAlarmRule.run]]): transition sequences (ActivationRuleTest:222-275),
+ * latch start/stop (LatchRuleTest), oneshot idempotence (OneShotRuleTest:148-168),
  * tombstone protection (ActivationRuleTest:136-149), and the 5s
- * shelve-expiration round trip (ShelveExpirationRuleTest:61-102).
+ * shelve-expiration round trip (ShelveExpirationRuleTest:61-102) on
+ * [[StreamRules.expirationTimers]].
+ *
+ * Each chain scenario is named after the reference rule it exercises
+ * (T1 transitionDetect, T2 latchRule, T3 onDelayRule, T4 oneShotRule,
+ * T6 effectiveStateRule). A rule's flags are observed through what the
+ * chain emits: settled effective states (T6 drops mid-transition
+ * records, so latching/ondelaying/unshelving show as suppression) and
+ * override emissions (transitionToActive as the Latched/OnDelayed
+ * emission, transitionToNormal as the oneshot unshelve tombstone).
  */
 class StreamRulesSpec extends AnyFunSuite {
 
@@ -21,173 +33,225 @@ class StreamRulesSpec extends AnyFunSuite {
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.ui.enabled", "false")
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     .getOrCreate()
 
   import spark.implicits._
 
   private val ids = new AtomicInteger(0)
 
-  /** Run a streaming transform over batches of input, synchronously. */
-  private def runStream[I: Encoder, O: Encoder](batches: Seq[Seq[I]])(
-      f: Dataset[I] => Dataset[O]): Seq[Seq[O]] = {
+  /** Run [[UnifiedAlarmRule.run]] over batches of input, synchronously;
+    * returns each batch's fresh outputs. */
+  private def chain(batches: Seq[AlarmInput]*): Seq[Seq[ChainOutput]] = {
     implicit val sq = spark.sqlContext
     val qn = s"out${ids.incrementAndGet()}"
-    val ms = MemoryStream[I]
-    val q = f(ms.toDS()).writeStream
+    val ms = MemoryStream[AlarmInput]
+    val q = UnifiedAlarmRule.run(ms.toDS()).writeStream
       .format("memory").queryName(qn).outputMode("append")
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graftck").toString)
       .start()
     try {
-      import spark.implicits._
-      var seen = 0L
+      var seen = 0
       batches.map { b =>
         if (b.nonEmpty) ms.addData(b)
         q.processAllAvailable()
-        val all = spark.table(qn).as[O].collect().toSeq
-        val fresh = all.drop(seen.toInt)
+        val all = spark.table(qn).as[ChainOutput].collect().toSeq
+        val fresh = all.drop(seen)
         seen = all.size
         fresh
       }
     } finally q.stop()
   }
 
-  private val active = Some(Activation(ActivationKind.Active))
-  private val noAct = Some(Activation(ActivationKind.NoActivation))
-  private def mono(name: String, act: Option[Activation]): Monolog =
-    Monolog(name, notification = EffectiveNotification(activation = act))
+  // --- chain inputs and observations --------------------------------------
+
+  private def instance(seq: Long, name: String, latchable: Boolean = false,
+      ondelay: Option[Long] = None): AlarmInput =
+    AlarmInput(seq, name, Kind.Instance,
+      alarm = Some(Alarm(action = Some("cls"))),
+      action = Some(AlarmAction(latchable = latchable, ondelayseconds = ondelay)))
+
+  private def act(seq: Long, name: String, union: String): AlarmInput =
+    AlarmInput(seq, name, Kind.ActivationK, activation = Some(Activation(union)))
+
+  private def setOverride(seq: Long, name: String, o: AlarmOverride): AlarmInput =
+    AlarmInput(seq, name, Kind.Override,
+      overrideType = Some(o.overrideType), overrideValue = Some(o))
+
+  private def shelve(seq: Long, name: String, oneshot: Boolean): AlarmInput =
+    setOverride(seq, name, AlarmOverride(OverrideType.Shelved,
+      oneshot = Some(oneshot), expiration = Some(99999L)))
+
+  private def clearOverride(seq: Long, name: String, t: String): AlarmInput =
+    AlarmInput(seq, name, Kind.Override, overrideType = Some(t), tombstone = true)
+
+  private val Active = ActivationKind.Active
+  private val NoActivation = ActivationKind.NoActivation
+
+  /** Settled (name, state) pairs; stable within an alarm, sorted across. */
+  private def states(out: Seq[ChainOutput]): Seq[(String, String)] =
+    out.flatMap(_.effective).map(e => (e.name, e.notification.state)).sortBy(_._1)
+
+  private def emissions(out: Seq[ChainOutput]): Seq[OverrideEmission] =
+    out.flatMap(_.emission).sortBy(_.name)
+
+  private def latched(name: String) = OverrideEmission(name, OverrideType.Latched,
+    Some(AlarmOverride(OverrideType.Latched)))
+  private def unshelve(name: String) = OverrideEmission(name, OverrideType.Shelved, None)
 
   // --- T1 transition detect ----------------------------------------------
 
   test("transitionDetect: active/active/normal sequence sets flags once each way") {
-    val recs = Seq(
-      Seq(MonologRecord(1, "a", Some(mono("a", active)))),
-      Seq(MonologRecord(2, "a", Some(mono("a", active)))),
-      Seq(MonologRecord(3, "a", Some(mono("a", noAct)))),
-      Seq(MonologRecord(4, "a", Some(mono("a", noAct)))))
-    val out = runStream(recs)(StreamRules.transitionDetect).map(_.head.value.get.transitions)
-    assert(out(0).transitionToActive && !out(0).transitionToNormal)
-    assert(!out(1).transitionToActive && !out(1).transitionToNormal)
-    assert(!out(2).transitionToActive && out(2).transitionToNormal)
-    assert(!out(3).transitionToActive && !out(3).transitionToNormal)
+    // "up" (latchable) shows transitionToActive as its Latched emission;
+    // "down" (oneshot-shelved) shows transitionToNormal as its unshelve
+    // tombstone. Both see the same activation sequence.
+    def both(seq: Long, union: String) = Seq(act(seq, "up", union), act(seq, "down", union))
+    val out = chain(
+      Seq(instance(1, "up", latchable = true), shelve(1, "down", oneshot = true)),
+      both(2, Active),
+      both(3, Active),
+      both(4, NoActivation),
+      both(5, NoActivation))
+    assert(out.map(emissions) == Seq(Nil, Seq(latched("up")), Nil, Seq(unshelve("down")), Nil))
+    val shelved = Seq("down" -> AlarmState.NormalOneShotShelved)
+    assert(out.map(states) == Seq(
+      Seq("down" -> AlarmState.NormalOneShotShelved, "up" -> AlarmState.Normal),
+      shelved, shelved, // "up" is latching from here on
+      Nil, Nil))        // "down" is unshelving
   }
 
   test("transitionDetect: in-batch ordering by seq (flap within one micro-batch)") {
-    val batch = Seq(
-      MonologRecord(2, "a", Some(mono("a", noAct))),
-      MonologRecord(1, "a", Some(mono("a", active))))
-    val out = runStream(Seq(batch))(StreamRules.transitionDetect).head
-      .sortBy(_.seq).map(_.value.get.transitions)
-    assert(out(0).transitionToActive)
-    assert(out(1).transitionToNormal)
+    // One batch delivers the flap out of seq order. Folded by seq it is
+    // Active (transitionToActive: Latched emission) then NoActivation
+    // (transitionToNormal: unshelve tombstone); folded in arrival order
+    // it would be a no-op NoActivation followed by a fresh activation.
+    val out = chain(
+      Seq(instance(1, "a", latchable = true), shelve(2, "a", oneshot = true)),
+      Seq(act(4, "a", NoActivation), act(3, "a", Active)))
+    assert(emissions(out(1)) == Seq(latched("a"), unshelve("a")))
   }
 
   test("transitionDetect: tombstone-protection yields empty monolog + transitionToNormal") {
-    val recs = Seq(
-      Seq(MonologRecord(1, "a", Some(mono("a", active)))),
-      Seq(MonologRecord(2, "a", None)))
-    val out = runStream(recs)(StreamRules.transitionDetect)
-    val last = out(1).head.value.get
-    assert(last.registration == EffectiveRegistration())
-    assert(last.transitions.transitionToNormal)
+    // Tombstoning the registration and the activation leaves an EMPTY
+    // effective alarm, not a vanished one, and the activation tombstone
+    // is a transition to normal (seen as the oneshot unshelve).
+    val out = chain(
+      Seq(instance(1, "a"), act(2, "a", Active), shelve(3, "a", oneshot = true)),
+      Seq(AlarmInput(4, "a", Kind.Instance, tombstone = true),
+        AlarmInput(5, "a", Kind.ActivationK, tombstone = true)),
+      Seq(clearOverride(6, "a", OverrideType.Shelved)))
+    assert(out(1).flatMap(_.effective).map(e => (e.registration, e.notification.state)) ==
+      Seq((EffectiveRegistration(), AlarmState.NormalOneShotShelved)))
+    assert(emissions(out(1)) == Seq(unshelve("a")))
+    assert(out(2).flatMap(_.effective) ==
+      Seq(EffectiveAlarm("a", EffectiveRegistration(), EffectiveNotification())))
   }
 
   // --- T2 latch ----------------------------------------------------------
 
-  private def latchableMono(name: String, tta: Boolean = false, latched: Boolean = false): Monolog =
-    Monolog(name,
-      registration = EffectiveRegistration(action = Some(AlarmAction(latchable = true))),
-      notification = EffectiveNotification(overrides =
-        if (latched) AlarmOverrideSet(latched = Some(AlarmOverride(OverrideType.Latched)))
-        else AlarmOverrideSet()),
-      transitions = ProcessorTransitions(transitionToActive = tta))
-
   test("latchRule: emits Latched override + latching flag, cleared when override lands") {
-    val recs = Seq(
-      Seq(MonologRecord(1, "a", Some(latchableMono("a", tta = true)))),
-      Seq(MonologRecord(2, "a", Some(latchableMono("a")))), // still latching (no override yet)
-      Seq(MonologRecord(3, "a", Some(latchableMono("a", latched = true)))))
-    val out = runStream(recs)(StreamRules.latchRule)
-    assert(out(0).head.monolog.transitions.latching)
-    assert(out(0).head.emission.exists(e =>
-      e.overrideType == OverrideType.Latched && e.value.isDefined))
-    assert(out(1).head.monolog.transitions.latching) // in-progress persists
-    assert(out(1).head.emission.isEmpty)
-    assert(!out(2).head.monolog.transitions.latching) // override clears it
+    val out = chain(
+      Seq(instance(1, "a", latchable = true)),
+      Seq(act(2, "a", Active)),
+      Seq(act(3, "a", Active)), // still latching (no override yet)
+      Seq(setOverride(4, "a", AlarmOverride(OverrideType.Latched))))
+    assert(out.map(emissions) == Seq(Nil, Seq(latched("a")), Nil, Nil))
+    // Latching suppresses until the override lands and settles the alarm.
+    assert(out.map(states) ==
+      Seq(Seq("a" -> AlarmState.Normal), Nil, Nil, Seq("a" -> AlarmState.ActiveLatched)))
   }
 
   test("latchRule: non-latchable alarm passes through untouched") {
-    val m = mono("b", active).copy(transitions = ProcessorTransitions(transitionToActive = true))
-    val out = runStream(Seq(Seq(MonologRecord(1, "b", Some(m)))))(StreamRules.latchRule)
-    assert(!out.head.head.monolog.transitions.latching)
-    assert(out.head.head.emission.isEmpty)
+    val out = chain(Seq(instance(1, "b"), act(2, "b", Active)))
+    assert(states(out.head) == Seq("b" -> AlarmState.Normal, "b" -> AlarmState.Active))
+    assert(emissions(out.head).isEmpty)
   }
 
   // --- T3 ondelay ---------------------------------------------------------
 
   test("onDelayRule: emits OnDelayed override with future expiration; cleared by override") {
-    def m(tta: Boolean, ondelayed: Boolean) = Monolog("a",
-      registration = EffectiveRegistration(action = Some(AlarmAction(ondelayseconds = Some(5L)))),
-      notification = EffectiveNotification(overrides =
-        if (ondelayed) AlarmOverrideSet(ondelayed = Some(AlarmOverride(OverrideType.OnDelayed)))
-        else AlarmOverrideSet()),
-      transitions = ProcessorTransitions(transitionToActive = tta))
     val before = System.currentTimeMillis()
-    val recs = Seq(
-      Seq(MonologRecord(1, "a", Some(m(tta = true, ondelayed = false)))),
-      Seq(MonologRecord(2, "a", Some(m(tta = false, ondelayed = true)))))
-    val out = runStream(recs)(StreamRules.onDelayRule)
-    assert(out(0).head.monolog.transitions.ondelaying)
-    val em = out(0).head.emission.get
-    assert(em.overrideType == OverrideType.OnDelayed)
-    val exp = em.value.flatMap(_.expiration).get
+    val out = chain(
+      Seq(instance(1, "a", ondelay = Some(5L))),
+      Seq(act(2, "a", Active)),
+      Seq(setOverride(3, "a",
+        AlarmOverride(OverrideType.OnDelayed, expiration = Some(before + 5000)))))
+    assert(states(out(1)).isEmpty) // ondelaying suppresses
+    val em = emissions(out(1))
+    assert(em.map(_.overrideType) == Seq(OverrideType.OnDelayed))
+    val exp = em.head.value.flatMap(_.expiration).get
     assert(exp >= before + 5000 && exp <= System.currentTimeMillis() + 5000)
-    assert(!out(1).head.monolog.transitions.ondelaying) // override landed
-    assert(out(1).head.emission.isEmpty)
+    assert(states(out(2)) == Seq("a" -> AlarmState.NormalOnDelayed)) // override landed
+    assert(emissions(out(2)).isEmpty)
   }
 
   // --- T4 oneshot (idempotence, OneShotRuleTest:148-168) ------------------
 
-  private def shelvedMono(name: String, oneshot: Boolean, ttn: Boolean): Monolog =
-    Monolog(name,
-      notification = EffectiveNotification(overrides =
-        AlarmOverrideSet(shelved = Some(
-          AlarmOverride(OverrideType.Shelved, oneshot = Some(oneshot), expiration = Some(99999L))))),
-      transitions = ProcessorTransitions(transitionToNormal = ttn))
-
   test("oneShotRule: unshelve tombstone on transitionToNormal, idempotent across records") {
-    val recs = Seq(
-      Seq(MonologRecord(1, "a", Some(shelvedMono("a", oneshot = true, ttn = true)))),
-      // in-progress persists while still shelved
-      Seq(MonologRecord(2, "a", Some(shelvedMono("a", oneshot = true, ttn = false)))),
-      // shelve removed -> store cleared, no flag
-      Seq(MonologRecord(3, "a", Some(mono("a", noAct)))))
-    val out = runStream(recs)(StreamRules.oneShotRule)
-    assert(out(0).head.monolog.transitions.unshelving)
-    assert(out(0).head.emission.exists(e => e.overrideType == OverrideType.Shelved && e.value.isEmpty))
-    assert(out(1).head.monolog.transitions.unshelving)
-    assert(out(1).head.emission.isEmpty) // no ttn -> no new tombstone
-    assert(!out(2).head.monolog.transitions.unshelving)
+    val out = chain(
+      Seq(act(1, "a", Active), shelve(2, "a", oneshot = true)),
+      Seq(act(3, "a", NoActivation)),
+      // in-progress persists while still shelved: suppressed, no new tombstone
+      Seq(act(4, "a", NoActivation)),
+      // shelve removed -> store cleared, so a new oneshot shelve settles
+      Seq(clearOverride(5, "a", OverrideType.Shelved)),
+      Seq(shelve(6, "a", oneshot = true)))
+    assert(out.map(emissions) == Seq(Nil, Seq(unshelve("a")), Nil, Nil, Nil))
+    assert(out.map(states) == Seq(
+      Seq("a" -> AlarmState.Active, "a" -> AlarmState.NormalOneShotShelved),
+      Nil, Nil,
+      Seq("a" -> AlarmState.Normal),
+      Seq("a" -> AlarmState.NormalOneShotShelved)))
   }
 
   test("oneShotRule: continuous shelve never unshelves") {
-    val out = runStream(Seq(Seq(
-      MonologRecord(1, "a", Some(shelvedMono("a", oneshot = false, ttn = true))))))(
-      StreamRules.oneShotRule)
-    assert(!out.head.head.monolog.transitions.unshelving)
-    assert(out.head.head.emission.isEmpty)
+    val out = chain(
+      Seq(act(1, "a", Active), shelve(2, "a", oneshot = false)),
+      Seq(act(3, "a", NoActivation)))
+    assert(states(out(1)) == Seq("a" -> AlarmState.NormalContinuousShelved))
+    assert(emissions(out(1)).isEmpty)
   }
 
-  // --- T6 stateless ------------------------------------------------------
+  // --- T6 effective state --------------------------------------------------
 
   test("effectiveStateRule: drops transitioning, stamps ladder state") {
-    val settled = mono("a", active)
-    val latching = settled.copy(transitions = ProcessorTransitions(latching = true))
-    val out = runStream(Seq(Seq(settled, latching)))(StreamRules.effectiveStateRule)
-    assert(out.head.map(_.name) == Seq("a"))
-    assert(out.head.head.notification.state == AlarmState.Active)
+    val out = chain(Seq(
+      act(1, "b", Active), // settled
+      instance(1, "a", latchable = true), act(2, "a", Active))) // second is latching
+    assert(states(out.head) == Seq("a" -> AlarmState.Normal, "b" -> AlarmState.Active))
+  }
+
+  // --- streaming vs the pure fold ------------------------------------------
+
+  test("run emits, per alarm, the outputs of a sequential step fold in (seq, subSeq) order") {
+    // No ondelay inputs: its emission stamps the wall clock.
+    val reemitted = instance(6, "b", latchable = true).copy(subSeq = 9L)
+    val batches = Seq(
+      Seq(instance(1, "a", latchable = true), instance(2, "b"), shelve(3, "c", oneshot = true)),
+      // "a" arrives out of seq order within the batch
+      Seq(act(5, "a", NoActivation), act(4, "a", Active), act(4, "b", Active),
+        act(4, "c", Active)),
+      // equal seq on "b": only subSeq puts the class re-emission last
+      Seq(reemitted, instance(6, "b"), setOverride(6, "a", AlarmOverride(OverrideType.Latched)),
+        act(7, "c", NoActivation)),
+      Seq(act(8, "b", NoActivation), act(8, "a", Active),
+        clearOverride(9, "c", OverrideType.Shelved), act(9, "b", Active)))
+    def nameOf(o: ChainOutput): String =
+      o.effective.map(_.name).orElse(o.emission.map(_.name)).get
+    val streamed = chain(batches: _*).flatten.groupBy(nameOf)
+    val folded = batches.flatten.groupBy(_.name).map { case (name, ins) =>
+      name -> ins.sortBy(r => (r.seq, r.subSeq))
+        .foldLeft((AlarmKeyState(), Vector.empty[ChainOutput])) {
+          case ((st, acc), in) =>
+            val (st2, o) = UnifiedAlarmRule.step(st, in, 0L)
+            (st2, acc ++ o)
+        }._2
+    }
+    assert(streamed.keySet == Set("a", "b", "c"))
+    assert(streamed == folded)
+    // The subSeq order is observable: "b" ends latchable, so its last
+    // activation emits a Latched override.
+    assert(streamed("b").last.emission.contains(latched("b")))
   }
 
   // --- T8 expiration -----------------------------------------------------
@@ -245,16 +309,29 @@ class StreamRulesSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  // --- S1 latest ---------------------------------------------------------
-
-  test("latestMonolog: emits only the newest record per key per batch, ignores stale") {
-    val recs = Seq(
-      Seq(
-        MonologRecord(2, "a", Some(mono("a", active))),
-        MonologRecord(1, "a", Some(mono("a", noAct)))),
-      Seq(MonologRecord(1, "a", Some(mono("a", noAct))))) // stale replay
-    val out = runStream(recs)(StreamRules.latestMonolog)
-    assert(out(0).map(_.seq) == Seq(2L))
-    assert(out(1).isEmpty)
+  test("expirationTimers: re-shelve replaces the timer (one firing, not two)") {
+    // Last record wins (`ShelveExpirationRule.java:121-135`): the second
+    // shelve re-arms the alarm's one timer at its own expiration.
+    implicit val sq = spark.sqlContext
+    val ms = MemoryStream[OverrideRecord]
+    val qn = s"exp${ids.incrementAndGet()}"
+    val q = startExpiryQuery(ms, qn)
+    try {
+      val t0 = System.currentTimeMillis()
+      ms.addData(Seq(OverrideRecord(1, "a", OverrideType.Shelved,
+        oneshot = Some(false), expiration = Some(t0 + 2000))))
+      Thread.sleep(800) // arm the first timer
+      ms.addData(Seq(OverrideRecord(2, "a", OverrideType.Shelved,
+        oneshot = Some(false), expiration = Some(System.currentTimeMillis() + 4000))))
+      // Past the first expiration, before the second: the replaced timer
+      // must not have fired.
+      Thread.sleep(math.max(0L, t0 + 3000 - System.currentTimeMillis()))
+      assert(spark.table(qn).count() == 0, "the replaced timer fired")
+      val n = pollCount(qn, _ > 0, 45000)
+      assert(n == 1, "exactly one firing after re-arm")
+      // nothing further fires from the replaced first timer
+      Thread.sleep(2000)
+      assert(spark.table(qn).count() == 1)
+    } finally q.stop()
   }
 }

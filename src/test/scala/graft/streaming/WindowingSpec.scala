@@ -232,4 +232,141 @@ class WindowingSpec extends AnyFunSuite {
         s"each pair reaches the final sink exactly once: $finalRows")
     } finally q2.stop()
   }
+
+  /** Run [[graft.functions.Dedup.nearDupStream]] (10-minute watermark,
+    * threshold 0.5) over the batches; return the emitted (id_a, id_b). */
+  private def nearDupPairs(qn: String,
+      batches: Seq[Seq[(Long, String, Timestamp)]]): Set[(Long, Long)] = {
+    implicit val sq = spark.sqlContext
+    val ms = MemoryStream[(Long, String, Timestamp)]
+    val q = graft.functions.Dedup.nearDupStream(
+        ms.toDS().toDF("doc_id", "text", "ts"),
+        "doc_id", "text", "ts", "10 minutes", threshold = 0.5)
+      .writeStream.format("memory").queryName(qn).outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory(qn).toString)
+      .start()
+    try {
+      batches.foreach { b => ms.addData(b); q.processAllAvailable() }
+      spark.table(qn).select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    } finally q.stop()
+  }
+
+  private val sim1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+  private val sim2 = sim1 + " lambda"
+  private val other = "completely different text about unrelated material here"
+
+  test("streaming near-dup: bucket survives the watermark passing maxTs (evicts at maxTs + delay)") {
+    // The eviction-gap probe: doc 1 lands at t=1min; an unrelated doc at
+    // t=12min advances the watermark to 2min (delay 10min) — PAST doc 1's
+    // bucket maxTs but BEFORE maxTs + delay. A near-dup of doc 1 then
+    // arrives at t=5min: non-late (5 > watermark 2), inside the
+    // (maxTs, maxTs + delay] window. setTimeoutTimestamp(maxTs, watermark)
+    // keeps the bucket until 11min, so the pair (1, 2) is emitted; a
+    // timeout at bare maxTs would have evicted at 2min and missed it.
+    val pairs = nearDupPairs("ndgap", Seq(
+      Seq((1L, sim1, ts(1))),
+      Seq((99L, other, ts(12))),
+      Seq((2L, sim2, ts(5)))))
+    assert(pairs.contains((1L, 2L)), s"evicted early and missed the gap-window pair: $pairs")
+  }
+
+  test("streaming near-dup: eviction anchor survives an out-of-order batch") {
+    // A later batch delivering an OLDER (non-late) row into the same
+    // bucket must not pull the eviction time backward: doc 1 lands at
+    // t=12min (anchor 12, evicts at 22); doc 98, a near-dup at t=5min,
+    // arrives in the NEXT batch — a batch-max-only setTimeoutTimestamp
+    // would regress the timeout to 15min. An unrelated doc at t=26min
+    // then pushes the watermark to 16min (past the regressed timeout,
+    // before the true one), and doc 2 arrives at t=18min: with the
+    // running-max anchor the bucket is still held and (1, 2) is emitted;
+    // the regressed form would have evicted and missed it.
+    val pairs = nearDupPairs("ndorder", Seq(
+      Seq((1L, sim1, ts(12))),
+      Seq((98L, sim1 + " mu", ts(5))), // older non-late near-dup, same buckets
+      Seq((99L, other, ts(26))),       // watermark -> 16min
+      Seq((2L, sim2, ts(18)))))
+    assert(pairs.contains((1L, 2L)),
+      s"eviction anchor regressed on the out-of-order batch: $pairs")
+  }
+
+  test("spanScreenStream counts reference-span hits per streamed doc") {
+    // The span family's streaming audit: a doc sharing a verbatim
+    // passage with the static reference reports its covered spans; a
+    // novel doc reports zero hits; a short doc reports zero spans.
+    implicit val sq = spark.sqlContext
+    val ref = graft.functions.Spans.spanOccurrences(
+        Seq(1L -> "the quick brown fox jumps high over lazy dogs")
+          .toDF("doc_id", "text"),
+        "doc_id", "text", 5)
+      .select("span")
+    val ms = MemoryStream[(Long, String, Timestamp)]
+    val q = graft.functions.Spans.spanScreenStream(
+        ms.toDS().toDF("doc_id", "text", "ts"), ref,
+        "doc_id", "text", "ts", "10 minutes", k = 5)
+      .writeStream.format("memory").queryName("span_screen").outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graftck").toString)
+      .start()
+    try {
+      ms.addData(Seq(
+        // Shares the passage: 2 of its 3 spans are reference spans.
+        (5L, "prefix the QUICK brown fox jumps high", ts(1)),
+        (6L, "an entirely novel report about the weather today", ts(1)),
+        (7L, "too short", ts(1))))
+      q.processAllAvailable()
+      assert(spark.table("span_screen").isEmpty, "append mode must hold until watermark")
+      ms.addData(Seq((99L, "watermark advancer content", ts(30))))
+      q.processAllAvailable()
+      val rows = spark.table("span_screen").select("doc_id", "n_spans", "n_ref_spans")
+        .as[(Long, Long, Long)].collect()
+        .map { case (id, ns, nr) => id -> ((ns, nr)) }.toMap
+      assert(rows.keySet == Set(5L, 6L, 7L), s"emitted: $rows")
+      // Doc 5: 7 tokens -> 3 spans; spans at pos 2 ("the quick brown
+      // fox jumps") and pos 3 ("quick brown fox jumps high") are both
+      // reference spans.
+      assert(rows(5L) == ((3L, 2L)), s"shared passage must flag: $rows")
+      assert(rows(6L)._1 > 0 && rows(6L)._2 == 0, s"novel doc clean: $rows")
+      assert(rows(7L) == ((0L, 0L)), s"short doc zero spans: $rows")
+    } finally q.stop()
+  }
+
+  test("chunkScreenStream flags stored-boilerplate chunks against the static index") {
+    // The streaming read path over the persisted chunk index: the
+    // SHIFTED boilerplate copy (the case fixed windows miss) is flagged
+    // from stored counts alone; a novel doc is clean; a whitespace doc
+    // reports zero chunks. Results emit in append mode once the
+    // watermark passes each doc's event time.
+    implicit val sq = spark.sqlContext
+    val boiler = "all rights reserved corpus contact us for terms boundary"
+    val index = graft.functions.Dedup.chunkIndex(
+      Seq(1L -> s"intro words $boiler").toDF("doc_id", "text"),
+      "doc_id", "text")
+    val ms = MemoryStream[(Long, String, Timestamp)]
+    val q = graft.functions.Dedup.chunkScreenStream(
+        ms.toDS().toDF("doc_id", "text", "ts"), index,
+        "doc_id", "text", "ts", "10 minutes")
+      .writeStream.format("memory").queryName("chunk_screen").outputMode("append")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graftck").toString)
+      .start()
+    try {
+      ms.addData(Seq(
+        (5L, s"zzz zz $boiler", ts(1)), // boilerplate shifted 2 tokens
+        (6L, "an entirely novel report about the weather", ts(1)),
+        (7L, "   ", ts(1))))
+      q.processAllAvailable()
+      // Nothing emits until the watermark passes ts(1).
+      assert(spark.table("chunk_screen").isEmpty, "append mode must hold until watermark")
+      ms.addData(Seq((99L, "watermark advancer content", ts(30))))
+      q.processAllAvailable()
+      val rows = spark.table("chunk_screen").select("doc_id", "n_chunks", "n_dup")
+        .as[(Long, Long, Long)].collect()
+        .map { case (id, nc, nd) => id -> ((nc, nd)) }.toMap
+      assert(rows.keySet == Set(5L, 6L, 7L), s"emitted: $rows")
+      assert(rows(5L)._2 >= 1, s"shifted boilerplate must flag: $rows")
+      assert(rows(6L)._1 > 0 && rows(6L)._2 == 0, s"novel doc clean: $rows")
+      assert(rows(7L) == ((0L, 0L)), s"whitespace doc zero chunks: $rows")
+    } finally q.stop()
+  }
 }
