@@ -21,9 +21,17 @@ import org.apache.spark.storage.StorageLevel
  * }}}
  *
  * Without it the caches accumulate MEMORY_AND_DISK entries until Spark's
- * LRU eviction churns — correct but wasteful. `clearAll` is safe at any
- * point: unpersisting only drops the cached blocks; any later reuse
- * recomputes from lineage.
+ * LRU eviction churns — correct but wasteful. For frames registered by
+ * [[cache]], `clearAll` is safe at any point: unpersisting only drops the
+ * cached blocks; any later reuse recomputes from lineage.
+ *
+ * NOT for frames whose plans embed [[checkpointCut]] results: under the
+ * default `local` cut mode the cut has no lineage to recompute from, so
+ * such a frame must be FULLY CONSUMED before `clearAll()` or the exit of
+ * its [[scoped]] block — reuse afterwards fails on the missing checkpoint
+ * blocks. The affected operators are `Dedup.chunkDedupIndexed` and
+ * `Dedup.chunkNovelty`, and through them the `graft_chunk_screen` and
+ * `graft_chunk_novelty` TVFs.
  *
  * CONCURRENCY CAVEAT: the registry is process-global, so `clearAll()`
  * from one job unpersists frames a CONCURRENT job is still acting on —

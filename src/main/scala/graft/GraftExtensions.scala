@@ -1,11 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.types.StringType
 
 import graft.expressions.{DotProduct, SortedIntersectCount}
+import graft.functions.{Bpe, Dedup, Hybrid, IVF, Ingest, PQ, Spans, TextFunctions, Vectors}
+import graft.ops.{CorpusMix, Curation, FimTransform, TrainShuffle}
+import graft.sources.{BinFamily, BinShards}
 
 /**
  * Library entry point for `spark.sql.extensions=graft.GraftExtensions`:
@@ -31,19 +35,10 @@ object GraftExtensions {
   /** The injected function set, shared with the test bridge. */
   private[graft] val functions: Seq[
       (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => DotProduct(a, b)
-        case other => throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "`graft_dot`",
-            "expectedNum" -> "2",
-            "actualNum" -> other.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }),
-    (FunctionIdentifier("graft_sorted_intersect"),
+    binary("graft_dot",
+      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"))(
+      DotProduct(_, _)),
+    binary("graft_sorted_intersect",
       // The usage text carries the PRECONDITION a SQL caller cannot see
       // from the name: this is the dedup verify kernel, correct only on
       // sorted inputs — on arbitrary arrays it silently undercounts.
@@ -55,17 +50,15 @@ object GraftExtensions {
           "unsorted input silently undercounts). Intended for graft's " +
           "dedup kernels — for arbitrary arrays use " +
           "size(array_intersect(a, b)).",
-        ""),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(a, b) => SortedIntersectCount(a, b)
-        case other => throw new org.apache.spark.sql.AnalysisException(
-          errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
-          messageParameters = Map(
-            "functionName" -> "`graft_sorted_intersect`",
-            "expectedNum" -> "2",
-            "actualNum" -> other.length.toString,
-            "docroot" -> "https://spark.apache.org/docs/latest"))
-      }))
+        ""))(
+      SortedIntersectCount(_, _)))
+
+  private def binary(name: String, info: ExpressionInfo)(
+      build: (Expression, Expression) => Expression) =
+    (FunctionIdentifier(name), info, (exprs: Seq[Expression]) => exprs match {
+      case Seq(a, b) => build(a, b)
+      case other => wrongArity(name, Seq(2), other.length)
+    })
 
   // -- table-valued functions ------------------------------------------------
   // SQL reach for the flagship corpus OPERATORS (not just scalar kernels):
@@ -79,6 +72,13 @@ object GraftExtensions {
   // subquery, with the operator's internal persists and skew shapes
   // intact.
   //
+  // Each entry is DECLARED once: `tvf(name, usage)(at(arities) { a => ..})`.
+  // The table derives the FunctionIdentifier, the ExpressionInfo and the
+  // WRONG_NUM_ARGS error (naming every declared arity); every argument is
+  // read through [[Args]], the one place literals are evaluated, NULL-
+  // checked and coerced, so every argument error is an
+  // IllegalArgumentException naming the function and the parameter.
+  //
   // OPERATIONAL CAVEATS for long-lived SQL-only services: (1) each
   // analysis of a graft TVF registers the operator's internal persists
   // in the process-global GraftCaches, and SQL offers no cleanup call —
@@ -87,84 +87,113 @@ object GraftExtensions {
   // grows until LRU churn (a `SELECT graft_clear_caches()` function is
   // deliberately NOT offered: it would evaluate on an executor and
   // silently no-op against the driver-side registry on a real cluster).
+  // Only clear once every query of the batch is fully consumed:
+  // graft_chunk_screen and graft_chunk_novelty (Dedup.chunkDedupIndexed /
+  // chunkNovelty) embed `checkpointCut` frames, which under the default
+  // `local` cut mode fail on reuse after a clear instead of recomputing.
   // (2) graft_decontaminate runs its bounded broadcast-guard job during
   // ANALYSIS — re-paid on each re-analysis of the same query text,
   // including EXPLAIN.
 
-  private def arity(fn: String, expected: Int, got: Int): Nothing =
-    arity(fn, expected.toString, got)
-
-  /** Multi-arity form: `expected` is free text ("3 or 5") so a TVF with
-    * two documented shapes names BOTH in its error, not just one. */
-  private def arity(fn: String, expected: String, got: Int): Nothing =
-    throw new org.apache.spark.sql.AnalysisException(
+  private def wrongArity(fn: String, arities: Seq[Int], got: Int): Nothing = {
+    val s = arities.distinct.sorted.map(_.toString)
+    val expected =
+      if (s.size == 1) s.head else s.init.mkString(", ") + " or " + s.last
+    throw new AnalysisException(
       errorClass = "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
       messageParameters = Map(
         "functionName" -> s"`$fn`",
         "expectedNum" -> expected,
         "actualNum" -> got.toString,
         "docroot" -> "https://spark.apache.org/docs/latest"))
-
-  /** Evaluate a TVF argument, which must be a foldable literal. */
-  private def litValue(fn: String, e: Expression, what: String): Any = {
-    if (!e.foldable)
-      throw new IllegalArgumentException(
-        s"$fn: $what must be a literal (got non-foldable ${e.sql})")
-    val v = e.eval()
-    if (v == null)
-      throw new IllegalArgumentException(s"$fn: $what must not be NULL")
-    v
   }
 
-  private def strArg(fn: String, e: Expression, what: String): String =
-    litValue(fn, e, what).toString
+  /** One call's arguments, read by position and parameter name. */
+  private final class Args(val fn: String, exprs: Seq[Expression]) {
 
-  private def dblArg(fn: String, e: Expression, what: String): Double =
-    litValue(fn, e, what) match {
+    /** The number of arguments the call passed. */
+    def n: Int = exprs.length
+
+    def spark: SparkSession = SparkSession.active
+
+    def fail(msg: String): Nothing =
+      throw new IllegalArgumentException(s"$fn: $msg")
+
+    private def lit(i: Int, what: String): Any = {
+      val e = exprs(i)
+      if (!e.foldable)
+        fail(s"$what must be a literal (got non-foldable ${e.sql})")
+      val v = e.eval()
+      if (v == null) fail(s"$what must not be NULL")
+      v
+    }
+
+    def str(i: Int, what: String): String = lit(i, what).toString
+
+    def dbl(i: Int, what: String): Double = lit(i, what) match {
       case d: Double => d
       case f: Float => f.toDouble
       case n: Number => n.doubleValue()
       case d: org.apache.spark.sql.types.Decimal => d.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$fn: $what must be numeric, got $other")
+      case other => fail(s"$what must be numeric, got $other")
     }
 
-  private def intArg(fn: String, e: Expression, what: String): Int =
-    litValue(fn, e, what) match {
-      case i: Int => i
-      case l: Long => math.toIntExact(l)
-      case other => throw new IllegalArgumentException(
-        s"$fn: $what must be an integer, got $other")
+    def long(i: Int, what: String): Long = lit(i, what) match {
+      case v: Int => v.toLong
+      case v: Long => v
+      case other => fail(s"$what must be an integer, got $other")
     }
 
-  private def longArg(fn: String, e: Expression, what: String): Long =
-    litValue(fn, e, what) match {
-      case i: Int => i.toLong
-      case l: Long => l
-      case other => throw new IllegalArgumentException(
-        s"$fn: $what must be an integer, got $other")
+    def int(i: Int, what: String): Int = {
+      val l = long(i, what)
+      if (!l.isValidInt) fail(s"$what must fit in INT, got $l")
+      l.toInt
     }
 
-  private def boolArg(fn: String, e: Expression, what: String): Boolean =
-    litValue(fn, e, what) match {
+    def bool(i: Int, what: String): Boolean = lit(i, what) match {
       case b: Boolean => b
-      case other => throw new IllegalArgumentException(
-        s"$fn: $what must be a boolean, got $other")
+      case other => fail(s"$what must be a boolean, got $other")
     }
 
-  private def planOf(df: org.apache.spark.sql.DataFrame): LogicalPlan =
-    df.queryExecution.logical
+    /** The parquet data at the path argument `i`. */
+    def parquet(i: Int, what: String): DataFrame =
+      spark.read.parquet(str(i, what))
 
-  private def tvfInfo(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
+    /** Trailing optionals: `default` when the call stops before `i`. */
+    def strOr(i: Int, what: String, default: String): String =
+      if (i < n) str(i, what) else default
 
-  /** CONTENT fingerprint of a loaded tokenizer — delegates to
-    * [[graft.functions.Bpe.TokenizerModel.contentFingerprint]] (md5
-    * over the actual vocab/merges, not the path), the identity the
-    * resume token and the stamped marker lines carry. */
-  private def modelFingerprint(
-      model: graft.functions.Bpe.TokenizerModel): String =
-    model.contentFingerprint
+    def intOr(i: Int, what: String, default: Int): Int =
+      if (i < n) int(i, what) else default
+
+    /** A path-like optional where '' means absent, as does omitting it. */
+    def opt(i: Int, what: String): Option[String] =
+      if (i < n) Some(str(i, what)).filter(_.nonEmpty) else None
+
+    /** Whether argument `i` is typed STRING — the shape test of the
+      * entries whose persisted-model form swaps an integer for a path. */
+    def isStr(i: Int): Boolean = exprs(i).dataType == StringType
+  }
+
+  /** Declared arities sharing one builder. */
+  private final case class Shape(arities: Seq[Int], build: Args => Dataset[_])
+
+  private def at(arities: Int*)(build: Args => Dataset[_]): Shape =
+    Shape(arities, build)
+
+  private def tvf(name: String, usage: String)(shapes: Shape*)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan) = {
+    val byArity = shapes.flatMap(s => s.arities.map(_ -> s.build)).toMap
+    require(byArity.size == shapes.map(_.arities.size).sum,
+      s"$name declares one arity twice")
+    (FunctionIdentifier(name),
+      new ExpressionInfo(
+        classOf[GraftExtensions].getName, null, name, usage, ""),
+      (exprs: Seq[Expression]) => byArity.get(exprs.length) match {
+        case Some(build) => build(new Args(name, exprs)).queryExecution.logical
+        case None => wrongArity(name, byArity.keys.toSeq, exprs.length)
+      })
+  }
 
   /** CONTENT fingerprint of a corpus directory — md5 over the sorted
     * recursive (relative path, length, mtime) listing. Regenerating
@@ -202,287 +231,219 @@ object GraftExtensions {
   /** The tokenizer identity lines the binary exporters stamp into
     * `_BIN_COMMIT` (surfaced by `graft_bin_manifest`): the wrong-vocab
     * pairing becomes detectable from the artifact's files ALONE, plus
-    * the model's content fingerprint so the append/resume config gates
-    * catch a retrained-in-place model even when its vocab SIZE is
-    * unchanged. */
-  private def modelIdentity(
-      model: graft.functions.Bpe.TokenizerModel): Map[String, String] =
+    * the model's CONTENT fingerprint
+    * ([[graft.functions.Bpe.TokenizerModel.contentFingerprint]], md5
+    * over the actual vocab/merges, not the path) so the append/resume
+    * config gates catch a retrained-in-place model even when its vocab
+    * SIZE is unchanged. */
+  private def modelIdentity(model: Bpe.TokenizerModel): Map[String, String] =
     Map("vocab_size" -> model.vocab.length.toString,
       "alphabet" -> model.alphabet, "pretok" -> model.pretok,
-      "model_fp" -> modelFingerprint(model))
+      "model_fp" -> model.contentFingerprint)
+
+  /** The active generation of the near-dup index at argument `i`.
+    * Managed roots resolve to their active generation; a wrong path must
+    * be LOUD, not a trivially-passing screen (bootstrap-on-absent
+    * semantics belong to ingestBatch, which owns the append; the screen
+    * TVFs are a read surface). */
+  private def committedNdDir(a: Args, i: Int): String = {
+    val ndPath = a.str(i, "nd_index_path")
+    val ndDir = Ingest.ndIndexDir(a.spark, ndPath)
+    if (!Dedup.hasCommittedParquet(a.spark, ndDir))
+      a.fail(s"no committed near-dup index at $ndPath")
+    ndDir
+  }
+
+  /** `op` over the corpus at argument 0 (id and text columns named at 1
+    * and 2) and the persisted tokenizer at 3 — the tokenizer entries'
+    * shared leading arguments. */
+  private def bpeOver(a: Args)(
+      op: (DataFrame, String, String, Bpe.TokenizerModel) => DataFrame) =
+    op(a.parquet(0, "path"), a.str(1, "id_col"), a.str(2, "text_col"),
+      Bpe.TokenizerModel.read(a.spark, a.str(3, "model_path")))
 
   /** The injected table-function set, shared with the test bridge. */
   private[graft] val tableFunctions: Seq[
       (FunctionIdentifier, ExpressionInfo, Seq[Expression] => LogicalPlan)] = Seq(
-    (FunctionIdentifier("graft_neardup"),
-      tvfInfo("graft_neardup",
-        "graft_neardup(path, id_col, text_col, threshold) - MinHash/LSH " +
-          "near-duplicate pairs (id_a, id_b, jaccard) over the parquet " +
-          "corpus at `path`, verified at exact Jaccard >= threshold. " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, thr) =>
-          val fn = "graft_neardup"
-          planOf(graft.functions.Dedup.nearDupPairs(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            dblArg(fn, thr, "threshold")))
-        case other => arity("graft_neardup", 4, other.length)
+    tvf("graft_neardup",
+      "graft_neardup(path, id_col, text_col, threshold) - MinHash/LSH " +
+        "near-duplicate pairs (id_a, id_b, jaccard) over the parquet " +
+        "corpus at `path`, verified at exact Jaccard >= threshold. " +
+        "All arguments are literals.")(
+      at(4) { a =>
+        Dedup.nearDupPairs(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), a.dbl(3, "threshold"))
       }),
-    (FunctionIdentifier("graft_span_dupes"),
-      tvfInfo("graft_span_dupes",
-        "graft_span_dupes(path, id_col, text_col, k, min_df) - " +
-          "cross-document duplicated-passage audit: per doc, how many " +
-          "of its k-token spans occur in >= min_df distinct docs. " +
-          "Output (doc_id, n_spans, n_dup_spans, dup_frac); docs " +
-          "shorter than k report 0 spans. min_df must be >= 2. The " +
-          "removal half is graft_span_scrub. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, kk, df) =>
-          val fn = "graft_span_dupes"
-          planOf(graft.functions.Spans.spanDupes(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            intArg(fn, kk, "k"), intArg(fn, df, "min_df")))
-        case other => arity("graft_span_dupes", 5, other.length)
+    tvf("graft_span_dupes",
+      "graft_span_dupes(path, id_col, text_col, k, min_df) - " +
+        "cross-document duplicated-passage audit: per doc, how many " +
+        "of its k-token spans occur in >= min_df distinct docs. " +
+        "Output (doc_id, n_spans, n_dup_spans, dup_frac); docs " +
+        "shorter than k report 0 spans. min_df must be >= 2. The " +
+        "removal half is graft_span_scrub. All arguments are " +
+        "literals.")(
+      at(5) { a =>
+        Spans.spanDupes(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), a.int(3, "k"), a.int(4, "min_df"))
       }),
-    (FunctionIdentifier("graft_span_scrub_indexed"),
-      tvfInfo("graft_span_scrub_indexed",
-        "graft_span_scrub_indexed(batch_path, index_path, id_col, " +
-          "text_col, k) - duplicated-passage removal against a " +
-          "PERSISTED span index (the transform complement of " +
-          "graft_span_screen over the same artifact): every batch " +
-          "token covered by a k-token span the store carries is " +
-          "dropped; the reference corpus is never re-tokenized. " +
-          "`index_path` is an Ingest-managed span root or a raw " +
-          "spanIndexAppend epoch directory. Output (doc_id, " +
-          "clean_text, n_removed), clean_text normalized. All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(bp, ip, id, txt, kk) =>
-          val fn = "graft_span_scrub_indexed"
-          val spark = SparkSession.active
-          val kv = intArg(fn, kk, "k")
-          planOf(graft.functions.Spans.spanScrubIndexed(
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            graft.functions.Ingest.spanIndexAt(
-              spark, strArg(fn, ip, "index_path"), kv),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"), kv))
-        case other => arity("graft_span_scrub_indexed", 5, other.length)
+    tvf("graft_span_scrub_indexed",
+      "graft_span_scrub_indexed(batch_path, index_path, id_col, " +
+        "text_col, k) - duplicated-passage removal against a " +
+        "PERSISTED span index (the transform complement of " +
+        "graft_span_screen over the same artifact): every batch " +
+        "token covered by a k-token span the store carries is " +
+        "dropped; the reference corpus is never re-tokenized. " +
+        "`index_path` is an Ingest-managed span root or a raw " +
+        "spanIndexAppend epoch directory. Output (doc_id, " +
+        "clean_text, n_removed), clean_text normalized. All " +
+        "arguments are literals.")(
+      at(5) { a =>
+        val kv = a.int(4, "k")
+        Spans.spanScrubIndexed(a.parquet(0, "batch_path"),
+          Ingest.spanIndexAt(a.spark, a.str(1, "index_path"), kv),
+          a.str(2, "id_col"), a.str(3, "text_col"), kv)
       }),
-    (FunctionIdentifier("graft_span_scrub"),
-      tvfInfo("graft_span_scrub",
-        "graft_span_scrub(path, id_col, text_col, k, min_df) - " +
-          "cross-document duplicated-passage removal (exact substring " +
-          "dedup): every token covered by a k-token span occurring in " +
-          ">= min_df distinct docs is dropped from every doc except the " +
-          "span's keeper (smallest containing doc_id). Output (doc_id, " +
-          "clean_text, n_removed), clean_text in normalized " +
-          "(lowercased, whitespace-collapsed) form. min_df must be >= " +
-          "2. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, kk, df) =>
-          val fn = "graft_span_scrub"
-          planOf(graft.functions.Spans.spanScrub(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            intArg(fn, kk, "k"), intArg(fn, df, "min_df")))
-        case other => arity("graft_span_scrub", 5, other.length)
+    tvf("graft_span_scrub",
+      "graft_span_scrub(path, id_col, text_col, k, min_df) - " +
+        "cross-document duplicated-passage removal (exact substring " +
+        "dedup): every token covered by a k-token span occurring in " +
+        ">= min_df distinct docs is dropped from every doc except the " +
+        "span's keeper (smallest containing doc_id). Output (doc_id, " +
+        "clean_text, n_removed), clean_text in normalized " +
+        "(lowercased, whitespace-collapsed) form. min_df must be >= " +
+        "2. All arguments are literals.")(
+      at(5) { a =>
+        Spans.spanScrub(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), a.int(3, "k"), a.int(4, "min_df"))
       }),
-    (FunctionIdentifier("graft_decontaminate"),
-      tvfInfo("graft_decontaminate",
-        "graft_decontaminate(path, id_col, text_col, eval_modulus) - " +
-          "benchmark-leakage screen over the parquet corpus at `path`: " +
-          "(doc_id, n_grams, n_overlap, contaminated) per training doc, " +
-          "eval slice = id % eval_modulus == 0. Calling it runs one " +
-          "bounded job up front (the broadcast-contract guard). " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, mod) =>
-          val fn = "graft_decontaminate"
-          planOf(graft.functions.Dedup.decontaminate(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            intArg(fn, mod, "eval_modulus").toLong))
-        case other => arity("graft_decontaminate", 4, other.length)
+    tvf("graft_decontaminate",
+      "graft_decontaminate(path, id_col, text_col, eval_modulus) - " +
+        "benchmark-leakage screen over the parquet corpus at `path`: " +
+        "(doc_id, n_grams, n_overlap, contaminated) per training doc, " +
+        "eval slice = id % eval_modulus == 0. Calling it runs one " +
+        "bounded job up front (the broadcast-contract guard). " +
+        "All arguments are literals.")(
+      at(4) { a =>
+        Dedup.decontaminate(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), a.int(3, "eval_modulus").toLong)
       }),
-    (FunctionIdentifier("graft_curate"),
-      tvfInfo("graft_curate",
-        "graft_curate(path, num_shards) - full curation manifest " +
-          "(gate -> decontaminate -> exact dedup -> near-dup -> LM floor " +
-          "-> deterministic shard/pack) over the parquet corpus at " +
-          "`path`; one row per surviving doc. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, shards) =>
-          val fn = "graft_curate"
-          planOf(graft.ops.Curation.curate(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            intArg(fn, shards, "num_shards")))
-        case other => arity("graft_curate", 2, other.length)
+    tvf("graft_curate",
+      "graft_curate(path, num_shards) - full curation manifest " +
+        "(gate -> decontaminate -> exact dedup -> near-dup -> LM floor " +
+        "-> deterministic shard/pack) over the parquet corpus at " +
+        "`path`; one row per surviving doc. All arguments are literals.")(
+      at(2) { a =>
+        Curation.curate(a.parquet(0, "path"), a.int(1, "num_shards"))
       }),
-    (FunctionIdentifier("graft_ingest_screen"),
-      tvfInfo("graft_ingest_screen",
-        "graft_ingest_screen(batch_path, nd_index_path, chunk_index_path, " +
-          "threshold) - the recurring-ingestion decision (doc_id, " +
-          "decision) for the parquet batch at `batch_path` (columns " +
-          "doc_id, text) against the PERSISTED near-dup index at " +
-          "`nd_index_path` (an Ingest-managed root with a CURRENT " +
-          "pointer, or a flat Dedup.nearDupIndex/indexAppend directory) " +
-          "and the chunk-count index at `chunk_index_path` (managed " +
-          "root or raw chunkIndexAppend directory). decision is one of " +
-          "'accepted', 'accepted_prior' " +
-          "(id already indexed - the retry short-circuit), " +
-          "'rejected_neardup', 'rejected_chunks'. Read-only: pair with " +
-          "Ingest.ingestBatch for the appending loop. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(bp, np, cp, thr) =>
-          val fn = "graft_ingest_screen"
-          val spark = SparkSession.active
-          val ndPath = strArg(fn, np, "nd_index_path")
-          // Managed roots resolve to their active generation; a wrong
-          // path must be LOUD, not a trivially-passing screen
-          // (bootstrap-on-absent semantics belong to ingestBatch, which
-          // owns the append; this TVF is a read surface).
-          val ndDir = graft.functions.Ingest.ndIndexDir(spark, ndPath)
-          if (!graft.functions.Dedup.hasCommittedParquet(spark, ndDir))
-            throw new IllegalArgumentException(
-              s"$fn: no committed near-dup index at $ndPath")
-          planOf(graft.functions.Ingest.screenBatch(
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            spark.read.parquet(ndDir),
-            graft.functions.Ingest.chunkIndexAt(
-              spark, strArg(fn, cp, "chunk_index_path")),
-            "doc_id", "text", dblArg(fn, thr, "threshold")))
-        case other => arity("graft_ingest_screen", 4, other.length)
+    tvf("graft_ingest_screen",
+      "graft_ingest_screen(batch_path, nd_index_path, chunk_index_path, " +
+        "threshold) - the recurring-ingestion decision (doc_id, " +
+        "decision) for the parquet batch at `batch_path` (columns " +
+        "doc_id, text) against the PERSISTED near-dup index at " +
+        "`nd_index_path` (an Ingest-managed root with a CURRENT " +
+        "pointer, or a flat Dedup.nearDupIndex/indexAppend directory) " +
+        "and the chunk-count index at `chunk_index_path` (managed " +
+        "root or raw chunkIndexAppend directory). decision is one of " +
+        "'accepted', 'accepted_prior' " +
+        "(id already indexed - the retry short-circuit), " +
+        "'rejected_neardup', 'rejected_chunks'. Read-only: pair with " +
+        "Ingest.ingestBatch for the appending loop. All arguments are " +
+        "literals.")(
+      at(4) { a =>
+        val ndDir = committedNdDir(a, 1)
+        Ingest.screenBatch(a.parquet(0, "batch_path"),
+          a.spark.read.parquet(ndDir),
+          Ingest.chunkIndexAt(a.spark, a.str(2, "chunk_index_path")),
+          "doc_id", "text", a.dbl(3, "threshold"))
       }),
-    (FunctionIdentifier("graft_ingest_screen2"),
-      tvfInfo("graft_ingest_screen2",
-        "graft_ingest_screen2(batch_path, nd_index_path, " +
-          "chunk_index_path, threshold, dup_ratio, quality, span_root, " +
-          "max_boilerplate, outlier_model, outlier_factor, " +
-          "embeddings_path) - the FULL gated ingestion decision " +
-          "(doc_id, decision): graft_ingest_screen's base screen plus " +
-          "the optional gates ingestBatch arms, in the same precedence " +
-          "- quality (Gopher rules, boolean literal), boilerplate " +
-          "(persisted span index at `span_root`; its recorded _SPAN_K " +
-          "sets the span length, default 5), vector outlier (persisted " +
-          "OutlierModel at `outlier_model` scored over the parquet " +
-          "embeddings at `embeddings_path` at `outlier_factor`). Pass " +
-          "'' for span_root/outlier_model to leave a gate unarmed. " +
-          "decision adds 'rejected_quality', 'rejected_boilerplate', " +
-          "'rejected_outlier'. The 13-arg form appends (score_col, " +
-          "max_score) to arm the SAMPLING gate too: acceptances keep " +
-          "with probability min(1, score/max_score) via the " +
-          "deterministic importance draw, the rest become " +
-          "'rejected_sampled' (score_col names a non-negative integral " +
-          "batch column). Read-only: pair with Ingest.ingestBatch " +
-          "for the appending loop. All arguments are literals."),
-      (exprs: Seq[Expression]) => {
-        def run(bp: Expression, np: Expression, cp: Expression,
-            thr: Expression, dr: Expression, qg: Expression,
-            sr: Expression, mb: Expression, om: Expression,
-            of: Expression, ep: Expression,
-            sampling: Option[(Expression, Expression)]): LogicalPlan = {
-          val fn = "graft_ingest_screen2"
-          val spark = SparkSession.active
-          val ndPath = strArg(fn, np, "nd_index_path")
-          val ndDir = graft.functions.Ingest.ndIndexDir(spark, ndPath)
-          if (!graft.functions.Dedup.hasCommittedParquet(spark, ndDir))
-            throw new IllegalArgumentException(
-              s"$fn: no committed near-dup index at $ndPath")
-          val spanRoot = strArg(fn, sr, "span_root")
-          val spanGate = if (spanRoot.isEmpty) None else {
-            // Read-only resolution: the store's recorded _SPAN_K (fail
-            // loud on a corrupt marker; default 5 for a pre-marker
-            // store) and the current generation's committed epochs.
-            val k = graft.functions.Spans.storedK(spark, spanRoot)
-              .getOrElse(5)
-            val dir = graft.functions.Ingest.spanIndexDirAt(spark, spanRoot)
-            Some((graft.functions.Spans.spanIndexRead(spark, dir), k,
-              dblArg(fn, mb, "max_boilerplate")))
-          }
-          val omPath = strArg(fn, om, "outlier_model")
-          val embPath = strArg(fn, ep, "embeddings_path")
-          // Both halves of the vector gate or neither — either lone
-          // argument is the 'silently gate nothing' misuse.
-          require(omPath.isEmpty || embPath.nonEmpty,
-            s"$fn: the outlier gate screens EMBEDDINGS - " +
-              "outlier_model without embeddings_path would silently " +
-              "gate nothing")
-          require(embPath.isEmpty || omPath.nonEmpty,
-            s"$fn: embeddings_path given but outlier_model is '' - " +
-              "the outlier gate would be silently unarmed; pass the " +
-              "persisted OutlierModel path (or '' for both)")
-          val outlierGate = if (omPath.isEmpty) None else {
-            Some((graft.functions.IVF.OutlierModel.read(spark, omPath),
-              dblArg(fn, of, "outlier_factor"),
-              spark.read.parquet(embPath)))
-          }
-          planOf(graft.functions.Ingest.screenBatchGated(
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            spark.read.parquet(ndDir),
-            graft.functions.Ingest.chunkIndexAt(
-              spark, strArg(fn, cp, "chunk_index_path")),
-            "doc_id", "text", dblArg(fn, thr, "threshold"),
-            dupRatio = dblArg(fn, dr, "dup_ratio"),
-            qualityGate = boolArg(fn, qg, "quality"),
-            spanGate = spanGate,
-            outlierGate = outlierGate,
-            samplingGate = sampling.map { case (sc, ms) =>
-              (strArg(fn, sc, "score_col"), longArg(fn, ms, "max_score"))
-            }))
+    tvf("graft_ingest_screen2",
+      "graft_ingest_screen2(batch_path, nd_index_path, " +
+        "chunk_index_path, threshold, dup_ratio, quality, span_root, " +
+        "max_boilerplate, outlier_model, outlier_factor, " +
+        "embeddings_path) - the FULL gated ingestion decision " +
+        "(doc_id, decision): graft_ingest_screen's base screen plus " +
+        "the optional gates ingestBatch arms, in the same precedence " +
+        "- quality (Gopher rules, boolean literal), boilerplate " +
+        "(persisted span index at `span_root`; its recorded _SPAN_K " +
+        "sets the span length, default 5), vector outlier (persisted " +
+        "OutlierModel at `outlier_model` scored over the parquet " +
+        "embeddings at `embeddings_path` at `outlier_factor`). Pass " +
+        "'' for span_root/outlier_model to leave a gate unarmed. " +
+        "decision adds 'rejected_quality', 'rejected_boilerplate', " +
+        "'rejected_outlier'. The 13-arg form appends (score_col, " +
+        "max_score) to arm the SAMPLING gate too: acceptances keep " +
+        "with probability min(1, score/max_score) via the " +
+        "deterministic importance draw, the rest become " +
+        "'rejected_sampled' (score_col names a non-negative integral " +
+        "batch column). Read-only: pair with Ingest.ingestBatch " +
+        "for the appending loop. All arguments are literals.")(
+      at(11, 13) { a =>
+        val spark = a.spark
+        val ndDir = committedNdDir(a, 1)
+        val spanRoot = a.str(6, "span_root")
+        val spanGate = if (spanRoot.isEmpty) None else {
+          // Read-only resolution: the store's recorded _SPAN_K (fail
+          // loud on a corrupt marker; default 5 for a pre-marker
+          // store) and the current generation's committed epochs.
+          val k = Spans.storedK(spark, spanRoot).getOrElse(5)
+          val dir = Ingest.spanIndexDirAt(spark, spanRoot)
+          Some((Spans.spanIndexRead(spark, dir), k,
+            a.dbl(7, "max_boilerplate")))
         }
-        exprs match {
-          case Seq(bp, np, cp, thr, dr, qg, sr, mb, om, of, ep) =>
-            run(bp, np, cp, thr, dr, qg, sr, mb, om, of, ep, None)
-          case Seq(bp, np, cp, thr, dr, qg, sr, mb, om, of, ep, sc, ms) =>
-            run(bp, np, cp, thr, dr, qg, sr, mb, om, of, ep, Some((sc, ms)))
-          case other => arity("graft_ingest_screen2", "11 or 13", other.length)
+        val omPath = a.str(8, "outlier_model")
+        val embPath = a.str(10, "embeddings_path")
+        // Both halves of the vector gate or neither — either lone
+        // argument is the 'silently gate nothing' misuse.
+        require(omPath.isEmpty || embPath.nonEmpty,
+          s"${a.fn}: the outlier gate screens EMBEDDINGS - " +
+            "outlier_model without embeddings_path would silently " +
+            "gate nothing")
+        require(embPath.isEmpty || omPath.nonEmpty,
+          s"${a.fn}: embeddings_path given but outlier_model is '' - " +
+            "the outlier gate would be silently unarmed; pass the " +
+            "persisted OutlierModel path (or '' for both)")
+        val outlierGate = if (omPath.isEmpty) None else {
+          Some((IVF.OutlierModel.read(spark, omPath),
+            a.dbl(9, "outlier_factor"), spark.read.parquet(embPath)))
         }
+        Ingest.screenBatchGated(a.parquet(0, "batch_path"),
+          spark.read.parquet(ndDir),
+          Ingest.chunkIndexAt(spark, a.str(2, "chunk_index_path")),
+          "doc_id", "text", a.dbl(3, "threshold"),
+          dupRatio = a.dbl(4, "dup_ratio"),
+          qualityGate = a.bool(5, "quality"),
+          spanGate = spanGate,
+          outlierGate = outlierGate,
+          samplingGate = if (a.n < 13) None else
+            Some((a.str(11, "score_col"), a.long(12, "max_score"))))
       }),
-    (FunctionIdentifier("graft_chunk_screen"),
-      tvfInfo("graft_chunk_screen",
-        "graft_chunk_screen(batch_path, chunk_index_path, max_df) - the " +
-          "exact-substring screen (doc_id, n_chunks, n_dup, clean_md5) " +
-          "for the parquet batch at `batch_path` (columns doc_id, text) " +
-          "against the persisted content-defined chunk-count index at " +
-          "`chunk_index_path` (managed root or raw chunkIndexAppend " +
-          "directory); a batch chunk counts as duplicate when " +
-          "batch-internal + stored occurrences exceed max_df. All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(bp, cp, mdf) =>
-          val fn = "graft_chunk_screen"
-          val spark = SparkSession.active
-          planOf(graft.functions.Dedup.chunkDedupIndexed(
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            graft.functions.Ingest.chunkIndexAt(
-              spark, strArg(fn, cp, "chunk_index_path")),
-            "doc_id", "text", maxDf = intArg(fn, mdf, "max_df")))
-        case other => arity("graft_chunk_screen", 3, other.length)
+    tvf("graft_chunk_screen",
+      "graft_chunk_screen(batch_path, chunk_index_path, max_df) - the " +
+        "exact-substring screen (doc_id, n_chunks, n_dup, clean_md5) " +
+        "for the parquet batch at `batch_path` (columns doc_id, text) " +
+        "against the persisted content-defined chunk-count index at " +
+        "`chunk_index_path` (managed root or raw chunkIndexAppend " +
+        "directory); a batch chunk counts as duplicate when " +
+        "batch-internal + stored occurrences exceed max_df. All " +
+        "arguments are literals.")(
+      at(3) { a =>
+        Dedup.chunkDedupIndexed(a.parquet(0, "batch_path"),
+          Ingest.chunkIndexAt(a.spark, a.str(1, "chunk_index_path")),
+          "doc_id", "text", maxDf = a.int(2, "max_df"))
       }),
-    (FunctionIdentifier("graft_chunk_novelty"),
-      tvfInfo("graft_chunk_novelty",
-        "graft_chunk_novelty(batch_path, chunk_index_path) - token-mass " +
-          "novelty (doc_id, n_tokens, known_tokens, novel_frac) of the " +
-          "parquet batch at `batch_path` (columns doc_id, text) against " +
-          "the persisted content-defined chunk index at " +
-          "`chunk_index_path` (managed root or raw chunkIndexAppend " +
-          "directory): per doc, the fraction of its tokens in CDC " +
-          "chunks the index has NOT seen - the new-data-yield metric. " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(bp, cp) =>
-          val fn = "graft_chunk_novelty"
-          val spark = SparkSession.active
-          planOf(graft.functions.Dedup.chunkNovelty(
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            graft.functions.Ingest.chunkIndexAt(
-              spark, strArg(fn, cp, "chunk_index_path")),
-            "doc_id", "text"))
-        case other => arity("graft_chunk_novelty", 2, other.length)
+    tvf("graft_chunk_novelty",
+      "graft_chunk_novelty(batch_path, chunk_index_path) - token-mass " +
+        "novelty (doc_id, n_tokens, known_tokens, novel_frac) of the " +
+        "parquet batch at `batch_path` (columns doc_id, text) against " +
+        "the persisted content-defined chunk index at " +
+        "`chunk_index_path` (managed root or raw chunkIndexAppend " +
+        "directory): per doc, the fraction of its tokens in CDC " +
+        "chunks the index has NOT seen - the new-data-yield metric. " +
+        "All arguments are literals.")(
+      at(2) { a =>
+        Dedup.chunkNovelty(a.parquet(0, "batch_path"),
+          Ingest.chunkIndexAt(a.spark, a.str(1, "chunk_index_path")),
+          "doc_id", "text")
       }),
     // SQL reach for the persisted VECTOR indexes (round 7's flagship was
     // Scala-only): the recurring ANN screens over IVF / PQ / IVF-PQ
@@ -491,1510 +452,1024 @@ object GraftExtensions {
     // graft_decontaminate: the stored quantizer collect (nlist rows,
     // bounded) and the small-query-side guard each run a bounded job
     // during ANALYSIS of the query text — re-paid on EXPLAIN.
-    (FunctionIdentifier("graft_ivf_screen"),
-      tvfInfo("graft_ivf_screen",
-        "graft_ivf_screen(queries_path, index_path, k, nprobe) - " +
-          "top-k cosine neighbors (query_id, cand_id, cos, rank) for the " +
-          "parquet query batch at `queries_path` (columns vec_id, " +
-          "embedding) against the PERSISTED IVF index at `index_path` " +
-          "(an IVF.buildIvfIndex/indexAppend directory with centroids/ " +
-          "and vectors/). nprobe = 0 picks the automatic probe count. " +
-          "Read-only; pair with IVF.indexAppend for maintenance. " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(qp, ip, kk, np) =>
-          val fn = "graft_ivf_screen"
-          val spark = SparkSession.active
-          planOf(graft.functions.IVF.ivfTopKIndexed(
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            graft.functions.IVF.IvfIndex.read(
-              spark, strArg(fn, ip, "index_path")),
-            intArg(fn, kk, "k"), intArg(fn, np, "nprobe")))
-        case other => arity("graft_ivf_screen", 4, other.length)
+    tvf("graft_ivf_screen",
+      "graft_ivf_screen(queries_path, index_path, k, nprobe) - " +
+        "top-k cosine neighbors (query_id, cand_id, cos, rank) for the " +
+        "parquet query batch at `queries_path` (columns vec_id, " +
+        "embedding) against the PERSISTED IVF index at `index_path` " +
+        "(an IVF.buildIvfIndex/indexAppend directory with centroids/ " +
+        "and vectors/). nprobe = 0 picks the automatic probe count. " +
+        "Read-only; pair with IVF.indexAppend for maintenance. " +
+        "All arguments are literals.")(
+      at(4) { a =>
+        IVF.ivfTopKIndexed(a.parquet(0, "queries_path"),
+          IVF.IvfIndex.read(a.spark, a.str(1, "index_path")),
+          a.int(2, "k"), a.int(3, "nprobe"))
       }),
-    (FunctionIdentifier("graft_pq_screen"),
-      tvfInfo("graft_pq_screen",
-        "graft_pq_screen(queries_path, index_path, k) - top-k " +
-          "approximate cosine neighbors (query_id, cand_id, score, rank) " +
-          "for the parquet query batch at `queries_path` (columns " +
-          "vec_id, embedding) via asymmetric-distance scoring over the " +
-          "STORED codes of the PQ index at `index_path` (a " +
-          "PQ.buildPqIndex/indexAppend directory); raw corpus embeddings " +
-          "are never read. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(qp, ip, kk) =>
-          val fn = "graft_pq_screen"
-          val spark = SparkSession.active
-          planOf(graft.functions.PQ.pqTopKIndexed(
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            graft.functions.PQ.PqIndex.read(
-              spark, strArg(fn, ip, "index_path")),
-            intArg(fn, kk, "k")))
-        case other => arity("graft_pq_screen", 3, other.length)
+    tvf("graft_pq_screen",
+      "graft_pq_screen(queries_path, index_path, k) - top-k " +
+        "approximate cosine neighbors (query_id, cand_id, score, rank) " +
+        "for the parquet query batch at `queries_path` (columns " +
+        "vec_id, embedding) via asymmetric-distance scoring over the " +
+        "STORED codes of the PQ index at `index_path` (a " +
+        "PQ.buildPqIndex/indexAppend directory); raw corpus embeddings " +
+        "are never read. All arguments are literals.")(
+      at(3) { a =>
+        PQ.pqTopKIndexed(a.parquet(0, "queries_path"),
+          PQ.PqIndex.read(a.spark, a.str(1, "index_path")),
+          a.int(2, "k"))
       }),
-    (FunctionIdentifier("graft_ivfpq_screen"),
-      tvfInfo("graft_ivfpq_screen",
-        "graft_ivfpq_screen(queries_path, index_path, k, nprobe) - " +
-          "top-k approximate cosine neighbors (query_id, cand_id, score, " +
-          "rank) like graft_pq_screen, with the stored coarse cells " +
-          "pruning each query's scan to its nprobe nearest cells " +
-          "(nprobe = 0 picks the automatic probe count). " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(qp, ip, kk, np) =>
-          val fn = "graft_ivfpq_screen"
-          val spark = SparkSession.active
-          planOf(graft.functions.PQ.ivfpqTopKIndexed(
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            graft.functions.PQ.PqIndex.read(
-              spark, strArg(fn, ip, "index_path")),
-            intArg(fn, kk, "k"), intArg(fn, np, "nprobe")))
-        case other => arity("graft_ivfpq_screen", 4, other.length)
+    tvf("graft_ivfpq_screen",
+      "graft_ivfpq_screen(queries_path, index_path, k, nprobe) - " +
+        "top-k approximate cosine neighbors (query_id, cand_id, score, " +
+        "rank) like graft_pq_screen, with the stored coarse cells " +
+        "pruning each query's scan to its nprobe nearest cells " +
+        "(nprobe = 0 picks the automatic probe count). " +
+        "All arguments are literals.")(
+      at(4) { a =>
+        PQ.ivfpqTopKIndexed(a.parquet(0, "queries_path"),
+          PQ.PqIndex.read(a.spark, a.str(1, "index_path")),
+          a.int(2, "k"), a.int(3, "nprobe"))
       }),
-    (FunctionIdentifier("graft_nb_score"),
-      tvfInfo("graft_nb_score",
-        "graft_nb_score(batch_path, model_path) - score the parquet " +
-          "batch at `batch_path` (columns doc_id, text) against the " +
-          "PERSISTED Naive Bayes model at `model_path` (a " +
-          "TextFunctions.nbTrain/NbModel.write directory): " +
-          "(doc_id, predicted, score_micro), one row per batch doc, " +
-          "exact-integer scoring identical to the Scala path. " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(bp, mp) =>
-          val fn = "graft_nb_score"
-          val spark = SparkSession.active
-          planOf(graft.functions.TextFunctions.nbScore(
-            graft.functions.TextFunctions.NbModel.read(
-              spark, strArg(fn, mp, "model_path")),
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            "doc_id", "text"))
-        case other => arity("graft_nb_score", 2, other.length)
+    tvf("graft_nb_score",
+      "graft_nb_score(batch_path, model_path) - score the parquet " +
+        "batch at `batch_path` (columns doc_id, text) against the " +
+        "PERSISTED Naive Bayes model at `model_path` (a " +
+        "TextFunctions.nbTrain/NbModel.write directory): " +
+        "(doc_id, predicted, score_micro), one row per batch doc, " +
+        "exact-integer scoring identical to the Scala path. " +
+        "All arguments are literals.")(
+      at(2) { a =>
+        TextFunctions.nbScore(
+          TextFunctions.NbModel.read(a.spark, a.str(1, "model_path")),
+          a.parquet(0, "batch_path"), "doc_id", "text")
       }),
-    (FunctionIdentifier("graft_embed_outliers"),
-      tvfInfo("graft_embed_outliers",
-        "graft_embed_outliers(path, nlist) - distance-to-centroid " +
-          "outlier screen over the parquet embedding corpus at `path` " +
-          "(columns vec_id, embedding): (vec_id, cell, dist_micro, " +
-          "outlier), one row per vector; nlist = 0 picks sqrt(n) cells. " +
-          "Training runs during ANALYSIS (bounded, like " +
-          "graft_decontaminate's guard). The 3-argument form " +
-          "graft_embed_outliers(batch_path, model_path, factor) scores " +
-          "the batch against a PERSISTED " +
-          "IVF.embedOutliersTrain/OutlierModel.write directory instead " +
-          "of retraining - the recurring form: a fixed yardstick, " +
-          "batch-sized cost. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, nl) =>
-          val fn = "graft_embed_outliers"
-          planOf(graft.functions.IVF.embedOutliers(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            intArg(fn, nl, "nlist")))
-        case Seq(bp, mp, f) =>
-          val fn = "graft_embed_outliers"
-          val spark = SparkSession.active
-          planOf(graft.functions.IVF.embedOutliersScore(
-            graft.functions.IVF.OutlierModel.read(
-              spark, strArg(fn, mp, "model_path")),
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            dblArg(fn, f, "factor")))
-        case other => arity("graft_embed_outliers", "2 or 3", other.length)
+    tvf("graft_embed_outliers",
+      "graft_embed_outliers(path, nlist) - distance-to-centroid " +
+        "outlier screen over the parquet embedding corpus at `path` " +
+        "(columns vec_id, embedding): (vec_id, cell, dist_micro, " +
+        "outlier), one row per vector; nlist = 0 picks sqrt(n) cells. " +
+        "Training runs during ANALYSIS (bounded, like " +
+        "graft_decontaminate's guard). The 3-argument form " +
+        "graft_embed_outliers(batch_path, model_path, factor) scores " +
+        "the batch against a PERSISTED " +
+        "IVF.embedOutliersTrain/OutlierModel.write directory instead " +
+        "of retraining - the recurring form: a fixed yardstick, " +
+        "batch-sized cost. All arguments are literals.")(
+      at(2) { a =>
+        IVF.embedOutliers(a.parquet(0, "path"), a.int(1, "nlist"))
+      },
+      at(3) { a =>
+        IVF.embedOutliersScore(
+          IVF.OutlierModel.read(a.spark, a.str(1, "model_path")),
+          a.parquet(0, "batch_path"), a.dbl(2, "factor"))
       }),
-    (FunctionIdentifier("graft_knn_classify"),
-      tvfInfo("graft_knn_classify",
-        "graft_knn_classify(queries_path, corpus_path, label_col, k) - " +
-          "kNN label vote: exact top-k cosine neighbors of each query " +
-          "vector (parquet at `queries_path`, columns vec_id, embedding) " +
-          "in the labeled corpus (parquet at `corpus_path`, columns " +
-          "vec_id, embedding, <label_col>), majority label with " +
-          "deterministic tie-breaks: (query_id, predicted, votes, " +
-          "best_rank). Labels must be NON-NULL and castable to BIGINT " +
-          "for every voting neighbor - a null or non-castable label " +
-          "fails the query loudly at vote time. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(qp, cp, lc, kk) =>
-          val fn = "graft_knn_classify"
-          val spark = SparkSession.active
-          planOf(graft.functions.Vectors.knnClassify(
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            spark.read.parquet(strArg(fn, cp, "corpus_path")),
-            strArg(fn, lc, "label_col"), intArg(fn, kk, "k")))
-        case other => arity("graft_knn_classify", 4, other.length)
+    tvf("graft_knn_classify",
+      "graft_knn_classify(queries_path, corpus_path, label_col, k) - " +
+        "kNN label vote: exact top-k cosine neighbors of each query " +
+        "vector (parquet at `queries_path`, columns vec_id, embedding) " +
+        "in the labeled corpus (parquet at `corpus_path`, columns " +
+        "vec_id, embedding, <label_col>), majority label with " +
+        "deterministic tie-breaks: (query_id, predicted, votes, " +
+        "best_rank). Labels must be NON-NULL and castable to BIGINT " +
+        "for every voting neighbor - a null or non-castable label " +
+        "fails the query loudly at vote time. All arguments are " +
+        "literals.")(
+      at(4) { a =>
+        Vectors.knnClassify(a.parquet(0, "queries_path"),
+          a.parquet(1, "corpus_path"), a.str(2, "label_col"), a.int(3, "k"))
       }),
-    (FunctionIdentifier("graft_knn_screen"),
-      tvfInfo("graft_knn_screen",
-        "graft_knn_screen(queries_path, index_path, labels_path, " +
-          "label_col, k, nprobe) - the kNN label vote riding the " +
-          "PERSISTED IVF index (the recurring annotation-propagation " +
-          "form of graft_knn_classify): neighbors come from the stored " +
-          "quantizer + cell assignment at `index_path` (an " +
-          "IVF.buildIvfIndex / Ingest-managed directory), labels join " +
-          "from the parquet at `labels_path` (columns vec_id, " +
-          "<label_col>; non-null, BIGINT-castable - violations fail " +
-          "loudly at vote time). nprobe = 0 picks the automatic probe " +
-          "count; at nprobe = nlist the vote equals the exact " +
-          "brute-force one. Output (query_id, predicted, votes, " +
-          "best_rank). All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(qp, ip, lp, lc, kk, np) =>
-          val fn = "graft_knn_screen"
-          val spark = SparkSession.active
-          planOf(graft.functions.Vectors.knnClassifyIndexed(
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            graft.functions.IVF.IvfIndex.read(
-              spark, strArg(fn, ip, "index_path")),
-            spark.read.parquet(strArg(fn, lp, "labels_path")),
-            strArg(fn, lc, "label_col"),
-            intArg(fn, kk, "k"), intArg(fn, np, "nprobe")))
-        case other => arity("graft_knn_screen", 6, other.length)
+    tvf("graft_knn_screen",
+      "graft_knn_screen(queries_path, index_path, labels_path, " +
+        "label_col, k, nprobe) - the kNN label vote riding the " +
+        "PERSISTED IVF index (the recurring annotation-propagation " +
+        "form of graft_knn_classify): neighbors come from the stored " +
+        "quantizer + cell assignment at `index_path` (an " +
+        "IVF.buildIvfIndex / Ingest-managed directory), labels join " +
+        "from the parquet at `labels_path` (columns vec_id, " +
+        "<label_col>; non-null, BIGINT-castable - violations fail " +
+        "loudly at vote time). nprobe = 0 picks the automatic probe " +
+        "count; at nprobe = nlist the vote equals the exact " +
+        "brute-force one. Output (query_id, predicted, votes, " +
+        "best_rank). All arguments are literals.")(
+      at(6) { a =>
+        Vectors.knnClassifyIndexed(a.parquet(0, "queries_path"),
+          IVF.IvfIndex.read(a.spark, a.str(1, "index_path")),
+          a.parquet(2, "labels_path"), a.str(3, "label_col"),
+          a.int(4, "k"), a.int(5, "nprobe"))
       }),
-    (FunctionIdentifier("graft_range_search"),
-      tvfInfo("graft_range_search",
-        "graft_range_search(queries_path, index_path, min_cos, nprobe) " +
-          "- radius retrieval over the PERSISTED IVF index: every " +
-          "stored vector in a query's probed cells with cosine " +
-          "similarity >= min_cos (the fixed-quality complement of the " +
-          "top-k screens; result size is data-dependent by design). " +
-          "`index_path` is an IVF.buildIvfIndex / Ingest-managed " +
-          "directory; nprobe = 0 picks the automatic probe count, and " +
-          "an in-range vector in an unprobed cell is missed exactly as " +
-          "in IVF top-k. Output (query_id, cand_id, cos). All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(qp, ip, mc, np) =>
-          val fn = "graft_range_search"
-          val spark = SparkSession.active
-          planOf(graft.functions.IVF.rangeSearchIndexed(
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            graft.functions.IVF.IvfIndex.read(
-              spark, strArg(fn, ip, "index_path")),
-            dblArg(fn, mc, "min_cos"), intArg(fn, np, "nprobe")))
-        case other => arity("graft_range_search", 4, other.length)
+    tvf("graft_range_search",
+      "graft_range_search(queries_path, index_path, min_cos, nprobe) " +
+        "- radius retrieval over the PERSISTED IVF index: every " +
+        "stored vector in a query's probed cells with cosine " +
+        "similarity >= min_cos (the fixed-quality complement of the " +
+        "top-k screens; result size is data-dependent by design). " +
+        "`index_path` is an IVF.buildIvfIndex / Ingest-managed " +
+        "directory; nprobe = 0 picks the automatic probe count, and " +
+        "an in-range vector in an unprobed cell is missed exactly as " +
+        "in IVF top-k. Output (query_id, cand_id, cos). All " +
+        "arguments are literals.")(
+      at(4) { a =>
+        IVF.rangeSearchIndexed(a.parquet(0, "queries_path"),
+          IVF.IvfIndex.read(a.spark, a.str(1, "index_path")),
+          a.dbl(2, "min_cos"), a.int(3, "nprobe"))
       }),
-    (FunctionIdentifier("graft_knn_screen_pq"),
-      tvfInfo("graft_knn_screen_pq",
-        "graft_knn_screen_pq(queries_path, index_path, labels_path, " +
-          "label_col, k, nprobe) - the kNN label vote riding the " +
-          "PERSISTED PQ index (graft_knn_screen's cheapest form): " +
-          "stored coarse cells prune the candidate scan and stored " +
-          "32-bit ADC codes score it - ~4 B read per corpus vector, no " +
-          "raw embeddings. `index_path` is a PQ.buildPqIndex / " +
-          "Ingest-managed directory; labels join from the parquet at " +
-          "`labels_path` (columns vec_id, <label_col>; non-null, " +
-          "BIGINT-castable - violations fail loudly at vote time). " +
-          "Neighbor ranks are the ADC approximation's. nprobe = 0 picks " +
-          "the automatic probe count. Output (query_id, predicted, " +
-          "votes, best_rank). All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(qp, ip, lp, lc, kk, np) =>
-          val fn = "graft_knn_screen_pq"
-          val spark = SparkSession.active
-          planOf(graft.functions.Vectors.knnClassifyIndexedPq(
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            graft.functions.PQ.PqIndex.read(
-              spark, strArg(fn, ip, "index_path")),
-            spark.read.parquet(strArg(fn, lp, "labels_path")),
-            strArg(fn, lc, "label_col"),
-            intArg(fn, kk, "k"), intArg(fn, np, "nprobe")))
-        case other => arity("graft_knn_screen_pq", 6, other.length)
+    tvf("graft_knn_screen_pq",
+      "graft_knn_screen_pq(queries_path, index_path, labels_path, " +
+        "label_col, k, nprobe) - the kNN label vote riding the " +
+        "PERSISTED PQ index (graft_knn_screen's cheapest form): " +
+        "stored coarse cells prune the candidate scan and stored " +
+        "32-bit ADC codes score it - ~4 B read per corpus vector, no " +
+        "raw embeddings. `index_path` is a PQ.buildPqIndex / " +
+        "Ingest-managed directory; labels join from the parquet at " +
+        "`labels_path` (columns vec_id, <label_col>; non-null, " +
+        "BIGINT-castable - violations fail loudly at vote time). " +
+        "Neighbor ranks are the ADC approximation's. nprobe = 0 picks " +
+        "the automatic probe count. Output (query_id, predicted, " +
+        "votes, best_rank). All arguments are literals.")(
+      at(6) { a =>
+        Vectors.knnClassifyIndexedPq(a.parquet(0, "queries_path"),
+          PQ.PqIndex.read(a.spark, a.str(1, "index_path")),
+          a.parquet(2, "labels_path"), a.str(3, "label_col"),
+          a.int(4, "k"), a.int(5, "nprobe"))
       }),
-    (FunctionIdentifier("graft_index_report"),
-      tvfInfo("graft_index_report",
-        "graft_index_report(nd_index_path, chunk_root_path, " +
-          "ivf_index_path[, pq_index_path[, span_root_path]]) - " +
-          "storage-maintenance audit over the ingestion loop's " +
-          "persisted index families: one row per family " +
-          "(neardup/chunk/ivf/pq/span) with layout " +
-          "(managed/flat/absent), active generation, committed " +
-          "data-file count (the compaction triggers' own metric), row " +
-          "count, and the chunk/span families' committed-epoch/" +
-          "epoch-marker counts. Pass '' for an index family the loop " +
-          "does not maintain. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(np, cp, ip) =>
-          val fn = "graft_index_report"
-          val ivf = strArg(fn, ip, "ivf_index_path")
-          planOf(graft.functions.Ingest.indexReport(
-            SparkSession.active,
-            strArg(fn, np, "nd_index_path"),
-            strArg(fn, cp, "chunk_root_path"),
-            if (ivf.isEmpty) None else Some(ivf)))
-        case Seq(np, cp, ip, pp) =>
-          val fn = "graft_index_report"
-          val ivf = strArg(fn, ip, "ivf_index_path")
-          val pq = strArg(fn, pp, "pq_index_path")
-          planOf(graft.functions.Ingest.indexReport(
-            SparkSession.active,
-            strArg(fn, np, "nd_index_path"),
-            strArg(fn, cp, "chunk_root_path"),
-            if (ivf.isEmpty) None else Some(ivf),
-            if (pq.isEmpty) None else Some(pq)))
-        case Seq(np, cp, ip, pp, sp) =>
-          val fn = "graft_index_report"
-          val ivf = strArg(fn, ip, "ivf_index_path")
-          val pq = strArg(fn, pp, "pq_index_path")
-          val span = strArg(fn, sp, "span_root_path")
-          planOf(graft.functions.Ingest.indexReport(
-            SparkSession.active,
-            strArg(fn, np, "nd_index_path"),
-            strArg(fn, cp, "chunk_root_path"),
-            if (ivf.isEmpty) None else Some(ivf),
-            if (pq.isEmpty) None else Some(pq),
-            if (span.isEmpty) None else Some(span)))
-        case other => arity("graft_index_report", 3, other.length)
+    tvf("graft_index_report",
+      "graft_index_report(nd_index_path, chunk_root_path, " +
+        "ivf_index_path[, pq_index_path[, span_root_path]]) - " +
+        "storage-maintenance audit over the ingestion loop's " +
+        "persisted index families: one row per family " +
+        "(neardup/chunk/ivf/pq/span) with layout " +
+        "(managed/flat/absent), active generation, committed " +
+        "data-file count (the compaction triggers' own metric), row " +
+        "count, and the chunk/span families' committed-epoch/" +
+        "epoch-marker counts. Pass '' for an index family the loop " +
+        "does not maintain. All arguments are literals.")(
+      at(3, 4, 5) { a =>
+        Ingest.indexReport(a.spark, a.str(0, "nd_index_path"),
+          a.str(1, "chunk_root_path"), a.opt(2, "ivf_index_path"),
+          a.opt(3, "pq_index_path"), a.opt(4, "span_root_path"))
       }),
-    (FunctionIdentifier("graft_span_screen"),
-      tvfInfo("graft_span_screen",
-        "graft_span_screen(batch_path, index_path, id_col, text_col, k) " +
-          "- boilerplate screen against a PERSISTED span index (the " +
-          "ingestion loop's span-gate read path): per batch doc, how " +
-          "many of its k-token spans the stored span set already " +
-          "carries. `index_path` is an Ingest-managed span root " +
-          "(CURRENT pointer) or a raw spanIndexAppend epoch directory. " +
-          "Calling it runs one bounded job up front (the broadcast-" +
-          "contract guard). Output (doc_id, n_spans, n_ref_spans). All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(bp, ip, id, txt, kk) =>
-          val fn = "graft_span_screen"
-          val spark = SparkSession.active
-          val kv = intArg(fn, kk, "k")
-          planOf(graft.functions.Spans.spanScreenIndexed(
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            graft.functions.Ingest.spanIndexAt(
-              spark, strArg(fn, ip, "index_path"), kv),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"), kv))
-        case other => arity("graft_span_screen", 5, other.length)
+    tvf("graft_span_screen",
+      "graft_span_screen(batch_path, index_path, id_col, text_col, k) " +
+        "- boilerplate screen against a PERSISTED span index (the " +
+        "ingestion loop's span-gate read path): per batch doc, how " +
+        "many of its k-token spans the stored span set already " +
+        "carries. `index_path` is an Ingest-managed span root " +
+        "(CURRENT pointer) or a raw spanIndexAppend epoch directory. " +
+        "Calling it runs one bounded job up front (the broadcast-" +
+        "contract guard). Output (doc_id, n_spans, n_ref_spans). All " +
+        "arguments are literals.")(
+      at(5) { a =>
+        val kv = a.int(4, "k")
+        Spans.spanScreenIndexed(a.parquet(0, "batch_path"),
+          Ingest.spanIndexAt(a.spark, a.str(1, "index_path"), kv),
+          a.str(2, "id_col"), a.str(3, "text_col"), kv)
       }),
-    (FunctionIdentifier("graft_mix_tokens"),
-      tvfInfo("graft_mix_tokens",
-        "graft_mix_tokens(path, source_col, tokens_col, budgets_json) - " +
-          "token-budget corpus mix (CorpusMix.mixByTokens) over the " +
-          "parquet corpus at `path` (columns doc_id, <source_col>, " +
-          "<tokens_col>): per source, docs are taken in md5-of-doc_id " +
-          "rank order while the cumulative token count BEFORE each doc " +
-          "stays under the source's budget - deterministic greedy fill, " +
-          "the crossing doc included. budgets_json is a JSON object of " +
-          "source -> positive integer token budget, e.g. " +
-          "'{\"web\": 3000000, \"code\": 500000}'; sources absent from " +
-          "it are dropped. Output (doc_id, source, n_tokens). " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, sc, tc, bj) =>
-          val fn = "graft_mix_tokens"
-          planOf(graft.ops.CorpusMix.mixByTokens(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            "doc_id", strArg(fn, sc, "source_col"),
-            strArg(fn, tc, "tokens_col"),
-            parseBudgets(fn, strArg(fn, bj, "budgets_json"))))
-        case other => arity("graft_mix_tokens", 4, other.length)
+    tvf("graft_mix_tokens",
+      "graft_mix_tokens(path, source_col, tokens_col, budgets_json) - " +
+        "token-budget corpus mix (CorpusMix.mixByTokens) over the " +
+        "parquet corpus at `path` (columns doc_id, <source_col>, " +
+        "<tokens_col>): per source, docs are taken in md5-of-doc_id " +
+        "rank order while the cumulative token count BEFORE each doc " +
+        "stays under the source's budget - deterministic greedy fill, " +
+        "the crossing doc included. budgets_json is a JSON object of " +
+        "source -> positive integer token budget, e.g. " +
+        "'{\"web\": 3000000, \"code\": 500000}'; sources absent from " +
+        "it are dropped. Output (doc_id, source, n_tokens). " +
+        "All arguments are literals.")(
+      at(4) { a =>
+        CorpusMix.mixByTokens(a.parquet(0, "path"), "doc_id",
+          a.str(1, "source_col"), a.str(2, "tokens_col"),
+          parseBudgets(a, a.str(3, "budgets_json")))
       }),
-    (FunctionIdentifier("graft_corpus_drift"),
-      tvfInfo("graft_corpus_drift",
-        "graft_corpus_drift(path_a, path_b, text_col, top_n) - " +
-          "distribution drift between the two parquet corpora: the " +
-          "top_n words by total-variation contribution " +
-          "|p_a(word) - p_b(word)| / 2 over the whitespace vocabulary " +
-          "(exact integer/decimal arithmetic, one IEEE division per " +
-          "word). Both corpora must be non-empty. Output (word, cnt_a, " +
-          "cnt_b, drift), drift descending then word. All arguments " +
-          "are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(pa, pb, tc, tn) =>
-          val fn = "graft_corpus_drift"
-          val spark = SparkSession.active
-          planOf(graft.functions.TextFunctions.corpusDrift(
-            spark.read.parquet(strArg(fn, pa, "path_a")),
-            spark.read.parquet(strArg(fn, pb, "path_b")),
-            strArg(fn, tc, "text_col"), intArg(fn, tn, "top_n")))
-        case other => arity("graft_corpus_drift", 4, other.length)
+    tvf("graft_corpus_drift",
+      "graft_corpus_drift(path_a, path_b, text_col, top_n) - " +
+        "distribution drift between the two parquet corpora: the " +
+        "top_n words by total-variation contribution " +
+        "|p_a(word) - p_b(word)| / 2 over the whitespace vocabulary " +
+        "(exact integer/decimal arithmetic, one IEEE division per " +
+        "word). Both corpora must be non-empty. Output (word, cnt_a, " +
+        "cnt_b, drift), drift descending then word. All arguments " +
+        "are literals.")(
+      at(4) { a =>
+        TextFunctions.corpusDrift(a.parquet(0, "path_a"),
+          a.parquet(1, "path_b"), a.str(2, "text_col"), a.int(3, "top_n"))
       }),
-    (FunctionIdentifier("graft_quality_gopher"),
-      tvfInfo("graft_quality_gopher",
-        "graft_quality_gopher(path, id_col, text_col) - the structural " +
-          "Gopher rule families over the parquet corpus at `path`: " +
-          "(doc_id, n_tokens, mean_word_len, symbol_ratio, bullet_frac, " +
-          "ellipsis_frac, alpha_frac, n_stop_hits, passes), one row per " +
-          "doc, one typed pass, no shuffle. The repetition rules are " +
-          "the companion repetitionStats operator. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt) =>
-          val fn = "graft_quality_gopher"
-          planOf(graft.functions.TextFunctions.gopherStats(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col")).toDF())
-        case other => arity("graft_quality_gopher", 3, other.length)
+    tvf("graft_quality_gopher",
+      "graft_quality_gopher(path, id_col, text_col) - the structural " +
+        "Gopher rule families over the parquet corpus at `path`: " +
+        "(doc_id, n_tokens, mean_word_len, symbol_ratio, bullet_frac, " +
+        "ellipsis_frac, alpha_frac, n_stop_hits, passes), one row per " +
+        "doc, one typed pass, no shuffle. The repetition rules are " +
+        "the companion repetitionStats operator. All arguments are " +
+        "literals.")(
+      at(3) { a =>
+        TextFunctions.gopherStats(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"))
       }),
-    (FunctionIdentifier("graft_source_cap"),
-      tvfInfo("graft_source_cap",
-        "graft_source_cap(path, id_col, key_col, max_per_key[, keep_by])" +
-          " - per-domain cap with a kept flag for EVERY doc: keep " +
-          "max_per_key docs of each key, flag the rest. keep_by = " +
-          "'byId' (default - lowest ids) or 'byHash' (md5-of-id rank, " +
-          "the crawl-order-unbiased draw). Output (doc_id, <key_col>, " +
-          "kept). Bounded-heap prune before the exact window, so a hot " +
-          "key never funnels its population through one reducer. All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, kc, mx) =>
-          val fn = "graft_source_cap"
-          planOf(graft.ops.CorpusMix.sourceCap(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, kc, "key_col"),
-            intArg(fn, mx, "max_per_key")))
-        case Seq(p, id, kc, mx, kb) =>
-          val fn = "graft_source_cap"
-          planOf(graft.ops.CorpusMix.sourceCap(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, kc, "key_col"),
-            intArg(fn, mx, "max_per_key"), strArg(fn, kb, "keep_by")))
-        case other => arity("graft_source_cap", "4 or 5", other.length)
+    tvf("graft_source_cap",
+      "graft_source_cap(path, id_col, key_col, max_per_key[, keep_by])" +
+        " - per-domain cap with a kept flag for EVERY doc: keep " +
+        "max_per_key docs of each key, flag the rest. keep_by = " +
+        "'byId' (default - lowest ids) or 'byHash' (md5-of-id rank, " +
+        "the crawl-order-unbiased draw). Output (doc_id, <key_col>, " +
+        "kept). Bounded-heap prune before the exact window, so a hot " +
+        "key never funnels its population through one reducer. All " +
+        "arguments are literals.")(
+      at(4, 5) { a =>
+        CorpusMix.sourceCap(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "key_col"), a.int(3, "max_per_key"),
+          a.strOr(4, "keep_by", "byId"))
       }),
-    (FunctionIdentifier("graft_embed_energy"),
-      tvfInfo("graft_embed_energy",
-        "graft_embed_energy(path, head_dims) - matryoshka-truncation " +
-          "audit over the parquet vectors at `path` (columns vec_id, " +
-          "embedding): per vector, the fraction of squared mass in the " +
-          "first head_dims dimensions - (vec_id, dims, head_micro, " +
-          "total_micro, head_frac); one stateless pass, exact integer " +
-          "energies. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, hd) =>
-          val fn = "graft_embed_energy"
-          planOf(graft.functions.Vectors.embedEnergyStats(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            intArg(fn, hd, "head_dims")).toDF())
-        case other => arity("graft_embed_energy", 2, other.length)
+    tvf("graft_embed_energy",
+      "graft_embed_energy(path, head_dims) - matryoshka-truncation " +
+        "audit over the parquet vectors at `path` (columns vec_id, " +
+        "embedding): per vector, the fraction of squared mass in the " +
+        "first head_dims dimensions - (vec_id, dims, head_micro, " +
+        "total_micro, head_frac); one stateless pass, exact integer " +
+        "energies. All arguments are literals.")(
+      at(2) { a =>
+        Vectors.embedEnergyStats(a.parquet(0, "path"), a.int(1, "head_dims"))
       }),
-    (FunctionIdentifier("graft_source_report"),
-      tvfInfo("graft_source_report",
-        "graft_source_report(path, id_col, text_col, source_col) - " +
-          "per-source dataset-card rollup over the parquet corpus at " +
-          "`path`: (source, n_docs, n_tokens, n_pass, pass_rate, " +
-          "mean_doc_tokens) — document count, token mass, structural " +
-          "Gopher pass rate, mean doc length; one typed pass + one " +
-          "map-side rollup, sources rows out. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, sc) =>
-          val fn = "graft_source_report"
-          planOf(graft.functions.TextFunctions.sourceQualityReport(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            strArg(fn, sc, "source_col")))
-        case other => arity("graft_source_report", 4, other.length)
+    tvf("graft_source_report",
+      "graft_source_report(path, id_col, text_col, source_col) - " +
+        "per-source dataset-card rollup over the parquet corpus at " +
+        "`path`: (source, n_docs, n_tokens, n_pass, pass_rate, " +
+        "mean_doc_tokens) — document count, token mass, structural " +
+        "Gopher pass rate, mean doc length; one typed pass + one " +
+        "map-side rollup, sources rows out. All arguments are " +
+        "literals.")(
+      at(4) { a =>
+        TextFunctions.sourceQualityReport(a.parquet(0, "path"),
+          a.str(1, "id_col"), a.str(2, "text_col"), a.str(3, "source_col"))
       }),
-    (FunctionIdentifier("graft_split_assign"),
-      tvfInfo("graft_split_assign",
-        "graft_split_assign(path, id_col, splits_csv[, by_col]) - " +
-          "deterministic weighted N-way corpus split over the parquet " +
-          "corpus at `path`: splits_csv is an ORDERED 'name:weight' " +
-          "list, e.g. 'train:80,val:10,test:10'; each key draws an md5 " +
-          "u32 and lands in the split whose exact cumulative-weight " +
-          "range covers it (no rand(), no float proportions). by_col " +
-          "keys the draw on a GROUP column instead of the id - the " +
-          "leak-free split. Output (doc_id, split) or (doc_id, " +
-          "<by_col>, split). All arguments are literals."),
-      (exprs: Seq[Expression]) => {
-        def parseSplits(fn: String, csv: String): Seq[(String, Long)] =
-          csv.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { part =>
-            part.split(":") match {
-              case Array(name, w) if w.trim.matches("-?\\d+") =>
-                name.trim -> w.trim.toLong
-              case _ => throw new IllegalArgumentException(
-                s"$fn: splits_csv entries must be 'name:integer_weight', " +
-                  s"got '$part'")
-            }
-          }
-        exprs match {
-          case Seq(p, id, sc) =>
-            val fn = "graft_split_assign"
-            planOf(graft.ops.CorpusMix.splitAssign(
-              SparkSession.active.read.parquet(strArg(fn, p, "path")),
-              strArg(fn, id, "id_col"),
-              parseSplits(fn, strArg(fn, sc, "splits_csv"))))
-          case Seq(p, id, sc, bc) =>
-            val fn = "graft_split_assign"
-            planOf(graft.ops.CorpusMix.splitAssign(
-              SparkSession.active.read.parquet(strArg(fn, p, "path")),
-              strArg(fn, id, "id_col"),
-              parseSplits(fn, strArg(fn, sc, "splits_csv")),
-              byCol = strArg(fn, bc, "by_col")))
-          case other => arity("graft_split_assign", "3 or 4", other.length)
+    tvf("graft_split_assign",
+      "graft_split_assign(path, id_col, splits_csv[, by_col]) - " +
+        "deterministic weighted N-way corpus split over the parquet " +
+        "corpus at `path`: splits_csv is an ORDERED 'name:weight' " +
+        "list, e.g. 'train:80,val:10,test:10'; each key draws an md5 " +
+        "u32 and lands in the split whose exact cumulative-weight " +
+        "range covers it (no rand(), no float proportions). by_col " +
+        "keys the draw on a GROUP column instead of the id - the " +
+        "leak-free split. Output (doc_id, split) or (doc_id, " +
+        "<by_col>, split). All arguments are literals.")(
+      at(3, 4) { a =>
+        CorpusMix.splitAssign(a.parquet(0, "path"), a.str(1, "id_col"),
+          parseSplits(a, a.str(2, "splits_csv")),
+          byCol = a.strOr(3, "by_col", ""))
+      }),
+    tvf("graft_decontaminate_multi",
+      "graft_decontaminate_multi(train_path, evals_path, min_ratio) - " +
+        "multi-benchmark decontamination: screen the parquet corpus " +
+        "at train_path (columns doc_id, text) against the NAMED eval " +
+        "sets at evals_path (columns set_name, text) in one corpus " +
+        "pass (union gram table broadcast, loud suite-size guard). " +
+        "Output (doc_id, set_name, n_grams, n_overlap, contaminated), " +
+        "one row per overlapping (doc, set) pair. All arguments are " +
+        "literals.")(
+      at(3) { a =>
+        Dedup.decontaminateAgainst(a.parquet(0, "train_path"),
+          "doc_id", "text", a.parquet(1, "evals_path"),
+          minRatio = a.dbl(2, "min_ratio"))
+      }),
+    tvf("graft_cluster_drift",
+      "graft_cluster_drift(model_path, path_a, path_b, top_n) - " +
+        "embedding-space drift between the two parquet corpora " +
+        "(columns vec_id, embedding) through the STORED ClusterModel " +
+        "at model_path: both sides assign to the same fixed k-means " +
+        "cells, each cell reports its total-variation contribution " +
+        "|p_a(cell) - p_b(cell)| / 2 (exact integer/decimal " +
+        "arithmetic, one IEEE division per cell). Both corpora must " +
+        "be non-empty. Output (cluster, cnt_a, cnt_b, drift), drift " +
+        "descending then cluster. All arguments are literals.")(
+      at(4) { a =>
+        IVF.clusterDrift(
+          IVF.ClusterModel.read(a.spark, a.str(0, "model_path")),
+          a.parquet(1, "path_a"), a.parquet(2, "path_b"), a.int(3, "top_n"))
+      }),
+    tvf("graft_mix_temperature",
+      "graft_mix_temperature(path, source_col, tokens_col, " +
+        "total_budget[, alpha]) - temperature-weighted token budgets " +
+        "(CorpusMix.temperatureBudgets): per-source token mass " +
+        "reweighted to mass^alpha (alpha = 'prop' or 'sqrt', default " +
+        "'sqrt' - exact integer square root, no float pow) and the " +
+        "total budget apportioned by exact floor division with " +
+        "largest-remainder rounding, so sum(budget) == total_budget " +
+        "EXACTLY. Output (source, tokens_total, weight, budget). " +
+        "Feed the budgets to graft_mix_tokens to materialize the " +
+        "draw. All arguments are literals.")(
+      at(4, 5) { a =>
+        CorpusMix.temperatureBudgets(a.parquet(0, "path"),
+          a.str(1, "source_col"), a.str(2, "tokens_col"),
+          a.long(3, "total_budget"), a.strOr(4, "alpha", "sqrt"))
+      }),
+    tvf("graft_importance_sample",
+      "graft_importance_sample(path, id_col, score_col, max_score) - " +
+        "deterministic score-proportional Bernoulli filter " +
+        "(CorpusMix.importanceSample): each doc kept with probability " +
+        "min(1, score/max_score) via one exact integer cross-multiply " +
+        "against an md5-derived 32-bit draw - no rand(), " +
+        "bit-reproducible. Negative scores fail loud. Output (doc_id, " +
+        "score, kept), one row per doc. All arguments are literals.")(
+      at(4) { a =>
+        CorpusMix.importanceSample(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "score_col"), a.long(3, "max_score"))
+      }),
+    tvf("graft_bm25",
+      "graft_bm25(path, id_col, text_col, terms_csv, k) - BM25 " +
+        "retrieval over the parquet corpus at `path` for the " +
+        "comma-separated term set (lowercase whitespace tokens): " +
+        "(doc_id, score_micro, n_terms, rank), rank 1..k by " +
+        "(score_micro DESC, doc_id). Scores are exact micro-unit " +
+        "integers (idf quantized per term, contributions floored, " +
+        "integer sums) - bit-reproducible. The idf/avgdl aggregates " +
+        "run during ANALYSIS (bounded - the graft_decontaminate " +
+        "guard-job caveat). The 3-argument form " +
+        "graft_bm25(batch_path, model_path, k) scores the batch " +
+        "(columns doc_id, text) against a PERSISTED " +
+        "TextFunctions.bm25Train/Bm25Model.write directory instead " +
+        "of retraining - the recurring form: a fixed yardstick, " +
+        "batch-sized cost. All arguments are literals.")(
+      at(5) { a =>
+        val terms = a.str(3, "terms_csv").split(",")
+          .map(_.trim).filter(_.nonEmpty).toSeq
+        TextFunctions.bm25TopK(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), terms, a.int(4, "k"))
+      },
+      at(3) { a =>
+        TextFunctions.bm25ScoreModel(
+          TextFunctions.Bm25Model.read(a.spark, a.str(1, "model_path")),
+          a.parquet(0, "batch_path"), "doc_id", "text", a.int(2, "k"))
+      }),
+    tvf("graft_bm25_batch",
+      "graft_bm25_batch(corpus_path, id_col, text_col, queries_path, " +
+        "k) - multi-query BM25: score the parquet query batch at " +
+        "`queries_path` (columns query_id, terms ARRAY<STRING>, <= " +
+        "256 queries of <= 64 terms each) against the corpus in ONE " +
+        "tokenize pass; (query_id, doc_id, score_micro, n_terms, " +
+        "rank), rank 1..k per query by (score_micro DESC, doc_id). " +
+        "The idf/avgdl aggregates run during ANALYSIS (bounded - the " +
+        "graft_decontaminate guard-job caveat). The 3-argument form " +
+        "graft_bm25_batch(batch_path, model_path, k) ranks the batch " +
+        "(columns doc_id, text) against a PERSISTED " +
+        "TextFunctions.bm25BatchTrain/Bm25BatchModel.write directory " +
+        "instead of retraining - the recurring form: a fixed query " +
+        "set and yardstick, batch-sized cost. All arguments are " +
+        "literals.")(
+      at(5) { a =>
+        TextFunctions.bm25TopKBatch(a.parquet(0, "corpus_path"),
+          a.str(1, "id_col"), a.str(2, "text_col"),
+          a.parquet(3, "queries_path"), a.int(4, "k"))
+      },
+      at(3) { a =>
+        TextFunctions.bm25TopKBatchModel(
+          TextFunctions.Bm25BatchModel.read(a.spark, a.str(1, "model_path")),
+          a.parquet(0, "batch_path"), "doc_id", "text", a.int(2, "k"))
+      }),
+    tvf("graft_embed_dim_stats",
+      "graft_embed_dim_stats(path) - per-DIMENSION embedding audit " +
+        "over the parquet embeddings at `path` (column embedding): " +
+        "(dim, n_vecs, sum_micro, mean_micro, min_micro, max_micro), " +
+        "micro-quantized exact integers - dead/clipped/scale-drifted " +
+        "dimensions surface before an index build trusts them. All " +
+        "arguments are literals.")(
+      at(1)(a => Vectors.embedDimStats(a.parquet(0, "path")))),
+    tvf("graft_dedup_keep_best",
+      "graft_dedup_keep_best(path, id_col, text_col, threshold) - " +
+        "keep-BEST near-dup consolidation over the parquet corpus at " +
+        "`path`: one survivor per near-dup cluster, the LONGEST " +
+        "member (ties to the smallest id). Output (doc_id, " +
+        "cluster_id, n_tokens, kept), one row per doc. The 5-argument " +
+        "form graft_dedup_keep_best(path, id_col, text_col, " +
+        "score_col, threshold) keeps the cluster member with the " +
+        "highest INTEGRAL score in `score_col` instead (output " +
+        "column: score). All arguments are literals.")(
+      at(4, 5) { a =>
+        val (df, id, txt) =
+          (a.parquet(0, "path"), a.str(1, "id_col"), a.str(2, "text_col"))
+        if (a.n == 4) Dedup.nearDupKeepBest(df, id, txt, a.dbl(3, "threshold"))
+        else Dedup.nearDupKeepBestBy(df, id, txt, a.str(3, "score_col"),
+          a.dbl(4, "threshold"))
+      }),
+    tvf("graft_cluster_sample",
+      "graft_cluster_sample(path, per_cluster, nlist) - " +
+        "cluster-balanced deterministic sample over the parquet " +
+        "embeddings at `path` (columns vec_id, embedding): " +
+        "per_cluster vectors per k-means cell by md5-of-id rank " +
+        "(no rand(); bit-reproducible). Output (vec_id, cluster, " +
+        "rk); nlist = 0 picks sqrt(n) cells. Training runs during " +
+        "ANALYSIS (bounded, MaxNlist-gated). The STRING-second-" +
+        "argument form graft_cluster_sample(batch_path, model_path, " +
+        "per_cluster) draws against a PERSISTED " +
+        "IVF.embedClustersTrain/ClusterModel.write directory instead " +
+        "of retraining - the recurring form: cluster ids stay " +
+        "comparable across batches. All arguments are literals.")(
+      at(3) { a =>
+        if (a.isStr(1))
+          IVF.clusterSampleModel(
+            IVF.ClusterModel.read(a.spark, a.str(1, "model_path")),
+            a.parquet(0, "batch_path"), a.int(2, "per_cluster"))
+        else
+          IVF.clusterSample(a.parquet(0, "path"), a.int(1, "per_cluster"),
+            a.int(2, "nlist"))
+      }),
+    tvf("graft_embed_cluster",
+      "graft_embed_cluster(path, nlist) - k-means corpus clustering " +
+        "over the parquet embeddings at `path` (columns vec_id, " +
+        "embedding): (vec_id, cluster, dist_micro, cluster_size), one " +
+        "row per vector; nlist = 0 picks sqrt(n) cells. Training " +
+        "runs during ANALYSIS (bounded, MaxNlist-gated). The STRING-" +
+        "second-argument form graft_embed_cluster(batch_path, " +
+        "model_path) assigns the batch against a PERSISTED " +
+        "IVF.embedClustersTrain/ClusterModel.write directory instead " +
+        "of retraining - the recurring form: a fixed quantizer, " +
+        "batch-sized cost (cluster_size counts THIS batch's members). " +
+        "All arguments are literals.")(
+      at(2) { a =>
+        if (a.isStr(1))
+          IVF.embedClustersScore(
+            IVF.ClusterModel.read(a.spark, a.str(1, "model_path")),
+            a.parquet(0, "batch_path"))
+        else IVF.embedClusters(a.parquet(0, "path"), a.int(1, "nlist"))
+      }),
+    tvf("graft_pack_report",
+      "graft_pack_report(path, id_col, text_col, num_shards, budget" +
+        "[, tokens_col]) - packing-efficiency audit of the " +
+        "deterministic seqPack layout (TrainShuffle.seqPack + " +
+        "packReport) over the parquet corpus at `path`: per shard, " +
+        "docs landed, token mass, fixed-size sequences occupied, docs " +
+        "straddling a sequence boundary, and the fill fraction. " +
+        "`budget` is the per-sequence token budget the layout packs " +
+        "to; ONE map-side-combining rollup, num_shards rows out. The " +
+        "6-argument form budgets in the CALLER-supplied integral " +
+        "column `tokens_col` (e.g. graft_bpe_count model tokens; " +
+        "null/negative counts fail loud) instead of whitespace tokens " +
+        "of text_col. Output (shard, n_docs, total_tokens, n_seqs, " +
+        "split_docs, fill_frac). All arguments are literals.")(
+      at(5, 6) { a =>
+        val budget = a.int(4, "budget")
+        TrainShuffle.packReport(
+          TrainShuffle.seqPack(a.parquet(0, "path"), a.str(1, "id_col"),
+            a.str(2, "text_col"), a.int(3, "num_shards"), budget,
+            tokensCol = a.strOr(5, "tokens_col", "")),
+          budget)
+      }),
+    tvf("graft_fim_transform",
+      "graft_fim_transform(path, id_col, text_col, rate_bp) - " +
+        "fill-in-the-middle training transform (FimTransform.fimSplit) " +
+        "over the parquet corpus at `path`: for an exact " +
+        "rate_bp/10000 md5-selected fraction of docs, two uniform " +
+        "cuts over the normalized text and the <PRE>/<SUF>/<MID> PSM " +
+        "rearrangement; pass-through otherwise. Deterministic (no " +
+        "rand()), stateless projection. Output (id_col, fim_applied, " +
+        "n_chars, cut_lo, cut_hi, psm). All arguments are literals.")(
+      at(4) { a =>
+        FimTransform.fimSplit(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), rateBp = a.int(3, "rate_bp"))
+      }),
+    tvf("graft_shuffle_audit",
+      "graft_shuffle_audit(path, id_col, by_col, num_shards) - " +
+        "shuffle-quality audit (TrainShuffle.shuffleAudit) of the " +
+        "deterministic training order over the parquet corpus at " +
+        "`path`: per shard, docs, distinct `by_col` groups, same-group " +
+        "RUNS in the sort order, the longest run, and interleave = " +
+        "n_runs/n_docs (1.0 = perfectly alternating — long runs mean " +
+        "ingest order leaked into the training order). NULL group " +
+        "values fail loud. Output (shard, n_docs, n_groups, n_runs, " +
+        "max_run, interleave). All arguments are literals.")(
+      at(4) { a =>
+        TrainShuffle.shuffleAudit(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "by_col"), a.int(3, "num_shards"))
+      }),
+    tvf("graft_pack_segments",
+      "graft_pack_segments(path, id_col, text_col, num_shards, " +
+        "budget) - per-sequence SEGMENT table of the seq_pack layout " +
+        "(TrainShuffle.packSegments) over the parquet corpus at " +
+        "`path`: one row per (sequence, document) overlap with the " +
+        "segment's offsets inside both — the boundary metadata a " +
+        "loader reads instead of scanning for the in-band separator. " +
+        "Output (shard, seq, id_col, seg_start, seg_len, doc_off). " +
+        "All arguments are literals.")(
+      at(5) { a =>
+        TrainShuffle.packSegments(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), a.int(3, "num_shards"), a.int(4, "budget"))
+      }),
+    tvf("graft_epoch_shuffle",
+      "graft_epoch_shuffle(path, id_col, num_shards, n_epochs) - " +
+        "cross-epoch order audit (TrainShuffle.epochOrderAudit) over " +
+        "the parquet corpus at `path`: repeated-adjacency counts " +
+        "between the n_epochs epoch-salted deterministic shuffle " +
+        "orders (salts 'epoch0'..'epoch{n-1}') — a broken salting " +
+        "shows n_repeat ~ n_adj; healthy independent orders ~0. " +
+        "Output (epoch_a, epoch_b, n_adj_a, n_adj_b, n_repeat), one " +
+        "row per unordered epoch pair. All arguments are literals.")(
+      at(4) { a =>
+        val n = a.int(3, "n_epochs")
+        TrainShuffle.epochOrderAudit(a.parquet(0, "path"),
+          a.str(1, "id_col"), a.int(2, "num_shards"),
+          (0 until n).map(i => s"epoch$i"))
+      }),
+    tvf("graft_bpe_fertility",
+      "graft_bpe_fertility(path, text_col, by_col, model_path) - " +
+        "tokenizer fertility eval (Bpe.fertilityReport) of the " +
+        "PERSISTED TokenizerModel at `model_path` over the parquet " +
+        "corpus at `path`, per `by_col` group: doc/word/token/char " +
+        "masses, fertility = model tokens per whitespace word, " +
+        "chars_per_token — localizes WHERE the vocab is wasted. Null " +
+        "group values fail loud. Output (by_col, n_docs, n_words, " +
+        "n_tokens_bpe, n_chars, fertility, chars_per_token). All " +
+        "arguments are literals.")(
+      at(4) { a =>
+        Bpe.fertilityReport(a.parquet(0, "path"), a.str(1, "text_col"),
+          a.str(2, "by_col"),
+          Bpe.TokenizerModel.read(a.spark, a.str(3, "model_path")))
+      }),
+    tvf("graft_pack_digest",
+      "graft_pack_digest(path, id_col, text_col, model_path, " +
+        "num_shards, budget[, salt]) - per-shard INTEGRITY DIGEST of " +
+        "the packed training export (TrainShuffle.packDigest over " +
+        "packIdSequences against the PERSISTED TokenizerModel at " +
+        "`model_path`): position-weighted sum and xor checksums over " +
+        "the emitted id stream — what gates a binary artifact's " +
+        "content (sources.BinShards). The 7-argument form varies the " +
+        "shuffle SALT (default 'shuf') — one call per epoch salt is " +
+        "the SQL route to a multi-epoch export's digests " +
+        "(TrainShuffle.epochExport). Output (shard, n_seqs, n_ids, " +
+        "sum_digest, xor_digest). All arguments are literals.")(
+      at(6, 7) { a =>
+        val budget = a.int(5, "budget")
+        TrainShuffle.packDigest(
+          TrainShuffle.packIdSequences(a.parquet(0, "path"),
+            a.str(1, "id_col"), a.str(2, "text_col"),
+            Bpe.TokenizerModel.read(a.spark, a.str(3, "model_path")),
+            a.int(4, "num_shards"), budget, a.strOr(6, "salt", "shuf")),
+          budget)
+      }),
+    tvf("graft_hybrid_topk",
+      "graft_hybrid_topk(corpus_path, id_col, text_col, emb_path, " +
+        "queries_path, k, k_per) - hybrid retrieval: BM25 and IVF " +
+        "top-k_per per query fused by reciprocal rank " +
+        "(Hybrid.hybridTopK; integer micro contributions 1e6 div " +
+        "(60 + rank), exact BIGINT fused score). The query batch at " +
+        "`queries_path` carries (query_id, terms ARRAY<STRING>); the " +
+        "vector side uses the embedding at `emb_path` whose vec_id " +
+        "equals the query_id. Output (query_id, doc_id, rrf_micro, " +
+        "n_rankers, rank), rank 1..k per query. The 5-argument form " +
+        "graft_hybrid_topk(corpus_path, bm25_model_path, " +
+        "ivf_index_path, k, k_per) serves BOTH rankers from PERSISTED " +
+        "artifacts instead (Hybrid.hybridTopKIndexed over a stored " +
+        "Bm25BatchModel — which carries the query set — and a stored " +
+        "IvfIndex; corpus columns doc_id, text) - the recurring-" +
+        "pipeline form: the corpus is never re-scanned for idf " +
+        "training or quantizer assignment. All arguments are literals.")(
+      at(7) { a =>
+        Hybrid.hybridTopK(a.parquet(0, "corpus_path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), a.parquet(3, "emb_path"),
+          a.parquet(4, "queries_path"), a.int(5, "k"), a.int(6, "k_per"))
+      },
+      at(5) { a =>
+        val model = TextFunctions.Bm25BatchModel.read(
+          a.spark, a.str(1, "bm25_model_path"))
+        Hybrid.hybridTopKIndexed(a.parquet(0, "corpus_path"),
+          "doc_id", "text", model,
+          IVF.IvfIndex.read(a.spark, a.str(2, "ivf_index_path")),
+          model.queries, a.int(3, "k"), a.int(4, "k_per"))
+      }),
+    tvf("graft_bin_read",
+      "graft_bin_read(dir) - read an EXPORTED binary shard directory " +
+        "(sources.BinShards .bin/.idx files) back as rows, " +
+        "kind-dispatched on the commit marker: a packed (pretraining) " +
+        "dir yields (shard, seq, ids ARRAY<INT>, n_ids) via " +
+        "BinShards.read, an SFT (kind=sft) dir yields (shard, bin, " +
+        "ids, n_ids, n_docs, starts ARRAY<BIGINT>) via readNoSplit — " +
+        "the SQL inspection surface over the artifact a loader mmaps " +
+        "(explode ids for token-level SQL; graft_bin_digest is the " +
+        "checksum rollup of exactly this frame). The 3-argument form " +
+        "graft_bin_read(dir, shard, k) is the POINT LOOKUP of one " +
+        "unit, kind-dispatched like the bulk form: on a packed dir, " +
+        "sequence k of the shard (BinShards.readSequence — an O(1) " +
+        "byte seek off the budget-aligned layout, no length-table " +
+        "scan); on an sft dir, bin k with its doc-boundary starts " +
+        "(BinShards.readBin — table-prefix reads sized by k, then " +
+        "one data seek). A managed epoch-append ROOT (BinFamily) " +
+        "resolves through its CURRENT pointer in every arity. A " +
+        "marker-less (torn/foreign) dir fails loud. All arguments " +
+        "are literals.")(
+      at(1) { a =>
+        val dir = a.str(0, "dir")
+        val info = BinShards.commitInfo(a.spark, dir)
+        if (info.get("kind").contains("sft"))
+          BinShards.readNoSplit(a.spark, dir)
+        else BinShards.read(a.spark, dir)
+      },
+      at(3) { a =>
+        val spark = a.spark
+        val dir = a.str(0, "dir")
+        val info = BinShards.commitInfo(spark, dir)
+        val shard = a.long(1, "shard")
+        import spark.implicits._
+        if (info.get("kind").contains("sft")) {
+          val bin = a.long(2, "bin")
+          val (ids, starts) = BinShards.readBin(spark, dir, shard, bin)
+          Seq((shard, bin, ids, ids.length.toLong, starts.length.toLong,
+              starts))
+            .toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts")
+        } else {
+          val seq = a.long(2, "seq")
+          val ids = BinShards.readSequence(spark, dir, shard, seq)
+          Seq((shard, seq, ids, ids.length.toLong))
+            .toDF("shard", "seq", "ids", "n_ids")
         }
       }),
-    (FunctionIdentifier("graft_decontaminate_multi"),
-      tvfInfo("graft_decontaminate_multi",
-        "graft_decontaminate_multi(train_path, evals_path, min_ratio) - " +
-          "multi-benchmark decontamination: screen the parquet corpus " +
-          "at train_path (columns doc_id, text) against the NAMED eval " +
-          "sets at evals_path (columns set_name, text) in one corpus " +
-          "pass (union gram table broadcast, loud suite-size guard). " +
-          "Output (doc_id, set_name, n_grams, n_overlap, contaminated), " +
-          "one row per overlapping (doc, set) pair. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(tp, ep, mr) =>
-          val fn = "graft_decontaminate_multi"
-          val spark = SparkSession.active
-          planOf(graft.functions.Dedup.decontaminateAgainst(
-            spark.read.parquet(strArg(fn, tp, "train_path")),
-            "doc_id", "text",
-            spark.read.parquet(strArg(fn, ep, "evals_path")),
-            minRatio = dblArg(fn, mr, "min_ratio")))
-        case other => arity("graft_decontaminate_multi", 3, other.length)
+    tvf("graft_bin_export",
+      "graft_bin_export(corpus_path, id_col, text_col, model_path, " +
+        "num_shards, budget, out_dir[, kind]) - WRITE the loader-" +
+        "native binary shard artifact from SQL: packs the parquet " +
+        "corpus against the PERSISTED TokenizerModel at `model_path` " +
+        "and exports .bin/.idx shard files under `out_dir` " +
+        "(sources.BinShards - temp+rename, commit marker, stale-shard " +
+        "cleanup). `kind` = 'packed' (default; concat-and-chunk " +
+        "pretraining layout, packIdSequences) or 'sft' (no-split " +
+        "padded bins with doc-boundary starts in the .idx, " +
+        "packNoSplitIds). Returns the written artifact's marker " +
+        "identity row (kind, version, budget, shards) - feed the same " +
+        "dir to graft_bin_digest/graft_bin_read to validate/inspect, " +
+        "closing the train -> export -> validate loop for a SQL-only " +
+        "session. The tokenizer's identity (vocab_size/alphabet/" +
+        "pretok + a CONTENT fingerprint of its vocab and merges) is " +
+        "stamped into _BIN_COMMIT, so graft_bin_manifest catches a " +
+        "wrong-vocab pairing from the files alone. The 9-argument " +
+        "form adds mode = 'resume' (or 'overwrite', the default): " +
+        "under resume, surviving shard pairs that VALIDATE against " +
+        "this config are kept byte-untouched and only the missing " +
+        "tail re-exports — the crash-recovery economics of a " +
+        "10k-shard job, both kinds. The resume token is CONTENT " +
+        "identity (model fingerprint + a corpus file-listing " +
+        "fingerprint), so retraining the tokenizer or regenerating " +
+        "the corpus IN PLACE at the same paths forces a full rewrite " +
+        "instead of keeping stale survivors. The EXPORT JOB RUNS " +
+        "DURING ANALYSIS (the graft_bpe_train persist-form " +
+        "precedent): an EXPLAIN, a view resolution, or a query that " +
+        "fails later in planning still performs the write — and " +
+        "under the default 'overwrite' mode that includes deleting " +
+        "existing shards. Invoke deliberately, not inside " +
+        "exploratory subqueries; prefer mode='resume' for re-runnable " +
+        "statements. All arguments are literals.")(
+      at(7, 8, 9) { a =>
+        val spark = a.spark
+        val kind = a.strOr(7, "kind", "packed")
+        val mode = a.strOr(8, "mode", "overwrite")
+        require(kind == "packed" || kind == "sft",
+          s"${a.fn}: kind must be 'packed' or 'sft', got '$kind'")
+        require(mode == "overwrite" || mode == "resume",
+          s"${a.fn}: mode must be 'overwrite' or 'resume', got '$mode'")
+        val budget = a.int(5, "budget")
+        val numShards = a.int(4, "num_shards")
+        val outDir = a.str(6, "out_dir")
+        val corpusPath = a.str(0, "corpus_path")
+        val corpus = spark.read.parquet(corpusPath)
+        val model = Bpe.TokenizerModel.read(spark, a.str(3, "model_path"))
+        val (idCol, txtCol) = (a.str(1, "id_col"), a.str(2, "text_col"))
+        // The content-identity the TVF derives itself, recorded on
+        // EVERY write (not just resumes) so overwrite-then-resume
+        // matches, while a resume against a retrained model or a
+        // regenerated corpus — EVEN AT UNCHANGED PATHS — fails the
+        // config gate and falls back to a full rewrite.
+        val token = s"model=md5:${model.contentFingerprint};" +
+          s"corpus=md5:${corpusFingerprint(spark, corpusPath)}"
+        val identity = modelIdentity(model)
+        if (kind == "sft")
+          BinShards.writeNoSplit(
+            TrainShuffle.packNoSplitIds(corpus, idCol, txtCol, model,
+              numShards, budget),
+            outDir, budget, numShards, resume = mode == "resume",
+            resumeToken = token, identity = identity)
+        else
+          BinShards.write(
+            TrainShuffle.packIdSequences(corpus, idCol, txtCol, model,
+              numShards, budget),
+            outDir, budget, numShards, resume = mode == "resume",
+            resumeToken = token, identity = identity)
+        val info = BinShards.commitInfo(spark, outDir)
+        import spark.implicits._
+        Seq((info.getOrElse("kind", "packed"), info("version").toLong,
+            info("budget").toLong, info("shards").toLong))
+          .toDF("kind", "version", "budget", "shards")
       }),
-    (FunctionIdentifier("graft_cluster_drift"),
-      tvfInfo("graft_cluster_drift",
-        "graft_cluster_drift(model_path, path_a, path_b, top_n) - " +
-          "embedding-space drift between the two parquet corpora " +
-          "(columns vec_id, embedding) through the STORED ClusterModel " +
-          "at model_path: both sides assign to the same fixed k-means " +
-          "cells, each cell reports its total-variation contribution " +
-          "|p_a(cell) - p_b(cell)| / 2 (exact integer/decimal " +
-          "arithmetic, one IEEE division per cell). Both corpora must " +
-          "be non-empty. Output (cluster, cnt_a, cnt_b, drift), drift " +
-          "descending then cluster. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(mp, pa, pb, tn) =>
-          val fn = "graft_cluster_drift"
-          val spark = SparkSession.active
-          planOf(graft.functions.IVF.clusterDrift(
-            graft.functions.IVF.ClusterModel.read(
-              spark, strArg(fn, mp, "model_path")),
-            spark.read.parquet(strArg(fn, pa, "path_a")),
-            spark.read.parquet(strArg(fn, pb, "path_b")),
-            intArg(fn, tn, "top_n")))
-        case other => arity("graft_cluster_drift", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_mix_temperature"),
-      tvfInfo("graft_mix_temperature",
-        "graft_mix_temperature(path, source_col, tokens_col, " +
-          "total_budget[, alpha]) - temperature-weighted token budgets " +
-          "(CorpusMix.temperatureBudgets): per-source token mass " +
-          "reweighted to mass^alpha (alpha = 'prop' or 'sqrt', default " +
-          "'sqrt' - exact integer square root, no float pow) and the " +
-          "total budget apportioned by exact floor division with " +
-          "largest-remainder rounding, so sum(budget) == total_budget " +
-          "EXACTLY. Output (source, tokens_total, weight, budget). " +
-          "Feed the budgets to graft_mix_tokens to materialize the " +
-          "draw. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, sc, tc, tb) =>
-          val fn = "graft_mix_temperature"
-          planOf(graft.ops.CorpusMix.temperatureBudgets(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, sc, "source_col"), strArg(fn, tc, "tokens_col"),
-            longArg(fn, tb, "total_budget")))
-        case Seq(p, sc, tc, tb, al) =>
-          val fn = "graft_mix_temperature"
-          planOf(graft.ops.CorpusMix.temperatureBudgets(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, sc, "source_col"), strArg(fn, tc, "tokens_col"),
-            longArg(fn, tb, "total_budget"), strArg(fn, al, "alpha")))
-        case other => arity("graft_mix_temperature", "4 or 5", other.length)
-      }),
-    (FunctionIdentifier("graft_importance_sample"),
-      tvfInfo("graft_importance_sample",
-        "graft_importance_sample(path, id_col, score_col, max_score) - " +
-          "deterministic score-proportional Bernoulli filter " +
-          "(CorpusMix.importanceSample): each doc kept with probability " +
-          "min(1, score/max_score) via one exact integer cross-multiply " +
-          "against an md5-derived 32-bit draw - no rand(), " +
-          "bit-reproducible. Negative scores fail loud. Output (doc_id, " +
-          "score, kept), one row per doc. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, sc, mx) =>
-          val fn = "graft_importance_sample"
-          planOf(graft.ops.CorpusMix.importanceSample(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, sc, "score_col"),
-            longArg(fn, mx, "max_score")))
-        case other => arity("graft_importance_sample", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_bm25"),
-      tvfInfo("graft_bm25",
-        "graft_bm25(path, id_col, text_col, terms_csv, k) - BM25 " +
-          "retrieval over the parquet corpus at `path` for the " +
-          "comma-separated term set (lowercase whitespace tokens): " +
-          "(doc_id, score_micro, n_terms, rank), rank 1..k by " +
-          "(score_micro DESC, doc_id). Scores are exact micro-unit " +
-          "integers (idf quantized per term, contributions floored, " +
-          "integer sums) - bit-reproducible. The idf/avgdl aggregates " +
-          "run during ANALYSIS (bounded - the graft_decontaminate " +
-          "guard-job caveat). The 3-argument form " +
-          "graft_bm25(batch_path, model_path, k) scores the batch " +
-          "(columns doc_id, text) against a PERSISTED " +
-          "TextFunctions.bm25Train/Bm25Model.write directory instead " +
-          "of retraining - the recurring form: a fixed yardstick, " +
-          "batch-sized cost. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, ts, kk) =>
-          val fn = "graft_bm25"
-          val terms = strArg(fn, ts, "terms_csv").split(",")
-            .map(_.trim).filter(_.nonEmpty).toSeq
-          planOf(graft.functions.TextFunctions.bm25TopK(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            terms, intArg(fn, kk, "k")))
-        case Seq(bp, mp, kk) =>
-          val fn = "graft_bm25"
-          val spark = SparkSession.active
-          planOf(graft.functions.TextFunctions.bm25ScoreModel(
-            graft.functions.TextFunctions.Bm25Model.read(
-              spark, strArg(fn, mp, "model_path")),
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            "doc_id", "text", intArg(fn, kk, "k")))
-        case other => arity("graft_bm25", "3 or 5", other.length)
-      }),
-    (FunctionIdentifier("graft_bm25_batch"),
-      tvfInfo("graft_bm25_batch",
-        "graft_bm25_batch(corpus_path, id_col, text_col, queries_path, " +
-          "k) - multi-query BM25: score the parquet query batch at " +
-          "`queries_path` (columns query_id, terms ARRAY<STRING>, <= " +
-          "256 queries of <= 64 terms each) against the corpus in ONE " +
-          "tokenize pass; (query_id, doc_id, score_micro, n_terms, " +
-          "rank), rank 1..k per query by (score_micro DESC, doc_id). " +
-          "The idf/avgdl aggregates run during ANALYSIS (bounded - the " +
-          "graft_decontaminate guard-job caveat). The 3-argument form " +
-          "graft_bm25_batch(batch_path, model_path, k) ranks the batch " +
-          "(columns doc_id, text) against a PERSISTED " +
-          "TextFunctions.bm25BatchTrain/Bm25BatchModel.write directory " +
-          "instead of retraining - the recurring form: a fixed query " +
-          "set and yardstick, batch-sized cost. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(cp, id, txt, qp, kk) =>
-          val fn = "graft_bm25_batch"
-          val spark = SparkSession.active
-          planOf(graft.functions.TextFunctions.bm25TopKBatch(
-            spark.read.parquet(strArg(fn, cp, "corpus_path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            intArg(fn, kk, "k")))
-        case Seq(bp, mp, kk) =>
-          val fn = "graft_bm25_batch"
-          val spark = SparkSession.active
-          planOf(graft.functions.TextFunctions.bm25TopKBatchModel(
-            graft.functions.TextFunctions.Bm25BatchModel.read(
-              spark, strArg(fn, mp, "model_path")),
-            spark.read.parquet(strArg(fn, bp, "batch_path")),
-            "doc_id", "text", intArg(fn, kk, "k")))
-        case other => arity("graft_bm25_batch", "3 or 5", other.length)
-      }),
-    (FunctionIdentifier("graft_embed_dim_stats"),
-      tvfInfo("graft_embed_dim_stats",
-        "graft_embed_dim_stats(path) - per-DIMENSION embedding audit " +
-          "over the parquet embeddings at `path` (column embedding): " +
-          "(dim, n_vecs, sum_micro, mean_micro, min_micro, max_micro), " +
-          "micro-quantized exact integers - dead/clipped/scale-drifted " +
-          "dimensions surface before an index build trusts them. All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p) =>
-          val fn = "graft_embed_dim_stats"
-          planOf(graft.functions.Vectors.embedDimStats(
-            SparkSession.active.read.parquet(strArg(fn, p, "path"))))
-        case other => arity("graft_embed_dim_stats", 1, other.length)
-      }),
-    (FunctionIdentifier("graft_dedup_keep_best"),
-      tvfInfo("graft_dedup_keep_best",
-        "graft_dedup_keep_best(path, id_col, text_col, threshold) - " +
-          "keep-BEST near-dup consolidation over the parquet corpus at " +
-          "`path`: one survivor per near-dup cluster, the LONGEST " +
-          "member (ties to the smallest id). Output (doc_id, " +
-          "cluster_id, n_tokens, kept), one row per doc. The 5-argument " +
-          "form graft_dedup_keep_best(path, id_col, text_col, " +
-          "score_col, threshold) keeps the cluster member with the " +
-          "highest INTEGRAL score in `score_col` instead (output " +
-          "column: score). All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, thr) =>
-          val fn = "graft_dedup_keep_best"
-          planOf(graft.functions.Dedup.nearDupKeepBest(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            dblArg(fn, thr, "threshold")))
-        case Seq(p, id, txt, sc, thr) =>
-          val fn = "graft_dedup_keep_best"
-          planOf(graft.functions.Dedup.nearDupKeepBestBy(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            strArg(fn, sc, "score_col"), dblArg(fn, thr, "threshold")))
-        case other => arity("graft_dedup_keep_best", "4 or 5", other.length)
-      }),
-    (FunctionIdentifier("graft_cluster_sample"),
-      tvfInfo("graft_cluster_sample",
-        "graft_cluster_sample(path, per_cluster, nlist) - " +
-          "cluster-balanced deterministic sample over the parquet " +
-          "embeddings at `path` (columns vec_id, embedding): " +
-          "per_cluster vectors per k-means cell by md5-of-id rank " +
-          "(no rand(); bit-reproducible). Output (vec_id, cluster, " +
-          "rk); nlist = 0 picks sqrt(n) cells. Training runs during " +
-          "ANALYSIS (bounded, MaxNlist-gated). The STRING-second-" +
-          "argument form graft_cluster_sample(batch_path, model_path, " +
-          "per_cluster) draws against a PERSISTED " +
-          "IVF.embedClustersTrain/ClusterModel.write directory instead " +
-          "of retraining - the recurring form: cluster ids stay " +
-          "comparable across batches. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, x, y) =>
-          val fn = "graft_cluster_sample"
-          val spark = SparkSession.active
-          if (x.dataType == org.apache.spark.sql.types.StringType)
-            planOf(graft.functions.IVF.clusterSampleModel(
-              graft.functions.IVF.ClusterModel.read(
-                spark, strArg(fn, x, "model_path")),
-              spark.read.parquet(strArg(fn, p, "batch_path")),
-              intArg(fn, y, "per_cluster")))
-          else
-            planOf(graft.functions.IVF.clusterSample(
-              spark.read.parquet(strArg(fn, p, "path")),
-              intArg(fn, x, "per_cluster"), intArg(fn, y, "nlist")))
-        case other => arity("graft_cluster_sample", 3, other.length)
-      }),
-    (FunctionIdentifier("graft_embed_cluster"),
-      tvfInfo("graft_embed_cluster",
-        "graft_embed_cluster(path, nlist) - k-means corpus clustering " +
-          "over the parquet embeddings at `path` (columns vec_id, " +
-          "embedding): (vec_id, cluster, dist_micro, cluster_size), one " +
-          "row per vector; nlist = 0 picks sqrt(n) cells. Training " +
-          "runs during ANALYSIS (bounded, MaxNlist-gated). The STRING-" +
-          "second-argument form graft_embed_cluster(batch_path, " +
-          "model_path) assigns the batch against a PERSISTED " +
-          "IVF.embedClustersTrain/ClusterModel.write directory instead " +
-          "of retraining - the recurring form: a fixed quantizer, " +
-          "batch-sized cost (cluster_size counts THIS batch's members). " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, x) =>
-          val fn = "graft_embed_cluster"
-          val spark = SparkSession.active
-          if (x.dataType == org.apache.spark.sql.types.StringType)
-            planOf(graft.functions.IVF.embedClustersScore(
-              graft.functions.IVF.ClusterModel.read(
-                spark, strArg(fn, x, "model_path")),
-              spark.read.parquet(strArg(fn, p, "batch_path"))))
-          else
-            planOf(graft.functions.IVF.embedClusters(
-              spark.read.parquet(strArg(fn, p, "path")),
-              intArg(fn, x, "nlist")))
-        case other => arity("graft_embed_cluster", 2, other.length)
-      }),
-    (FunctionIdentifier("graft_pack_report"),
-      tvfInfo("graft_pack_report",
-        "graft_pack_report(path, id_col, text_col, num_shards, budget" +
-          "[, tokens_col]) - packing-efficiency audit of the " +
-          "deterministic seqPack layout (TrainShuffle.seqPack + " +
-          "packReport) over the parquet corpus at `path`: per shard, " +
-          "docs landed, token mass, fixed-size sequences occupied, docs " +
-          "straddling a sequence boundary, and the fill fraction. " +
-          "`budget` is the per-sequence token budget the layout packs " +
-          "to; ONE map-side-combining rollup, num_shards rows out. The " +
-          "6-argument form budgets in the CALLER-supplied integral " +
-          "column `tokens_col` (e.g. graft_bpe_count model tokens; " +
-          "null/negative counts fail loud) instead of whitespace tokens " +
-          "of text_col. Output (shard, n_docs, total_tokens, n_seqs, " +
-          "split_docs, fill_frac). All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, ns, bg) =>
-          val fn = "graft_pack_report"
-          val budget = intArg(fn, bg, "budget")
-          planOf(graft.ops.TrainShuffle.packReport(
-            graft.ops.TrainShuffle.seqPack(
-              SparkSession.active.read.parquet(strArg(fn, p, "path")),
-              strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-              intArg(fn, ns, "num_shards"), budget),
-            budget))
-        case Seq(p, id, txt, ns, bg, tc) =>
-          val fn = "graft_pack_report"
-          val budget = intArg(fn, bg, "budget")
-          planOf(graft.ops.TrainShuffle.packReport(
-            graft.ops.TrainShuffle.seqPack(
-              SparkSession.active.read.parquet(strArg(fn, p, "path")),
-              strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-              intArg(fn, ns, "num_shards"), budget,
-              tokensCol = strArg(fn, tc, "tokens_col")),
-            budget))
-        case other => arity("graft_pack_report", "5 or 6", other.length)
-      }),
-    (FunctionIdentifier("graft_fim_transform"),
-      tvfInfo("graft_fim_transform",
-        "graft_fim_transform(path, id_col, text_col, rate_bp) - " +
-          "fill-in-the-middle training transform (FimTransform.fimSplit) " +
-          "over the parquet corpus at `path`: for an exact " +
-          "rate_bp/10000 md5-selected fraction of docs, two uniform " +
-          "cuts over the normalized text and the <PRE>/<SUF>/<MID> PSM " +
-          "rearrangement; pass-through otherwise. Deterministic (no " +
-          "rand()), stateless projection. Output (id_col, fim_applied, " +
-          "n_chars, cut_lo, cut_hi, psm). All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, bp) =>
-          val fn = "graft_fim_transform"
-          planOf(graft.ops.FimTransform.fimSplit(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            rateBp = intArg(fn, bp, "rate_bp")))
-        case other => arity("graft_fim_transform", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_shuffle_audit"),
-      tvfInfo("graft_shuffle_audit",
-        "graft_shuffle_audit(path, id_col, by_col, num_shards) - " +
-          "shuffle-quality audit (TrainShuffle.shuffleAudit) of the " +
-          "deterministic training order over the parquet corpus at " +
-          "`path`: per shard, docs, distinct `by_col` groups, same-group " +
-          "RUNS in the sort order, the longest run, and interleave = " +
-          "n_runs/n_docs (1.0 = perfectly alternating — long runs mean " +
-          "ingest order leaked into the training order). NULL group " +
-          "values fail loud. Output (shard, n_docs, n_groups, n_runs, " +
-          "max_run, interleave). All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, by, ns) =>
-          val fn = "graft_shuffle_audit"
-          planOf(graft.ops.TrainShuffle.shuffleAudit(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, by, "by_col"),
-            intArg(fn, ns, "num_shards")))
-        case other => arity("graft_shuffle_audit", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_pack_segments"),
-      tvfInfo("graft_pack_segments",
-        "graft_pack_segments(path, id_col, text_col, num_shards, " +
-          "budget) - per-sequence SEGMENT table of the seq_pack layout " +
-          "(TrainShuffle.packSegments) over the parquet corpus at " +
-          "`path`: one row per (sequence, document) overlap with the " +
-          "segment's offsets inside both — the boundary metadata a " +
-          "loader reads instead of scanning for the in-band separator. " +
-          "Output (shard, seq, id_col, seg_start, seg_len, doc_off). " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, ns, b) =>
-          val fn = "graft_pack_segments"
-          planOf(graft.ops.TrainShuffle.packSegments(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            intArg(fn, ns, "num_shards"), intArg(fn, b, "budget")))
-        case other => arity("graft_pack_segments", 5, other.length)
-      }),
-    (FunctionIdentifier("graft_epoch_shuffle"),
-      tvfInfo("graft_epoch_shuffle",
-        "graft_epoch_shuffle(path, id_col, num_shards, n_epochs) - " +
-          "cross-epoch order audit (TrainShuffle.epochOrderAudit) over " +
-          "the parquet corpus at `path`: repeated-adjacency counts " +
-          "between the n_epochs epoch-salted deterministic shuffle " +
-          "orders (salts 'epoch0'..'epoch{n-1}') — a broken salting " +
-          "shows n_repeat ~ n_adj; healthy independent orders ~0. " +
-          "Output (epoch_a, epoch_b, n_adj_a, n_adj_b, n_repeat), one " +
-          "row per unordered epoch pair. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, ns, ne) =>
-          val fn = "graft_epoch_shuffle"
-          val n = intArg(fn, ne, "n_epochs")
-          planOf(graft.ops.TrainShuffle.epochOrderAudit(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), intArg(fn, ns, "num_shards"),
-            (0 until n).map(i => s"epoch$i")))
-        case other => arity("graft_epoch_shuffle", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_bpe_fertility"),
-      tvfInfo("graft_bpe_fertility",
-        "graft_bpe_fertility(path, text_col, by_col, model_path) - " +
-          "tokenizer fertility eval (Bpe.fertilityReport) of the " +
-          "PERSISTED TokenizerModel at `model_path` over the parquet " +
-          "corpus at `path`, per `by_col` group: doc/word/token/char " +
-          "masses, fertility = model tokens per whitespace word, " +
-          "chars_per_token — localizes WHERE the vocab is wasted. Null " +
-          "group values fail loud. Output (by_col, n_docs, n_words, " +
-          "n_tokens_bpe, n_chars, fertility, chars_per_token). All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, txt, by, mp) =>
-          val fn = "graft_bpe_fertility"
-          val spark = SparkSession.active
-          planOf(graft.functions.Bpe.fertilityReport(
-            spark.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, txt, "text_col"), strArg(fn, by, "by_col"),
-            graft.functions.Bpe.TokenizerModel.read(spark,
-              strArg(fn, mp, "model_path"))))
-        case other => arity("graft_bpe_fertility", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_pack_digest"),
-      tvfInfo("graft_pack_digest",
-        "graft_pack_digest(path, id_col, text_col, model_path, " +
-          "num_shards, budget[, salt]) - per-shard INTEGRITY DIGEST of " +
-          "the packed training export (TrainShuffle.packDigest over " +
-          "packIdSequences against the PERSISTED TokenizerModel at " +
-          "`model_path`): position-weighted sum and xor checksums over " +
-          "the emitted id stream — what gates a binary artifact's " +
-          "content (sources.BinShards). The 7-argument form varies the " +
-          "shuffle SALT (default 'shuf') — one call per epoch salt is " +
-          "the SQL route to a multi-epoch export's digests " +
-          "(TrainShuffle.epochExport). Output (shard, n_seqs, n_ids, " +
-          "sum_digest, xor_digest). All arguments are literals."),
-      (exprs: Seq[Expression]) => {
-        val fn = "graft_pack_digest"
-        def run(p: Expression, id: Expression, txt: Expression,
-            mp: Expression, ns: Expression, b: Expression,
-            salt: String): LogicalPlan = {
-          val spark = SparkSession.active
-          val budget = intArg(fn, b, "budget")
-          planOf(graft.ops.TrainShuffle.packDigest(
-            graft.ops.TrainShuffle.packIdSequences(
-              spark.read.parquet(strArg(fn, p, "path")),
-              strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-              graft.functions.Bpe.TokenizerModel.read(spark,
-                strArg(fn, mp, "model_path")),
-              intArg(fn, ns, "num_shards"), budget, salt),
-            budget))
-        }
-        exprs match {
-          case Seq(p, id, txt, mp, ns, b) =>
-            run(p, id, txt, mp, ns, b, "shuf")
-          case Seq(p, id, txt, mp, ns, b, st) =>
-            run(p, id, txt, mp, ns, b, strArg(fn, st, "salt"))
-          case other => arity("graft_pack_digest", "6 or 7", other.length)
-        }
-      }),
-    (FunctionIdentifier("graft_hybrid_topk"),
-      tvfInfo("graft_hybrid_topk",
-        "graft_hybrid_topk(corpus_path, id_col, text_col, emb_path, " +
-          "queries_path, k, k_per) - hybrid retrieval: BM25 and IVF " +
-          "top-k_per per query fused by reciprocal rank " +
-          "(Hybrid.hybridTopK; integer micro contributions 1e6 div " +
-          "(60 + rank), exact BIGINT fused score). The query batch at " +
-          "`queries_path` carries (query_id, terms ARRAY<STRING>); the " +
-          "vector side uses the embedding at `emb_path` whose vec_id " +
-          "equals the query_id. Output (query_id, doc_id, rrf_micro, " +
-          "n_rankers, rank), rank 1..k per query. The 5-argument form " +
-          "graft_hybrid_topk(corpus_path, bm25_model_path, " +
-          "ivf_index_path, k, k_per) serves BOTH rankers from PERSISTED " +
-          "artifacts instead (Hybrid.hybridTopKIndexed over a stored " +
-          "Bm25BatchModel — which carries the query set — and a stored " +
-          "IvfIndex; corpus columns doc_id, text) - the recurring-" +
-          "pipeline form: the corpus is never re-scanned for idf " +
-          "training or quantizer assignment. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(cp, id, txt, ep, qp, kk, kp) =>
-          val fn = "graft_hybrid_topk"
-          val spark = SparkSession.active
-          planOf(graft.functions.Hybrid.hybridTopK(
-            spark.read.parquet(strArg(fn, cp, "corpus_path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            spark.read.parquet(strArg(fn, ep, "emb_path")),
-            spark.read.parquet(strArg(fn, qp, "queries_path")),
-            intArg(fn, kk, "k"), intArg(fn, kp, "k_per")))
-        case Seq(cp, mp, ip, kk, kp) =>
-          val fn = "graft_hybrid_topk"
-          val spark = SparkSession.active
-          val model = graft.functions.TextFunctions.Bm25BatchModel.read(
-            spark, strArg(fn, mp, "bm25_model_path"))
-          planOf(graft.functions.Hybrid.hybridTopKIndexed(
-            spark.read.parquet(strArg(fn, cp, "corpus_path")),
-            "doc_id", "text", model,
-            graft.functions.IVF.IvfIndex.read(
-              spark, strArg(fn, ip, "ivf_index_path")),
-            model.queries, intArg(fn, kk, "k"), intArg(fn, kp, "k_per")))
-        case other => arity("graft_hybrid_topk", "5 or 7", other.length)
-      }),
-    (FunctionIdentifier("graft_bin_read"),
-      tvfInfo("graft_bin_read",
-        "graft_bin_read(dir) - read an EXPORTED binary shard directory " +
-          "(sources.BinShards .bin/.idx files) back as rows, " +
-          "kind-dispatched on the commit marker: a packed (pretraining) " +
-          "dir yields (shard, seq, ids ARRAY<INT>, n_ids) via " +
-          "BinShards.read, an SFT (kind=sft) dir yields (shard, bin, " +
-          "ids, n_ids, n_docs, starts ARRAY<BIGINT>) via readNoSplit — " +
-          "the SQL inspection surface over the artifact a loader mmaps " +
-          "(explode ids for token-level SQL; graft_bin_digest is the " +
-          "checksum rollup of exactly this frame). The 3-argument form " +
-          "graft_bin_read(dir, shard, k) is the POINT LOOKUP of one " +
-          "unit, kind-dispatched like the bulk form: on a packed dir, " +
-          "sequence k of the shard (BinShards.readSequence — an O(1) " +
-          "byte seek off the budget-aligned layout, no length-table " +
-          "scan); on an sft dir, bin k with its doc-boundary starts " +
-          "(BinShards.readBin — table-prefix reads sized by k, then " +
-          "one data seek). A managed epoch-append ROOT (BinFamily) " +
-          "resolves through its CURRENT pointer in every arity. A " +
-          "marker-less (torn/foreign) dir fails loud. All arguments " +
-          "are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p) =>
-          val fn = "graft_bin_read"
-          val spark = SparkSession.active
-          val dir = strArg(fn, p, "dir")
-          val info = graft.sources.BinShards.commitInfo(spark, dir)
-          if (info.get("kind").contains("sft"))
-            planOf(graft.sources.BinShards.readNoSplit(spark, dir))
-          else
-            planOf(graft.sources.BinShards.read(spark, dir))
-        case Seq(p, sh, sq) =>
-          val fn = "graft_bin_read"
-          val spark = SparkSession.active
-          val dir = strArg(fn, p, "dir")
-          val info = graft.sources.BinShards.commitInfo(spark, dir)
-          val shard = longArg(fn, sh, "shard")
-          import spark.implicits._
-          if (info.get("kind").contains("sft")) {
-            val bin = longArg(fn, sq, "bin")
-            val (ids, starts) = graft.sources.BinShards.readBin(spark,
-              dir, shard, bin)
-            planOf(Seq((shard, bin, ids, ids.length.toLong,
-                starts.length.toLong, starts))
-              .toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts"))
-          } else {
-            val seq = longArg(fn, sq, "seq")
-            val ids = graft.sources.BinShards.readSequence(spark, dir,
-              shard, seq)
-            planOf(Seq((shard, seq, ids, ids.length.toLong))
-              .toDF("shard", "seq", "ids", "n_ids"))
-          }
-        case other => arity("graft_bin_read", "1 or 3", other.length)
-      }),
-    (FunctionIdentifier("graft_bin_export"),
-      tvfInfo("graft_bin_export",
-        "graft_bin_export(corpus_path, id_col, text_col, model_path, " +
-          "num_shards, budget, out_dir[, kind]) - WRITE the loader-" +
-          "native binary shard artifact from SQL: packs the parquet " +
-          "corpus against the PERSISTED TokenizerModel at `model_path` " +
-          "and exports .bin/.idx shard files under `out_dir` " +
-          "(sources.BinShards - temp+rename, commit marker, stale-shard " +
-          "cleanup). `kind` = 'packed' (default; concat-and-chunk " +
-          "pretraining layout, packIdSequences) or 'sft' (no-split " +
-          "padded bins with doc-boundary starts in the .idx, " +
-          "packNoSplitIds). Returns the written artifact's marker " +
-          "identity row (kind, version, budget, shards) - feed the same " +
-          "dir to graft_bin_digest/graft_bin_read to validate/inspect, " +
-          "closing the train -> export -> validate loop for a SQL-only " +
-          "session. The tokenizer's identity (vocab_size/alphabet/" +
-          "pretok + a CONTENT fingerprint of its vocab and merges) is " +
-          "stamped into _BIN_COMMIT, so graft_bin_manifest catches a " +
-          "wrong-vocab pairing from the files alone. The 9-argument " +
-          "form adds mode = 'resume' (or 'overwrite', the default): " +
-          "under resume, surviving shard pairs that VALIDATE against " +
-          "this config are kept byte-untouched and only the missing " +
-          "tail re-exports — the crash-recovery economics of a " +
-          "10k-shard job, both kinds. The resume token is CONTENT " +
-          "identity (model fingerprint + a corpus file-listing " +
-          "fingerprint), so retraining the tokenizer or regenerating " +
-          "the corpus IN PLACE at the same paths forces a full rewrite " +
-          "instead of keeping stale survivors. The EXPORT JOB RUNS " +
-          "DURING ANALYSIS (the graft_bpe_train persist-form " +
-          "precedent): an EXPLAIN, a view resolution, or a query that " +
-          "fails later in planning still performs the write — and " +
-          "under the default 'overwrite' mode that includes deleting " +
-          "existing shards. Invoke deliberately, not inside " +
-          "exploratory subqueries; prefer mode='resume' for re-runnable " +
-          "statements. All arguments are literals."),
-      (exprs: Seq[Expression]) => {
-        val fn = "graft_bin_export"
-        def run(p: Expression, id: Expression, txt: Expression,
-            mp: Expression, ns: Expression, b: Expression,
-            od: Expression, kind: String, mode: String): LogicalPlan = {
-          val spark = SparkSession.active
-          require(kind == "packed" || kind == "sft",
-            s"$fn: kind must be 'packed' or 'sft', got '$kind'")
-          require(mode == "overwrite" || mode == "resume",
-            s"$fn: mode must be 'overwrite' or 'resume', got '$mode'")
-          val budget = intArg(fn, b, "budget")
-          val numShards = intArg(fn, ns, "num_shards")
-          val outDir = strArg(fn, od, "out_dir")
-          val corpusPath = strArg(fn, p, "corpus_path")
-          val corpus = spark.read.parquet(corpusPath)
-          val model = graft.functions.Bpe.TokenizerModel.read(spark,
-            strArg(fn, mp, "model_path"))
-          val (idCol, txtCol) =
-            (strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"))
-          // The content-identity the TVF derives itself, recorded on
-          // EVERY write (not just resumes) so overwrite-then-resume
-          // matches, while a resume against a retrained model or a
-          // regenerated corpus — EVEN AT UNCHANGED PATHS — fails the
-          // config gate and falls back to a full rewrite.
-          val token = s"model=md5:${modelFingerprint(model)};" +
-            s"corpus=md5:${corpusFingerprint(spark, corpusPath)}"
-          val identity = modelIdentity(model)
+    tvf("graft_bin_append",
+      "graft_bin_append(batch_path, id_col, text_col, model_path, " +
+        "shards_per_epoch, budget, root, epoch_id[, compact_every[, " +
+        "salt[, kind]]]) - APPEND one ingest epoch's packed sequences " +
+        "to the MANAGED binary artifact under `root` (sources.BinFamily " +
+        "— " +
+        "the managed-generation posture applied to the training " +
+        "export): the parquet BATCH at `batch_path` is encoded " +
+        "against the persisted tokenizer, packed into " +
+        "shards_per_epoch shards under `salt` (default: the " +
+        "epoch_id, so each epoch gets an independent layout; salt '' " +
+        "also means the default), and " +
+        "lands as NEW shard files in the epoch's reserved number " +
+        "span — prior epochs' files stay byte-untouched, so a " +
+        "recurring pipeline refreshes the artifact at BATCH-sized " +
+        "cost, never re-encoding the corpus. Past `compact_every` " +
+        "(default 64) committed epochs the generation FOLDS: the id " +
+        "streams re-chunk (no re-encode) into a dense successor and " +
+        "CURRENT flips. Replaying an already-committed epoch_id is a " +
+        "NO-OP (applied=false) — the managed families' exactly-once " +
+        "contract — even over a generation a LATER epoch's crash " +
+        "left torn (shards/epochs report -1 until the next real " +
+        "append repairs it). Returns (applied, shards, epochs) — the " +
+        "CURRENT generation's marker state after the call; validate " +
+        "with " +
+        "graft_bin_digest/graft_bin_manifest over the same root. A " +
+        "mismatched budget/shards_per_epoch/tokenizer against the " +
+        "generation's config REFUSES loud (a wrong append would " +
+        "corrupt a valid artifact; the tokenizer gate is the model's " +
+        "CONTENT fingerprint, so a retrain-in-place refuses too). " +
+        "THE APPEND JOB RUNS DURING ANALYSIS (the graft_bin_export " +
+        "precedent): an EXPLAIN or view resolution performs the " +
+        "append — epoch_id idempotence is what makes an accidental " +
+        "re-analysis harmless. `kind` = 'packed' (default) or 'sft' " +
+        "(the no-split padded-bin family, appendEpochSft over " +
+        "packNoSplitIds — doc-boundary starts ride inside the .idx; " +
+        "the fold RE-LAYOUTS bins densely, never re-packs; pass salt " +
+        "'' to keep the per-epoch default). A family root is ONE " +
+        "kind — a mismatched append refuses loud. All arguments are " +
+        "literals.")(
+      at(8, 9, 10, 11) { a =>
+        val spark = a.spark
+        val compactEvery = a.intOr(8, "compact_every", 64)
+        val kind = a.strOr(10, "kind", "packed")
+        require(kind == "packed" || kind == "sft",
+          s"${a.fn}: kind must be 'packed' or 'sft', got '$kind'")
+        val budget = a.int(5, "budget")
+        val shardsPerEpoch = a.int(4, "shards_per_epoch")
+        val root = a.str(6, "root")
+        val epochId = a.str(7, "epoch_id")
+        val batch = a.parquet(0, "batch_path")
+        val model = Bpe.TokenizerModel.read(spark, a.str(3, "model_path"))
+        val (idCol, txtCol) = (a.str(1, "id_col"), a.str(2, "text_col"))
+        val salt = a.opt(9, "salt").getOrElse(epochId)
+        val ret =
           if (kind == "sft")
-            graft.sources.BinShards.writeNoSplit(
-              graft.ops.TrainShuffle.packNoSplitIds(corpus, idCol,
-                txtCol, model, numShards, budget),
-              outDir, budget, numShards, resume = mode == "resume",
-              resumeToken = token, identity = identity)
+            BinFamily.appendEpochSft(
+              TrainShuffle.packNoSplitIds(batch, idCol, txtCol, model,
+                shardsPerEpoch, budget, salt),
+              root, budget, shardsPerEpoch, epochId,
+              compactEvery = compactEvery, identity = modelIdentity(model))
           else
-            graft.sources.BinShards.write(
-              graft.ops.TrainShuffle.packIdSequences(corpus, idCol,
-                txtCol, model, numShards, budget),
-              outDir, budget, numShards, resume = mode == "resume",
-              resumeToken = token, identity = identity)
-          val info = graft.sources.BinShards.commitInfo(spark, outDir)
-          import spark.implicits._
-          planOf(Seq((info.getOrElse("kind", "packed"),
-              info("version").toLong, info("budget").toLong,
-              info("shards").toLong))
-            .toDF("kind", "version", "budget", "shards"))
-        }
-        exprs match {
-          case Seq(p, id, txt, mp, ns, b, od) =>
-            run(p, id, txt, mp, ns, b, od, "packed", "overwrite")
-          case Seq(p, id, txt, mp, ns, b, od, k) =>
-            run(p, id, txt, mp, ns, b, od, strArg(fn, k, "kind"),
-              "overwrite")
-          case Seq(p, id, txt, mp, ns, b, od, k, m) =>
-            run(p, id, txt, mp, ns, b, od, strArg(fn, k, "kind"),
-              strArg(fn, m, "mode"))
-          case other => arity(fn, "7, 8 or 9", other.length)
-        }
+            BinFamily.appendEpoch(
+              TrainShuffle.packIdSequences(batch, idCol, txtCol, model,
+                shardsPerEpoch, budget, salt),
+              root, budget, shardsPerEpoch, epochId,
+              compactEvery = compactEvery, identity = modelIdentity(model))
+        val applied = ret >= 0L
+        // A replayed epoch over a TORN generation (a later epoch
+        // crashed mid-export, marker deleted) must stay the
+        // documented no-op, not throw from the marker read: report
+        // (-1, -1) and leave the repair to the next real append.
+        val info: Map[String, String] =
+          if (applied) BinShards.commitInfo(spark, root)
+          else scala.util.Try(BinShards.commitInfo(spark, root))
+            .getOrElse(Map.empty)
+        import spark.implicits._
+        Seq((applied, info.getOrElse("shards", "-1").toLong,
+            info.getOrElse("epochs", "-1").toLong))
+          .toDF("applied", "shards", "epochs")
       }),
-    (FunctionIdentifier("graft_bin_append"),
-      tvfInfo("graft_bin_append",
-        "graft_bin_append(batch_path, id_col, text_col, model_path, " +
-          "shards_per_epoch, budget, root, epoch_id[, compact_every[, " +
-          "salt[, kind]]]) - APPEND one ingest epoch's packed sequences " +
-          "to the MANAGED binary artifact under `root` (sources.BinFamily " +
-          "— " +
-          "the managed-generation posture applied to the training " +
-          "export): the parquet BATCH at `batch_path` is encoded " +
-          "against the persisted tokenizer, packed into " +
-          "shards_per_epoch shards under `salt` (default: the " +
-          "epoch_id, so each epoch gets an independent layout), and " +
-          "lands as NEW shard files in the epoch's reserved number " +
-          "span — prior epochs' files stay byte-untouched, so a " +
-          "recurring pipeline refreshes the artifact at BATCH-sized " +
-          "cost, never re-encoding the corpus. Past `compact_every` " +
-          "(default 64) committed epochs the generation FOLDS: the id " +
-          "streams re-chunk (no re-encode) into a dense successor and " +
-          "CURRENT flips. Replaying an already-committed epoch_id is a " +
-          "NO-OP (applied=false) — the managed families' exactly-once " +
-          "contract — even over a generation a LATER epoch's crash " +
-          "left torn (shards/epochs report -1 until the next real " +
-          "append repairs it). Returns (applied, shards, epochs) — the " +
-          "CURRENT generation's marker state after the call; validate " +
-          "with " +
-          "graft_bin_digest/graft_bin_manifest over the same root. A " +
-          "mismatched budget/shards_per_epoch/tokenizer against the " +
-          "generation's config REFUSES loud (a wrong append would " +
-          "corrupt a valid artifact; the tokenizer gate is the model's " +
-          "CONTENT fingerprint, so a retrain-in-place refuses too). " +
-          "THE APPEND JOB RUNS DURING ANALYSIS (the graft_bin_export " +
-          "precedent): an EXPLAIN or view resolution performs the " +
-          "append — epoch_id idempotence is what makes an accidental " +
-          "re-analysis harmless. `kind` = 'packed' (default) or 'sft' " +
-          "(the no-split padded-bin family, appendEpochSft over " +
-          "packNoSplitIds — doc-boundary starts ride inside the .idx; " +
-          "the fold RE-LAYOUTS bins densely, never re-packs; pass salt " +
-          "'' to keep the per-epoch default). A family root is ONE " +
-          "kind — a mismatched append refuses loud. All arguments are " +
-          "literals."),
-      (exprs: Seq[Expression]) => {
-        val fn = "graft_bin_append"
-        def run(p: Expression, id: Expression, txt: Expression,
-            mp: Expression, ns: Expression, b: Expression,
-            rt: Expression, ep: Expression, compactEvery: Int,
-            saltOpt: Option[String], kind: String): LogicalPlan = {
-          val spark = SparkSession.active
-          require(kind == "packed" || kind == "sft",
-            s"$fn: kind must be 'packed' or 'sft', got '$kind'")
-          val budget = intArg(fn, b, "budget")
-          val shardsPerEpoch = intArg(fn, ns, "shards_per_epoch")
-          val root = strArg(fn, rt, "root")
-          val epochId = strArg(fn, ep, "epoch_id")
-          val batch = spark.read.parquet(strArg(fn, p, "batch_path"))
-          val model = graft.functions.Bpe.TokenizerModel.read(spark,
-            strArg(fn, mp, "model_path"))
-          val (idCol, txtCol) =
-            (strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"))
-          val salt = saltOpt.getOrElse(epochId)
-          val ret =
-            if (kind == "sft")
-              graft.sources.BinFamily.appendEpochSft(
-                graft.ops.TrainShuffle.packNoSplitIds(batch, idCol,
-                  txtCol, model, shardsPerEpoch, budget, salt),
-                root, budget, shardsPerEpoch, epochId,
-                compactEvery = compactEvery,
-                identity = modelIdentity(model))
-            else
-              graft.sources.BinFamily.appendEpoch(
-                graft.ops.TrainShuffle.packIdSequences(batch, idCol,
-                  txtCol, model, shardsPerEpoch, budget, salt),
-                root, budget, shardsPerEpoch, epochId,
-                compactEvery = compactEvery,
-                identity = modelIdentity(model))
-          val applied = ret >= 0L
-          // A replayed epoch over a TORN generation (a later epoch
-          // crashed mid-export, marker deleted) must stay the
-          // documented no-op, not throw from the marker read: report
-          // (-1, -1) and leave the repair to the next real append.
-          val info: Map[String, String] =
-            if (applied) graft.sources.BinShards.commitInfo(spark, root)
-            else scala.util.Try(
-              graft.sources.BinShards.commitInfo(spark, root))
-              .getOrElse(Map.empty)
-          import spark.implicits._
-          planOf(Seq((applied, info.getOrElse("shards", "-1").toLong,
-              info.getOrElse("epochs", "-1").toLong))
-            .toDF("applied", "shards", "epochs"))
-        }
-        exprs match {
-          case Seq(p, id, txt, mp, ns, b, rt, ep) =>
-            run(p, id, txt, mp, ns, b, rt, ep, 64, None, "packed")
-          case Seq(p, id, txt, mp, ns, b, rt, ep, ce) =>
-            run(p, id, txt, mp, ns, b, rt, ep,
-              intArg(fn, ce, "compact_every"), None, "packed")
-          case Seq(p, id, txt, mp, ns, b, rt, ep, ce, st) =>
-            run(p, id, txt, mp, ns, b, rt, ep,
-              intArg(fn, ce, "compact_every"),
-              Some(strArg(fn, st, "salt")), "packed")
-          case Seq(p, id, txt, mp, ns, b, rt, ep, ce, st, k) =>
-            run(p, id, txt, mp, ns, b, rt, ep,
-              intArg(fn, ce, "compact_every"),
-              Some(strArg(fn, st, "salt")).filter(_.nonEmpty),
-              strArg(fn, k, "kind"))
-          case other => arity(fn, "8, 9, 10 or 11", other.length)
-        }
+    tvf("graft_bin_manifest",
+      "graft_bin_manifest(dir) - the commit-marker identity of an " +
+        "exported binary shard directory as ONE row: (kind, version, " +
+        "budget, shards, epochs, vocab_size, alphabet, pretok, " +
+        "identity) with kind 'packed' or 'sft' — what a SQL session " +
+        "joins against the producer's export_manifest row before " +
+        "trusting graft_bin_read/graft_bin_digest output. `epochs` " +
+        "is the managed epoch-append family's committed-epoch count " +
+        "(BinFamily; -1 for a plain one-shot export); vocab_size/" +
+        "alphabet/pretok surface the TOKENIZER identity stamped at " +
+        "write time (NULL when the writer stamped none), so the " +
+        "wrong-vocab pairing is detectable from the artifact's files " +
+        "ALONE, without the producer's relational manifest; " +
+        "`identity` carries every stamped identity line verbatim " +
+        "('k=v' pairs, '; '-joined — including the model content " +
+        "fingerprint). A managed root resolves through CURRENT. One " +
+        "bounded driver read; a marker-less (torn/foreign) dir fails " +
+        "loud. All arguments are literals.")(
+      at(1) { a =>
+        val spark = a.spark
+        val info = BinShards.commitInfo(spark, a.str(0, "dir"))
+        def req(k: String): String =
+          info.getOrElse(k, a.fail(s"no $k in the commit marker"))
+        val writerOwned =
+          Set("version", "kind", "budget", "shards", "epochs")
+        val identity = info.view.filterKeys(!writerOwned(_)).toSeq
+          .sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("; ")
+        import spark.implicits._
+        Seq((info.getOrElse("kind", "packed"),
+            req("version").toLong, req("budget").toLong,
+            req("shards").toLong,
+            info.get("epochs").map(_.toLong).getOrElse(-1L),
+            info.get("vocab_size").map(_.toLong)
+              .map(java.lang.Long.valueOf).orNull,
+            info.get("alphabet").orNull,
+            info.get("pretok").orNull,
+            identity))
+          .toDF("kind", "version", "budget", "shards", "epochs",
+            "vocab_size", "alphabet", "pretok", "identity")
       }),
-    (FunctionIdentifier("graft_bin_manifest"),
-      tvfInfo("graft_bin_manifest",
-        "graft_bin_manifest(dir) - the commit-marker identity of an " +
-          "exported binary shard directory as ONE row: (kind, version, " +
-          "budget, shards, epochs, vocab_size, alphabet, pretok, " +
-          "identity) with kind 'packed' or 'sft' — what a SQL session " +
-          "joins against the producer's export_manifest row before " +
-          "trusting graft_bin_read/graft_bin_digest output. `epochs` " +
-          "is the managed epoch-append family's committed-epoch count " +
-          "(BinFamily; -1 for a plain one-shot export); vocab_size/" +
-          "alphabet/pretok surface the TOKENIZER identity stamped at " +
-          "write time (NULL when the writer stamped none), so the " +
-          "wrong-vocab pairing is detectable from the artifact's files " +
-          "ALONE, without the producer's relational manifest; " +
-          "`identity` carries every stamped identity line verbatim " +
-          "('k=v' pairs, '; '-joined — including the model content " +
-          "fingerprint). A managed root resolves through CURRENT. One " +
-          "bounded driver read; a marker-less (torn/foreign) dir fails " +
-          "loud. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p) =>
-          val fn = "graft_bin_manifest"
-          val spark = SparkSession.active
-          val info = graft.sources.BinShards.commitInfo(
-            spark, strArg(fn, p, "dir"))
-          def req(k: String): String = info.getOrElse(k,
-            throw new IllegalArgumentException(
-              s"$fn: no $k in the commit marker"))
-          val writerOwned =
-            Set("version", "kind", "budget", "shards", "epochs")
-          val identity = info.view.filterKeys(!writerOwned(_)).toSeq
-            .sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("; ")
-          import spark.implicits._
-          planOf(Seq((info.getOrElse("kind", "packed"),
-              req("version").toLong, req("budget").toLong,
-              req("shards").toLong,
-              info.get("epochs").map(_.toLong).getOrElse(-1L),
-              info.get("vocab_size").map(_.toLong)
-                .map(java.lang.Long.valueOf).orNull,
-              info.get("alphabet").orNull,
-              info.get("pretok").orNull,
-              identity))
-            .toDF("kind", "version", "budget", "shards", "epochs",
-              "vocab_size", "alphabet", "pretok", "identity"))
-        case other => arity("graft_bin_manifest", 1, other.length)
+    tvf("graft_bin_digest",
+      "graft_bin_digest(dir) - LOADER-SIDE integrity validation of an " +
+        "EXPORTED binary shard directory (sources.BinShards .bin/.idx " +
+        "files): re-reads the artifact's actual bytes and emits the " +
+        "same per-shard position-weighted digests the relational " +
+        "export is gated by, so 'are these the right bytes?' is " +
+        "answerable from a SQL-only session by comparing against " +
+        "graft_pack_digest (or the producer's manifest). Dispatches " +
+        "on the artifact's own commit marker: a packed (pretraining) " +
+        "dir emits (shard, n_seqs, n_ids, sum_digest, xor_digest) " +
+        "via TrainShuffle.packDigest; an SFT (kind=sft) dir emits " +
+        "(shard, n_bins, n_docs, n_ids, sum_digest, xor_digest, " +
+        "starts_digest) via packNoSplitDigest — the budget comes " +
+        "from the marker, not the caller, so a wrong-budget replay " +
+        "cannot be constructed. A marker-less (torn/foreign) dir " +
+        "fails loud. All arguments are literals.")(
+      at(1) { a =>
+        val spark = a.spark
+        val dir = a.str(0, "dir")
+        val info = BinShards.commitInfo(spark, dir)
+        val budget = info.getOrElse("budget",
+          a.fail(s"no budget in the commit marker under $dir")).toInt
+        // The file-read frame feeds every digest branch (2 packed,
+        // 3 sft) — cached, or the TVF re-reads the shard bytes per
+        // branch (the SparkEntry bin_digest queries' own posture).
+        import graft.GraftCaches.Cacheable
+        if (info.get("kind").contains("sft"))
+          TrainShuffle.packNoSplitDigest(
+            BinShards.readNoSplit(spark, dir).graftCached, budget)
+        else
+          TrainShuffle.packDigest(
+            BinShards.read(spark, dir).graftCached, budget)
       }),
-    (FunctionIdentifier("graft_bin_digest"),
-      tvfInfo("graft_bin_digest",
-        "graft_bin_digest(dir) - LOADER-SIDE integrity validation of an " +
-          "EXPORTED binary shard directory (sources.BinShards .bin/.idx " +
-          "files): re-reads the artifact's actual bytes and emits the " +
-          "same per-shard position-weighted digests the relational " +
-          "export is gated by, so 'are these the right bytes?' is " +
-          "answerable from a SQL-only session by comparing against " +
-          "graft_pack_digest (or the producer's manifest). Dispatches " +
-          "on the artifact's own commit marker: a packed (pretraining) " +
-          "dir emits (shard, n_seqs, n_ids, sum_digest, xor_digest) " +
-          "via TrainShuffle.packDigest; an SFT (kind=sft) dir emits " +
-          "(shard, n_bins, n_docs, n_ids, sum_digest, xor_digest, " +
-          "starts_digest) via packNoSplitDigest — the budget comes " +
-          "from the marker, not the caller, so a wrong-budget replay " +
-          "cannot be constructed. A marker-less (torn/foreign) dir " +
-          "fails loud. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p) =>
-          val fn = "graft_bin_digest"
-          val spark = SparkSession.active
-          val dir = strArg(fn, p, "dir")
-          val info = graft.sources.BinShards.commitInfo(spark, dir)
-          val budget = info.getOrElse("budget",
-            throw new IllegalArgumentException(
-              s"$fn: no budget in the commit marker under $dir")).toInt
-          // The file-read frame feeds every digest branch (2 packed,
-          // 3 sft) — cached, or the TVF re-reads the shard bytes per
-          // branch (the SparkEntry bin_digest queries' own posture).
-          import graft.GraftCaches.Cacheable
-          if (info.get("kind").contains("sft"))
-            planOf(graft.ops.TrainShuffle.packNoSplitDigest(
-              graft.sources.BinShards.readNoSplit(spark, dir).graftCached,
-              budget))
-          else
-            planOf(graft.ops.TrainShuffle.packDigest(
-              graft.sources.BinShards.read(spark, dir).graftCached,
-              budget))
-        case other => arity("graft_bin_digest", 1, other.length)
+    tvf("graft_pack_nosplit",
+      "graft_pack_nosplit(path, id_col, text_col, num_shards, budget" +
+        "[, tokens_col[, strategy]]) - NO-SPLIT (padded) sequence " +
+        "packing of the parquet corpus at `path` " +
+        "(TrainShuffle.packNoSplit): every doc occupies exactly ONE " +
+        "fixed `budget`-token bin (never straddles — the SFT/" +
+        "finetuning layout; over-budget docs truncate and flag), " +
+        "greedily packed per deterministic shard. `strategy` = " +
+        "'firstfit' (default; First-Fit Decreasing) or 'nextfit' " +
+        "(O(1)-state streaming). The 6/7-arg forms budget in the " +
+        "CALLER-supplied integral column `tokens_col` ('' = " +
+        "whitespace tokens of text_col; null/negative fails loud). " +
+        "Output (id_col, shard, n_tokens, truncated, bin, pos); the " +
+        "padding audit is one SQL rollup over it (GROUP BY shard). " +
+        "All arguments are literals.")(
+      at(5, 6, 7) { a =>
+        TrainShuffle.packNoSplit(a.parquet(0, "path"), a.str(1, "id_col"),
+          a.str(2, "text_col"), a.int(3, "num_shards"), a.int(4, "budget"),
+          tokensCol = a.strOr(5, "tokens_col", ""),
+          strategy = a.strOr(6, "strategy", "firstfit"))
       }),
-    (FunctionIdentifier("graft_pack_nosplit"),
-      tvfInfo("graft_pack_nosplit",
-        "graft_pack_nosplit(path, id_col, text_col, num_shards, budget" +
-          "[, tokens_col[, strategy]]) - NO-SPLIT (padded) sequence " +
-          "packing of the parquet corpus at `path` " +
-          "(TrainShuffle.packNoSplit): every doc occupies exactly ONE " +
-          "fixed `budget`-token bin (never straddles — the SFT/" +
-          "finetuning layout; over-budget docs truncate and flag), " +
-          "greedily packed per deterministic shard. `strategy` = " +
-          "'firstfit' (default; First-Fit Decreasing) or 'nextfit' " +
-          "(O(1)-state streaming). The 6/7-arg forms budget in the " +
-          "CALLER-supplied integral column `tokens_col` ('' = " +
-          "whitespace tokens of text_col; null/negative fails loud). " +
-          "Output (id_col, shard, n_tokens, truncated, bin, pos); the " +
-          "padding audit is one SQL rollup over it (GROUP BY shard). " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => {
-        val fn = "graft_pack_nosplit"
-        def run(p: Expression, id: Expression, txt: Expression,
-            ns: Expression, bg: Expression, tokensCol: String,
-            strategy: String) =
-          planOf(graft.ops.TrainShuffle.packNoSplit(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            intArg(fn, ns, "num_shards"), intArg(fn, bg, "budget"),
-            tokensCol = tokensCol, strategy = strategy))
-        exprs match {
-          case Seq(p, id, txt, ns, bg) =>
-            run(p, id, txt, ns, bg, "", "firstfit")
-          case Seq(p, id, txt, ns, bg, tc) =>
-            run(p, id, txt, ns, bg, strArg(fn, tc, "tokens_col"), "firstfit")
-          case Seq(p, id, txt, ns, bg, tc, st) =>
-            run(p, id, txt, ns, bg, strArg(fn, tc, "tokens_col"),
-              strArg(fn, st, "strategy"))
-          case other => arity(fn, "5, 6 or 7", other.length)
-        }
+    tvf("graft_bpe_train",
+      "graft_bpe_train(path, text_col, num_merges[, alphabet[, " +
+        "model_path[, pretok]]]) - learn a BPE subword tokenizer (Sennrich et " +
+        "al. 2016) from the parquet corpus at `path`: deterministic " +
+        "merge learning over the frequency-truncated word dictionary " +
+        "(max pair count, lexicographic ties, no RNG). `alphabet` = " +
+        "'char' (default; UTF-16 code units) or 'byte' (UTF-8 bytes " +
+        "— the GPT-2-lineage production alphabet). Output the merge " +
+        "table WITH its alphabet: (rank, lhs, rhs, alphabet) — the " +
+        "constant alphabet column makes the training alphabet " +
+        "visible in SQL, so a byte-trained table can never be " +
+        "mistaken for char-level. The 5-arg form ALSO persists the " +
+        "full TokenizerModel (meta marker + symbols + merges + " +
+        "commit marker — TokenizerModel.write's crash-safe layout) " +
+        "under `model_path`, which is the ONLY artifact the " +
+        "graft_bpe_* scoring forms should read; a hand-rolled " +
+        "merges-only directory reads back as char-level/words. " +
+        "The 6-arg form also sets the PRETOKENIZER: 'words' (default; " +
+        "lowercase whitespace-split) or 'split' (GPT-2-style " +
+        "case-preserving letter/digit/symbol runs); the mode persists " +
+        "in the model meta and surfaces as a constant pretok column. " +
+        "Training runs during ANALYSIS (bounded dictionary collect). " +
+        "All arguments are literals.")(
+      at(3, 4, 5, 6) { a =>
+        val alphabet = a.strOr(3, "alphabet", Bpe.AlphabetChar)
+        val pretok = a.strOr(5, "pretok", Bpe.PretokWords)
+        val model = Bpe.bpeTrain(a.parquet(0, "path"), a.str(1, "text_col"),
+          a.int(2, "num_merges"), alphabet = alphabet, pretok = pretok)
+        if (a.n >= 5) model.write(a.str(4, "model_path"))
+        val merges = model.merges.withColumn("alphabet",
+          org.apache.spark.sql.functions.lit(alphabet))
+        if (a.n < 6) merges
+        else merges.withColumn("pretok",
+          org.apache.spark.sql.functions.lit(pretok))
       }),
-    (FunctionIdentifier("graft_bpe_train"),
-      tvfInfo("graft_bpe_train",
-        "graft_bpe_train(path, text_col, num_merges[, alphabet[, " +
-          "model_path[, pretok]]]) - learn a BPE subword tokenizer (Sennrich et " +
-          "al. 2016) from the parquet corpus at `path`: deterministic " +
-          "merge learning over the frequency-truncated word dictionary " +
-          "(max pair count, lexicographic ties, no RNG). `alphabet` = " +
-          "'char' (default; UTF-16 code units) or 'byte' (UTF-8 bytes " +
-          "— the GPT-2-lineage production alphabet). Output the merge " +
-          "table WITH its alphabet: (rank, lhs, rhs, alphabet) — the " +
-          "constant alphabet column makes the training alphabet " +
-          "visible in SQL, so a byte-trained table can never be " +
-          "mistaken for char-level. The 5-arg form ALSO persists the " +
-          "full TokenizerModel (meta marker + symbols + merges + " +
-          "commit marker — TokenizerModel.write's crash-safe layout) " +
-          "under `model_path`, which is the ONLY artifact the " +
-          "graft_bpe_* scoring forms should read; a hand-rolled " +
-          "merges-only directory reads back as char-level/words. " +
-          "The 6-arg form also sets the PRETOKENIZER: 'words' (default; " +
-          "lowercase whitespace-split) or 'split' (GPT-2-style " +
-          "case-preserving letter/digit/symbol runs); the mode persists " +
-          "in the model meta and surfaces as a constant pretok column. " +
-          "Training runs during ANALYSIS (bounded dictionary collect). " +
-          "All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, txt, nm) =>
-          val fn = "graft_bpe_train"
-          planOf(graft.functions.Bpe.bpeTrain(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, txt, "text_col"), intArg(fn, nm, "num_merges"))
-            .merges.withColumn("alphabet",
-              org.apache.spark.sql.functions.lit(
-                graft.functions.Bpe.AlphabetChar)))
-        case Seq(p, txt, nm, al) =>
-          val fn = "graft_bpe_train"
-          val alphabet = strArg(fn, al, "alphabet")
-          planOf(graft.functions.Bpe.bpeTrain(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, txt, "text_col"), intArg(fn, nm, "num_merges"),
-            alphabet = alphabet)
-            .merges.withColumn("alphabet",
-              org.apache.spark.sql.functions.lit(alphabet)))
-        case Seq(p, txt, nm, al, mp) =>
-          val fn = "graft_bpe_train"
-          val alphabet = strArg(fn, al, "alphabet")
-          val model = graft.functions.Bpe.bpeTrain(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, txt, "text_col"), intArg(fn, nm, "num_merges"),
-            alphabet = alphabet)
-          model.write(strArg(fn, mp, "model_path"))
-          planOf(model.merges.withColumn("alphabet",
-            org.apache.spark.sql.functions.lit(alphabet)))
-        case Seq(p, txt, nm, al, mp, pt) =>
-          val fn = "graft_bpe_train"
-          val alphabet = strArg(fn, al, "alphabet")
-          val pretok = strArg(fn, pt, "pretok")
-          val model = graft.functions.Bpe.bpeTrain(
-            SparkSession.active.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, txt, "text_col"), intArg(fn, nm, "num_merges"),
-            alphabet = alphabet, pretok = pretok)
-          model.write(strArg(fn, mp, "model_path"))
-          planOf(model.merges
-            .withColumn("alphabet",
-              org.apache.spark.sql.functions.lit(alphabet))
-            .withColumn("pretok",
-              org.apache.spark.sql.functions.lit(pretok)))
-        case other => arity("graft_bpe_train", "3 to 6", other.length)
+    tvf("graft_bpe_encode",
+      "graft_bpe_encode(path, id_col, text_col, model_path) - encode " +
+        "the parquet corpus at `path` against the PERSISTED " +
+        "TokenizerModel at `model_path` (a TokenizerModel.write / " +
+        "5-arg graft_bpe_train artifact: meta alphabet marker + " +
+        "symbols + merges + commit marker; a bare merges-only " +
+        "directory is read as char-level/words): (doc_id, tokens " +
+        "ARRAY<STRING>, n_tokens_bpe), one row per doc. ONE stateless " +
+        "broadcast-model pass, no shuffle. All arguments are literals.")(
+      at(4)(bpeOver(_)(Bpe.bpeEncode))),
+    tvf("graft_bpe_count",
+      "graft_bpe_count(path, id_col, text_col, model_path) - per-doc " +
+        "MODEL-token counts (doc_id, n_tokens_bpe) against the " +
+        "PERSISTED TokenizerModel at `model_path` (a TokenizerModel" +
+        ".write / 5-arg graft_bpe_train artifact — see " +
+        "graft_bpe_encode for the layout) — the budgeting " +
+        "projection of graft_bpe_encode, what token-budget mixes and " +
+        "graft_pack_report's tokens_col form consume. All arguments " +
+        "are literals.")(
+      at(4)(bpeOver(_)(Bpe.bpeCount))),
+    tvf("graft_bpe_encode_ids",
+      "graft_bpe_encode_ids(path, id_col, text_col, model_path) - " +
+        "encode the parquet corpus at `path` to INTEGER token-id " +
+        "sequences against the PERSISTED TokenizerModel at " +
+        "`model_path`: (doc_id, token_ids ARRAY<INT>, n_tokens_bpe), " +
+        "ids into the model's deterministic vocabulary (unk, base " +
+        "symbols ascending, merge tokens by rank — graft_bpe_vocab " +
+        "ships the id->token table). The form a trainer consumes; " +
+        "same single stateless broadcast-model pass as " +
+        "graft_bpe_encode. All arguments are literals.")(
+      at(4)(bpeOver(_)(Bpe.bpeEncodeIds))),
+    tvf("graft_pack_ids",
+      "graft_pack_ids(path, id_col, text_col, model_path, num_shards, " +
+        "budget) - materialize the training export: encode the parquet " +
+        "corpus at `path` to token ids against the PERSISTED " +
+        "TokenizerModel at `model_path`, lay docs out in the " +
+        "deterministic shard shuffle, and chunk each shard's token " +
+        "stream (one -1 end-of-document separator per doc) into " +
+        "fixed `budget`-id sequences: (shard, seq, ids ARRAY<INT>, " +
+        "n_ids) — what a pretraining data loader reads. All " +
+        "arguments are literals.")(
+      at(6) { a =>
+        bpeOver(a)(TrainShuffle.packIdSequences(_, _, _, _,
+          a.int(4, "num_shards"), a.int(5, "budget")))
       }),
-    (FunctionIdentifier("graft_bpe_encode"),
-      tvfInfo("graft_bpe_encode",
-        "graft_bpe_encode(path, id_col, text_col, model_path) - encode " +
-          "the parquet corpus at `path` against the PERSISTED " +
-          "TokenizerModel at `model_path` (a TokenizerModel.write / " +
-          "5-arg graft_bpe_train artifact: meta alphabet marker + " +
-          "symbols + merges + commit marker; a bare merges-only " +
-          "directory is read as char-level/words): (doc_id, tokens " +
-          "ARRAY<STRING>, n_tokens_bpe), one row per doc. ONE stateless " +
-          "broadcast-model pass, no shuffle. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, mp) =>
-          val fn = "graft_bpe_encode"
-          val spark = SparkSession.active
-          planOf(graft.functions.Bpe.bpeEncode(
-            spark.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            graft.functions.Bpe.TokenizerModel.read(
-              spark, strArg(fn, mp, "model_path"))))
-        case other => arity("graft_bpe_encode", 4, other.length)
+    tvf("graft_pack_nosplit_ids",
+      "graft_pack_nosplit_ids(path, id_col, text_col, model_path, " +
+        "num_shards, budget) - materialize the SFT export: encode the " +
+        "parquet corpus at `path` to token ids against the PERSISTED " +
+        "TokenizerModel at `model_path`, first-fit-decreasing pack " +
+        "WHOLE docs into `budget`-id bins (over-budget docs truncate " +
+        "to budget), and emit per (shard, bin) the concatenated ids " +
+        "with doc-boundary offsets: (shard, bin, ids ARRAY<INT>, " +
+        "n_ids, n_docs, starts ARRAY<BIGINT>) — what an SFT data " +
+        "loader reads, boundaries included for loss masking. All " +
+        "arguments are literals.")(
+      at(6) { a =>
+        bpeOver(a)(TrainShuffle.packNoSplitIds(_, _, _, _,
+          a.int(4, "num_shards"), a.int(5, "budget")))
       }),
-    (FunctionIdentifier("graft_bpe_count"),
-      tvfInfo("graft_bpe_count",
-        "graft_bpe_count(path, id_col, text_col, model_path) - per-doc " +
-          "MODEL-token counts (doc_id, n_tokens_bpe) against the " +
-          "PERSISTED TokenizerModel at `model_path` (a TokenizerModel" +
-          ".write / 5-arg graft_bpe_train artifact — see " +
-          "graft_bpe_encode for the layout) — the budgeting " +
-          "projection of graft_bpe_encode, what token-budget mixes and " +
-          "graft_pack_report's tokens_col form consume. All arguments " +
-          "are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, mp) =>
-          val fn = "graft_bpe_count"
-          val spark = SparkSession.active
-          planOf(graft.functions.Bpe.bpeCount(
-            spark.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            graft.functions.Bpe.TokenizerModel.read(
-              spark, strArg(fn, mp, "model_path"))))
-        case other => arity("graft_bpe_count", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_bpe_encode_ids"),
-      tvfInfo("graft_bpe_encode_ids",
-        "graft_bpe_encode_ids(path, id_col, text_col, model_path) - " +
-          "encode the parquet corpus at `path` to INTEGER token-id " +
-          "sequences against the PERSISTED TokenizerModel at " +
-          "`model_path`: (doc_id, token_ids ARRAY<INT>, n_tokens_bpe), " +
-          "ids into the model's deterministic vocabulary (unk, base " +
-          "symbols ascending, merge tokens by rank — graft_bpe_vocab " +
-          "ships the id->token table). The form a trainer consumes; " +
-          "same single stateless broadcast-model pass as " +
-          "graft_bpe_encode. All arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, mp) =>
-          val fn = "graft_bpe_encode_ids"
-          val spark = SparkSession.active
-          planOf(graft.functions.Bpe.bpeEncodeIds(
-            spark.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            graft.functions.Bpe.TokenizerModel.read(
-              spark, strArg(fn, mp, "model_path"))))
-        case other => arity("graft_bpe_encode_ids", 4, other.length)
-      }),
-    (FunctionIdentifier("graft_pack_ids"),
-      tvfInfo("graft_pack_ids",
-        "graft_pack_ids(path, id_col, text_col, model_path, num_shards, " +
-          "budget) - materialize the training export: encode the parquet " +
-          "corpus at `path` to token ids against the PERSISTED " +
-          "TokenizerModel at `model_path`, lay docs out in the " +
-          "deterministic shard shuffle, and chunk each shard's token " +
-          "stream (one -1 end-of-document separator per doc) into " +
-          "fixed `budget`-id sequences: (shard, seq, ids ARRAY<INT>, " +
-          "n_ids) — what a pretraining data loader reads. All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, mp, ns, b) =>
-          val fn = "graft_pack_ids"
-          val spark = SparkSession.active
-          planOf(graft.ops.TrainShuffle.packIdSequences(
-            spark.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            graft.functions.Bpe.TokenizerModel.read(
-              spark, strArg(fn, mp, "model_path")),
-            intArg(fn, ns, "num_shards"), intArg(fn, b, "budget")))
-        case other => arity("graft_pack_ids", 6, other.length)
-      }),
-    (FunctionIdentifier("graft_pack_nosplit_ids"),
-      tvfInfo("graft_pack_nosplit_ids",
-        "graft_pack_nosplit_ids(path, id_col, text_col, model_path, " +
-          "num_shards, budget) - materialize the SFT export: encode the " +
-          "parquet corpus at `path` to token ids against the PERSISTED " +
-          "TokenizerModel at `model_path`, first-fit-decreasing pack " +
-          "WHOLE docs into `budget`-id bins (over-budget docs truncate " +
-          "to budget), and emit per (shard, bin) the concatenated ids " +
-          "with doc-boundary offsets: (shard, bin, ids ARRAY<INT>, " +
-          "n_ids, n_docs, starts ARRAY<BIGINT>) — what an SFT data " +
-          "loader reads, boundaries included for loss masking. All " +
-          "arguments are literals."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(p, id, txt, mp, ns, b) =>
-          val fn = "graft_pack_nosplit_ids"
-          val spark = SparkSession.active
-          planOf(graft.ops.TrainShuffle.packNoSplitIds(
-            spark.read.parquet(strArg(fn, p, "path")),
-            strArg(fn, id, "id_col"), strArg(fn, txt, "text_col"),
-            graft.functions.Bpe.TokenizerModel.read(
-              spark, strArg(fn, mp, "model_path")),
-            intArg(fn, ns, "num_shards"), intArg(fn, b, "budget")))
-        case other => arity("graft_pack_nosplit_ids", 6, other.length)
-      }),
-    (FunctionIdentifier("graft_bpe_vocab"),
-      tvfInfo("graft_bpe_vocab",
-        "graft_bpe_vocab(model_path) - the id-ordered vocabulary table " +
-          "(id INT, token STRING) of the PERSISTED TokenizerModel at " +
-          "`model_path` — what ships alongside graft_bpe_encode_ids' " +
-          "packed sequences so a consumer can decode ids back to " +
-          "tokens. Row 0 is the unk token; base symbols ascending, " +
-          "then merge tokens in rank order (first occurrence wins). " +
-          "The argument is a literal."),
-      (exprs: Seq[Expression]) => exprs match {
-        case Seq(mp) =>
-          val fn = "graft_bpe_vocab"
-          val spark = SparkSession.active
-          planOf(graft.functions.Bpe.TokenizerModel.read(
-            spark, strArg(fn, mp, "model_path")).vocabTable(spark))
-        case other => arity("graft_bpe_vocab", 1, other.length)
+    tvf("graft_bpe_vocab",
+      "graft_bpe_vocab(model_path) - the id-ordered vocabulary table " +
+        "(id INT, token STRING) of the PERSISTED TokenizerModel at " +
+        "`model_path` — what ships alongside graft_bpe_encode_ids' " +
+        "packed sequences so a consumer can decode ids back to " +
+        "tokens. Row 0 is the unk token; base symbols ascending, " +
+        "then merge tokens in rank order (first occurrence wins). " +
+        "The argument is a literal.")(
+      at(1) { a =>
+        Bpe.TokenizerModel.read(a.spark, a.str(0, "model_path"))
+          .vocabTable(a.spark)
       }))
+
+  /** Parse a graft_split_assign `'name:weight,...'` list, in order. */
+  private def parseSplits(a: Args, csv: String): Seq[(String, Long)] =
+    csv.split(",").toSeq.map(_.trim).filter(_.nonEmpty).map { part =>
+      part.split(":") match {
+        case Array(name, w) if w.trim.matches("-?\\d+") =>
+          name.trim -> w.trim.toLong
+        case _ => a.fail(
+          s"splits_csv entries must be 'name:integer_weight', got '$part'")
+      }
+    }
 
   /** Parse a graft_mix_tokens budget object — `{"src": 123, ...}`,
     * integral positive budgets — failing LOUD on anything else (the
     * operator's own require()s then re-check non-empty/positive). */
-  private def parseBudgets(fn: String, json: String): Map[String, Long] = {
+  private def parseBudgets(a: Args, json: String): Map[String, Long] = {
     val node =
       try new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
       catch {
         case e: com.fasterxml.jackson.core.JacksonException =>
-          throw new IllegalArgumentException(
-            s"$fn: budgets_json is not valid JSON: ${e.getMessage}")
+          a.fail(s"budgets_json is not valid JSON: ${e.getMessage}")
       }
     if (node == null || !node.isObject)
-      throw new IllegalArgumentException(
-        s"$fn: budgets_json must be a JSON object of source -> tokens, " +
-          s"got: $json")
+      a.fail(s"budgets_json must be a JSON object of source -> tokens, " +
+        s"got: $json")
     val it = node.fieldNames()
     val b = Map.newBuilder[String, Long]
     while (it.hasNext) {
       val k = it.next()
       val v = node.get(k)
       if (!v.canConvertToLong || v.isFloatingPointNumber)
-        throw new IllegalArgumentException(
-          s"$fn: budget for '$k' must be an integral number, got $v")
+        a.fail(s"budget for '$k' must be an integral number, got $v")
       b += k -> v.asLong()
     }
     b.result()

@@ -1768,6 +1768,8 @@ object Dedup {
    * `app.FullIngestDemo`).
    *
    * Output: (doc_id, n_chunks, n_dup, clean_md5), as [[chunkDedupCdc]].
+   * The returned frame embeds `GraftCaches.checkpointCut` results:
+   * consume it fully before `GraftCaches.clearAll()` or its scope exits.
    */
   /** Broadcast-contract bound for [[chunkDedupIndexed]]'s batch chunk
     * set: ~4M distinct chunks ≈ a few hundred MB broadcast — past it the
@@ -1845,7 +1847,9 @@ object Dedup {
    * Output: (doc_id, n_tokens, known_tokens, novel_frac), one row per
    * batch doc; novel_frac = (n_tokens - known_tokens) / n_tokens, ONE
    * IEEE division of exact integers (0.0 for an empty doc — no tokens,
-   * nothing novel).
+   * nothing novel). Like [[chunkDedupIndexed]], the returned frame embeds
+   * `GraftCaches.checkpointCut` results: consume it fully before
+   * `GraftCaches.clearAll()` or its scope exits.
    */
   def chunkNovelty(
       batch: DataFrame,

@@ -1,13 +1,26 @@
 package graft.tools
 
-import org.apache.spark.sql.DataFrame
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
 
-import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+
+import graft.{GraftCaches, GraftSession, SparkEntry}
 
 /**
  * Prints the formatted physical plan per query plus a one-line audit:
  * #Exchanges (shuffles), broadcast joins, parquet pushdown evidence.
  * Run after changing any operator — the plan IS the product at 100 TB.
+ *
+ *   sbt "runMain graft.tools.PlanAudit <sfDir> [q1 q2 ...]"
+ *   sbt "runMain graft.tools.PlanAudit <sfDir> --out <dir> <suffix> [q1 ...]"
+ *
+ * The `--out` form writes each query's `.explain("formatted")` to
+ * `<dir>/<query>_<suffix>.txt` instead — the committed plan evidence
+ * (plans/r17/). No jobs run for pure plans; queries whose CONSTRUCTION
+ * runs eager work (bpeTrain's dictionary collect, the bin-artifact
+ * exports) still pay it. Cores: `SPARK_GRAFT_CPUS` (default 8).
  *
  * [[audit]] is the shared counting core; PlanGateSpec pins golden bounds
  * on these counts for the most expensive queries, so dropping a persist
@@ -55,17 +68,35 @@ object PlanAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.local(8, "plan-audit")
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val only = args.drop(1).toSet
+    val out = args.drop(1) match {
+      case Array("--out", outDir, suffix, _*) =>
+        Some((Paths.get(outDir), suffix))
+      case _ => None
+    }
+    val only = args.drop(if (out.isDefined) 4 else 1).toSet
+    out.foreach { case (outDir, _) => Files.createDirectories(outDir) }
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, "plan-audit")
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.isEmpty || only.contains(name)) {
-        try {
+        try GraftCaches.scoped {
           val df = fn(spark, dir)
-          println(s"[audit] $name: ${audit(df)}")
-          if (only.nonEmpty) println(df.queryExecution.toString)
+          out match {
+            case Some((outDir, suffix)) =>
+              Files.write(outDir.resolve(s"${name}_$suffix.txt"),
+                df.queryExecution.explainString(FormattedMode)
+                  .getBytes(StandardCharsets.UTF_8))
+              println(s"[audit] $name -> ${name}_$suffix.txt")
+            case None =>
+              println(s"[audit] $name: ${audit(df)}")
+              if (only.nonEmpty) println(df.queryExecution.toString)
+          }
         } catch {
           case e: Throwable => println(s"[audit] $name: FAILED ${e.getMessage}")
+        } finally {
+          GraftCaches.clearAll()
+          spark.catalog.clearCache()
         }
       }
     }

@@ -769,6 +769,69 @@ class GraftExtensionsSpec extends AnyFunSuite {
       spark.sql("SELECT * FROM graft_neardup('/nowhere', 'id')").collect()
     }
     assert(e.getMessage.toLowerCase.contains("graft_neardup"))
+    // Every declared entry: 20 arguments is no entry's arity, and the
+    // standard error names the function.
+    val twenty = Seq.fill(20)("1").mkString(", ")
+    val tvfs = GraftExtensions.tableFunctions.map(_._1.funcName)
+    assert(tvfs.size == 59 && tvfs.distinct.size == 59, s"$tvfs")
+    for (fn <- tvfs) {
+      val ea = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT * FROM $fn($twenty)").collect()
+      }
+      assert(ea.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION" &&
+        ea.getMessage.contains(s"`$fn`"), s"$fn: ${ea.getMessage}")
+    }
+    for (fn <- GraftExtensions.functions.map(_._1.funcName)) {
+      val ea = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT $fn(array(1), array(1), array(1))").collect()
+      }
+      assert(ea.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION" &&
+        ea.getMessage.contains(s"`$fn`"), s"$fn: ${ea.getMessage}")
+    }
+    // The arity error lists EVERY declared form, not just the first.
+    val eIr = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT * FROM graft_index_report('a', 'b', 'c', 'd', " +
+        "'e', 'f')").collect()
+    }
+    assert(eIr.getMessage.contains("3, 4 or 5"), eIr.getMessage)
+    // Every declared shape reads its arguments through the one literal
+    // reader before any other work: all-NULL calls either miss every
+    // arity or fail naming the function and a parameter.
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    for ((id, _, build) <- GraftExtensions.tableFunctions) {
+      val fn = id.funcName
+      val accepted = (0 to 13).filter { n =>
+        try { build(Seq.fill(n)(Literal(null))); fail(s"$fn/$n built") }
+        catch {
+          case _: org.apache.spark.sql.AnalysisException => false
+          case ia: IllegalArgumentException =>
+            assert(ia.getMessage.matches(s"$fn: \\w+ must not be NULL"),
+              s"$fn/$n: ${ia.getMessage}")
+            true
+        }
+      }
+      assert(accepted.nonEmpty, s"$fn accepts no arity in 0..13")
+    }
+    // Argument misuse: one IllegalArgumentException shape, naming the
+    // function and the parameter.
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tvf-args-")
+      .toString + "/docs"
+    Seq(1L -> "a b c d e f").toDF("doc_id", "text").write.parquet(dir)
+    for ((call, msg) <- Seq(
+        s"graft_neardup('$dir', 'doc_id', 'text', rand())" ->
+          "graft_neardup: threshold must be a literal",
+        s"graft_neardup('$dir', 'doc_id', NULL, 0.7)" ->
+          "graft_neardup: text_col must not be NULL",
+        s"graft_neardup('$dir', 'doc_id', 'text', 'high')" ->
+          "graft_neardup: threshold must be numeric",
+        s"graft_curate('$dir', 3000000000)" ->
+          "graft_curate: num_shards must fit in INT")) {
+      val ia = intercept[IllegalArgumentException] {
+        spark.sql(s"SELECT * FROM $call").collect()
+      }
+      assert(ia.getMessage.startsWith(msg), s"$call: ${ia.getMessage}")
+    }
   }
 
   test("graft_dot via extensions rejects wrong arity with the standard error") {
@@ -1656,5 +1719,35 @@ class GraftExtensionsSpec extends AnyFunSuite {
       .orderBy("shard").collect().map(_.toSeq)
     assert(expDig.toSeq == retDig.toSeq,
       "the rewritten artifact must carry the RETRAINED model's ids")
+  }
+
+  test("graft_bin_append: salt '' means the per-epoch default in the 10-argument form too") {
+    import spark.implicits._
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    GraftExtensionsBridge.applyTo(ext, spark)
+    val base = java.nio.file.Files.createTempDirectory("tvf-salt-").toString
+    (1L to 60L).map(i => (i, (1 to (i % 5 + 2).toInt)
+        .map(j => s"w${(i * j) % 11}").mkString(" ")))
+      .toDF("doc_id", "text").write.parquet(base + "/b0")
+    graft.functions.Bpe.bpeTrain(
+      spark.read.parquet(base + "/b0"), "text", numMerges = 8)
+      .write(base + "/tok")
+    def digestAfter(root: String, tail: String): Seq[Seq[Any]] = {
+      spark.sql("SELECT * FROM graft_bin_append(" +
+        s"'$base/b0', 'doc_id', 'text', '$base/tok', 4, 8, " +
+        s"'$base/$root', 'e0'$tail)").collect()
+      spark.sql("SELECT shard, n_seqs, n_ids, sum_digest, xor_digest " +
+          s"FROM graft_bin_digest('$base/$root') ORDER BY shard")
+        .collect().map(_.toSeq).toSeq
+    }
+    val default8 = digestAfter("r8", "")
+    assert(default8.nonEmpty)
+    assert(digestAfter("r10", ", 64, ''") == default8,
+      "salt '' must select the epoch_id salt, as in the 11-argument form")
+    assert(digestAfter("r11", ", 64, '', 'packed'") == default8)
+    // The comparison sees the salt: an explicit other salt re-lays out.
+    assert(digestAfter("rOther", ", 64, 'other'") != default8,
+      "fixture: a different salt must change the layout")
   }
 }

@@ -284,13 +284,59 @@ class BinFamilySpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val root = Files.createTempDirectory("binfam-desc-").toString
     sc.setJobDescription("caller label")
+    sc.setLocalProperty("spark.jobGroup.id", "caller group")
     try {
       BinFamily.appendEpoch(pack(0), root, budget, span, "e0")
       assert(sc.getLocalProperty("spark.job.description") == "caller label")
-    } finally sc.setJobDescription(null)
+      assert(sc.getLocalProperty("spark.jobGroup.id") == "caller group")
+    } finally {
+      sc.setJobDescription(null)
+      sc.setLocalProperty("spark.jobGroup.id", null)
+    }
     // An unlabelled caller stays unlabelled.
     BinFamily.appendEpoch(pack(1), root, budget, span, "e1")
     assert(sc.getLocalProperty("spark.job.description") == null)
+    assert(sc.getLocalProperty("spark.jobGroup.id") == null)
+  }
+
+  test("a failed concurrent append leaves no live export jobs; a clean retry matches the uninterrupted append") {
+    val key = "spark.graft.appendEpochs.maxConcurrent"
+    spark.conf.set(key, "2")
+    try {
+      // e0 packs into twice the declared span: its range claim fails in
+      // the first task, while e1's export stalls 4 s in its first rows.
+      val misPacked = TrainShuffle.packIdSequences(batch(0), "doc_id",
+        "text", model, numShards = span * 2, budget = budget,
+        salt = "fam-e0")
+      val stall = udf { (seq: Long) => if (seq == 0L) Thread.sleep(4000); seq }
+      val slow = pack(1).withColumn("seq", stall(col("seq")))
+      val root = Files.createTempDirectory("binfam-fail-").toString
+      val e = intercept[Exception] {
+        BinFamily.appendEpochs(Seq("e0" -> misPacked, "e1" -> slow),
+          root, budget, span, compactEvery = 10)
+      }
+      assert(e.getMessage.contains("range"), s"$e")
+      // A failed job's end event trails its waiter by a moment; a live
+      // sibling export would stay active for seconds.
+      val sc = spark.sparkContext
+      val deadline = System.nanoTime() + 2000L * 1000 * 1000
+      while (sc.statusTracker.getActiveJobIds.nonEmpty &&
+          System.nanoTime() < deadline) {
+        Thread.sleep(50)
+        org.apache.spark.ListenerBusBridge.drain(sc)
+      }
+      assert(sc.statusTracker.getActiveJobIds.isEmpty,
+        "a sibling export outlived the failed append")
+      val clean = Files.createTempDirectory("binfam-clean-").toString
+      for (r <- Seq(root, clean))
+        assert(BinFamily.appendEpochs((0 until 2).map(i => s"e$i" -> pack(i)),
+          r, budget, span, compactEvery = 10) >= 0L)
+      def digest(r: String) = TrainShuffle.packDigest(
+          BinShards.read(spark, r), budget)
+        .orderBy("shard").collect().map(_.toSeq).toSeq
+      assert(digest(root) == digest(clean),
+        "the retried append must reproduce the uninterrupted artifact")
+    } finally spark.conf.unset(key)
   }
 
   test("repackSequences validates the packed invariant loud") {
