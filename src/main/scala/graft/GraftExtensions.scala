@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.expressions.{DotProduct, SortedIntersectCount}
 import graft.functions.{Bpe, Dedup, Hybrid, IVF, Ingest, PQ, Spans, TextFunctions, Vectors}
@@ -128,7 +129,10 @@ object GraftExtensions {
       v
     }
 
-    def str(i: Int, what: String): String = lit(i, what).toString
+    def str(i: Int, what: String): String = lit(i, what) match {
+      case s: UTF8String => s.toString
+      case other => fail(s"$what must be a string, got $other")
+    }
 
     def dbl(i: Int, what: String): Double = lit(i, what) match {
       case d: Double => d

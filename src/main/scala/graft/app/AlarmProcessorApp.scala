@@ -1,12 +1,10 @@
 package graft.app
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
-
-import graft.streaming.{OverrideRecord, StreamRules}
 
 /**
  * The deployable app (reference entry point 1, `EffectiveProcessor.main`):
@@ -16,6 +14,10 @@ import graft.streaming.{OverrideRecord, StreamRules}
  * tombstones) appended back onto the overrides changelog — the same
  * topology the reference drives through Kafka topics
  * (`EffectiveProcessor.java:21-48`), here over pluggable storage paths.
+ *
+ * The main query reads three sources into one stateful operator,
+ * [[UnifiedAlarmRule.run]], expiry timers included; its sink numbers the
+ * three outputs in one window ([[numberOutputs]]) and writes them from cache.
  *
  * Sources/sinks are JSON-lines directories (works self-contained; swapping
  * the reads for `readStream.format("kafka")` + ConfluentFraming/AlarmAvro
@@ -137,7 +139,7 @@ object AlarmProcessorApp {
   }
 
   /** Build the unified input union for the main chain. */
-  private def unifiedInputs(spark: SparkSession, paths: Paths): org.apache.spark.sql.Dataset[AlarmInput] = {
+  private def unifiedInputs(spark: SparkSession, paths: Paths): Dataset[AlarmInput] = {
     import spark.implicits._
 
     // Registrations arrive pre-enriched from the registration stages (so
@@ -152,9 +154,74 @@ object AlarmProcessorApp {
       .as[ActivationRow].map(_.toInput)
 
     val overrides = wellFormed(spark.readStream.schema(overrideSchema).json(paths.overrides))
+      .filter(col("overrideType").isNotNull)
       .as[OverrideRow].map(_.toInput)
 
     instances.union(activations).union(overrides)
+  }
+
+  /** One sink row: a chain output flattened into one of the sink's outputs. */
+  private[app] final case class SinkRow(
+      tag: Int, name: String, overrideType: Option[String] = None,
+      state: Option[String] = None, is_active: Option[Boolean] = None,
+      shelved: Option[Boolean] = None, disabled: Option[Boolean] = None,
+      oneshot: Option[Boolean] = None, expiration: Option[Long] = None,
+      reason: Option[String] = None, tombstone: Option[Boolean] = None)
+
+  /** The sink's outputs; a [[SinkRow]]'s tag is its index here. */
+  private final case class Output(path: Paths => String, format: String,
+      columns: Seq[String], seqCol: String)
+
+  private val outputs = Seq(
+    Output(_.effective, "parquet", Seq("name", "state", "is_active"), "emit_seq"),
+    // S3 multi-sink parity: the reference's EffectiveStateRule also
+    // publishes the notification projection to its own topic.
+    Output(_.notifications, "parquet", Seq("name", "state", "shelved", "disabled"), "emit_seq"),
+    Output(_.overrides, "json",
+      Seq("name", "overrideType", "oneshot", "expiration", "reason", "tombstone"), "seq"))
+
+  val EffectiveTag = 0
+  val NotificationTag = 1
+  val EmissionTag = 2
+
+  /**
+   * The sink's tag-and-number step: one [[SinkRow]] per output a chain
+   * output feeds (an effective alarm feeds two), plus `seq`, numbered per
+   * tag in `(name, overrideType, emission order)`.
+   *
+   * Seq contract (one domain for every writer of these changelogs):
+   * seq = epoch_ms * 1e6 + dense per-batch row index. The row index is a
+   * row_number over a deterministic key order — dense and < 5e8 (the 500 ms
+   * trigger's base increment), so emission seqs are totally ordered across
+   * batches and always outrank seqs emitted in earlier batches.
+   * monotonically_increasing_id is NOT usable as the index: its
+   * partitionId*2^33 component dwarfs the base increment and inverts
+   * cross-batch order. It serves only as the emission-order key, taken
+   * before the window's shuffle, where it follows the chain's output order
+   * within an alarm. Emission batches are small control-plane record sets,
+   * so the per-tag window is not a scale concern (the data plane never
+   * passes through this sink).
+   */
+  def numberOutputs(out: Dataset[ChainOutput], base: Long): DataFrame = {
+    import out.sparkSession.implicits._
+    out.flatMap { o =>
+      o.effective.toSeq.flatMap { e =>
+        val n = e.notification
+        Seq(
+          SinkRow(EffectiveTag, e.name, state = Some(n.state),
+            is_active = Some(n.activation.isDefined)),
+          SinkRow(NotificationTag, e.name, state = Some(n.state),
+            shelved = Some(n.overrides.shelved.isDefined),
+            disabled = Some(n.overrides.disabled.isDefined)))
+      } ++ o.emission.map { e =>
+        SinkRow(EmissionTag, e.name, overrideType = Some(e.overrideType),
+          oneshot = e.value.flatMap(_.oneshot), expiration = e.value.flatMap(_.expiration),
+          reason = e.value.flatMap(_.reason), tombstone = Some(e.value.isEmpty))
+      }
+    }.withColumn("ord", monotonically_increasing_id())
+      .withColumn("seq", lit(base) + row_number().over(
+        Window.partitionBy("tag").orderBy("name", "overrideType", "ord")).cast("long"))
+      .drop("ord")
   }
 
   /** Start the app: two registration stages + the unified chain. */
@@ -166,74 +233,25 @@ object AlarmProcessorApp {
     val fkQ = startFkQuery(spark, paths, trigger)
     val regQ = startRegQuery(spark, paths, trigger)
 
-    val chainOut = UnifiedAlarmRule.run(unifiedInputs(spark, paths))
-
-    // T8/T9 expiration branch: overrides stream -> processing-time timers ->
-    // tombstone emissions, unioned into the same sink/feedback path.
-    val overrideRecords = spark.readStream.schema(overrideSchema).json(paths.overrides)
-      .filter(col("seq").isNotNull && col("name").isNotNull && col("overrideType").isNotNull)
-      .select(col("seq"), col("name"), col("overrideType"),
-        col("oneshot"), col("expiration"), col("reason"),
-        coalesce(col("tombstone"), lit(false)).as("tombstone"))
-      .as[OverrideRecord]
-    val expiries = StreamRules.expirationTimers(overrideRecords, graft.model.OverrideType.Shelved)
-      .union(StreamRules.expirationTimers(overrideRecords, graft.model.OverrideType.OnDelayed))
-      .map(e => ChainOutput(None, Some(e)))
-
-    val mainQ = chainOut.union(expiries).writeStream
+    val mainQ = UnifiedAlarmRule.run(unifiedInputs(spark, paths)).writeStream
       .outputMode("append")
       .option("checkpointLocation", s"${paths.checkpoint}/main")
       .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ChainOutput], _: Long) =>
-        // Distributed routing sink: no driver-side collect. Both outputs of
-        // the chain go to their "topics" (paths); emissions re-enter the
-        // overrides source on the next micro-batch = the feedback loop.
-        val bs = batch.sparkSession
-        import bs.implicits._
-        batch.persist()
+      .foreachBatch { (batch: Dataset[ChainOutput], _: Long) =>
+        // Distributed routing sink: no driver-side collect of rows. The
+        // chain's outputs go to their "topics" (paths); emissions re-enter
+        // the overrides source on the next micro-batch = the feedback loop.
+        // One action runs the chain and fills the cache; each write then
+        // reads the cache without a further shuffle.
+        val rows = numberOutputs(batch, System.currentTimeMillis() * 1000000L).persist()
         try {
-          // Seq contract (one domain for every writer of these changelogs):
-          // seq = epoch_ms * 1e6 + dense per-batch row index. The row index
-          // is a row_number over a deterministic key order — dense and
-          // < 5e8 (the 500 ms trigger's base increment), so emission seqs
-          // are totally ordered across batches and always outrank seqs
-          // emitted in earlier batches. monotonically_increasing_id is NOT
-          // usable here: its partitionId*2^33 component dwarfs the base
-          // increment and inverts cross-batch order. Emission batches are
-          // small control-plane record sets, so the single-partition
-          // row_number window is not a scale concern (the data plane never
-          // passes through this sink).
-          val base = System.currentTimeMillis() * 1000000L
-          def withSeq(df: DataFrame, seqCol: String, keys: String*) : DataFrame = {
-            val w = Window.orderBy(keys.map(col): _*)
-            df.withColumn(seqCol, lit(base) + row_number().over(w).cast("long"))
-          }
-          val eff = batch.flatMap(_.effective.map(e =>
-            (e.name, e.notification.state, e.notification.activation.isDefined)))
-            .toDF("name", "state", "is_active")
-          if (!eff.isEmpty) {
-            withSeq(eff, "emit_seq", "name")
-              .write.mode("append").parquet(paths.effective)
-            // S3 multi-sink parity: the reference's EffectiveStateRule also
-            // publishes the notification projection to its own topic.
-            withSeq(
-              batch.flatMap(_.effective.map(e =>
-                (e.name, e.notification.state,
-                  e.notification.overrides.shelved.isDefined,
-                  e.notification.overrides.disabled.isDefined)))
-                .toDF("name", "state", "shelved", "disabled"),
-              "emit_seq", "name")
-              .write.mode("append").parquet(paths.notifications)
-          }
-          val em = batch.flatMap(_.emission.map(e =>
-            (e.name, e.overrideType, e.value.flatMap(_.oneshot),
-              e.value.flatMap(_.expiration), e.value.flatMap(_.reason),
-              e.value.isEmpty)))
-            .toDF("name", "overrideType", "oneshot", "expiration", "reason", "tombstone")
-          if (!em.isEmpty)
-            withSeq(em, "seq", "name", "overrideType")
-              .write.mode("append").json(paths.overrides)
-        } finally batch.unpersist()
+          val present = rows.select("tag").as[Int]
+            .mapPartitions(_.toSet.iterator).collect().toSet
+          for ((o, tag) <- outputs.zipWithIndex if present(tag))
+            rows.filter(col("tag") === tag)
+              .select(o.columns.map(col) :+ col("seq").as(o.seqCol): _*)
+              .write.mode("append").format(o.format).save(o.path(paths))
+        } finally rows.unpersist()
       }
       .start()
     RunningApp(fkQ, regQ, mainQ)

@@ -6,15 +6,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 import graft.model._
 
 /**
- * The whole monolog chain (J2/J3/A1/T1/T2/T3/T4/T6 — SURVEY.md §3.2) as ONE
- * keyed state processor.
+ * The whole monolog chain (J2/J3/A1/T1/T2/T3/T4/T6 — SURVEY.md §3.2) and
+ * the T8/T9 expiration timers as ONE keyed state processor.
  *
  * The reference runs six Kafka Streams apps connected by intermediate
- * topics; every hop is a serialization + durability boundary. On Spark the
- * idiomatic equivalent is a single `flatMapGroupsWithState` over the union
- * of the input changelogs: one shuffle by alarm name, one state row per
- * alarm, the pure state machines applied in sequence per record. Durability
- * comes from checkpointed state instead of intermediate topics.
+ * topics, plus two timer apps; every hop is a serialization + durability
+ * boundary. On Spark the idiomatic equivalent is a single
+ * `flatMapGroupsWithState` over the union of the input changelogs: one
+ * shuffle by alarm name, one state row per alarm (expiry deadlines
+ * included), the pure state machines applied in sequence per record.
+ * Durability comes from checkpointed state instead of intermediate topics.
  *
  * The FK side (class defaults) arrives pre-joined on instance records:
  * [[RegistrationStage]] performs the KTable-style FK join upstream and
@@ -48,7 +49,7 @@ object UnifiedAlarmRule {
     val Override = "override"
   }
 
-  /** Everything the chain's six state stores held, in one row per alarm. */
+  /** Everything the chain's six state stores and two timer apps held, in one row per alarm. */
   final case class AlarmKeyState(
       alarm: Option[Alarm] = None,
       action: Option[AlarmAction] = None,
@@ -57,14 +58,25 @@ object UnifiedAlarmRule {
       overrides: Seq[AlarmOverride] = Nil, // A1 aggregate (by type, latest wins)
       latchInProgress: Boolean = false, // T2 store
       ondelayInProgress: Boolean = false, // T3 store
-      oneshotInProgress: Boolean = false) // T4 store
+      oneshotInProgress: Boolean = false, // T4 store
+      expiries: Map[String, Long] = Map.empty) // T8/T9 deadline (epoch ms) by override type
+
+  /** The override types whose expiration fires a tombstone (T8, T9). */
+  private val Expiring = Set(OverrideType.Shelved, OverrideType.OnDelayed)
+
+  /** Emission back onto the overrides changelog (tombstone when value empty). */
+  final case class OverrideEmission(
+      name: String,
+      overrideType: String,
+      value: Option[AlarmOverride])
 
   /** Tagged output: settled effective alarms + override emissions (feedback). */
   final case class ChainOutput(
       effective: Option[EffectiveAlarm],
-      emission: Option[graft.streaming.OverrideEmission])
+      emission: Option[OverrideEmission])
 
-  private def applyInput(st: AlarmKeyState, in: AlarmInput): AlarmKeyState = in.kind match {
+  private def applyInput(st: AlarmKeyState, in: AlarmInput, nowMillis: Long)
+      : AlarmKeyState = in.kind match {
     case Kind.Instance =>
       if (in.tombstone) st.copy(alarm = None, action = None)
       else st.copy(alarm = in.alarm, action = in.action)
@@ -72,22 +84,27 @@ object UnifiedAlarmRule {
       st.copy(activation = if (in.tombstone) None else in.activation)
     case Kind.Override =>
       val t = in.overrideType.getOrElse("")
-      val without = st.overrides.filterNot(_.overrideType == t)
-      st.copy(overrides =
-        if (in.tombstone) without else without ++ in.overrideValue.toSeq)
+      val value = if (in.tombstone) None else in.overrideValue
+      // T8/T9: the type's last record re-arms or cancels its timer
+      // (`ShelveExpirationRule.java:121-135`).
+      val deadline = StateMachines.expirationDelayMillis(value, nowMillis)
+        .filter(_ => Expiring(t)).map(d => t -> (nowMillis + d))
+      st.copy(overrides = st.overrides.filterNot(_.overrideType == t) ++ value,
+        expiries = st.expiries - t ++ deadline)
     case _ => st
   }
 
   /**
    * One record through the full chain: fold the input into state, then run
    * T1 -> T2 -> T3 -> T4 -> T6 over the resulting monolog exactly as the
-   * reference's per-record processors do.
+   * reference's per-record processors do. A Shelved or OnDelayed record
+   * also arms (or, as a tombstone, cancels) that type's expiry deadline.
    */
   def step(
       st0: AlarmKeyState,
       in: AlarmInput,
       nowMillis: Long): (AlarmKeyState, Seq[ChainOutput]) = {
-    val st1 = applyInput(st0, in)
+    val st1 = applyInput(st0, in, nowMillis)
     val name = in.name
 
     // J1/J2/J3 materialized from state
@@ -107,15 +124,15 @@ object UnifiedAlarmRule {
 
     val emissions = Seq.newBuilder[ChainOutput]
     if (StateMachines.latchEmits(m4))
-      emissions += ChainOutput(None, Some(graft.streaming.OverrideEmission(
+      emissions += ChainOutput(None, Some(OverrideEmission(
         name, OverrideType.Latched, Some(AlarmOverride(OverrideType.Latched)))))
     StateMachines.onDelayEmits(m4, nowMillis).foreach { o =>
       emissions += ChainOutput(None, Some(
-        graft.streaming.OverrideEmission(name, OverrideType.OnDelayed, Some(o))))
+        OverrideEmission(name, OverrideType.OnDelayed, Some(o))))
     }
     if (StateMachines.oneShotEmitsTombstone(m4))
       emissions += ChainOutput(None, Some(
-        graft.streaming.OverrideEmission(name, OverrideType.Shelved, None)))
+        OverrideEmission(name, OverrideType.Shelved, None)))
 
     // T6
     StateMachines.effectiveStateStep(m4).foreach { settled =>
@@ -139,14 +156,20 @@ object UnifiedAlarmRule {
    * analogue) before the [[step]] fold — the reference gets this ordering
    * for free from Kafka partition order (`ActivationRule.java:25-27`
    * javadoc).
+   *
+   * After the fold, every call (data or timeout) fires the deadlines older
+   * than the batch's processing time: a due timer fires in a batch that
+   * brings the alarm other records, and a record of its own type re-arms
+   * it instead. The timeout is then set to the earliest remaining deadline
+   * (Spark clears it on every call).
    */
   def run(inputs: Dataset[AlarmInput]): Dataset[ChainOutput] = {
     val spark = inputs.sparkSession
     import spark.implicits._
     inputs.groupByKey(_.name)
       .flatMapGroupsWithState[AlarmKeyState, ChainOutput](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, records, state: GroupState[AlarmKeyState]) =>
+        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
+        (name, records, state: GroupState[AlarmKeyState]) =>
           var st = state.getOption.getOrElse(AlarmKeyState())
           val out = Seq.newBuilder[ChainOutput]
           records.toSeq.sortBy(r => (r.seq, r.subSeq)).foreach { in =>
@@ -154,7 +177,13 @@ object UnifiedAlarmRule {
             st = st2
             out ++= o
           }
-          state.update(st)
+          // T8/T9 fire (`ShelveExpirationRule.java:151-169`,
+          // `OnDelayExpirationRule.java:99-204`): a tombstone per due type.
+          val now = state.getCurrentProcessingTimeMs()
+          val (due, armed) = st.expiries.partition(_._2 < now)
+          due.keys.foreach(t => out += ChainOutput(None, Some(OverrideEmission(name, t, None))))
+          state.update(st.copy(expiries = armed))
+          armed.values.minOption.foreach(d => state.setTimeoutDuration(math.max(1L, d - now)))
           out.result().iterator
       }
   }

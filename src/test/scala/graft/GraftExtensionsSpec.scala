@@ -825,6 +825,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
           "graft_neardup: text_col must not be NULL",
         s"graft_neardup('$dir', 'doc_id', 'text', 'high')" ->
           "graft_neardup: threshold must be numeric",
+        "graft_neardup(5, 'doc_id', 'text', 0.7)" ->
+          "graft_neardup: path must be a string",
         s"graft_curate('$dir', 3000000000)" ->
           "graft_curate: num_shards must fit in INT")) {
       val ia = intercept[IllegalArgumentException] {

@@ -1,13 +1,17 @@
 package graft.streaming
 
+import java.util.concurrent.ConcurrentSkipListMap
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.UnifiedAlarmRule
-import graft.app.UnifiedAlarmRule.{AlarmInput, AlarmKeyState, ChainOutput, Kind}
+import graft.app.UnifiedAlarmRule.{AlarmInput, AlarmKeyState, ChainOutput, Kind, OverrideEmission}
 import graft.model._
 
 /**
@@ -15,17 +19,18 @@ import graft.model._
  * (SURVEY.md §5), run through the app's monolog chain
  * ([[UnifiedAlarmRule.run]]): transition sequences (ActivationRuleTest:222-275),
  * latch start/stop (LatchRuleTest), oneshot idempotence (OneShotRuleTest:148-168),
- * tombstone protection (ActivationRuleTest:136-149), and the 5s
- * shelve-expiration round trip (ShelveExpirationRuleTest:61-102) on
- * [[StreamRules.expirationTimers]].
+ * tombstone protection (ActivationRuleTest:136-149), and the
+ * shelve-expiration round trip (ShelveExpirationRuleTest:61-102) on the
+ * chain's own T8/T9 timers.
  *
  * Each chain scenario is named after the reference rule it exercises
  * (T1 transitionDetect, T2 latchRule, T3 onDelayRule, T4 oneShotRule,
- * T6 effectiveStateRule). A rule's flags are observed through what the
- * chain emits: settled effective states (T6 drops mid-transition
- * records, so latching/ondelaying/unshelving show as suppression) and
- * override emissions (transitionToActive as the Latched/OnDelayed
- * emission, transitionToNormal as the oneshot unshelve tombstone).
+ * T6 effectiveStateRule, T8/T9 expirationTimers). A rule's flags are
+ * observed through what the chain emits: settled effective states (T6
+ * drops mid-transition records, so latching/ondelaying/unshelving show as
+ * suppression) and override emissions (transitionToActive as the
+ * Latched/OnDelayed emission, transitionToNormal as the oneshot unshelve
+ * tombstone, an expiry as its type's tombstone).
  */
 class StreamRulesSpec extends AnyFunSuite {
 
@@ -39,28 +44,81 @@ class StreamRulesSpec extends AnyFunSuite {
 
   private val ids = new AtomicInteger(0)
 
-  /** Run [[UnifiedAlarmRule.run]] over batches of input, synchronously;
-    * returns each batch's fresh outputs. */
-  private def chain(batches: Seq[AlarmInput]*): Seq[Seq[ChainOutput]] = {
-    implicit val sq = spark.sqlContext
-    val qn = s"out${ids.incrementAndGet()}"
-    val ms = MemoryStream[AlarmInput]
-    val q = UnifiedAlarmRule.run(ms.toDS()).writeStream
-      .format("memory").queryName(qn).outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graftck").toString)
-      .start()
-    try {
-      var seen = 0
-      batches.map { b =>
-        if (b.nonEmpty) ms.addData(b)
-        q.processAllAvailable()
-        val all = spark.table(qn).as[ChainOutput].collect().toSeq
-        val fresh = all.drop(seen)
-        seen = all.size
-        fresh
+  /**
+   * [[UnifiedAlarmRule.run]] over a MemoryStream on a 100 ms trigger,
+   * keeping each batch's outputs by batch id. The processing-time timeouts
+   * make the query run a batch on every trigger, so `processAllAvailable()`
+   * never returns; [[add]] instead waits until a batch has read up to the
+   * offset `addData` returned. [[stop]] and [[start]] restart the query
+   * from its checkpoint over the same stream.
+   */
+  private final class Chain {
+    private implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[AlarmInput]
+    private val checkpoint =
+      java.nio.file.Files.createTempDirectory("graftck").toString
+    private val batches = new ConcurrentSkipListMap[Long, Seq[ChainOutput]]()
+    private var q: StreamingQuery = _
+    start()
+
+    def start(): Unit =
+      q = UnifiedAlarmRule.run(input.toDS()).writeStream
+        .queryName(s"chain${ids.incrementAndGet()}")
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.ProcessingTime("100 milliseconds"))
+        .foreachBatch { (b: Dataset[ChainOutput], id: Long) =>
+          batches.put(id, b.collect().toSeq); ()
+        }
+        .start()
+
+    def stop(): Unit = q.stop()
+
+    /** Wait until a committed batch has read the stream up to `end`. */
+    def await(end: Long): Unit = {
+      def reached = Option(q.lastProgress)
+        .flatMap(p => Option(p.sources.head.endOffset))
+        .flatMap(_.toLongOption).exists(_ >= end)
+      val deadline = System.currentTimeMillis() + 60000
+      while (!reached) {
+        q.exception.foreach(e => throw e)
+        assert(System.currentTimeMillis() < deadline, "no batch read the added records")
+        Thread.sleep(20)
       }
-    } finally q.stop()
+    }
+
+    /** Add one batch of records and return once a batch has read them. */
+    def add(records: Seq[AlarmInput]): Unit =
+      await(input.addData(records).json.toLong)
+
+    /** Every batch's outputs, in batch order. */
+    def byBatch: Seq[Seq[ChainOutput]] = batches.values.asScala.toSeq
+
+    def outputs: Seq[ChainOutput] = byBatch.flatten
+
+    /** Poll until `until` holds for the outputs or `withinMs` passes. */
+    def poll(until: Seq[ChainOutput] => Boolean, withinMs: Long): Seq[ChainOutput] = {
+      val deadline = System.currentTimeMillis() + withinMs
+      while (!until(outputs) && System.currentTimeMillis() < deadline) Thread.sleep(100)
+      outputs
+    }
+  }
+
+  private def withChain[T](body: Chain => T): T = {
+    val c = new Chain
+    try body(c) finally c.stop()
+  }
+
+  /** Run [[UnifiedAlarmRule.run]] over batches of input, one batch at a
+    * time; returns the outputs each input batch added. */
+  private def chain(batches: Seq[AlarmInput]*): Seq[Seq[ChainOutput]] = withChain { c =>
+    var seen = 0
+    batches.map { b =>
+      c.add(b)
+      val all = c.outputs
+      val fresh = all.drop(seen)
+      seen = all.size
+      fresh
+    }
   }
 
   // --- chain inputs and observations --------------------------------------
@@ -78,9 +136,13 @@ class StreamRulesSpec extends AnyFunSuite {
     AlarmInput(seq, name, Kind.Override,
       overrideType = Some(o.overrideType), overrideValue = Some(o))
 
-  private def shelve(seq: Long, name: String, oneshot: Boolean): AlarmInput =
+  /** 2100-01-01: a shelve that does not expire while a scenario runs. */
+  private val FarFuture = 4102444800000L
+
+  private def shelve(seq: Long, name: String, oneshot: Boolean,
+      expiration: Long = FarFuture): AlarmInput =
     setOverride(seq, name, AlarmOverride(OverrideType.Shelved,
-      oneshot = Some(oneshot), expiration = Some(99999L)))
+      oneshot = Some(oneshot), expiration = Some(expiration)))
 
   private def clearOverride(seq: Long, name: String, t: String): AlarmInput =
     AlarmInput(seq, name, Kind.Override, overrideType = Some(t), tombstone = true)
@@ -98,6 +160,7 @@ class StreamRulesSpec extends AnyFunSuite {
   private def latched(name: String) = OverrideEmission(name, OverrideType.Latched,
     Some(AlarmOverride(OverrideType.Latched)))
   private def unshelve(name: String) = OverrideEmission(name, OverrideType.Shelved, None)
+  private def undelay(name: String) = OverrideEmission(name, OverrideType.OnDelayed, None)
 
   // --- T1 transition detect ----------------------------------------------
 
@@ -254,84 +317,99 @@ class StreamRulesSpec extends AnyFunSuite {
     assert(streamed("b").last.emission.contains(latched("b")))
   }
 
-  // --- T8 expiration -----------------------------------------------------
+  // --- T8/T9 expiration --------------------------------------------------
 
-  // NOTE: never call processAllAvailable() on a ProcessingTimeTimeout query —
-  // timeout checks keep scheduling micro-batches so "all available" never
-  // settles (livelock). Poll the memory sink with a deadline instead.
+  private def fired(out: Seq[ChainOutput]): Seq[OverrideEmission] = out.flatMap(_.emission)
 
-  private def startExpiryQuery(ms: MemoryStream[OverrideRecord], qn: String) =
-    StreamRules.expirationTimers(ms.toDS(), OverrideType.Shelved)
-      .writeStream.format("memory").queryName(qn).outputMode("append")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graftck").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("500 milliseconds"))
-      .start()
-
-  private def pollCount(qn: String, until: Long => Boolean, deadlineMs: Long): Long = {
-    val deadline = System.currentTimeMillis() + deadlineMs
-    var n = spark.table(qn).count()
-    while (!until(n) && System.currentTimeMillis() < deadline) {
-      Thread.sleep(250)
-      n = spark.table(qn).count()
-    }
-    n
-  }
+  private def continuous(seq: Long, name: String, expiresInMs: Long): AlarmInput =
+    shelve(seq, name, oneshot = false, System.currentTimeMillis() + expiresInMs)
 
   test("expirationTimers: shelve with short expiration fires a tombstone (5s round trip)") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[OverrideRecord]
-    val qn = s"exp${ids.incrementAndGet()}"
-    val q = startExpiryQuery(ms, qn)
-    try {
-      ms.addData(Seq(OverrideRecord(1, "a", OverrideType.Shelved,
-        oneshot = Some(false), expiration = Some(System.currentTimeMillis() + 3000))))
-      val n = pollCount(qn, _ > 0, 45000)
-      assert(n == 1)
-      val fired = spark.table(qn).as[OverrideEmission].collect()
-      assert(fired.head == OverrideEmission("a", OverrideType.Shelved, None))
-    } finally q.stop()
+    withChain { c =>
+      c.add(Seq(continuous(1, "a", 3000)))
+      assert(fired(c.poll(fired(_).nonEmpty, 45000)) == Seq(unshelve("a")))
+    }
   }
 
   test("expirationTimers: explicit tombstone disarms the timer") {
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[OverrideRecord]
-    val qn = s"exp${ids.incrementAndGet()}"
-    val q = startExpiryQuery(ms, qn)
-    try {
-      ms.addData(Seq(OverrideRecord(1, "a", OverrideType.Shelved,
-        oneshot = Some(false), expiration = Some(System.currentTimeMillis() + 4000))))
-      Thread.sleep(1000) // let the arm batch run
-      ms.addData(Seq(OverrideRecord(2, "a", OverrideType.Shelved, tombstone = true)))
+    withChain { c =>
+      c.add(Seq(continuous(1, "a", 4000)))
+      c.add(Seq(clearOverride(2, "a", OverrideType.Shelved)))
       // wait well past the would-be expiry; nothing must fire
-      val n = pollCount(qn, _ > 0, 9000)
-      assert(n == 0)
-    } finally q.stop()
+      assert(fired(c.poll(fired(_).nonEmpty, 9000)).isEmpty)
+    }
   }
 
   test("expirationTimers: re-shelve replaces the timer (one firing, not two)") {
     // Last record wins (`ShelveExpirationRule.java:121-135`): the second
     // shelve re-arms the alarm's one timer at its own expiration.
-    implicit val sq = spark.sqlContext
-    val ms = MemoryStream[OverrideRecord]
-    val qn = s"exp${ids.incrementAndGet()}"
-    val q = startExpiryQuery(ms, qn)
-    try {
+    withChain { c =>
       val t0 = System.currentTimeMillis()
-      ms.addData(Seq(OverrideRecord(1, "a", OverrideType.Shelved,
-        oneshot = Some(false), expiration = Some(t0 + 2000))))
-      Thread.sleep(800) // arm the first timer
-      ms.addData(Seq(OverrideRecord(2, "a", OverrideType.Shelved,
-        oneshot = Some(false), expiration = Some(System.currentTimeMillis() + 4000))))
+      c.add(Seq(shelve(1, "a", oneshot = false, t0 + 2000)))
+      c.add(Seq(continuous(2, "a", 4000)))
       // Past the first expiration, before the second: the replaced timer
       // must not have fired.
       Thread.sleep(math.max(0L, t0 + 3000 - System.currentTimeMillis()))
-      assert(spark.table(qn).count() == 0, "the replaced timer fired")
-      val n = pollCount(qn, _ > 0, 45000)
-      assert(n == 1, "exactly one firing after re-arm")
+      assert(fired(c.outputs).isEmpty, "the replaced timer fired")
+      assert(fired(c.poll(fired(_).nonEmpty, 45000)) == Seq(unshelve("a")),
+        "exactly one firing after re-arm")
       // nothing further fires from the replaced first timer
       Thread.sleep(2000)
-      assert(spark.table(qn).count() == 1)
-    } finally q.stop()
+      assert(fired(c.outputs) == Seq(unshelve("a")))
+    }
+  }
+
+  test("expirationTimers: Shelved and OnDelayed deadlines on one alarm fire at their own times") {
+    withChain { c =>
+      val t0 = System.currentTimeMillis()
+      c.add(Seq(continuous(1, "a", 1500), setOverride(2, "a",
+        AlarmOverride(OverrideType.OnDelayed, expiration = Some(t0 + 6000)))))
+      val first = fired(c.poll(fired(_).nonEmpty, 45000))
+      val seenAt = System.currentTimeMillis()
+      assert(first.headOption.contains(unshelve("a")), s"$first")
+      if (seenAt < t0 + 6000) assert(first == Seq(unshelve("a")), "OnDelayed fired early")
+      assert(fired(c.poll(fired(_).size > 1, 45000)) == Seq(unshelve("a"), undelay("a")))
+      assert(System.currentTimeMillis() >= t0 + 6000)
+    }
+  }
+
+  // The next two stop the query while a timer is armed and restart it
+  // once the deadline has passed, with records already queued: the first
+  // batch after the restart is then the due batch, and it reads them.
+
+  test("expirationTimers: a due deadline fires in a batch where the alarm also gets an activation") {
+    withChain { c =>
+      c.add(Seq(instance(1, "a")))
+      c.add(Seq(continuous(2, "a", 4000)))
+      c.stop()
+      assert(fired(c.outputs).isEmpty)
+      val due = c.byBatch.size
+      Thread.sleep(4500)
+      val end = c.input.addData(Seq(act(3, "a", Active))).json.toLong
+      c.start()
+      c.await(end)
+      Thread.sleep(1500) // a second firing would come in a later batch
+      val after = c.byBatch.drop(due).filter(_.nonEmpty)
+      assert(after.size == 1, s"$after")
+      assert(states(after.head) == Seq("a" -> AlarmState.NormalContinuousShelved))
+      assert(fired(after.head) == Seq(unshelve("a")))
+    }
+  }
+
+  test("expirationTimers: a Shelved record in the due batch re-arms the timer instead of firing it") {
+    withChain { c =>
+      c.add(Seq(instance(1, "a")))
+      c.add(Seq(continuous(2, "a", 4000)))
+      c.stop()
+      assert(fired(c.outputs).isEmpty)
+      Thread.sleep(4500)
+      val end = c.input.addData(Seq(continuous(3, "a", 3000))).json.toLong
+      c.start()
+      c.await(end)
+      assert(fired(c.outputs).isEmpty, "the replaced due timer fired")
+      assert(fired(c.poll(fired(_).nonEmpty, 45000)) == Seq(unshelve("a")))
+      Thread.sleep(1500)
+      assert(fired(c.outputs) == Seq(unshelve("a")))
+    }
   }
 }
