@@ -16,8 +16,10 @@ import org.apache.spark.sql.types._
  * (`EffectiveProcessor.java:21-48`), here over pluggable storage paths.
  *
  * The main query reads three sources into one stateful operator,
- * [[UnifiedAlarmRule.run]], expiry timers included; its sink numbers the
- * three outputs in one window ([[numberOutputs]]) and writes them from cache.
+ * [[UnifiedAlarmRule.run]], expiry timers included, which emits the sink's
+ * flat tagged rows; the sink numbers the three outputs in one window
+ * ([[numberOutputs]]), caches them, and writes the present outputs from
+ * the cache concurrently.
  *
  * Sources/sinks are JSON-lines directories (works self-contained; swapping
  * the reads for `readStream.format("kafka")` + ConfluentFraming/AlarmAvro
@@ -160,15 +162,7 @@ object AlarmProcessorApp {
     instances.union(activations).union(overrides)
   }
 
-  /** One sink row: a chain output flattened into one of the sink's outputs. */
-  private[app] final case class SinkRow(
-      tag: Int, name: String, overrideType: Option[String] = None,
-      state: Option[String] = None, is_active: Option[Boolean] = None,
-      shelved: Option[Boolean] = None, disabled: Option[Boolean] = None,
-      oneshot: Option[Boolean] = None, expiration: Option[Long] = None,
-      reason: Option[String] = None, tombstone: Option[Boolean] = None)
-
-  /** The sink's outputs; a [[SinkRow]]'s tag is its index here. */
+  /** The sink's outputs; an [[UnifiedAlarmRule.OutputRow]]'s tag is its index here. */
   private final case class Output(path: Paths => String, format: String,
       columns: Seq[String], seqCol: String)
 
@@ -180,14 +174,9 @@ object AlarmProcessorApp {
     Output(_.overrides, "json",
       Seq("name", "overrideType", "oneshot", "expiration", "reason", "tombstone"), "seq"))
 
-  val EffectiveTag = 0
-  val NotificationTag = 1
-  val EmissionTag = 2
-
   /**
-   * The sink's tag-and-number step: one [[SinkRow]] per output a chain
-   * output feeds (an effective alarm feeds two), plus `seq`, numbered per
-   * tag in `(name, overrideType, emission order)`.
+   * The sink's numbering step: the chain's flat rows plus `seq`, numbered
+   * per tag in `(name, overrideType, emission order)` by one window.
    *
    * Seq contract (one domain for every writer of these changelogs):
    * seq = epoch_ms * 1e6 + dense per-batch row index. The row index is a
@@ -202,27 +191,11 @@ object AlarmProcessorApp {
    * so the per-tag window is not a scale concern (the data plane never
    * passes through this sink).
    */
-  def numberOutputs(out: Dataset[ChainOutput], base: Long): DataFrame = {
-    import out.sparkSession.implicits._
-    out.flatMap { o =>
-      o.effective.toSeq.flatMap { e =>
-        val n = e.notification
-        Seq(
-          SinkRow(EffectiveTag, e.name, state = Some(n.state),
-            is_active = Some(n.activation.isDefined)),
-          SinkRow(NotificationTag, e.name, state = Some(n.state),
-            shelved = Some(n.overrides.shelved.isDefined),
-            disabled = Some(n.overrides.disabled.isDefined)))
-      } ++ o.emission.map { e =>
-        SinkRow(EmissionTag, e.name, overrideType = Some(e.overrideType),
-          oneshot = e.value.flatMap(_.oneshot), expiration = e.value.flatMap(_.expiration),
-          reason = e.value.flatMap(_.reason), tombstone = Some(e.value.isEmpty))
-      }
-    }.withColumn("ord", monotonically_increasing_id())
+  def numberOutputs(rows: Dataset[OutputRow], base: Long): DataFrame =
+    rows.withColumn("ord", monotonically_increasing_id())
       .withColumn("seq", lit(base) + row_number().over(
         Window.partitionBy("tag").orderBy("name", "overrideType", "ord")).cast("long"))
       .drop("ord")
-  }
 
   /** Start the app: two registration stages + the unified chain. */
   def start(spark: SparkSession, paths: Paths,
@@ -237,20 +210,23 @@ object AlarmProcessorApp {
       .outputMode("append")
       .option("checkpointLocation", s"${paths.checkpoint}/main")
       .trigger(trigger)
-      .foreachBatch { (batch: Dataset[ChainOutput], _: Long) =>
+      .foreachBatch { (batch: Dataset[OutputRow], _: Long) =>
         // Distributed routing sink: no driver-side collect of rows. The
         // chain's outputs go to their "topics" (paths); emissions re-enter
         // the overrides source on the next micro-batch = the feedback loop.
-        // One action runs the chain and fills the cache; each write then
-        // reads the cache without a further shuffle.
+        // One action runs the chain and fills the cache; the present
+        // outputs are then written from the cache at once, each without a
+        // further shuffle, on threads that carry the batch's job
+        // properties ([[graft.DriverActions.runAll]]).
         val rows = numberOutputs(batch, System.currentTimeMillis() * 1000000L).persist()
         try {
           val present = rows.select("tag").as[Int]
             .mapPartitions(_.toSet.iterator).collect().toSet
-          for ((o, tag) <- outputs.zipWithIndex if present(tag))
-            rows.filter(col("tag") === tag)
-              .select(o.columns.map(col) :+ col("seq").as(o.seqCol): _*)
-              .write.mode("append").format(o.format).save(o.path(paths))
+          graft.DriverActions.runAll(spark.sparkContext,
+            for ((o, tag) <- outputs.zipWithIndex if present(tag)) yield () =>
+              rows.filter(col("tag") === tag)
+                .select(o.columns.map(col) :+ col("seq").as(o.seqCol): _*)
+                .write.mode("append").format(o.format).save(o.path(paths)))
         } finally rows.unpersist()
       }
       .start()

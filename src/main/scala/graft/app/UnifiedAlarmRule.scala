@@ -149,7 +149,45 @@ object UnifiedAlarmRule {
   }
 
   /**
-   * The streaming operator: union of changelogs in, tagged outputs out.
+   * One flat output row: a chain output in one of the app's three outputs,
+   * named by `tag` ([[EffectiveTag]], [[NotificationTag]], [[EmissionTag]]).
+   * Only the fields of its own output are set.
+   */
+  final case class OutputRow(
+      tag: Int, name: String, overrideType: Option[String] = None,
+      state: Option[String] = None, is_active: Option[Boolean] = None,
+      shelved: Option[Boolean] = None, disabled: Option[Boolean] = None,
+      oneshot: Option[Boolean] = None, expiration: Option[Long] = None,
+      reason: Option[String] = None, tombstone: Option[Boolean] = None)
+
+  val EffectiveTag = 0
+  val NotificationTag = 1
+  val EmissionTag = 2
+
+  /**
+   * A chain output as the rows the app writes: a settled effective alarm
+   * feeds the effective and the notification outputs, an override
+   * emission the overrides changelog.
+   */
+  def rowsOf(o: ChainOutput): Seq[OutputRow] =
+    o.effective.toSeq.flatMap { e =>
+      val n = e.notification
+      Seq(
+        OutputRow(EffectiveTag, e.name, state = Some(n.state),
+          is_active = Some(n.activation.isDefined)),
+        OutputRow(NotificationTag, e.name, state = Some(n.state),
+          shelved = Some(n.overrides.shelved.isDefined),
+          disabled = Some(n.overrides.disabled.isDefined)))
+    } ++ o.emission.map { e =>
+      OutputRow(EmissionTag, e.name, overrideType = Some(e.overrideType),
+        oneshot = e.value.flatMap(_.oneshot), expiration = e.value.flatMap(_.expiration),
+        reason = e.value.flatMap(_.reason), tombstone = Some(e.value.isEmpty))
+    }
+
+  /**
+   * The streaming operator: union of changelogs in, the app's flat output
+   * rows out ([[rowsOf]] over each [[step]] output, fired timers included),
+   * in emission order within an alarm.
    *
    * Within a micro-batch a group's iterator is UNORDERED, so each alarm's
    * records are sorted by `(seq, subSeq)` (the Kafka (partition, offset)
@@ -162,26 +200,31 @@ object UnifiedAlarmRule {
    * brings the alarm other records, and a record of its own type re-arms
    * it instead. The timeout is then set to the earliest remaining deadline
    * (Spark clears it on every call).
+   *
+   * Emitting the flat rows here, rather than [[ChainOutput]]s, keeps the
+   * nested model encoder out of the consumer's plan: the sink reads the
+   * operator's output as it is, with no deserialize-flatten-serialize step.
    */
-  def run(inputs: Dataset[AlarmInput]): Dataset[ChainOutput] = {
+  def run(inputs: Dataset[AlarmInput]): Dataset[OutputRow] = {
     val spark = inputs.sparkSession
     import spark.implicits._
     inputs.groupByKey(_.name)
-      .flatMapGroupsWithState[AlarmKeyState, ChainOutput](
+      .flatMapGroupsWithState[AlarmKeyState, OutputRow](
         OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
         (name, records, state: GroupState[AlarmKeyState]) =>
           var st = state.getOption.getOrElse(AlarmKeyState())
-          val out = Seq.newBuilder[ChainOutput]
+          val out = Seq.newBuilder[OutputRow]
           records.toSeq.sortBy(r => (r.seq, r.subSeq)).foreach { in =>
             val (st2, o) = step(st, in, System.currentTimeMillis())
             st = st2
-            out ++= o
+            out ++= o.flatMap(rowsOf)
           }
           // T8/T9 fire (`ShelveExpirationRule.java:151-169`,
           // `OnDelayExpirationRule.java:99-204`): a tombstone per due type.
           val now = state.getCurrentProcessingTimeMs()
           val (due, armed) = st.expiries.partition(_._2 < now)
-          due.keys.foreach(t => out += ChainOutput(None, Some(OverrideEmission(name, t, None))))
+          due.keys.foreach(t =>
+            out ++= rowsOf(ChainOutput(None, Some(OverrideEmission(name, t, None)))))
           state.update(st.copy(expiries = armed))
           armed.values.minOption.foreach(d => state.setTimeoutDuration(math.max(1L, d - now)))
           out.result().iterator

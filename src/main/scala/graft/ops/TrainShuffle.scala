@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -342,11 +344,18 @@ object TrainShuffle {
         "packer's own output columns — rename them upstream")
     val nTokens = tokenBudgetCol("packNoSplit", idCol, textCol, tokensCol)
     val b = budget.toLong
+    // A null id hashes to a null shard and ties in the sort order, so it
+    // has no reproducible place: fail loud, as a null token count does.
+    val shard =
+      if (!df.schema(idCol).nullable) col("shard")
+      else when(col(idCol).isNotNull, col("shard")).otherwise(raise_error(lit(
+        s"packNoSplit: null $idCol — every document needs an id to be " +
+          "shard-assigned")).cast("long")).as("shard")
     val pre = shardAssign(df, idCol, numShards, salt)
       .withColumn("n_tokens", nTokens)
       .withColumn("capped", least(col("n_tokens"), lit(b)))
       .withColumn("truncated", col("n_tokens") > b)
-      .select(col(idCol) +: col("shard") +: col("sort_key") +:
+      .select(col(idCol) +: shard +: col("sort_key") +:
         col("n_tokens") +: col("capped") +: col("truncated") +:
         carryCols.map(col): _*)
       .repartition(numShards, col("shard"))
@@ -362,7 +371,10 @@ object TrainShuffle {
     // column boxed element-by-element into a Seq. The tuple encoders
     // use primitive accessors and bulk toIntArray/array writers. The
     // long-id cases below cover every declared pack_nosplit caller;
-    // exotic id/carry shapes keep the generic Row path.
+    // exotic id/carry shapes keep the generic Row path. A nullable
+    // long id rides as java.lang.Long (the tuple fields are boxed
+    // either way), so the output keeps the input's id nullability, as
+    // on the Row path.
     val idIsLong = pre.schema(idCol).dataType ==
       org.apache.spark.sql.types.LongType
     val carryIntArray = carryCols.lengthCompare(1) == 0 &&
@@ -371,31 +383,34 @@ object TrainShuffle {
           org.apache.spark.sql.types.IntegerType, _) => true
         case _ => false
       })
-    if (idIsLong && carryCols.isEmpty) {
-      pre.select(col(idCol), col("shard"), col("n_tokens"),
-          col("capped"), col("truncated"))
-        .as[(Long, Long, Long, Long, Boolean)]
-        .mapPartitions { it =>
-          val st = new NoSplitPacker(b, firstFit)
-          it.map { case (id, shard, nt, capped, tr) =>
-            st.place(shard, capped)
-            (id, shard, nt, tr, st.bin, st.pos)
+    def typed[I: TypeTag]: DataFrame =
+      if (carryCols.isEmpty)
+        pre.select(col(idCol), col("shard"), col("n_tokens"),
+            col("capped"), col("truncated"))
+          .as[(I, Long, Long, Long, Boolean)]
+          .mapPartitions { it =>
+            val st = new NoSplitPacker(b, firstFit)
+            it.map { case (id, shard, nt, capped, tr) =>
+              st.place(shard, capped)
+              (id, shard, nt, tr, st.bin, st.pos)
+            }
           }
-        }
-        .toDF(idCol, "shard", "n_tokens", "truncated", "bin", "pos")
-    } else if (idIsLong && carryIntArray) {
-      pre.select(col(idCol), col("shard"), col("n_tokens"),
-          col("capped"), col("truncated"), col(carryCols.head))
-        .as[(Long, Long, Long, Long, Boolean, Array[Int])]
-        .mapPartitions { it =>
-          val st = new NoSplitPacker(b, firstFit)
-          it.map { case (id, shard, nt, capped, tr, carry) =>
-            st.place(shard, capped)
-            (id, shard, nt, tr, st.bin, st.pos, carry)
+          .toDF(idCol, "shard", "n_tokens", "truncated", "bin", "pos")
+      else
+        pre.select(col(idCol), col("shard"), col("n_tokens"),
+            col("capped"), col("truncated"), col(carryCols.head))
+          .as[(I, Long, Long, Long, Boolean, Array[Int])]
+          .mapPartitions { it =>
+            val st = new NoSplitPacker(b, firstFit)
+            it.map { case (id, shard, nt, capped, tr, carry) =>
+              st.place(shard, capped)
+              (id, shard, nt, tr, st.bin, st.pos, carry)
+            }
           }
-        }
-        .toDF(idCol, "shard", "n_tokens", "truncated", "bin", "pos",
-          carryCols.head)
+          .toDF(idCol, "shard", "n_tokens", "truncated", "bin", "pos",
+            carryCols.head)
+    if (idIsLong && (carryCols.isEmpty || carryIntArray)) {
+      if (pre.schema(idCol).nullable) typed[java.lang.Long] else typed[Long]
     } else {
       val outSchema = org.apache.spark.sql.types.StructType(Seq(
         pre.schema(idCol).copy(),

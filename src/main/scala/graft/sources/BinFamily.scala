@@ -355,19 +355,18 @@ object BinFamily {
       // a neighbour epoch. The group's spans are DISJOINT, so the
       // exports are independent jobs — overlap them on driver threads
       // (guide §2.6): the later epochs' tasks back-fill the cores the
-      // earlier epochs' stage tails leave idle. Job groups and
-      // descriptions are thread-local, so each export puts its jobs in
-      // the append's one group under its own label — and restores the
-      // thread's previous values, since the serial path runs on the
-      // caller's thread.
+      // earlier epochs' stage tails leave idle. `DriverActions.runAll`
+      // skips the exports not yet started on the first failure, cancels
+      // the running ones and awaits every export before rethrowing — a
+      // sibling still writing would race the retry's sweep of its span.
+      // Descriptions are thread-local, so each export labels its jobs and
+      // restores the thread's previous label (the serial path runs on the
+      // caller's thread).
       val sc = spark.sparkContext
-      val jobGroup = s"$fn-${java.util.UUID.randomUUID()}"
       def exportOne(i: Int): Unit = {
         val (epochId, packedBatch) = group(i)
         val b = base + i.toLong * shardsPerEpoch
-        val callerGroup = sc.getLocalProperty("spark.jobGroup.id")
         val callerDescription = sc.getLocalProperty("spark.job.description")
-        sc.setLocalProperty("spark.jobGroup.id", jobGroup)
         sc.setJobDescription(
           s"$fn: epoch $epochId span [$b, ${b + shardsPerEpoch})")
         try {
@@ -381,43 +380,10 @@ object BinFamily {
             BinShards.exportPackedShardFiles(shifted, genDir, budget,
               shardsPerEpoch, confSer, minShard = b,
               maxShardExcl = b + shardsPerEpoch)
-        } finally {
-          sc.setLocalProperty("spark.jobGroup.id", callerGroup)
-          sc.setJobDescription(callerDescription)
-        }
+        } finally sc.setJobDescription(callerDescription)
       }
-      val inFlight = math.min(group.size, maxConcurrent(spark))
-      if (inFlight == 1) group.indices.foreach(exportOne)
-      else {
-        // On the first failure (in completion order): skip the exports
-        // not yet started, cancel the group's running and later jobs,
-        // and await EVERY export before rethrowing — a sibling still
-        // writing would race the retry's sweep of its span.
-        val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(inFlight)
-        try {
-          val done =
-            new java.util.concurrent.ExecutorCompletionService[Unit](pool)
-          group.indices.foreach { i =>
-            done.submit(new java.util.concurrent.Callable[Unit] {
-              override def call(): Unit = if (!failed.get) exportOne(i)
-            })
-          }
-          var first: Option[Throwable] = None
-          group.indices.foreach { _ =>
-            try done.take().get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                if (first.isEmpty) {
-                  first = Some(Option(e.getCause).getOrElse(e))
-                  failed.set(true)
-                  sc.cancelJobGroupAndFutureJobs(jobGroup)
-                }
-            }
-          }
-          first.foreach(throw _)
-        } finally pool.shutdownNow()
-      }
+      graft.DriverActions.runAll(sc,
+        group.indices.map(i => () => exportOne(i)), maxConcurrent(spark))
       // ONE post-export listing serves every count — on object storage
       // a wide generation's listing is the append's dominant fixed
       // cost, so it must not run once per epoch over an unchanged dir.

@@ -188,6 +188,34 @@ class PackNoSplitSpec extends AnyFunSuite {
     assert(e.getMessage != null)
   }
 
+  test("nullable long ids: the output keeps the id's nullability; a null id fails loud, on both carry shapes") {
+    val spark2 = spark
+    import spark2.implicits._
+    val docs = Seq((Some(1L), 3L, Seq(1, 2, 3)), (Some(2L), 2L, Seq(4, 5)),
+        (Some(3L), 4L, Seq(6, 7, 8, 9)))
+    def pack(df: org.apache.spark.sql.DataFrame, carry: Seq[String]) =
+      TrainShuffle.packNoSplit(df, "doc_id", "", numShards = 2, budget = 8,
+        tokensCol = "cnt", carryCols = carry)
+    val nullable = docs.toDF("doc_id", "cnt", "ids")
+    val nonNull = docs.map { case (id, n, ids) => (id.get, n, ids) }.toDF("doc_id", "cnt", "ids")
+    val withNull = (docs :+ ((None, 2L, Seq(10, 11)))).toDF("doc_id", "cnt", "ids")
+    // The Row path (a string id) shares the contract.
+    val stringIds = (docs :+ ((None, 2L, Seq(10, 11))))
+      .map { case (id, n, ids) => (id.map(_.toString), n, ids) }.toDF("doc_id", "cnt", "ids")
+    assert(nullable.schema("doc_id").nullable && !nonNull.schema("doc_id").nullable)
+    for (carry <- Seq(Nil, Seq("ids"))) {
+      val a = pack(nullable, carry)
+      val n = pack(nonNull, carry)
+      assert(a.schema("doc_id").nullable && !n.schema("doc_id").nullable, s"carry $carry")
+      assert(a.collect().map(_.toSeq.toString).sorted.toSeq ==
+        n.collect().map(_.toSeq.toString).sorted.toSeq, s"carry $carry")
+      for (df <- Seq(withNull, stringIds)) {
+        val e = intercept[Exception](pack(df, carry).collect())
+        assert(e.getMessage.contains("packNoSplit: null doc_id"), s"carry $carry: $e")
+      }
+    }
+  }
+
   test("loud contracts: budget, strategy and carryCols validated") {
     val docs = GraftSession.table(spark, sf, "documents")
     intercept[IllegalArgumentException] {

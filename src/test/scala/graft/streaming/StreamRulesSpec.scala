@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.app.UnifiedAlarmRule
-import graft.app.UnifiedAlarmRule.{AlarmInput, AlarmKeyState, ChainOutput, Kind, OverrideEmission}
+import graft.app.UnifiedAlarmRule.{AlarmInput, AlarmKeyState, ChainOutput, EffectiveTag,
+  EmissionTag, Kind, OutputRow, OverrideEmission, rowsOf}
 import graft.model._
 
 /**
@@ -26,7 +27,7 @@ import graft.model._
  * Each chain scenario is named after the reference rule it exercises
  * (T1 transitionDetect, T2 latchRule, T3 onDelayRule, T4 oneShotRule,
  * T6 effectiveStateRule, T8/T9 expirationTimers). A rule's flags are
- * observed through what the chain emits: settled effective states (T6
+ * observed through the flat rows the chain emits: settled effective states (T6
  * drops mid-transition records, so latching/ondelaying/unshelving show as
  * suppression) and override emissions (transitionToActive as the
  * Latched/OnDelayed emission, transitionToNormal as the oneshot unshelve
@@ -46,7 +47,7 @@ class StreamRulesSpec extends AnyFunSuite {
 
   /**
    * [[UnifiedAlarmRule.run]] over a MemoryStream on a 100 ms trigger,
-   * keeping each batch's outputs by batch id. The processing-time timeouts
+   * keeping each batch's output rows by batch id. The processing-time timeouts
    * make the query run a batch on every trigger, so `processAllAvailable()`
    * never returns; [[add]] instead waits until a batch has read up to the
    * offset `addData` returned. [[stop]] and [[start]] restart the query
@@ -57,7 +58,7 @@ class StreamRulesSpec extends AnyFunSuite {
     val input = MemoryStream[AlarmInput]
     private val checkpoint =
       java.nio.file.Files.createTempDirectory("graftck").toString
-    private val batches = new ConcurrentSkipListMap[Long, Seq[ChainOutput]]()
+    private val batches = new ConcurrentSkipListMap[Long, Seq[OutputRow]]()
     private var q: StreamingQuery = _
     start()
 
@@ -66,7 +67,7 @@ class StreamRulesSpec extends AnyFunSuite {
         .queryName(s"chain${ids.incrementAndGet()}")
         .option("checkpointLocation", checkpoint)
         .trigger(Trigger.ProcessingTime("100 milliseconds"))
-        .foreachBatch { (b: Dataset[ChainOutput], id: Long) =>
+        .foreachBatch { (b: Dataset[OutputRow], id: Long) =>
           batches.put(id, b.collect().toSeq); ()
         }
         .start()
@@ -91,12 +92,12 @@ class StreamRulesSpec extends AnyFunSuite {
       await(input.addData(records).json.toLong)
 
     /** Every batch's outputs, in batch order. */
-    def byBatch: Seq[Seq[ChainOutput]] = batches.values.asScala.toSeq
+    def byBatch: Seq[Seq[OutputRow]] = batches.values.asScala.toSeq
 
-    def outputs: Seq[ChainOutput] = byBatch.flatten
+    def outputs: Seq[OutputRow] = byBatch.flatten
 
     /** Poll until `until` holds for the outputs or `withinMs` passes. */
-    def poll(until: Seq[ChainOutput] => Boolean, withinMs: Long): Seq[ChainOutput] = {
+    def poll(until: Seq[OutputRow] => Boolean, withinMs: Long): Seq[OutputRow] = {
       val deadline = System.currentTimeMillis() + withinMs
       while (!until(outputs) && System.currentTimeMillis() < deadline) Thread.sleep(100)
       outputs
@@ -109,8 +110,8 @@ class StreamRulesSpec extends AnyFunSuite {
   }
 
   /** Run [[UnifiedAlarmRule.run]] over batches of input, one batch at a
-    * time; returns the outputs each input batch added. */
-  private def chain(batches: Seq[AlarmInput]*): Seq[Seq[ChainOutput]] = withChain { c =>
+    * time; returns the rows each input batch added. */
+  private def chain(batches: Seq[AlarmInput]*): Seq[Seq[OutputRow]] = withChain { c =>
     var seen = 0
     batches.map { b =>
       c.add(b)
@@ -151,16 +152,22 @@ class StreamRulesSpec extends AnyFunSuite {
   private val NoActivation = ActivationKind.NoActivation
 
   /** Settled (name, state) pairs; stable within an alarm, sorted across. */
-  private def states(out: Seq[ChainOutput]): Seq[(String, String)] =
-    out.flatMap(_.effective).map(e => (e.name, e.notification.state)).sortBy(_._1)
+  private def states(out: Seq[OutputRow]): Seq[(String, String)] =
+    out.filter(_.tag == EffectiveTag).map(r => (r.name, r.state.get)).sortBy(_._1)
 
-  private def emissions(out: Seq[ChainOutput]): Seq[OverrideEmission] =
-    out.flatMap(_.emission).sortBy(_.name)
+  /** The override emission rows, in emission order. */
+  private def fired(out: Seq[OutputRow]): Seq[OutputRow] = out.filter(_.tag == EmissionTag)
 
-  private def latched(name: String) = OverrideEmission(name, OverrideType.Latched,
-    Some(AlarmOverride(OverrideType.Latched)))
-  private def unshelve(name: String) = OverrideEmission(name, OverrideType.Shelved, None)
-  private def undelay(name: String) = OverrideEmission(name, OverrideType.OnDelayed, None)
+  private def emissions(out: Seq[OutputRow]): Seq[OutputRow] = fired(out).sortBy(_.name)
+
+  /** The rows a chain output maps to ([[UnifiedAlarmRule.rowsOf]]). */
+  private def emitted(e: OverrideEmission): OutputRow = rowsOf(ChainOutput(None, Some(e))).head
+  private def settled(e: EffectiveAlarm): Seq[OutputRow] = rowsOf(ChainOutput(Some(e), None))
+
+  private def latched(name: String) = emitted(OverrideEmission(name, OverrideType.Latched,
+    Some(AlarmOverride(OverrideType.Latched))))
+  private def unshelve(name: String) = emitted(OverrideEmission(name, OverrideType.Shelved, None))
+  private def undelay(name: String) = emitted(OverrideEmission(name, OverrideType.OnDelayed, None))
 
   // --- T1 transition detect ----------------------------------------------
 
@@ -197,17 +204,22 @@ class StreamRulesSpec extends AnyFunSuite {
   test("transitionDetect: tombstone-protection yields empty monolog + transitionToNormal") {
     // Tombstoning the registration and the activation leaves an EMPTY
     // effective alarm, not a vanished one, and the activation tombstone
-    // is a transition to normal (seen as the oneshot unshelve).
+    // is a transition to normal (seen as the oneshot unshelve): the
+    // registration tombstone settles with the activation still on, the
+    // activation tombstone is suppressed while unshelving. The flat rows
+    // carry no registration; the pure step spec pins its emptying.
     val out = chain(
       Seq(instance(1, "a"), act(2, "a", Active), shelve(3, "a", oneshot = true)),
       Seq(AlarmInput(4, "a", Kind.Instance, tombstone = true),
         AlarmInput(5, "a", Kind.ActivationK, tombstone = true)),
       Seq(clearOverride(6, "a", OverrideType.Shelved)))
-    assert(out(1).flatMap(_.effective).map(e => (e.registration, e.notification.state)) ==
-      Seq((EffectiveRegistration(), AlarmState.NormalOneShotShelved)))
+    assert(out(1).filter(_.tag != EmissionTag) == settled(EffectiveAlarm("a",
+      EffectiveRegistration(), EffectiveNotification(activation = Some(Activation(Active)),
+        overrides = AlarmOverrideSet(shelved = Some(AlarmOverride(OverrideType.Shelved))),
+        state = AlarmState.NormalOneShotShelved))))
     assert(emissions(out(1)) == Seq(unshelve("a")))
-    assert(out(2).flatMap(_.effective) ==
-      Seq(EffectiveAlarm("a", EffectiveRegistration(), EffectiveNotification())))
+    assert(out(2).filter(_.tag != EmissionTag) ==
+      settled(EffectiveAlarm("a", EffectiveRegistration(), EffectiveNotification())))
   }
 
   // --- T2 latch ----------------------------------------------------------
@@ -241,8 +253,8 @@ class StreamRulesSpec extends AnyFunSuite {
         AlarmOverride(OverrideType.OnDelayed, expiration = Some(before + 5000)))))
     assert(states(out(1)).isEmpty) // ondelaying suppresses
     val em = emissions(out(1))
-    assert(em.map(_.overrideType) == Seq(OverrideType.OnDelayed))
-    val exp = em.head.value.flatMap(_.expiration).get
+    assert(em.map(_.overrideType) == Seq(Some(OverrideType.OnDelayed)))
+    val exp = em.head.expiration.get
     assert(exp >= before + 5000 && exp <= System.currentTimeMillis() + 5000)
     assert(states(out(2)) == Seq("a" -> AlarmState.NormalOnDelayed)) // override landed
     assert(emissions(out(2)).isEmpty)
@@ -299,27 +311,23 @@ class StreamRulesSpec extends AnyFunSuite {
         act(7, "c", NoActivation)),
       Seq(act(8, "b", NoActivation), act(8, "a", Active),
         clearOverride(9, "c", OverrideType.Shelved), act(9, "b", Active)))
-    def nameOf(o: ChainOutput): String =
-      o.effective.map(_.name).orElse(o.emission.map(_.name)).get
-    val streamed = chain(batches: _*).flatten.groupBy(nameOf)
+    val streamed = chain(batches: _*).flatten.groupBy(_.name)
     val folded = batches.flatten.groupBy(_.name).map { case (name, ins) =>
       name -> ins.sortBy(r => (r.seq, r.subSeq))
-        .foldLeft((AlarmKeyState(), Vector.empty[ChainOutput])) {
+        .foldLeft((AlarmKeyState(), Vector.empty[OutputRow])) {
           case ((st, acc), in) =>
             val (st2, o) = UnifiedAlarmRule.step(st, in, 0L)
-            (st2, acc ++ o)
+            (st2, acc ++ o.flatMap(rowsOf))
         }._2
     }
     assert(streamed.keySet == Set("a", "b", "c"))
     assert(streamed == folded)
     // The subSeq order is observable: "b" ends latchable, so its last
     // activation emits a Latched override.
-    assert(streamed("b").last.emission.contains(latched("b")))
+    assert(streamed("b").last == latched("b"))
   }
 
   // --- T8/T9 expiration --------------------------------------------------
-
-  private def fired(out: Seq[ChainOutput]): Seq[OverrideEmission] = out.flatMap(_.emission)
 
   private def continuous(seq: Long, name: String, expiresInMs: Long): AlarmInput =
     shelve(seq, name, oneshot = false, System.currentTimeMillis() + expiresInMs)
