@@ -58,13 +58,8 @@ object Bench {
     def runOne(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame, dir: String): Unit =
       fn(spark, dir).write.format("noop").mode("overwrite").save()
 
-    // Optional comma-separated query filter for local iteration
-    // (SPARK_GRAFT_ONLY=a,b). Unset = the full driver contract.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
+    val only = SparkEntry.selected
+    val queries = SparkEntry.queries.filter { case (k, _) => only(k) }
 
     // Warmup at the smallest SF (cheap; compiles every query's codegen).
     // Scoped + cleared like the measured passes so no warmup persist

@@ -10,7 +10,7 @@ object Verify {
     * driver's json.load fail and silently zero the round's correctness.
     * SHARED with OracleTypeLintSpec so the lint DESCRIBEs byte-identical
     * SQL to what the driver's dump executes. */
-  private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
+  private def jsonEscape(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -19,6 +19,18 @@ object Verify {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
+
+  /** oracle_sql.json's text: the oracle of every query `names` selects,
+    * static and rendered against `sfDir` (a failed render drops only the
+    * oracles that need it; see [[SparkEntry.dynamicOracleSql]]). The ONE
+    * writer: OracleTypeLintSpec lints exactly these bytes. */
+  def oracleJson(spark: SparkSession, sfDir: String, names: String => Boolean,
+      candMinDocs: Int = 2000): String =
+    (SparkEntry.oracleSql ++
+      SparkEntry.dynamicOracleSql(spark, sfDir, candMinDocs, names))
+      .filter { case (k, _) => names(k) }
+      .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }
+      .mkString("{", ",", "}")
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -31,35 +43,17 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Optional comma-separated query filter for local iteration
-    // (SPARK_GRAFT_ONLY=a,b — same contract as Bench). Unset = all.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val queries = only match {
-      case Some(names) => SparkEntry.queries.filter { case (k, _) => names(k) }
-      case None => SparkEntry.queries
-    }
-    queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val only = SparkEntry.selected
+    SparkEntry.queries.filter { case (k, _) => only(k) }
+      .foreach { case (name, fn) =>
+        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        }
       }
-    }
-    def q(s: String): String = jsonEscape(s)
-    // Data-dependent-but-deterministic oracles (trained IVF centroids as
-    // SQL literals) render here, where the session and sf dir are in
-    // scope; a rendering failure degrades those queries to the rows-only
-    // check instead of killing the whole dump.
-    val dynamic =
-      try SparkEntry.dynamicOracleSql(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] dynamic oracles failed: ${e.getMessage}")
-        Map.empty[String, String]
-      }
-    val json = (SparkEntry.oracleSql ++ dynamic)
-      .filter { case (k, _) => only.forall(_(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(spark, sfDir, only))
     spark.stop()
   }
 }

@@ -137,7 +137,7 @@ object Ingest {
     // doc_id and are bounded by the batch size, so AQE broadcasts them
     // and the chain reuses one batch-side exchange.
     //
-    // Persist discipline (measured in tools.ProfileIngestScreen): only
+    // Persist discipline (measured with a planning-only probe): only
     // `b` (feeds every text-deriving subtree) and `ndMatched` (the
     // expensive screen) are persisted. `prior`/`toScreen`/`survivors`
     // are cheap id-level joins over already-cached inputs — persisting

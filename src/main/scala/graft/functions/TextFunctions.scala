@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
  * tokenization, shingling, fingerprinting, quality scoring, language ID.
  *
  * All pure Column expressions (whole-stage codegen, no UDFs); each has an
- * exact DuckDB-SQL mirror in SparkEntry.oracleSql. Deterministic by
+ * exact DuckDB-SQL mirror in the oracles of graft.queries (shared
+ * fragments in Oracle: wordsCte, docCtes, shingleCtes). Deterministic by
  * construction so results are reproducible across engines and runs.
  */
 object TextFunctions {

@@ -12,7 +12,8 @@ import graft.model.OverrideType
  * the full dataflow run (and be DuckDB-oracle-checked) against the shared
  * testdata without synthesizing inputs.
  *
- * Mapping (mirrored verbatim in SparkEntry.oracleSql):
+ * Mapping (mirrored verbatim in Oracle.alarmCtes, which the queries of
+ * graft.queries.AlarmQueries declare as their oracles):
  *  - alarm name      = user_id
  *  - activation      = every event; `error` -> Activation, else NoActivation;
  *                      seq = event_id

@@ -18,7 +18,8 @@ object ProfileBinAppend {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = GraftSession.local(cpus, "profile-bin-append")
     val docs = GraftSession.table(spark, dir, "documents")
     val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)

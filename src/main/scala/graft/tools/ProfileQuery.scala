@@ -17,7 +17,8 @@ import graft.{GraftCaches, GraftSession, SparkEntry}
  *
  * Each query runs twice (first pass warms codegen/JIT like Bench's
  * warmup; the second pass's numbers are the signal) under the same
- * cache isolation Bench uses.
+ * cache isolation Bench uses. The second pass also lists its jobs, each
+ * with its wall time and call site. Cores: SPARK_GRAFT_CPUS, else all.
  */
 object ProfileQuery {
   final class Counters extends SparkListener {
@@ -62,7 +63,8 @@ object ProfileQuery {
   def main(args: Array[String]): Unit = {
     val dir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = GraftSession.local(cpus, "profile-query")
     val counters = new Counters
     spark.sparkContext.addSparkListener(counters)
@@ -81,7 +83,7 @@ object ProfileQuery {
           }
           val s = (System.nanoTime() - t0) / 1e9
           println(f"[prof] $name pass$pass: $s%6.2f s  jobs=${counters.jobs.get}%3d stages=${counters.stages.get}%4d tasks=${counters.tasks.get}%5d taskTime=${counters.taskMs.get / 1000.0}%7.1f s gc=${counters.gcMs.get / 1000.0}%5.1f s shufR=${counters.shufRead.get / 1024}%8d KiB shufW=${counters.shufWrite.get / 1024}%8d KiB")
-          if (pass == 2 && sys.env.contains("SPARK_GRAFT_PROF_JOBS")) {
+          if (pass == 2) {
             import scala.jdk.CollectionConverters._
             counters.jobLog.asScala.toSeq.sortBy(_._1).foreach {
               case (id, ms, site) =>
