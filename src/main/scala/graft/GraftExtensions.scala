@@ -1303,16 +1303,15 @@ object GraftExtensions {
         val info = BinShards.commitInfo(spark, dir)
         val budget = info.getOrElse("budget",
           a.fail(s"no budget in the commit marker under $dir")).toInt
-        // The file-read frame feeds every digest branch (2 packed,
-        // 3 sft) — cached, or the TVF re-reads the shard bytes per
-        // branch (the SparkEntry bin_digest queries' own posture).
+        // The sft digest's three branches read the file frame — cached,
+        // or the TVF re-reads the shard bytes per branch; the packed
+        // digest is one pass and reads the files once uncached.
         import graft.GraftCaches.Cacheable
         if (info.get("kind").contains("sft"))
           TrainShuffle.packNoSplitDigest(
             BinShards.readNoSplit(spark, dir).graftCached, budget)
         else
-          TrainShuffle.packDigest(
-            BinShards.read(spark, dir).graftCached, budget)
+          TrainShuffle.packDigest(BinShards.read(spark, dir), budget)
       }),
     tvf("graft_pack_nosplit",
       "graft_pack_nosplit(path, id_col, text_col, num_shards, budget" +

@@ -2,8 +2,9 @@ package graft.ops
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
 
 /**
  * Deterministic global shuffle for training-data export.
@@ -163,12 +164,15 @@ object TrainShuffle {
    * (ids are >= 0, unk = 0) so a separator can never alias a real
    * token; production vocabs with a reserved EOS pass its id.
    *
-   * Scale shape: the token-level explode IS the export's inherent cost
-   * (every id is written once); it partial-aggregates into
-   * budget-bounded (shard, seq) groups on ONE shuffle, the per-shard
+   * Scale shape: each document moves as SEGMENTS, not tokens — one
+   * `slice` of its id array per sequence it overlaps (~`n/budget + 2`
+   * rows per document, where a token explode would make `n + 1`), so
+   * the (shard, seq) aggregation, on the layout's ONE shard exchange,
+   * gathers a few segments per sequence and flattens them in stream
+   * order. The per-shard
    * sequence count is a max window over the layout's OWN shard
    * partitioning (no rollup join), and nothing sorts globally
-   * (array_sort orders WITHIN each bounded group).
+   * (array_sort orders the few segments WITHIN each bounded group).
    */
   def packIdSequences(df: DataFrame, idCol: String, textCol: String,
       model: graft.functions.Bpe.TokenizerModel, numShards: Int,
@@ -203,30 +207,60 @@ object TrainShuffle {
       s"packIdSequences: sepId must be negative (outside the id vocab; " +
         s"unk = 0, tokens > 0) unless your vocab reserves one — got $sepId")
     // The ids ride seqPack's OWN exchange (carryCols — the packNoSplitIds
-    // posture): the former corpus-sized doc_id join that re-attached
-    // token_ids to the layout is gone, and the per-shard sequence count
-    // is an unbounded max window over the SAME shard partitioning the
-    // layout window already established — no second exchange, no rollup
-    // join, no second traversal of the encode pass. Plan: one hash
-    // exchange by shard (layout windows), the token explode, one hash
-    // exchange into the budget-bounded (shard, seq) groups.
+    // posture), and the per-shard sequence count is an unbounded max
+    // window over the SAME shard partitioning the layout window already
+    // established — no second exchange, no rollup join. Plan: one hash
+    // exchange by shard (layout windows), the per-sequence slicing, and
+    // the budget-bounded (shard, seq) groups aggregated on that same
+    // partitioning. A document's ids sit at stream positions
+    // [tok_start, tok_start + n) and its separator at tok_start + n; a
+    // slice whose sequence is at or past n_seqs is the trimmed trailing
+    // separator.
     val wShard = org.apache.spark.sql.expressions.Window.partitionBy("shard")
-    seqPack(enc, "doc_id", "", numShards, budget, salt,
+    val laid = seqPack(enc, "doc_id", "", numShards, budget, salt,
         tokensCol = "n_tokens_bpe", carryCols = Seq("token_ids"))
       .withColumn("n_seqs", max(col("seq_last")).over(wShard) + 1L)
-      .select(col("shard"), col("n_seqs"), col("tok_start"),
-        posexplode(concat(col("token_ids"), array(lit(sepId)))))
-      .select(col("shard"), col("n_seqs"),
-        (col("tok_start") + col("pos")).as("abs"), col("col").as("id"))
-      .withColumn("seq", expr(s"abs div $budget"))
-      .filter(col("seq") < col("n_seqs"))
-      .groupBy("shard", "seq")
-      .agg(array_sort(collect_list(struct(col("abs"), col("id"))))
-        .as("pairs"))
-      .select(col("shard"), col("seq"),
-        transform(col("pairs"), p => p.getField("id")).as("ids"),
-        size(col("pairs")).cast("long").as("n_ids"))
+    gatherSequences(
+      sliceBySequence(laid, Seq("shard", "n_seqs"), col("tok_start"),
+        concat(col("token_ids"), array(lit(sepId))), budget)
+        .filter(col("seq") < col("n_seqs")),
+      Seq("shard", "seq"))
   }
+
+  /**
+   * The id arrays of `df`, cut at `budget`-sized sequence boundaries:
+   * one row per sequence an array overlaps, where `start` is the
+   * absolute stream position of the array's first id. Emits the `keep`
+   * columns plus `seq` (the sequence), `abs` (the stream position of
+   * the slice's first id) and `part` (the slice). Empty and null arrays
+   * emit nothing. [[gatherSequences]] rebuilds the sequences.
+   */
+  private def sliceBySequence(df: DataFrame, keep: Seq[String],
+      start: Column, ids: Column, budget: Int): DataFrame = {
+    val b = budget.toLong
+    df.select(keep.map(col) :+ start.as("_start") :+ ids.as("_ids"): _*)
+      .filter(size(col("_ids")) > 0)
+      .withColumn("_end", col("_start") + size(col("_ids")))
+      .withColumn("_k", explode(sequence(expr(s"_start div $b"),
+        expr(s"(_end - 1) div $b"))))
+      .withColumn("abs", greatest(col("_start"), col("_k") * b))
+      .select(keep.map(col) :+ expr(s"abs div $b").as("seq") :+ col("abs") :+
+        slice(col("_ids"), (col("abs") - col("_start") + 1).cast("int"),
+          (least(col("_end"), (col("_k") + 1L) * b) - col("abs"))
+            .cast("int")).as("part"): _*)
+  }
+
+  /** Groups [[sliceBySequence]] rows by `keys` and concatenates each
+    * group's slices in stream order: `keys` plus `ids` and its length
+    * `n_ids`, both non-null as a token-level rebuild made them. */
+  private def gatherSequences(slices: DataFrame, keys: Seq[String]): DataFrame =
+    slices.groupBy(keys.map(col): _*)
+      .agg(array_sort(collect_list(struct(col("abs"), col("part"))))
+        .as("parts"))
+      .select(keys.map(col) :+ coalesce(
+        flatten(transform(col("parts"), p => p.getField("part"))),
+        typedLit(Array.empty[Int])).as("ids"): _*)
+      .withColumn("n_ids", size(col("ids")).cast("long"))
 
   /**
    * Per-sequence SEGMENT table of the [[seqPack]] layout — the
@@ -645,26 +679,54 @@ object TrainShuffle {
    * would need the mod-2^61 variant, which changing shard counts, not
    * this digest, should prevent.
    *
-   * Scale shape: re-exploding the packed frame is the digest's
-   * inherent cost (every id is checked once); it partial-aggregates
-   * map-side into numShards rows, joined to the numShards-row
-   * sequence-count rollup — no window, no sort.
+   * Scale shape: ONE pass over the packed frame — a per-sequence fold
+   * (a `mapPartitions` that walks each `ids` array once, with
+   * `Math.addExact`/`multiplyExact`, so an overflow fails loud as the
+   * ANSI aggregates do) feeding one map-side-combining `groupBy(shard)`
+   * to numShards rows. No explode, no second branch and no join, so
+   * the input is read once and needs no cache. A shard none of whose
+   * sequences holds an id emits no row. The output keeps the input's
+   * `shard` type and nullability.
    *
    * Output: (shard, n_seqs, n_ids, sum_digest, xor_digest).
    */
   def packDigest(packed: DataFrame, budget: Int): DataFrame = {
     require(budget > 0, s"packDigest: budget must be positive, got $budget")
-    val meta = packed.groupBy("shard")
-      .agg(count(lit(1)).as("n_seqs"), sum("n_ids").as("n_ids"))
-    val dig = packed
-      .select(col("shard"), col("seq"), posexplode(col("ids")))
-      .select(col("shard"),
-        (col("seq") * budget.toLong + col("pos")).as("abs"),
-        col("col").cast("long").as("id"))
+    val b = budget.toLong
+    val in = packed.select(col("shard"), col("seq"), col("ids"), col("n_ids"))
+    val terms = StructType(Seq(in.schema("shard"), in.schema("n_ids"),
+      StructField("s", LongType), StructField("x", LongType),
+      StructField("has_ids", BooleanType, nullable = false)))
+    // Per sequence: its (shard, n_ids) pass through; s and x are the
+    // sequence's sum and xor terms (null when no term is defined — a
+    // null seq or null ids, as the SQL arithmetic would give), and
+    // has_ids marks a sequence with at least one id.
+    in.mapPartitions { rows: Iterator[Row] =>
+      rows.map { r =>
+        val ids = if (r.isNullAt(2)) Nil else r.getSeq[Any](2)
+        var s = 0L; var x = 0L; var defined = false
+        if (!r.isNullAt(1)) {
+          var pos = Math.addExact(
+            Math.multiplyExact(r.getAs[Number](1).longValue, b), 1L)
+          ids.foreach { id =>
+            if (id != null) {
+              val v = id.asInstanceOf[Number].longValue + 2L
+              s = Math.addExact(s, Math.multiplyExact(pos, v))
+              x ^= Math.addExact(Math.multiplyExact(pos, 1000003L), v)
+              defined = true
+            }
+            pos = Math.addExact(pos, 1L)
+          }
+        }
+        Row(r.get(0), r.get(3), if (defined) s else null,
+          if (defined) x else null, ids.nonEmpty)
+      }
+    }(Encoders.row(terms))
       .groupBy("shard")
-      .agg(sum((col("abs") + 1L) * (col("id") + 2L)).as("sum_digest"),
-        expr("bit_xor((abs + 1) * 1000003 + id + 2)").as("xor_digest"))
-    meta.join(broadcast(dig), "shard")
+      .agg(count(lit(1)).as("n_seqs"), sum("n_ids").as("n_ids"),
+        sum("s").as("sum_digest"), bit_xor(col("x")).as("xor_digest"),
+        max("has_ids").as("has_ids"))
+      .filter(col("has_ids") && col("shard").isNotNull)
       .select(col("shard"), col("n_seqs"), col("n_ids"),
         col("sum_digest"), col("xor_digest"))
   }
@@ -681,17 +743,16 @@ object TrainShuffle {
    * this row exists to catch). Deterministic end to end, so the
    * manifest itself is oracle-gated like any query.
    *
-   * Scale shape: [[packIdSequences]] + [[packDigest]]'s rollups (the
-   * packed frame is cached across the digest's branches); the constants
+   * Scale shape: [[packIdSequences]] + [[packDigest]]'s one-pass fold
+   * (the packed frame is read once, so it is not cached); the constants
    * are literals — no extra pass.
    */
   def exportManifest(df: DataFrame, idCol: String, textCol: String,
       model: graft.functions.Bpe.TokenizerModel, numShards: Int,
       budget: Int = 256, salt: String = "shuf"): DataFrame = {
-    import graft.GraftCaches.Cacheable
-    val packed = packIdSequences(df, idCol, textCol, model, numShards,
-      budget, salt).graftCached
-    packDigest(packed, budget)
+    packDigest(
+      packIdSequences(df, idCol, textCol, model, numShards, budget, salt),
+      budget)
       .withColumn("budget", lit(budget.toLong))
       .withColumn("num_shards", lit(numShards.toLong))
       .withColumn("vocab_size", lit(model.vocab.length.toLong))
@@ -742,9 +803,9 @@ object TrainShuffle {
    * Scale shape: ONE broadcast-model encode pass shared by every epoch
    * (the ids do not depend on the salt — `enc` is cached, so E packs
    * re-read it instead of re-encoding E times); each epoch's packed
-   * frame is cached across its own two digest branches. Everything
-   * downstream is [[packDigest]]'s numShards-row rollups, E x numShards
-   * rows out.
+   * frame is read once by [[packDigest]]'s one-pass fold, so only `enc`
+   * is cached. Everything downstream is numShards-row rollups,
+   * E x numShards rows out.
    *
    * Output: (epoch, shard, n_seqs, n_ids, sum_digest, xor_digest).
    */
@@ -762,8 +823,7 @@ object TrainShuffle {
       .graftCached
     epochSalts.map { salt =>
       packDigest(
-        packIdSequencesEnc(enc, numShards, budget, salt, sepId).graftCached,
-        budget)
+        packIdSequencesEnc(enc, numShards, budget, salt, sepId), budget)
         .select(lit(salt).as("epoch"), col("shard"), col("n_seqs"),
           col("n_ids"), col("sum_digest"), col("xor_digest"))
     }.reduce(_ unionByName _)
@@ -797,9 +857,10 @@ object TrainShuffle {
    * offset `s*budget` — NO window anywhere; the cross-shard base
    * offsets are a one-row-per-shard rollup collected to the driver
    * (bounded by [[graft.sources.BinShards.MaxShards]]) and broadcast
-   * back. The id explode is the re-chunk's inherent cost (every id
-   * moves once); it partial-aggregates into budget-bounded groups on
-   * ONE shuffle, exactly [[packIdSequencesEnc]]'s posture.
+   * back. Each input sequence moves as the one or two slices its
+   * output sequences take of it (not as exploded ids), gathered into
+   * budget-bounded groups on ONE shuffle — [[packIdSequencesEnc]]'s
+   * segment posture and helper.
    *
    * Output: (shard, seq, ids, n_ids) — a frame
    * [[graft.sources.BinShards.write]] accepts verbatim.
@@ -842,18 +903,15 @@ object TrainShuffle {
     val baseDf = broadcast(
       spark.createDataset(meta.map(_._1).zip(bases).toSeq)
         .toDF("shard", "base"))
-    packed.join(baseDf, "shard")
-      .select((col("base") + col("seq") * budget.toLong).as("off"),
-        posexplode(col("ids")))
-      .select((col("off") + col("pos")).as("abs"), col("col").as("id"))
-      .withColumn("g", expr(s"abs div $budget"))
-      .groupBy("g")
-      .agg(array_sort(collect_list(struct(col("abs"), col("id"))))
-        .as("pairs"))
-      .select(expr(s"g div $perShard").as("shard"),
-        (col("g") % perShard).as("seq"),
-        transform(col("pairs"), p => p.getField("id")).as("ids"),
-        size(col("pairs")).cast("long").as("n_ids"))
+    // An input sequence overlaps at most two output sequences, so it
+    // moves as one or two slices; `seq` below is the global output
+    // sequence, dealt into shards of `perShard` contiguous sequences.
+    gatherSequences(
+      sliceBySequence(packed.join(baseDf, "shard"), Nil,
+        col("base") + col("seq") * budget.toLong, col("ids"), budget),
+      Seq("seq"))
+      .select(expr(s"seq div $perShard").as("shard"),
+        (col("seq") % perShard).as("seq"), col("ids"), col("n_ids"))
   }
 
   /**
@@ -922,9 +980,9 @@ object TrainShuffle {
    * within its bin's ascending starts — order-sensitive).
    *
    * Output: (shard, n_bins, n_docs, n_ids, sum_digest, xor_digest,
-   * starts_digest). Same arithmetic/scale posture as [[packDigest]]:
-   * exact integers, map-side rollups to numShards rows, the re-explode
-   * is the digest's inherent cost.
+   * starts_digest). Same arithmetic as [[packDigest]] (exact integers,
+   * map-side rollups to numShards rows), but still the older shape:
+   * the cached input feeds three branches, two of which re-explode it.
    */
   def packNoSplitDigest(packed: DataFrame, budget: Int): DataFrame = {
     require(budget > 0,

@@ -1,6 +1,8 @@
 package graft
 package queries
 
+import scala.util.Try
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -15,29 +17,43 @@ import org.apache.spark.sql.functions._
  *
  * One instance per render. Every value is lazy, so a render computes
  * only what the requested oracles read, and a value that fails to build
- * fails only the oracles that read it.
+ * fails only the oracles that read it. A value that reads a table or
+ * trains a model keeps its failure as well: a `lazy val` whose
+ * initializer throws runs again on the next read, so each oracle that
+ * reads a failing artifact would rebuild it and fail again. These
+ * values are a private lazy `Try` behind a `def`.
  */
 final class Artifacts(val spark: SparkSession, val dir: String,
     candMinDocs: Int) {
-  lazy val emb = GraftSession.table(spark, dir, "embeddings")
+  private lazy val embTry = Try(GraftSession.table(spark, dir, "embeddings"))
+  def emb = embTry.get
   // Same auto-resolution as the query side (√n cells, ~3/8 probed) — the
   // literals below and the Scala operators derive from one code path.
   // Resolved ONCE here; passing the value on avoids a second count job.
-  lazy val nlist = graft.functions.IVF.resolveNlist(emb, 0)
+  private lazy val nlistTry = Try(graft.functions.IVF.resolveNlist(emb, 0))
+  def nlist = nlistTry.get
   lazy val nprobe = graft.functions.IVF.autoNprobe(nlist)
-  lazy val cents = graft.functions.IVF.centroidsSqlValues(emb, nlist)
-  lazy val pqCb = graft.functions.PQ.codebooksSqlValues(
-    graft.functions.PQ.trainCodebooks(emb, dim = 64))
+  private lazy val centsTry = Try(
+    graft.functions.IVF.centroidsSqlValues(emb, nlist))
+  def cents = centsTry.get
+  private lazy val pqCbTry = Try(graft.functions.PQ.codebooksSqlValues(
+    graft.functions.PQ.trainCodebooks(emb, dim = 64)))
+  def pqCb = pqCbTry.get
   // NB classifier tables, collected from the SAME frames nb_classify
   // scores with — one code path, one JVM's ln, bit-identical integers.
-  lazy val (nbP, nbPri) = graft.functions.TextFunctions.nbSqlValues(
-    GraftSession.table(spark, dir, "documents"), "doc_id", "text", "source")
+  private lazy val nbTry = Try(graft.functions.TextFunctions.nbSqlValues(
+    GraftSession.table(spark, dir, "documents"), "doc_id", "text", "source"))
+  def nbP = nbTry.get._1
+  def nbPri = nbTry.get._2
   // The BOUNDED model's literals (df-pruned to 300 words) — rendered
   // from the same nbTrain path nb_score_bounded scores with, so the
   // pruning cut is inside the hash gate.
-  lazy val (nbPb, nbPriB) = graft.functions.TextFunctions.nbSqlValues(
-    GraftSession.table(spark, dir, "documents"), "doc_id", "text", "source",
-    maxVocab = 300)
+  private lazy val nbBoundedTry = Try(
+    graft.functions.TextFunctions.nbSqlValues(
+      GraftSession.table(spark, dir, "documents"), "doc_id", "text",
+      "source", maxVocab = 300))
+  def nbPb = nbBoundedTry.get._1
+  def nbPriB = nbBoundedTry.get._2
   // Shared PQ encode CTEs: per (cand, subspace) argmin centroid with
   // FP-order discipline (inner sums in element order, outer sums via
   // list(... ORDER BY j)) matching PQ.scala's loops exactly.
@@ -55,18 +71,26 @@ final class Artifacts(val spark: SparkSession, val dir: String,
   // SAME Bpe.encodeWord path the operator encodes with (training is
   // pinned by determinism + round-trip specs; segmentation replay and
   // all downstream arithmetic are DuckDB's).
-  lazy val bpeDocs = GraftSession.table(spark, dir, "documents")
-  lazy val bpeModel = graft.functions.Bpe.bpeTrain(bpeDocs, "text",
-    numMerges = 40)
-  lazy val bpeVals = graft.functions.Bpe.wordEncodingsSqlValues(
-    bpeModel, bpeDocs, "text")
+  private lazy val bpeDocsTry = Try(GraftSession.table(spark, dir, "documents"))
+  def bpeDocs = bpeDocsTry.get
+  private lazy val bpeModelTry = Try(
+    graft.functions.Bpe.bpeTrain(bpeDocs, "text",
+      numMerges = 40))
+  def bpeModel = bpeModelTry.get
+  private lazy val bpeValsTry = Try(graft.functions.Bpe.wordEncodingsSqlValues(
+    bpeModel, bpeDocs, "text"))
+  def bpeVals = bpeValsTry.get
   // Byte-alphabet model for bpe_count_byte — the SAME corpus and
   // merge budget, trained over UTF-8 bytes; its word literals replay
   // through the byte-level encodeWord path.
-  lazy val bpeModelByte = graft.functions.Bpe.bpeTrain(bpeDocs, "text",
-    numMerges = 40, alphabet = graft.functions.Bpe.AlphabetByte)
-  lazy val bpeValsByte = graft.functions.Bpe.wordEncodingsSqlValues(
-    bpeModelByte, bpeDocs, "text")
+  private lazy val bpeModelByteTry = Try(
+    graft.functions.Bpe.bpeTrain(bpeDocs, "text",
+      numMerges = 40, alphabet = graft.functions.Bpe.AlphabetByte))
+  def bpeModelByte = bpeModelByteTry.get
+  private lazy val bpeValsByteTry = Try(
+    graft.functions.Bpe.wordEncodingsSqlValues(
+      bpeModelByte, bpeDocs, "text"))
+  def bpeValsByte = bpeValsByteTry.get
   // Null-safe words CTE for the BPE oracles: the operator encodes a
   // NULL text as the empty document (one sentinel token), so the
   // oracle's words list must yield the single '' word for it — the
@@ -106,10 +130,14 @@ final class Artifacts(val spark: SparkSession, val dir: String,
   // Pretok (split-mode) model + per-pretoken literals for
   // bpe_count_pretok: the SAME corpus and merge budget, trained over
   // case-preserving letter/digit/symbol runs.
-  lazy val bpeModelPretok = graft.functions.Bpe.bpeTrain(bpeDocs, "text",
-    numMerges = 40, pretok = graft.functions.Bpe.PretokSplit)
-  lazy val bpeValsPretok = graft.functions.Bpe.wordEncodingsSqlValues(
-    bpeModelPretok, bpeDocs, "text")
+  private lazy val bpeModelPretokTry = Try(
+    graft.functions.Bpe.bpeTrain(bpeDocs, "text",
+      numMerges = 40, pretok = graft.functions.Bpe.PretokSplit))
+  def bpeModelPretok = bpeModelPretokTry.get
+  private lazy val bpeValsPretokTry = Try(
+    graft.functions.Bpe.wordEncodingsSqlValues(
+      bpeModelPretok, bpeDocs, "text"))
+  def bpeValsPretok = bpeValsPretokTry.get
   // The VERBATIM pretok regex (Bpe.PretokRegex) — escaped single
   // quotes are not needed (no quotes in the pattern); DuckDB standard
   // strings pass backslashes raw to RE2.
@@ -124,12 +152,15 @@ final class Artifacts(val spark: SparkSession, val dir: String,
   // covering the WHOLE corpus replayed through THAT model — so the
   // never-trained symbols surface as vocab misses exactly where the
   // operator's id-0 tokens land.
-  lazy val bpeModelCov = graft.functions.Bpe.bpeTrain(
+  private lazy val bpeModelCovTry = Try(graft.functions.Bpe.bpeTrain(
     bpeDocs.filter(!lower(col("text")).contains("q") &&
       !lower(col("text")).contains("j")),
-    "text", numMerges = 40)
-  lazy val bpeValsCov = graft.functions.Bpe.wordEncodingsSqlValues(
-    bpeModelCov, bpeDocs, "text")
+    "text", numMerges = 40))
+  def bpeModelCov = bpeModelCovTry.get
+  private lazy val bpeValsCovTry = Try(
+    graft.functions.Bpe.wordEncodingsSqlValues(
+      bpeModelCov, bpeDocs, "text"))
+  def bpeValsCov = bpeValsCovTry.get
   lazy val bpeVocabCtesCov = vocabCtesOf(bpeModelCov)
   // pack_nosplit_ids: the id-assignment replay composed with the
   // no-split recursive greedy replay (Oracle.packNoSplitCtes with the
@@ -253,21 +284,23 @@ final class Artifacts(val spark: SparkSession, val dir: String,
   /** bm25_batch / hybrid_topk: idf literals for the union of the batch
     * queries' terms, rendered through the same bm25Idf path the
     * operator trains with. */
-  lazy val unionVals: String = {
+  private lazy val unionValsTry = Try {
     val union = TextQueries.Bm25BatchQueries.flatMap(_._2).distinct.sorted
     graft.functions.TextFunctions.bm25Idf(
       GraftSession.table(spark, dir, "documents"), "doc_id", "text", union)
       .map { case (t, _, m) => s"('${t.replace("'", "''")}', $m)" }
       .mkString(", ")
   }
+  def unionVals: String = unionValsTry.get
 
   /** The operator's banded near-dup candidate pairs as VALUES literals,
     * for the candidate form of a [[OracleForm.Candidate]] oracle: None
     * below `candMinDocs` documents, or when banding finds no pair. */
-  lazy val candidatePairs: Option[String] = {
+  private lazy val candidatePairsTry = Try {
     val docsTbl = GraftSession.table(spark, dir, "documents")
     if (docsTbl.count() < candMinDocs) None
     else Some(graft.functions.Dedup
       .candidatePairsSqlValues(docsTbl, "doc_id", "text")).filter(_.nonEmpty)
   }
+  def candidatePairs: Option[String] = candidatePairsTry.get
 }

@@ -1088,16 +1088,11 @@ private[graft] object TextQueries {
       // (sources.BinShards round-trips re-verify against this row).
       // The oracle replays the same stream rebuild as pack_ids and
       // rolls it up to the checksums independently.
-      import graft.GraftCaches.Cacheable
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
-      // The packed frame feeds BOTH digest branches (sequence-count
-      // rollup + the position explode) — cached, or the whole pack
-      // recomputes per branch.
       graft.ops.TrainShuffle.packDigest(
         graft.ops.TrainShuffle.packIdSequences(
-          docs, "doc_id", "text", model, numShards = 16, budget = 256)
-          .graftCached,
+          docs, "doc_id", "text", model, numShards = 16, budget = 256),
         budget = 256)
         .orderBy("shard")
     })(
@@ -1265,7 +1260,6 @@ private[graft] object TextQueries {
       // computes from the relational twin, so the DuckDB stream replay
       // gates the files themselves, not just the frame that produced
       // them.
-      import graft.GraftCaches.Cacheable
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
       // FIXED per-input export dir (not a fresh temp per invocation):
@@ -1277,10 +1271,8 @@ private[graft] object TextQueries {
         graft.ops.TrainShuffle.packIdSequences(
           docs, "doc_id", "text", model, numShards = 16, budget = 256),
         out, budget = 256, numShards = 16)
-      // The file-read frame feeds both digest branches — cached, so the
-      // shards are read once.
       graft.ops.TrainShuffle.packDigest(
-        graft.sources.BinShards.read(s, out).graftCached, budget = 256)
+        graft.sources.BinShards.read(s, out), budget = 256)
         .orderBy("shard")
     })(
       // bin_digest: the IDENTICAL replay — the query's digest rows come
@@ -1400,7 +1392,6 @@ private[graft] object TextQueries {
       // from the stamped `_BIN_COMMIT` lines (commitInfo), so the
       // oracle's independently-derived vocab size gates the artifact's
       // own identity stamp, not a value the query recomputed.
-      import graft.GraftCaches.Cacheable
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
       val root = binTmpDir("bin-append", dir)
@@ -1421,7 +1412,7 @@ private[graft] object TextQueries {
         root, budget = 256, shardsPerEpoch = 8, identity = identity)
       val info = graft.sources.BinShards.commitInfo(s, root)
       graft.ops.TrainShuffle.packDigest(
-        graft.sources.BinShards.read(s, root).graftCached, budget = 256)
+        graft.sources.BinShards.read(s, root), budget = 256)
         .withColumn("epochs", lit(info("epochs").toLong))
         .withColumn("vocab_size", lit(info("vocab_size").toLong))
         .withColumn("alphabet", lit(info("alphabet")))
@@ -1473,7 +1464,6 @@ private[graft] object TextQueries {
       // re-chunks their concatenated kept streams with the exact
       // ceil-division arithmetic repackSequences uses, and shifts the
       // third layout past the folded shard count.
-      import graft.GraftCaches.Cacheable
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
       val root = binTmpDir("bin-fold", dir)
@@ -1490,7 +1480,7 @@ private[graft] object TextQueries {
         },
         root, budget = 256, shardsPerEpoch = 8, compactEvery = 2)
       graft.ops.TrainShuffle.packDigest(
-        graft.sources.BinShards.read(s, root).graftCached, budget = 256)
+        graft.sources.BinShards.read(s, root), budget = 256)
         .orderBy("shard")
     }) { a => import a._
       // bin_fold_digest: the fold replay — e0/e1's kept streams are

@@ -18,7 +18,10 @@ import graft.{GraftCaches, GraftSession, SparkEntry}
  * Each query runs twice (first pass warms codegen/JIT like Bench's
  * warmup; the second pass's numbers are the signal) under the same
  * cache isolation Bench uses. The second pass also lists its jobs, each
- * with its wall time and call site. Cores: SPARK_GRAFT_CPUS, else all.
+ * with its wall time and call site, and its stages, each with its task
+ * count and its max and summed task time — so a stage AQE coalesced
+ * into one long task shows as `tasks=1` with max = sum. Cores:
+ * SPARK_GRAFT_CPUS, else all.
  */
 object ProfileQuery {
   final class Counters extends SparkListener {
@@ -31,6 +34,10 @@ object ProfileQuery {
     val shufWrite = new AtomicLong
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val jobLog = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
+    // Per stage: (tasks, max task ms, summed task ms), and the completed
+    // stages' (id, wall ms, name).
+    val stageTasks = new java.util.concurrent.ConcurrentHashMap[Int, Array[Long]]()
+    val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
       val site = Option(e.properties)
@@ -42,13 +49,24 @@ object ProfileQuery {
       if (st != null)
         jobLog.add((e.jobId, e.time - st._1, st._2))
     }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet()
+      val i = e.stageInfo
+      val wall = (for (s <- i.submissionTime; c <- i.completionTime)
+        yield c - s).getOrElse(0L)
+      stageLog.add((i.stageId, wall, i.name))
+    }
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
       tasks.incrementAndGet()
       val m = e.taskMetrics
       if (m != null) {
-        taskMs.addAndGet(m.executorRunTime)
+        val ms = m.executorRunTime
+        stageTasks.compute(e.stageId, (_, a) => {
+          val t = if (a == null) Array(0L, 0L, 0L) else a
+          t(0) += 1; t(1) = math.max(t(1), ms); t(2) += ms
+          t
+        })
+        taskMs.addAndGet(ms)
         gcMs.addAndGet(m.jvmGCTime)
         shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
         shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
@@ -57,6 +75,7 @@ object ProfileQuery {
     def reset(): Unit = {
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); gcMs.set(0)
       shufRead.set(0); shufWrite.set(0); jobStart.clear(); jobLog.clear()
+      stageTasks.clear(); stageLog.clear()
     }
   }
 
@@ -88,6 +107,14 @@ object ProfileQuery {
             counters.jobLog.asScala.toSeq.sortBy(_._1).foreach {
               case (id, ms, site) =>
                 println(f"[prof]   job $id%3d ${ms / 1000.0}%6.2f s  $site")
+            }
+            counters.stageLog.asScala.toSeq.sortBy(_._1).foreach {
+              case (id, ms, stageName) =>
+                val Array(n, mx, sum) = Option(counters.stageTasks.get(id))
+                  .getOrElse(Array(0L, 0L, 0L))
+                println(f"[prof]   stage $id%4d ${ms / 1000.0}%6.2f s  " +
+                  f"tasks=$n%4d maxTask=${mx / 1000.0}%6.2f s " +
+                  f"sumTask=${sum / 1000.0}%6.2f s  $stageName")
             }
           }
         } catch {

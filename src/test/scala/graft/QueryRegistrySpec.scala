@@ -2,10 +2,12 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import scala.util.{Failure, Try}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Query
+import graft.queries.{Artifacts, OracleForm, Query}
 
 /**
  * The query registry: each batch query is declared once with its oracle,
@@ -57,9 +59,18 @@ class QueryRegistrySpec extends AnyFunSuite {
         to.toFile.setWritable(true)
       }
     }
-    val partial =
-      try SparkEntry.dynamicOracleSql(spark, copy.toString)
-      finally {
+    // The same renders against ONE Artifacts: every failed render must
+    // rethrow the same exception object — the missing table was read
+    // once, not once per oracle that needs it.
+    val (partial, failures) =
+      try {
+        val a = new Artifacts(spark, copy.toString, 2000)
+        (SparkEntry.dynamicOracleSql(spark, copy.toString),
+          SparkEntry.registry.collect {
+            case Query(name, _, OracleForm.Rendered(render)) =>
+              name -> Try(render(a))
+          }.collect { case (name, Failure(e)) => name -> e })
+      } finally {
         Files.list(copy).forEach((p: Path) => Files.delete(p))
         Files.delete(copy)
       }
@@ -68,7 +79,11 @@ class QueryRegistrySpec extends AnyFunSuite {
     }.toSet
     assert(readsEmbeddings.contains("ann_ivf_topk"))
     assert(readsEmbeddings.contains("hybrid_topk"))
+    assert(readsEmbeddings.size == 20)
     assert(partial.keySet == rendered.keySet -- readsEmbeddings)
+    assert(failures.map(_._1).toSet == readsEmbeddings)
+    assert(failures.forall(_._2 eq failures.head._2),
+      "a failed artifact was rebuilt: renders threw distinct exceptions")
     // Every survivor renders the same SQL as the full render.
     assert(partial.forall { case (k, sql) => rendered(k) == sql })
     Seq("bpe_count", "bpe_vocab_ids", "pack_ids", "pack_nosplit_ids",

@@ -527,6 +527,113 @@ class CorpusOpsSpec extends AnyFunSuite {
         df, "doc_id", "text", model, numShards = 2, budget = 4, sepId = 0)
     }
     assert(e.getMessage.contains("sepId"))
+
+    // Hand-built encodings against a plain-Scala model of the stream:
+    // per shard, docs in (sort_key, id) order, each doc's ids then one
+    // -1, cut every `budget` positions, and the positions past
+    // packReport's n_seqs sequences (a trailing separator) dropped.
+    // Covers zero-token docs, a doc spanning 3+ sequences, budget 1,
+    // and a final separator landing exactly on a sequence boundary.
+    val lens = Seq(0, 5, 1, 40, 3, 0, 6, 13, 2, 8)
+    val encHand = lens.zipWithIndex.map { case (n, i) =>
+      (i.toLong, Seq.tabulate(n)(j => 100 * i + j), n.toLong)
+    }.toDF("doc_id", "token_ids", "n_tokens_bpe")
+    def expectedPack(numShards: Int, b: Int): Map[(Long, Long), Seq[Int]] =
+      encHand.collect().map(r => (r.getLong(0), r.getSeq[Int](1)))
+        .groupBy { case (id, _) => java.lang.Long.parseLong(
+          md5Hex(s"$id:shuf:shard").take(7), 16) % numShards }
+        .flatMap { case (shard, docsIn) =>
+          val laid = docsIn.sortBy { case (id, _) =>
+            (md5Hex(s"$id:shuf:ord"), id) }
+          val starts = laid.map(_._2.length + 1L).scanLeft(0L)(_ + _)
+          val nSeqs = laid.indices.map(k =>
+            (starts(k) + laid(k)._2.length - 1) / b).max + 1
+          laid.flatMap(_._2 :+ -1).take((nSeqs * b).toInt)
+            .grouped(b).zipWithIndex
+            .map { case (ids, k) => (shard, k.toLong) -> ids.toSeq }
+        }
+    val total = lens.map(_ + 1).sum // the 1-shard stream, separators in
+    import org.apache.spark.sql.types._
+    val wantSchema = StructType(Seq(StructField("shard", LongType),
+      StructField("seq", LongType),
+      StructField("ids", ArrayType(IntegerType, containsNull = false),
+        nullable = false),
+      StructField("n_ids", LongType, nullable = false)))
+    var trimmedAtBoundary = false
+    for (numShards <- Seq(1, 3); b <- Seq(1, 7, 16, total - 1)) {
+      val packed = graft.ops.TrainShuffle.packIdSequencesEnc(encHand,
+        numShards, budget = b)
+      assert(packed.schema == wantSchema,
+        s"shards=$numShards budget=$b: schema ${packed.schema.treeString}")
+      val got = packed.collect().map(r => (r.getLong(0), r.getLong(1)) ->
+        (r.getSeq[Int](2).toSeq, r.getLong(3))).toMap
+      val want = expectedPack(numShards, b)
+      assert(got.keySet == want.keySet,
+        s"shards=$numShards budget=$b: (shard, seq) keys differ")
+      want.foreach { case (k, ids) =>
+        assert(got(k) == ((ids, ids.length.toLong)),
+          s"shards=$numShards budget=$b $k: ${got(k)} != $ids")
+      }
+      if (numShards == 1) {
+        // The final separator sits at total - 1: on a boundary for
+        // budget 1 and total - 1, where it is trimmed.
+        val emitted = want.values.map(_.length).sum
+        if ((total - 1) % b == 0) {
+          assert(emitted == total - 1, s"budget=$b: separator not trimmed")
+          trimmedAtBoundary = true
+        }
+      }
+    }
+    assert(trimmedAtBoundary)
+    // The 40-token doc spans at least 3 sequences at budget 16.
+    assert(expectedPack(1, 16).values.count(_.exists(id =>
+      id >= 300 && id < 400)) >= 3)
+  }
+
+  test("packDigest: per-shard sums and xors equal a plain-Scala digest of the rows") {
+    def scalaDigest(rows: Seq[(Long, Long, Seq[Int], Long)], b: Long) =
+      rows.groupBy(_._1).collect {
+        case (shard, seqs) if seqs.exists(_._3.nonEmpty) =>
+          val terms = seqs.flatMap { case (_, seq, ids, _) =>
+            ids.zipWithIndex.map { case (id, i) =>
+              (seq * b + i + 1, id + 2L) }
+          }
+          shard -> ((seqs.size.toLong, seqs.map(_._4).sum,
+            terms.map { case (p, v) => p * v }.sum,
+            terms.map { case (p, v) => p * 1000003L + v }
+              .foldLeft(0L)(_ ^ _)))
+      }
+    def check(rows: Seq[(Long, Long, Seq[Int], Long)], b: Int): Unit = {
+      val digest = graft.ops.TrainShuffle.packDigest(
+        rows.toDF("shard", "seq", "ids", "n_ids"), b)
+      assert(digest.columns.toSeq ==
+        Seq("shard", "n_seqs", "n_ids", "sum_digest", "xor_digest"))
+      assert(!digest.schema("n_seqs").nullable)
+      val got = digest.collect().map(r => r.getLong(0) ->
+        ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
+      assert(got == scalaDigest(rows, b.toLong))
+    }
+    // Shard 0's every sequence is empty, so it has no row; shard 1 mixes
+    // empty and full sequences (the empty one still counts in n_seqs);
+    // unk (0) and the separator (-1) keep nonzero terms.
+    val hand = Seq((0L, 0L, Seq[Int](), 0L), (0L, 1L, Seq[Int](), 0L),
+      (1L, 0L, Seq(5, -1, 0), 3L), (1L, 1L, Seq[Int](), 0L),
+      (2L, 0L, Seq(7), 1L), (2L, 3L, Seq(9, 9), 2L))
+    check(hand, 4)
+    assert(!graft.ops.TrainShuffle.packDigest(
+      hand.toDF("shard", "seq", "ids", "n_ids"), 4)
+      .collect().exists(_.getLong(0) == 0L))
+    // A real pack, at two budgets.
+    val df = docs((0L until 30L).map(i =>
+      i -> (("alpha beta g" + (i % 5) + " ") * ((i % 4).toInt + 1)).trim): _*)
+    val model = graft.functions.Bpe.bpeTrain(df, "text", numMerges = 8)
+    Seq(5, 16).foreach { b =>
+      val rows = graft.ops.TrainShuffle.packIdSequences(
+          df, "doc_id", "text", model, numShards = 3, budget = b)
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          r.getSeq[Int](2).toSeq, r.getLong(3))).toSeq
+      check(rows, b)
+    }
   }
 
   test("packSegments: slices match the packed id stream and reassemble each doc") {

@@ -14,7 +14,9 @@ import graft.tools.PlanAudit
  * suite red — at spec time, not as a mystery slowdown in the next round's
  * bench. Bounds are one-sided on purpose: cachedScans/broadcastJoins are
  * floors (more reuse is fine), shuffles/sortMergeJoins are ceilings
- * (fewer is fine), so only genuine plan regressions fail.
+ * (fewer is fine), so only genuine plan regressions fail. A join-free
+ * shape also caps broadcastJoins, where a joined-back branch would
+ * otherwise hide behind a reused exchange.
  *
  * Counts come from the pre-execution physical plan at sf0.001 — shape,
  * not data, so they are stable across boxes.
@@ -33,6 +35,7 @@ class PlanGateSpec extends AnyFunSuite {
   private final case class Gate(
       minCachedScans: Int = 0,
       minBroadcastJoins: Int = 0,
+      maxBroadcastJoins: Int = Int.MaxValue,
       maxShuffles: Int = Int.MaxValue,
       maxSortMergeJoins: Int = Int.MaxValue,
       minPushedFilterScans: Int = 0,
@@ -265,34 +268,40 @@ class PlanGateSpec extends AnyFunSuite {
     // plan.
     "bm25_batch_model" -> Gate(maxShuffles = 2,
       maxSortMergeJoins = 0, minMapPartitions = 2),
-    // Integrity digest: the packed frame must stay CACHED (it feeds
-    // both the sequence-count rollup and the position explode — losing
-    // the persist recomputes the whole pack per branch), the
-    // numShards-row rollup join stays broadcast, and no SMJ appears.
-    "pack_ids_digest" -> Gate(minCachedScans = 2, minBroadcastJoins = 1,
-      maxSortMergeJoins = 0),
+    // Integrity digest, one pass: the per-sequence fold (a mapPartitions
+    // — with the encode pass, the floor of 2) feeds one groupBy(shard),
+    // so the packed frame is read once and needs no cache. Exchanges:
+    // the layout's shard exchange, the digest rollup and the
+    // presentation sort. No join at all: a second digest branch (a
+    // re-explode rolled up and joined back) brings a broadcast join —
+    // its re-run pack exchange is a reused exchange, so the shuffle
+    // ceiling alone does not see it.
+    "pack_ids_digest" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 2),
     // SFT digest: the packed frame feeds THREE rollup branches (meta,
     // ids explode, starts explode) — all must read the cache; the
     // numShards-row rollup joins stay broadcast.
     "pack_nosplit_digest" -> Gate(minCachedScans = 3,
       minBroadcastJoins = 2, maxSortMergeJoins = 0),
-    // Binary validator: the FILE-read frame (BinShards.read) feeds both
-    // digest branches — cached, or the shards are read twice; rollup
-    // join broadcast, no SMJ anywhere.
-    "bin_digest" -> Gate(minCachedScans = 2, minBroadcastJoins = 1,
-      maxSortMergeJoins = 0),
+    // Binary validator: the FILE-read frame (BinShards.read, a
+    // mapPartitions) feeds the one-pass digest fold (the second) — read
+    // once, uncached. Exchanges: the read's per-file repartition, the
+    // digest rollup and the presentation sort; a second digest branch
+    // re-reads the shards through its own repartition and joins back.
+    "bin_digest" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 2),
     // SFT binary validator: three rollup branches over the file-read
     // frame (meta, ids, starts).
     "bin_digest_sft" -> Gate(minCachedScans = 3, minBroadcastJoins = 2,
       maxSortMergeJoins = 0),
     // Managed epoch-append validators (BinFamily): the final
-    // generation's file-read frame feeds both digest branches exactly
+    // generation's file-read frame feeds the one-pass digest exactly
     // like bin_digest — the appends/fold run at construction time, the
     // audited plan is the loader-side digest of the managed root.
-    "bin_append_digest" -> Gate(minCachedScans = 2,
-      minBroadcastJoins = 1, maxSortMergeJoins = 0),
-    "bin_fold_digest" -> Gate(minCachedScans = 2,
-      minBroadcastJoins = 1, maxSortMergeJoins = 0),
+    "bin_append_digest" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 2),
+    "bin_fold_digest" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 2),
     // SFT family validator: three rollup branches (meta, ids, starts)
     // over the managed generation's file-read frame — bin_digest_sft's
     // shape behind the append layout.
@@ -302,10 +311,13 @@ class PlanGateSpec extends AnyFunSuite {
     "export_manifest_sft" -> Gate(minCachedScans = 3,
       minBroadcastJoins = 2, maxSortMergeJoins = 0),
     // Multi-epoch export: ONE shared encode pass (the enc cache feeds
-    // both epoch packs — below 6 cached scans either the encode re-runs
-    // per salt or a packed frame lost its digest-branch persist).
-    "epoch_export" -> Gate(minCachedScans = 6, minBroadcastJoins = 2,
-      maxSortMergeJoins = 0),
+    // both epoch packs — below 2 cached scans the encode re-runs per
+    // salt). Per epoch the pack's shard exchange and the one-pass
+    // digest's rollup (its fold is a mapPartitions: 2 per epoch with
+    // the encode printed under each cached scan), plus the presentation
+    // sort, and no join: a two-branch digest joins each epoch's rollups.
+    "epoch_export" -> Gate(minCachedScans = 2, maxShuffles = 5,
+      maxSortMergeJoins = 0, maxBroadcastJoins = 0, minMapPartitions = 4),
     // Cross-epoch order audit: the pair frame (the E-epoch union + lag
     // window) feeds THREE branches — the per-epoch counts and both
     // sides of the repeat self-join — and must stay cached, or the
@@ -454,7 +466,7 @@ class PlanGateSpec extends AnyFunSuite {
     // is a max window over the SAME partitioning — no doc_id re-join,
     // no rollup broadcast, no encode persist (single consumer). Plan:
     // encode pass (the mapPartitions floor) -> ONE shard exchange into
-    // the layout windows -> token explode -> ONE (shard, seq) hash
+    // the layout windows -> per-sequence slices -> ONE (shard, seq) hash
     // aggregation + the presentation sort. A join or a fourth exchange
     // here means the re-join crept back.
     "pack_ids" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
@@ -504,6 +516,8 @@ class PlanGateSpec extends AnyFunSuite {
         s"$name: cachedScans ${c.cachedScans} < ${g.minCachedScans} — a persist was dropped ($c)")
       assert(c.broadcastJoins >= g.minBroadcastJoins,
         s"$name: broadcastJoins ${c.broadcastJoins} < ${g.minBroadcastJoins} — a dim lost its broadcast ($c)")
+      assert(c.broadcastJoins <= g.maxBroadcastJoins,
+        s"$name: broadcastJoins ${c.broadcastJoins} > ${g.maxBroadcastJoins} — a join the shape does without came back ($c)")
       assert(c.shuffles <= g.maxShuffles,
         s"$name: shuffles ${c.shuffles} > ${g.maxShuffles} — an extra exchange appeared ($c)")
       assert(c.sortMergeJoins <= g.maxSortMergeJoins,
