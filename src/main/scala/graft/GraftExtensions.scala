@@ -11,6 +11,7 @@ import graft.expressions.{DotProduct, SortedIntersectCount}
 import graft.functions.{Bpe, Dedup, Hybrid, IVF, Ingest, PQ, Spans, TextFunctions, Vectors}
 import graft.ops.{CorpusMix, Curation, FimTransform, TrainShuffle}
 import graft.sources.{BinFamily, BinShards}
+import graft.sources.BinShards.Layout
 
 /**
  * Library entry point for `spark.sql.extensions=graft.GraftExtensions`:
@@ -1061,29 +1062,14 @@ object GraftExtensions {
         "are literals.")(
       at(1) { a =>
         val dir = a.str(0, "dir")
-        val info = BinShards.commitInfo(a.spark, dir)
-        if (info.get("kind").contains("sft"))
-          BinShards.readNoSplit(a.spark, dir)
-        else BinShards.read(a.spark, dir)
+        BinShards.readFrame(a.spark, dir,
+          Layout.of(BinShards.commitInfo(a.spark, dir)))
       },
       at(3) { a =>
-        val spark = a.spark
         val dir = a.str(0, "dir")
-        val info = BinShards.commitInfo(spark, dir)
+        val layout = Layout.of(BinShards.commitInfo(a.spark, dir))
         val shard = a.long(1, "shard")
-        import spark.implicits._
-        if (info.get("kind").contains("sft")) {
-          val bin = a.long(2, "bin")
-          val (ids, starts) = BinShards.readBin(spark, dir, shard, bin)
-          Seq((shard, bin, ids, ids.length.toLong, starts.length.toLong,
-              starts))
-            .toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts")
-        } else {
-          val seq = a.long(2, "seq")
-          val ids = BinShards.readSequence(spark, dir, shard, seq)
-          Seq((shard, seq, ids, ids.length.toLong))
-            .toDF("shard", "seq", "ids", "n_ids")
-        }
+        layout.lookup(a.spark, dir, shard, a.long(2, layout.unit))
       }),
     tvf("graft_bin_export",
       "graft_bin_export(corpus_path, id_col, text_col, model_path, " +
@@ -1121,10 +1107,8 @@ object GraftExtensions {
         "statements. All arguments are literals.")(
       at(7, 8, 9) { a =>
         val spark = a.spark
-        val kind = a.strOr(7, "kind", "packed")
+        val layout = Layout.named(a.fn, a.strOr(7, "kind", "packed"))
         val mode = a.strOr(8, "mode", "overwrite")
-        require(kind == "packed" || kind == "sft",
-          s"${a.fn}: kind must be 'packed' or 'sft', got '$kind'")
         require(mode == "overwrite" || mode == "resume",
           s"${a.fn}: mode must be 'overwrite' or 'resume', got '$mode'")
         val budget = a.int(5, "budget")
@@ -1141,19 +1125,10 @@ object GraftExtensions {
         // config gate and falls back to a full rewrite.
         val token = s"model=md5:${model.contentFingerprint};" +
           s"corpus=md5:${corpusFingerprint(spark, corpusPath)}"
-        val identity = modelIdentity(model)
-        if (kind == "sft")
-          BinShards.writeNoSplit(
-            TrainShuffle.packNoSplitIds(corpus, idCol, txtCol, model,
-              numShards, budget),
-            outDir, budget, numShards, resume = mode == "resume",
-            resumeToken = token, identity = identity)
-        else
-          BinShards.write(
-            TrainShuffle.packIdSequences(corpus, idCol, txtCol, model,
-              numShards, budget),
-            outDir, budget, numShards, resume = mode == "resume",
-            resumeToken = token, identity = identity)
+        BinShards.writeFrame(layout,
+          layout.pack(corpus, idCol, txtCol, model, numShards, budget),
+          outDir, budget, numShards, resume = mode == "resume",
+          resumeToken = token, identity = modelIdentity(model))
         val info = BinShards.commitInfo(spark, outDir)
         import spark.implicits._
         Seq((info.getOrElse("kind", "packed"), info("version").toLong,
@@ -1203,9 +1178,7 @@ object GraftExtensions {
       at(8, 9, 10, 11) { a =>
         val spark = a.spark
         val compactEvery = a.intOr(8, "compact_every", 64)
-        val kind = a.strOr(10, "kind", "packed")
-        require(kind == "packed" || kind == "sft",
-          s"${a.fn}: kind must be 'packed' or 'sft', got '$kind'")
+        val layout = Layout.named(a.fn, a.strOr(10, "kind", "packed"))
         val budget = a.int(5, "budget")
         val shardsPerEpoch = a.int(4, "shards_per_epoch")
         val root = a.str(6, "root")
@@ -1214,19 +1187,10 @@ object GraftExtensions {
         val model = Bpe.TokenizerModel.read(spark, a.str(3, "model_path"))
         val (idCol, txtCol) = (a.str(1, "id_col"), a.str(2, "text_col"))
         val salt = a.opt(9, "salt").getOrElse(epochId)
-        val ret =
-          if (kind == "sft")
-            BinFamily.appendEpochSft(
-              TrainShuffle.packNoSplitIds(batch, idCol, txtCol, model,
-                shardsPerEpoch, budget, salt),
-              root, budget, shardsPerEpoch, epochId,
-              compactEvery = compactEvery, identity = modelIdentity(model))
-          else
-            BinFamily.appendEpoch(
-              TrainShuffle.packIdSequences(batch, idCol, txtCol, model,
-                shardsPerEpoch, budget, salt),
-              root, budget, shardsPerEpoch, epochId,
-              compactEvery = compactEvery, identity = modelIdentity(model))
+        val ret = BinFamily.appendEpochsImpl(layout,
+          Seq(epochId -> layout.pack(batch, idCol, txtCol, model,
+            shardsPerEpoch, budget, salt)),
+          root, budget, shardsPerEpoch, compactEvery, modelIdentity(model))
         val applied = ret >= 0L
         // A replayed epoch over a TORN generation (a later epoch
         // crashed mid-export, marker deleted) must stay the
@@ -1303,15 +1267,8 @@ object GraftExtensions {
         val info = BinShards.commitInfo(spark, dir)
         val budget = info.getOrElse("budget",
           a.fail(s"no budget in the commit marker under $dir")).toInt
-        // The sft digest's three branches read the file frame — cached,
-        // or the TVF re-reads the shard bytes per branch; the packed
-        // digest is one pass and reads the files once uncached.
-        import graft.GraftCaches.Cacheable
-        if (info.get("kind").contains("sft"))
-          TrainShuffle.packNoSplitDigest(
-            BinShards.readNoSplit(spark, dir).graftCached, budget)
-        else
-          TrainShuffle.packDigest(BinShards.read(spark, dir), budget)
+        val layout = Layout.of(info)
+        layout.digest(BinShards.readFrame(spark, dir, layout), budget)
       }),
     tvf("graft_pack_nosplit",
       "graft_pack_nosplit(path, id_col, text_col, num_shards, budget" +

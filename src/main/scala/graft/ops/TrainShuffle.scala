@@ -704,22 +704,10 @@ object TrainShuffle {
     in.mapPartitions { rows: Iterator[Row] =>
       rows.map { r =>
         val ids = if (r.isNullAt(2)) Nil else r.getSeq[Any](2)
-        var s = 0L; var x = 0L; var defined = false
-        if (!r.isNullAt(1)) {
-          var pos = Math.addExact(
-            Math.multiplyExact(r.getAs[Number](1).longValue, b), 1L)
-          ids.foreach { id =>
-            if (id != null) {
-              val v = id.asInstanceOf[Number].longValue + 2L
-              s = Math.addExact(s, Math.multiplyExact(pos, v))
-              x ^= Math.addExact(Math.multiplyExact(pos, 1000003L), v)
-              defined = true
-            }
-            pos = Math.addExact(pos, 1L)
-          }
-        }
-        Row(r.get(0), r.get(3), if (defined) s else null,
-          if (defined) x else null, ids.nonEmpty)
+        val (s, x) =
+          if (r.isNullAt(1)) (null, null)
+          else idTerms(r.getAs[Number](1), b, ids)
+        Row(r.get(0), r.get(3), s, x, ids.nonEmpty)
       }
     }(Encoders.row(terms))
       .groupBy("shard")
@@ -730,6 +718,39 @@ object TrainShuffle {
       .select(col("shard"), col("n_seqs"), col("n_ids"),
         col("sum_digest"), col("xor_digest"))
   }
+
+  /** One unit's sum and xor digest terms (see [[packDigest]]) over its
+    * `ids`, the first at absolute position `unit * budget`; both null
+    * when no id is defined, as the SQL arithmetic over null ids gives.
+    * `Math.addExact`/`multiplyExact`, so an overflow fails loud as the
+    * ANSI aggregates do. */
+  private def idTerms(unit: Number, budget: Long,
+      ids: Seq[Any]): (Any, Any) = {
+    if (ids.isEmpty) return (null, null)
+    var s = 0L; var x = 0L; var defined = false
+    var pos = Math.addExact(Math.multiplyExact(unit.longValue, budget), 1L)
+    ids.foreach { id =>
+      if (id != null) {
+        val v = id.asInstanceOf[Number].longValue + 2L
+        s = Math.addExact(s, Math.multiplyExact(pos, v))
+        x ^= Math.addExact(Math.multiplyExact(pos, 1000003L), v)
+        defined = true
+      }
+      pos = Math.addExact(pos, 1L)
+    }
+    if (defined) (s, x) else (null, null)
+  }
+
+  /** The export-wide agreement constants of a manifest: the budget, the
+    * shard count and the tokenizer identity, as literal columns. */
+  private def withManifestConstants(digest: DataFrame, budget: Int,
+      numShards: Int, model: graft.functions.Bpe.TokenizerModel): DataFrame =
+    digest
+      .withColumn("budget", lit(budget.toLong))
+      .withColumn("num_shards", lit(numShards.toLong))
+      .withColumn("vocab_size", lit(model.vocab.length.toLong))
+      .withColumn("alphabet", lit(model.alphabet))
+      .withColumn("pretok", lit(model.pretok))
 
   /**
    * The EXPORT MANIFEST — the validation table a trainer reads before
@@ -750,14 +771,9 @@ object TrainShuffle {
   def exportManifest(df: DataFrame, idCol: String, textCol: String,
       model: graft.functions.Bpe.TokenizerModel, numShards: Int,
       budget: Int = 256, salt: String = "shuf"): DataFrame = {
-    packDigest(
+    withManifestConstants(packDigest(
       packIdSequences(df, idCol, textCol, model, numShards, budget, salt),
-      budget)
-      .withColumn("budget", lit(budget.toLong))
-      .withColumn("num_shards", lit(numShards.toLong))
-      .withColumn("vocab_size", lit(model.vocab.length.toLong))
-      .withColumn("alphabet", lit(model.alphabet))
-      .withColumn("pretok", lit(model.pretok))
+      budget), budget, numShards, model)
   }
 
   /**
@@ -767,23 +783,17 @@ object TrainShuffle {
    * boundary-starts checksum included — the loss-mask metadata is part
    * of the artifact) plus the same export-wide agreement constants
    * (budget, shard count, tokenizer identity). Same scale posture: the
-   * packed frame is cached across the digest's three rollup branches,
-   * the constants are literals.
+   * digest's one-pass fold reads the packed frame once, uncached; the
+   * constants are literals.
    */
   def exportManifestSft(df: DataFrame, idCol: String, textCol: String,
       model: graft.functions.Bpe.TokenizerModel, numShards: Int,
       budget: Int = 256, salt: String = "shuf",
-      strategy: String = "firstfit"): DataFrame = {
-    import graft.GraftCaches.Cacheable
-    val packed = packNoSplitIds(df, idCol, textCol, model, numShards,
-      budget, salt, strategy).graftCached
-    packNoSplitDigest(packed, budget)
-      .withColumn("budget", lit(budget.toLong))
-      .withColumn("num_shards", lit(numShards.toLong))
-      .withColumn("vocab_size", lit(model.vocab.length.toLong))
-      .withColumn("alphabet", lit(model.alphabet))
-      .withColumn("pretok", lit(model.pretok))
-  }
+      strategy: String = "firstfit"): DataFrame =
+    withManifestConstants(packNoSplitDigest(
+      packNoSplitIds(df, idCol, textCol, model, numShards, budget, salt,
+        strategy),
+      budget), budget, numShards, model)
 
   /**
    * MULTI-EPOCH export digests — the end-to-end artifact row of an
@@ -848,8 +858,8 @@ object TrainShuffle {
    *
    * Input contract: `packed` must itself satisfy the packed invariant
    * (per shard: dense seqs, every non-final exactly `budget` ids) —
-   * [[graft.sources.BinShards.read]] output always does
-   * (`parsePackedIdx` enforces it file-side); VALIDATED here anyway
+   * [[graft.sources.BinShards.read]] output always does (the packed
+   * layout's idx parse enforces it file-side); VALIDATED here anyway
    * per shard from the same bounded rollup that sizes the layout, so
    * a hand-built frame fails loud instead of silently misaligning.
    *
@@ -979,37 +989,63 @@ object TrainShuffle {
    * (`SUM((bin*budget + start + 1) * (k + 2))`, k = the doc's index
    * within its bin's ascending starts — order-sensitive).
    *
+   * Scale shape: [[packDigest]]'s — ONE pass, a per-bin fold (a
+   * `mapPartitions` sharing [[packDigest]]'s id-term loop, plus the
+   * starts terms, all exact) feeding one map-side-combining
+   * `groupBy(shard)` to numShards rows; no explode, no join, no cache.
+   * Unlike [[packDigest]], every shard emits a row: one whose bins hold
+   * no ids (or no starts) gets zero digests. A null shard's digests are
+   * zero too, and the output keeps the input's `shard` type.
+   *
    * Output: (shard, n_bins, n_docs, n_ids, sum_digest, xor_digest,
-   * starts_digest). Same arithmetic as [[packDigest]] (exact integers,
-   * map-side rollups to numShards rows), but still the older shape:
-   * the cached input feeds three branches, two of which re-explode it.
+   * starts_digest), the digests never null.
    */
   def packNoSplitDigest(packed: DataFrame, budget: Int): DataFrame = {
     require(budget > 0,
       s"packNoSplitDigest: budget must be positive, got $budget")
     val b = budget.toLong
-    val meta = packed.groupBy("shard")
+    val in = packed.select(col("shard"), col("bin"), col("ids"),
+      col("n_ids"), col("n_docs"), col("starts"))
+    val terms = StructType(Seq(in.schema("shard"), in.schema("n_docs"),
+      in.schema("n_ids"), StructField("s", LongType),
+      StructField("x", LongType), StructField("st", LongType)))
+    in.mapPartitions { rows: Iterator[Row] =>
+      rows.map { r =>
+        // Per bin: its (shard, n_docs, n_ids) pass through; s and x are
+        // its id terms, st its starts term SUM((bin*budget + start + 1)
+        // * (k + 2)) over the k-th start — each null when undefined (a
+        // null shard, bin or array, or only null elements).
+        val (s, x, st) =
+          if (r.isNullAt(0) || r.isNullAt(1)) (null, null, null)
+          else {
+            val bin = r.getAs[Number](1)
+            val (s, x) = idTerms(bin, b,
+              if (r.isNullAt(2)) Nil else r.getSeq[Any](2))
+            val starts = if (r.isNullAt(5)) Nil else r.getSeq[Any](5)
+            var st = 0L; var defined = false
+            if (starts.nonEmpty) {
+              val base = Math.multiplyExact(bin.longValue, b)
+              starts.iterator.zipWithIndex.foreach { case (start, k) =>
+                if (start != null) {
+                  st = Math.addExact(st, Math.multiplyExact(
+                    Math.addExact(Math.addExact(base,
+                      start.asInstanceOf[Number].longValue), 1L),
+                    k + 2L))
+                  defined = true
+                }
+              }
+            }
+            (s, x, if (defined) st else null)
+          }
+        Row(r.get(0), r.get(4), r.get(3), s, x, st)
+      }
+    }(Encoders.row(terms))
+      .groupBy("shard")
       .agg(count(lit(1)).as("n_bins"), sum("n_docs").as("n_docs"),
-        sum("n_ids").as("n_ids"))
-    val idsDig = packed
-      .select(col("shard"), col("bin"), posexplode(col("ids")))
-      .select(col("shard"),
-        (col("bin") * b + col("pos")).as("abs"),
-        col("col").cast("long").as("id"))
-      .groupBy("shard")
-      .agg(sum((col("abs") + 1L) * (col("id") + 2L)).as("sum_digest"),
-        expr("bit_xor((abs + 1) * 1000003 + id + 2)").as("xor_digest"))
-    val startsDig = packed
-      .select(col("shard"), col("bin"), posexplode(col("starts")))
-      .groupBy("shard")
-      .agg(sum((col("bin") * b + col("col") + 1L) * (col("pos") + 2L))
-        .as("starts_digest"))
-    meta.join(broadcast(idsDig), Seq("shard"), "left")
-      .join(broadcast(startsDig), Seq("shard"), "left")
-      .select(col("shard"), col("n_bins"), col("n_docs"), col("n_ids"),
-        coalesce(col("sum_digest"), lit(0L)).as("sum_digest"),
-        coalesce(col("xor_digest"), lit(0L)).as("xor_digest"),
-        coalesce(col("starts_digest"), lit(0L)).as("starts_digest"))
+        sum("n_ids").as("n_ids"),
+        coalesce(sum("s"), lit(0L)).as("sum_digest"),
+        coalesce(bit_xor(col("x")), lit(0L)).as("xor_digest"),
+        coalesce(sum("st"), lit(0L)).as("starts_digest"))
   }
 
   /**

@@ -1239,15 +1239,12 @@ private[graft] object TextQueries {
       // bin's id stream PLUS a separate digest of the doc-boundary
       // starts (the loss-mask metadata is part of the artifact) — what
       // gates the BINARY sft files (BinShards.writeNoSplit round trips
-      // re-verify against this row). Cached packed frame feeds all
-      // three rollup branches.
-      import graft.GraftCaches.Cacheable
+      // re-verify against this row).
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
       graft.ops.TrainShuffle.packNoSplitDigest(
         graft.ops.TrainShuffle.packNoSplitIds(
-          docs, "doc_id", "text", model, numShards = 16, budget = 256)
-          .graftCached,
+          docs, "doc_id", "text", model, numShards = 16, budget = 256),
         budget = 256)
         .orderBy("shard")
     })(packNoSplitDigestOracle),
@@ -1286,7 +1283,6 @@ private[graft] object TextQueries {
       // re-read its bytes, and digest the file-derived frame including
       // the boundary-starts checksum; gated by the same DuckDB no-split
       // replay as pack_nosplit_digest.
-      import graft.GraftCaches.Cacheable
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
       // Same fixed-dir posture as bin_digest (one overwritten export
@@ -1297,8 +1293,7 @@ private[graft] object TextQueries {
           docs, "doc_id", "text", model, numShards = 16, budget = 256),
         out, budget = 256, numShards = 16)
       graft.ops.TrainShuffle.packNoSplitDigest(
-        graft.sources.BinShards.readNoSplit(s, out).graftCached,
-        budget = 256)
+        graft.sources.BinShards.readNoSplit(s, out), budget = 256)
         .orderBy("shard")
     })(
       // bin_digest_sft: same posture for the padded-bin artifact — the
@@ -1555,7 +1550,6 @@ private[graft] object TextQueries {
       // independent, so epoch-local shards shifted into their spans
       // replay exactly) and re-derives the vocab size from raw
       // literals.
-      import graft.GraftCaches.Cacheable
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
       val root = binTmpDir("bin-append-sft", dir)
@@ -1574,8 +1568,7 @@ private[graft] object TextQueries {
         root, budget = 256, shardsPerEpoch = 8, identity = identity)
       val info = graft.sources.BinShards.commitInfo(s, root)
       graft.ops.TrainShuffle.packNoSplitDigest(
-        graft.sources.BinShards.readNoSplit(s, root).graftCached,
-        budget = 256)
+        graft.sources.BinShards.readNoSplit(s, root), budget = 256)
         .withColumn("epochs", lit(info("epochs").toLong))
         .withColumn("vocab_size", lit(info("vocab_size").toLong))
         .withColumn("alphabet", lit(info("alphabet")))

@@ -129,38 +129,18 @@ object BinFamily {
     try out.write(config.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Shard number of an own-kind idx file, per family kind — the one
-    * matcher behind the sweep, the file counts and the ledger, so the
-    * two kinds cannot drift on what "own file" means. */
-  private def ownIdxNum(sft: Boolean, name: String): Option[Long] =
-    (sft, name) match {
-      case (false, BinShards.ShardFile(num)) => Some(num.toLong)
-      case (true, BinShards.SftFile(num)) => Some(num.toLong)
-      case _ => None
-    }
-
-  private def ownDataNum(sft: Boolean, name: String): Option[Long] =
-    (sft, name) match {
-      case (false, BinShards.ShardBinFile(num)) => Some(num.toLong)
-      case (true, BinShards.SftBinFile(num)) => Some(num.toLong)
-      case _ => None
-    }
-
   private def countShardFiles(fs: FileSystem, gen: String,
-      sft: Boolean): Long =
+      layout: BinShards.Layout): Long =
     fs.listStatus(new Path(gen))
-      .count(st => ownIdxNum(sft, st.getPath.getName).isDefined).toLong
+      .count(st => layout.IdxFile.matches(st.getPath.getName)).toLong
 
-  private def stampCommit(fs: FileSystem, gen: String, sft: Boolean,
-      budget: Int, shards: Long, epochs: Long,
+  private def stampCommit(fs: FileSystem, gen: String,
+      layout: BinShards.Layout, budget: Int, shards: Long, epochs: Long,
       identity: Map[String, String]): Unit = {
-    // The sft marker carries its kind line (the [[BinShards
-    // .writeNoSplit]] convention — every kind-dispatched reader/TVF
-    // resolves on it); packed markers omit it, the established
-    // back-compat default.
-    val kindLine = if (sft) "kind=sft\n" else ""
+    // The layout's kind line, as the one-shot writer stamps it — every
+    // kind-dispatched reader/TVF resolves on it.
     val mk = fs.create(new Path(gen, BinShards.CommitMarker), true)
-    try mk.write((s"version=${BinShards.Version}\n$kindLine" +
+    try mk.write((s"version=${BinShards.Version}\n${layout.kindLine}" +
       s"budget=$budget\nshards=$shards\nepochs=$epochs\n" +
       BinShards.identityLines("BinFamily", identity)).getBytes("UTF-8"))
     finally mk.close()
@@ -189,7 +169,7 @@ object BinFamily {
   def appendEpoch(packedBatch: DataFrame, root: String, budget: Int,
       shardsPerEpoch: Int, epochId: String, compactEvery: Int = 64,
       identity: Map[String, String] = Map.empty): Long =
-    appendEpochsImpl(sft = false, Seq(epochId -> packedBatch), root,
+    appendEpochsImpl(BinShards.Packed, Seq(epochId -> packedBatch), root,
       budget, shardsPerEpoch, compactEvery, identity)
 
   /**
@@ -219,7 +199,7 @@ object BinFamily {
   def appendEpochs(batches: Seq[(String, DataFrame)], root: String,
       budget: Int, shardsPerEpoch: Int, compactEvery: Int = 64,
       identity: Map[String, String] = Map.empty): Long =
-    appendEpochsImpl(sft = false, batches, root, budget, shardsPerEpoch,
+    appendEpochsImpl(BinShards.Packed, batches, root, budget, shardsPerEpoch,
       compactEvery, identity)
 
   /**
@@ -240,7 +220,7 @@ object BinFamily {
   def appendEpochSft(packedBatch: DataFrame, root: String, budget: Int,
       shardsPerEpoch: Int, epochId: String, compactEvery: Int = 64,
       identity: Map[String, String] = Map.empty): Long =
-    appendEpochsImpl(sft = true, Seq(epochId -> packedBatch), root,
+    appendEpochsImpl(BinShards.Sft, Seq(epochId -> packedBatch), root,
       budget, shardsPerEpoch, compactEvery, identity)
 
   /** The SFT twin of [[appendEpochs]] (see there for the concurrency
@@ -248,7 +228,7 @@ object BinFamily {
   def appendEpochsSft(batches: Seq[(String, DataFrame)], root: String,
       budget: Int, shardsPerEpoch: Int, compactEvery: Int = 64,
       identity: Map[String, String] = Map.empty): Long =
-    appendEpochsImpl(sft = true, batches, root, budget, shardsPerEpoch,
+    appendEpochsImpl(BinShards.Sft, batches, root, budget, shardsPerEpoch,
       compactEvery, identity)
 
   /** At most this many epoch exports in flight per group (guide §2.6:
@@ -263,11 +243,13 @@ object BinFamily {
       .get("spark.graft.appendEpochs.maxConcurrent",
         MaxConcurrentEpochExports.toString).toInt)
 
-  private def appendEpochsImpl(sft: Boolean,
+  /** The one append loop behind the four public entry points, for
+    * either binary layout. */
+  private[graft] def appendEpochsImpl(layout: BinShards.Layout,
       batches: Seq[(String, DataFrame)], root: String, budget: Int,
       shardsPerEpoch: Int, compactEvery: Int,
       identity: Map[String, String]): Long = {
-    val fn = if (sft) "BinFamily.appendEpochSft" else "BinFamily.appendEpoch"
+    val fn = layout.appender
     require(batches.nonEmpty, s"$fn: no epochs to append")
     require(budget > 0, s"$fn: budget must be positive, got $budget")
     require(shardsPerEpoch > 0 && shardsPerEpoch <= BinShards.MaxShards,
@@ -299,8 +281,7 @@ object BinFamily {
     // generation's recorded (kind, budget, span, identity) — the KIND
     // is part of it, so an sft append onto a packed family root (or
     // vice versa) refuses loud instead of interleaving layouts.
-    val config = BinShards.configLine(
-      if (sft) "sft-epochs" else "packed-epochs", budget,
+    val config = BinShards.configLine(s"${layout.name}-epochs", budget,
       shardsPerEpoch, "", identity)
     var result = -1L
     while (remaining.nonEmpty) {
@@ -338,12 +319,11 @@ object BinFamily {
       // files, the OTHER kind's files) — committed spans never touched.
       fs.delete(new Path(genPath, BinShards.CommitMarker), false)
       fs.listStatus(genPath).foreach { st =>
-        val n = st.getPath.getName
-        val own = ownIdxNum(sft, n).orElse(ownDataNum(sft, n))
-        val stale = own match {
-          case Some(num) => num >= base
-          case None => n.startsWith(".tmp-") ||
-            n.startsWith(if (sft) "shard-" else "sft-")
+        val stale = st.getPath.getName match {
+          case layout.IdxFile(num) => num.toLong >= base
+          case layout.BinFile(num) => num.toLong >= base
+          case n => n.startsWith(".tmp-") ||
+            BinShards.Layout.all.exists(o => o != layout && o.owns(n))
         }
         if (stale) fs.delete(st.getPath, false)
       }
@@ -370,16 +350,10 @@ object BinFamily {
         sc.setJobDescription(
           s"$fn: epoch $epochId span [$b, ${b + shardsPerEpoch})")
         try {
-          val shifted = packedBatch
-            .withColumn("shard", col("shard").cast("long") + b)
-          if (sft)
-            BinShards.exportSftShardFiles(shifted, genDir, budget,
-              shardsPerEpoch, confSer, minShard = b,
-              maxShardExcl = b + shardsPerEpoch)
-          else
-            BinShards.exportPackedShardFiles(shifted, genDir, budget,
-              shardsPerEpoch, confSer, minShard = b,
-              maxShardExcl = b + shardsPerEpoch)
+          BinShards.exportShardFiles(layout,
+            packedBatch.withColumn("shard", col("shard").cast("long") + b),
+            genDir, budget, shardsPerEpoch, confSer, minShard = b,
+            maxShardExcl = b + shardsPerEpoch)
         } finally sc.setJobDescription(callerDescription)
       }
       graft.DriverActions.runAll(sc,
@@ -387,8 +361,8 @@ object BinFamily {
       // ONE post-export listing serves every count — on object storage
       // a wide generation's listing is the append's dominant fixed
       // cost, so it must not run once per epoch over an unchanged dir.
-      val shardNums = fs.listStatus(genPath)
-        .flatMap(st => ownIdxNum(sft, st.getPath.getName))
+      val shardNums = fs.listStatus(genPath).map(_.getPath.getName)
+        .collect { case layout.IdxFile(num) => num.toLong }
       val newEntries = committed ++ group.zipWithIndex.map {
         case ((epochId, _), i) =>
           val b = base + i.toLong * shardsPerEpoch
@@ -398,7 +372,8 @@ object BinFamily {
       writeEpochs(fs, genDir, newEntries)
       val epochCount = newEntries.count(_.epoch != FoldedEpoch).toLong
       val totalFiles = shardNums.length.toLong
-      stampCommit(fs, genDir, sft, budget, totalFiles, epochCount, identity)
+      stampCommit(fs, genDir, layout, budget, totalFiles, epochCount,
+        identity)
       fs.mkdirs(markersDir)
       group.foreach { case (epochId, _) =>
         fs.create(new Path(markersDir, epochId), true).close() }
@@ -410,17 +385,10 @@ object BinFamily {
           // append re-triggers.
           graft.functions.Ingest.rollGeneration(spark, root, genDir) {
             (src, dest) =>
-              val w =
-                if (sft)
-                  BinShards.writeNoSplit(
-                    graft.ops.TrainShuffle.relayoutBins(
-                      BinShards.readNoSplit(spark, src), shardsPerEpoch),
-                    dest, budget, shardsPerEpoch, identity = identity)
-                else
-                  BinShards.write(
-                    graft.ops.TrainShuffle.repackSequences(
-                      BinShards.read(spark, src), budget, shardsPerEpoch),
-                    dest, budget, shardsPerEpoch, identity = identity)
+              val w = BinShards.writeFrame(layout,
+                layout.fold(BinShards.readFrame(spark, src, layout), budget,
+                  shardsPerEpoch),
+                dest, budget, shardsPerEpoch, identity = identity)
               // Post-stamp the successor as a family generation: the
               // fold base entry carries the dense shard count forward,
               // the config flips to the family form so the next
@@ -429,10 +397,10 @@ object BinFamily {
               val dfs = BinShards.fsOf(dest, confSer.value)
               writeEpochs(dfs, dest, Seq(EpochEntry(FoldedEpoch, 0L, w, w)))
               writeConfig(dfs, dest, config)
-              stampCommit(dfs, dest, sft, budget, w, 0L, identity)
+              stampCommit(dfs, dest, layout, budget, w, 0L, identity)
               w
           }
-          countShardFiles(fs, resolveDir(spark, root), sft)
+          countShardFiles(fs, resolveDir(spark, root), layout)
         } else totalFiles
     }
     result

@@ -2,10 +2,16 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import scala.collection.mutable.ArrayBuffer
+import scala.util.matching.Regex
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.TrainShuffle
 
 /**
  * Loader-native BINARY shard files for the packed pretraining export —
@@ -31,6 +37,11 @@ import org.apache.spark.sql.functions._
  *    WRITTEN LAST (the `TokenizerModel.write` crash-window discipline):
  *    a torn export — task died mid-file, job died between shards — can
  *    never present as complete. [[read]] refuses a marker-less dir.
+ *
+ * The no-split (SFT) twin, [[writeNoSplit]], keeps the same directory
+ * protocol over `sft-*` pairs (see there for its `.idx` sections). The
+ * two formats differ only in what [[Layout]] owns; the writer, the
+ * exporter, the resume keep-test and the bulk reader exist once.
  *
  * Scale shape: one file PAIR per shard, written by the ONE task that
  * owns the shard's hash partition ([[graft.ops.TrainShuffle.shuffled]]'s
@@ -77,10 +88,6 @@ object BinShards {
   private[sources] val ConfigMarker = "_BIN_CONFIG"
   private val HeaderBytes = 4 + 4 + 4 + 8 + 8
   private val SftHeaderBytes = 4 + 4 + 4 + 8 + 8 + 8
-  private[sources] val ShardFile = """shard-(\d{5})\.idx""".r
-  private[sources] val ShardBinFile = """shard-(\d{5})\.bin""".r
-  private[sources] val SftFile = """sft-(\d{5})\.idx""".r
-  private[sources] val SftBinFile = """sft-(\d{5})\.bin""".r
   /** Marker keys the writers own — caller-supplied identity lines must
     * not collide with them (a caller overriding `budget` in the marker
     * would defeat the wrong-budget-replay protection; `epochs` is
@@ -92,103 +99,299 @@ object BinShards {
   private[sources] def fsOf(dir: String, conf: Configuration): FileSystem =
     new Path(dir).getFileSystem(conf)
 
-  /** Parsed + validated packed-idx contents: (budget, nSeqs, nIds,
-    * lens). The ONE validation implementation shared by [[read]] (loud
-    * requires) and the resume keep-test (boolean wrapper) — two copies
-    * would drift on the next format change. */
-  private def parsePackedIdx(bytes: Array[Byte], fileLen: Long,
-      where: String): (Int, Long, Long, Array[Int]) = {
-    val idx = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(idx.getInt() == Magic && idx.getInt() == Version,
-      s"$where bad magic/version")
-    val budget = idx.getInt()
-    require(budget > 0 && budget <= MaxBudget,
-      s"$where bad budget $budget — corrupt or foreign idx (readers " +
-        "size buffers from this field)")
-    val nSeqs = idx.getLong()
-    val nIds = idx.getLong()
-    require(nSeqs > 0, s"$where has zero sequences")
-    require(fileLen == HeaderBytes + 4L * nSeqs,
-      s"$where length table size mismatch")
-    val lens = Array.fill(nSeqs.toInt)(idx.getInt())
-    require(lens.map(_.toLong).sum == nIds &&
-      lens.forall(l => l > 0 && l <= budget) &&
-      lens.dropRight(1).forall(_ == budget),
-      s"$where inconsistent sequence lengths")
-    (budget, nSeqs, nIds, lens)
+  /** A parsed, validated `.idx`: the budget, the id total, the per-unit
+    * id counts and doc counts (empty for the packed layout), and the
+    * buffer positioned after those tables (at the sft starts section). */
+  private[sources] final case class Idx(budget: Int, nIds: Long,
+      lens: Array[Int], docCounts: Array[Int], rest: ByteBuffer)
+
+  /**
+   * One of the two binary layouts: everything the packed (`shard-*`,
+   * `GRFT`) and no-split (`sft-*`, `GRFS`) formats differ in — file
+   * names, header, idx parse and encoding, the per-unit row checks, the
+   * frame columns, the marker and config kind strings, and the
+   * primitives that produce, fold and digest the frame. [[Layout.of]]
+   * (a commit marker) and [[Layout.named]] (a `kind` argument) are the
+   * only dispatch points; the shared bodies call these members and never
+   * branch on the layout.
+   */
+  private[graft] sealed abstract class Layout(
+      // The `kind` argument and the `_BIN_CONFIG` kind.
+      val name: String, prefix: String, magic: Int,
+      private[sources] val headerBytes: Int,
+      // The frame's unit column (a packed sequence or an sft bin), its
+      // plural and the frame's producer, as error messages name them.
+      val unit: String, private[sources] val units: String,
+      private[sources] val frameName: String,
+      // The writer's, reader's and BinFamily appender's names in error
+      // messages.
+      private[sources] val writer: String,
+      private[sources] val reader: String,
+      private[sources] val appender: String,
+      // The commit marker's kind line (packed omits it: the established
+      // back-compat default).
+      private[sources] val kindLine: String) extends Serializable {
+    /** The frame row this layout reads back. */
+    type R
+    val columns: Seq[String]
+    private[sources] val IdxFile: Regex = (prefix + """(\d{5})\.idx""").r
+    private[sources] val BinFile: Regex = (prefix + """(\d{5})\.bin""").r
+    private[sources] def idxName(s: Long): String = f"$prefix$s%05d.idx"
+    private[sources] def binName(s: Long): String = f"$prefix$s%05d.bin"
+    private[sources] def owns(name: String): Boolean = name.startsWith(prefix)
+
+    /** Magic/version and budget of an idx header, checked loud; the
+      * buffer is left after the budget field. Shared by [[parse]] and
+      * the point lookups. */
+    private[sources] def header(bytes: Array[Byte],
+        where: String): (ByteBuffer, Int) = {
+      val idx = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      require(idx.getInt() == magic && idx.getInt() == Version,
+        s"$where bad magic/version")
+      val budget = idx.getInt()
+      require(budget > 0 && budget <= MaxBudget,
+        s"$where bad budget $budget — corrupt or foreign idx (readers " +
+          "size buffers from this field)")
+      (idx, budget)
+    }
+
+    /** The ONE validation of a whole idx file, shared by the bulk reader
+      * (loud requires) and the resume keep-test (boolean wrapper) — two
+      * copies would drift on the next format change. */
+    private[sources] def parse(bytes: Array[Byte], fileLen: Long,
+        where: String): Idx
+
+    /** One shard's idx bytes from its per-unit id counts and starts. */
+    private[sources] def encodeIdx(budget: Int, lens: ArrayBuffer[Int],
+        nIds: Long, starts: ArrayBuffer[Array[Long]]): Array[Byte]
+
+    /** The columns the exporter reads, by position: shard, unit, ids,
+      * n_ids, then the layout's own. */
+    private[sources] def exportCols: Seq[Column]
+
+    /** The layout's own checks of one frame row (unit density is
+      * checked by the exporter); returns the row's doc starts. */
+    private[sources] def checkRow(r: Row, shard: Long, unit: Long,
+        ids: Seq[Int], lens: ArrayBuffer[Int], budget: Int): Array[Long]
+
+    private[sources] def encoder: Encoder[R]
+    private[sources] def row(shard: Long, i: Int, ids: Array[Int],
+        idx: Idx): R
+
+    /** One unit by point lookup, as a one-row frame. */
+    def lookup(spark: SparkSession, dir: String, shard: Long,
+        k: Long): DataFrame
+
+    /** This layout's frame of a tokenized corpus. */
+    def pack(df: DataFrame, idCol: String, textCol: String,
+        model: graft.functions.Bpe.TokenizerModel, numShards: Int,
+        budget: Int, salt: String = "shuf"): DataFrame
+
+    /** Compact a frame into a dense `numShards`-shard successor. */
+    def fold(frame: DataFrame, budget: Int, numShards: Int): DataFrame
+
+    /** The per-shard integrity digest of a frame. */
+    def digest(frame: DataFrame, budget: Int): DataFrame
+  }
+
+  private[graft] object Layout {
+    val all: Seq[Layout] = Seq(Packed, Sft)
+
+    /** The layout a commit marker records (no `kind` line = packed). */
+    def of(commitInfo: Map[String, String]): Layout =
+      all.find(l => commitInfo.get("kind").contains(l.name)).getOrElse(Packed)
+
+    /** The layout a caller's `kind` argument names, refused loud. */
+    def named(fn: String, kind: String): Layout = {
+      val l = all.find(_.name == kind)
+      require(l.nonEmpty, s"$fn: kind must be 'packed' or 'sft', got '$kind'")
+      l.get
+    }
+  }
+
+  /** The packed (pretraining) layout: `shard-*` pairs of [[write]]. */
+  private[graft] case object Packed extends Layout("packed", "shard-",
+      Magic, HeaderBytes, "seq", "sequences", "packIdSequences",
+      "BinShards.write", "BinShards.read", "BinFamily.appendEpoch", "") {
+    type R = (Long, Long, Array[Int], Long)
+    val columns: Seq[String] = Seq("shard", "seq", "ids", "n_ids")
+
+    private[sources] def parse(bytes: Array[Byte], fileLen: Long,
+        where: String): Idx = {
+      val (idx, budget) = header(bytes, where)
+      val nSeqs = idx.getLong()
+      val nIds = idx.getLong()
+      require(nSeqs > 0, s"$where has zero sequences")
+      require(fileLen == HeaderBytes + 4L * nSeqs,
+        s"$where length table size mismatch")
+      val lens = Array.fill(nSeqs.toInt)(idx.getInt())
+      require(lens.map(_.toLong).sum == nIds &&
+        lens.forall(l => l > 0 && l <= budget) &&
+        lens.dropRight(1).forall(_ == budget),
+        s"$where inconsistent sequence lengths")
+      Idx(budget, nIds, lens, Array.emptyIntArray, idx)
+    }
+
+    private[sources] def encodeIdx(budget: Int, lens: ArrayBuffer[Int],
+        nIds: Long, starts: ArrayBuffer[Array[Long]]): Array[Byte] = {
+      val b = ByteBuffer.allocate(HeaderBytes + 4 * lens.length)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      b.putInt(Magic).putInt(Version).putInt(budget)
+        .putLong(lens.length.toLong).putLong(nIds)
+      lens.foreach(b.putInt)
+      b.array
+    }
+
+    private[sources] def exportCols: Seq[Column] = Seq(
+      col("shard").cast("long").as("shard"),
+      col("seq").cast("long").as("seq"), col("ids"),
+      col("n_ids").cast("long").as("n_ids"))
+
+    private[sources] def checkRow(r: Row, shard: Long, seq: Long,
+        ids: Seq[Int], lens: ArrayBuffer[Int], budget: Int): Array[Long] = {
+      require(lens.isEmpty || lens.last == budget,
+        s"$writer: shard $shard seq ${lens.length - 1} is " +
+          s"short but not final — not a $frameName frame?")
+      require(ids.length.toLong == r.getLong(3) && ids.length <= budget,
+        s"$writer: shard $shard seq $seq n_ids mismatch/over")
+      Array.emptyLongArray
+    }
+
+    private[sources] def encoder: Encoder[R] = Encoders.product[R]
+    private[sources] def row(shard: Long, i: Int, ids: Array[Int],
+        idx: Idx): R = (shard, i.toLong, ids, ids.length.toLong)
+
+    def lookup(spark: SparkSession, dir: String, shard: Long,
+        seq: Long): DataFrame = {
+      import spark.implicits._
+      val ids = readSequence(spark, dir, shard, seq)
+      Seq((shard, seq, ids, ids.length.toLong)).toDF(columns: _*)
+    }
+
+    def pack(df: DataFrame, idCol: String, textCol: String,
+        model: graft.functions.Bpe.TokenizerModel, numShards: Int,
+        budget: Int, salt: String): DataFrame =
+      TrainShuffle.packIdSequences(df, idCol, textCol, model, numShards,
+        budget, salt)
+
+    def fold(frame: DataFrame, budget: Int, numShards: Int): DataFrame =
+      TrainShuffle.repackSequences(frame, budget, numShards)
+
+    def digest(frame: DataFrame, budget: Int): DataFrame =
+      TrainShuffle.packDigest(frame, budget)
+  }
+
+  /** The no-split (SFT) layout: `sft-*` pairs of [[writeNoSplit]]. */
+  private[graft] case object Sft extends Layout("sft", "sft-", MagicSft,
+      SftHeaderBytes, "bin", "bins", "packNoSplitIds",
+      "BinShards.writeNoSplit", "BinShards.readNoSplit",
+      "BinFamily.appendEpochSft", "kind=sft\n") {
+    type R = (Long, Long, Array[Int], Long, Long, Array[Long])
+    val columns: Seq[String] =
+      Seq("shard", "bin", "ids", "n_ids", "n_docs", "starts")
+
+    private[sources] def parse(bytes: Array[Byte], fileLen: Long,
+        where: String): Idx = {
+      val (idx, budget) = header(bytes, where)
+      val nBins = idx.getLong()
+      val nIds = idx.getLong()
+      val nDocs = idx.getLong()
+      require(fileLen ==
+          SftHeaderBytes + 4L * nBins + 4L * nBins + 8L * nDocs,
+        s"$where section sizes mismatch")
+      require(nBins > 0, s"$where has zero bins")
+      val lens = Array.fill(nBins.toInt)(idx.getInt())
+      val docCounts = Array.fill(nBins.toInt)(idx.getInt())
+      require(lens.map(_.toLong).sum == nIds &&
+        lens.forall(l => l >= 0 && l <= budget) &&
+        docCounts.map(_.toLong).sum == nDocs && docCounts.forall(_ >= 1),
+        s"$where inconsistent bin tables")
+      Idx(budget, nIds, lens, docCounts, idx)
+    }
+
+    private[sources] def encodeIdx(budget: Int, lens: ArrayBuffer[Int],
+        nIds: Long, starts: ArrayBuffer[Array[Long]]): Array[Byte] = {
+      val nDocs = starts.iterator.map(_.length).sum
+      val b = ByteBuffer.allocate(SftHeaderBytes + 4 * lens.length +
+          4 * starts.length + 8 * nDocs)
+        .order(ByteOrder.LITTLE_ENDIAN)
+      b.putInt(MagicSft).putInt(Version).putInt(budget)
+        .putLong(lens.length.toLong).putLong(nIds).putLong(nDocs.toLong)
+      lens.foreach(b.putInt)
+      starts.foreach(s => b.putInt(s.length))
+      starts.foreach(_.foreach(b.putLong))
+      b.array
+    }
+
+    private[sources] def exportCols: Seq[Column] = Seq(
+      col("shard").cast("long").as("shard"),
+      col("bin").cast("long").as("bin"), col("ids"),
+      col("n_ids").cast("long").as("n_ids"),
+      col("n_docs").cast("long").as("n_docs"), col("starts"))
+
+    private[sources] def checkRow(r: Row, shard: Long, bin: Long,
+        ids: Seq[Int], lens: ArrayBuffer[Int], budget: Int): Array[Long] = {
+      require(ids.length.toLong == r.getLong(3) && ids.length <= budget,
+        s"$writer: shard $shard bin $bin n_ids mismatch/over budget")
+      val binStarts = r.getSeq[Long](5)
+      require(binStarts.length.toLong == r.getLong(4),
+        s"$writer: shard $shard bin $bin n_docs != starts length")
+      require(binStarts.isEmpty || (binStarts.head == 0L &&
+          binStarts.zip(binStarts.tail).forall(p => p._1 <= p._2) &&
+          binStarts.last <= ids.length.toLong),
+        s"$writer: shard $shard bin $bin starts not ascending within " +
+          "the bin's extent")
+      binStarts.toArray
+    }
+
+    private[sources] def encoder: Encoder[R] = Encoders.product[R]
+    private[sources] def row(shard: Long, i: Int, ids: Array[Int],
+        idx: Idx): R = {
+      val n = idx.docCounts(i)
+      (shard, i.toLong, ids, ids.length.toLong, n.toLong,
+        Array.fill(n)(idx.rest.getLong()))
+    }
+
+    def lookup(spark: SparkSession, dir: String, shard: Long,
+        bin: Long): DataFrame = {
+      import spark.implicits._
+      val (ids, starts) = readBin(spark, dir, shard, bin)
+      Seq((shard, bin, ids, ids.length.toLong, starts.length.toLong,
+          starts)).toDF(columns: _*)
+    }
+
+    def pack(df: DataFrame, idCol: String, textCol: String,
+        model: graft.functions.Bpe.TokenizerModel, numShards: Int,
+        budget: Int, salt: String): DataFrame =
+      TrainShuffle.packNoSplitIds(df, idCol, textCol, model, numShards,
+        budget, salt)
+
+    def fold(frame: DataFrame, budget: Int, numShards: Int): DataFrame =
+      TrainShuffle.relayoutBins(frame, numShards)
+
+    def digest(frame: DataFrame, budget: Int): DataFrame =
+      TrainShuffle.packNoSplitDigest(frame, budget)
   }
 
   /** Does shard `s` have a COMPLETE pair on disk that validates against
-    * this write's config? The resume keep-test: [[parsePackedIdx]]'s
-    * full validation plus the same budget, shard inside the current
-    * range, bin size exactly 4*n_ids. Validation failures of any kind
+    * this write's config? The resume keep-test: the layout's full idx
+    * validation plus the same budget, shard inside the current range,
+    * bin size exactly 4*n_ids. Validation failures of any kind
     * (truncated, foreign, corrupt) just mean "rewrite it". */
-  private def validShardPair(fs: FileSystem, dir: String, s: Long,
-      budget: Int, numShards: Int): Boolean = {
+  private def validPair(layout: Layout, fs: FileSystem, dir: String,
+      s: Long, budget: Int, numShards: Int): Boolean = {
     if (s >= numShards) return false
-    val idxPath = new Path(dir, f"shard-$s%05d.idx")
-    val binPath = new Path(dir, f"shard-$s%05d.bin")
+    val idxPath = new Path(dir, layout.idxName(s))
+    val binPath = new Path(dir, layout.binName(s))
     try {
       if (!fs.exists(idxPath) || !fs.exists(binPath)) return false
       val len = fs.getFileStatus(idxPath).getLen
-      if (len < HeaderBytes || len > (1L << 31) - 1) return false
+      if (len < layout.headerBytes || len > (1L << 31) - 1) return false
       val bytes = new Array[Byte](len.toInt)
       val in = fs.open(idxPath)
       try in.readFully(0L, bytes) finally in.close()
-      val (b, _, nIds, _) = parsePackedIdx(bytes, len, idxPath.toString)
-      b == budget && fs.getFileStatus(binPath).getLen == 4L * nIds
-    } catch { case _: Exception => false }
-  }
-
-  /** Parsed + validated SFT-idx contents: (budget, nBins, nIds, nDocs,
-    * lens, docCounts, buffer positioned at the starts section). The ONE
-    * validation implementation shared by [[readNoSplit]] (loud
-    * requires), [[readBin]] and the SFT resume keep-test — the
-    * [[parsePackedIdx]] posture applied to the no-split format. */
-  private def parseSftIdx(bytes: Array[Byte], fileLen: Long,
-      where: String): (Int, Long, Long, Long, Array[Int], Array[Int],
-      ByteBuffer) = {
-    val idx = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(idx.getInt() == MagicSft && idx.getInt() == Version,
-      s"$where bad magic/version")
-    val budget = idx.getInt()
-    require(budget > 0 && budget <= MaxBudget,
-      s"$where bad budget $budget — corrupt or foreign idx (readers " +
-        "size buffers from this field)")
-    val nBins = idx.getLong()
-    val nIds = idx.getLong()
-    val nDocs = idx.getLong()
-    require(fileLen ==
-        SftHeaderBytes + 4L * nBins + 4L * nBins + 8L * nDocs,
-      s"$where section sizes mismatch")
-    require(nBins > 0, s"$where has zero bins")
-    val lens = Array.fill(nBins.toInt)(idx.getInt())
-    val docCounts = Array.fill(nBins.toInt)(idx.getInt())
-    require(lens.map(_.toLong).sum == nIds &&
-      lens.forall(l => l >= 0 && l <= budget) &&
-      docCounts.map(_.toLong).sum == nDocs && docCounts.forall(_ >= 1),
-      s"$where inconsistent bin tables")
-    (budget, nBins, nIds, nDocs, lens, docCounts, idx)
-  }
-
-  /** The SFT twin of [[validShardPair]]: does sft shard `s` have a
-    * COMPLETE pair on disk that validates against this write's config?
-    * Same contract — any validation failure just means "rewrite it". */
-  private def validSftPair(fs: FileSystem, dir: String, s: Long,
-      budget: Int, numShards: Int): Boolean = {
-    if (s >= numShards) return false
-    val idxPath = new Path(dir, f"sft-$s%05d.idx")
-    val binPath = new Path(dir, f"sft-$s%05d.bin")
-    try {
-      if (!fs.exists(idxPath) || !fs.exists(binPath)) return false
-      val len = fs.getFileStatus(idxPath).getLen
-      if (len < SftHeaderBytes || len > (1L << 31) - 1) return false
-      val bytes = new Array[Byte](len.toInt)
-      val in = fs.open(idxPath)
-      try in.readFully(0L, bytes) finally in.close()
-      val (b, _, nIds, _, _, _, _) = parseSftIdx(bytes, len,
-        idxPath.toString)
-      b == budget && fs.getFileStatus(binPath).getLen == 4L * nIds
+      val idx = layout.parse(bytes, len, idxPath.toString)
+      idx.budget == budget && fs.getFileStatus(binPath).getLen == 4L * idx.nIds
     } catch { case _: Exception => false }
   }
 
@@ -323,15 +526,50 @@ object BinShards {
   def write(packed: DataFrame, dir: String, budget: Int,
       numShards: Int, resume: Boolean = false,
       resumeToken: String = "",
+      identity: Map[String, String] = Map.empty): Long =
+    writeFrame(Packed, packed, dir, budget, numShards, resume, resumeToken,
+      identity)
+
+  /**
+   * Write a [[graft.ops.TrainShuffle.packNoSplitIds]] frame (the SFT
+   * padded-bin export) as binary shard files — the no-split twin of
+   * [[write]]. Layout per shard:
+   *  - `sft-SSSSS.bin` — the bins' id streams concatenated in `bin`
+   *    order, each UNPADDED (n_ids <= budget; pad-id policy belongs to
+   *    the consumer), int32 LE.
+   *  - `sft-SSSSS.idx` — header (magic `GRFS`, version, budget,
+   *    n_bins int64, n_ids int64, n_docs int64) then three fixed-width
+   *    sections: per-bin int32 id counts, per-bin int32 doc counts,
+   *    and the flattened int64 doc-boundary `starts` in bin order —
+   *    the loss-mask metadata ships INSIDE the artifact (the point of
+   *    no-split packing), and every section is prefix-sum seekable.
+   * The marker carries `kind=sft`. Everything else — commit marker,
+   * temp+rename, stale cleanup, single writer, `resume`, `resumeToken`
+   * and `identity` — is [[write]]'s contract, through the same body; a
+   * directory is owned by ONE artifact kind (the writer clears both
+   * prefixes).
+   */
+  def writeNoSplit(packed: DataFrame, dir: String, budget: Int,
+      numShards: Int, resume: Boolean = false,
+      resumeToken: String = "",
+      identity: Map[String, String] = Map.empty): Long =
+    writeFrame(Sft, packed, dir, budget, numShards, resume, resumeToken,
+      identity)
+
+  /** The one writer body behind [[write]] and [[writeNoSplit]]. */
+  private[graft] def writeFrame(layout: Layout, packed: DataFrame,
+      dir: String, budget: Int, numShards: Int, resume: Boolean = false,
+      resumeToken: String = "",
       identity: Map[String, String] = Map.empty): Long = {
-    require(budget > 0, s"BinShards.write: budget must be positive, got $budget")
+    val fn = layout.writer
+    require(budget > 0, s"$fn: budget must be positive, got $budget")
     require(numShards > 0 && numShards <= MaxShards,
-      s"BinShards.write: numShards must be in [1, $MaxShards] (the %05d " +
+      s"$fn: numShards must be in [1, $MaxShards] (the %05d " +
         s"shard-name domain every reader matches), got $numShards")
     require(!resumeToken.contains("\n"),
-      "BinShards.write: resumeToken must be newline-free")
+      s"$fn: resumeToken must be newline-free")
     require(!resume || resumeToken.nonEmpty,
-      "BinShards.write: resume=true requires a non-empty resumeToken — " +
+      s"$fn: resume=true requires a non-empty resumeToken — " +
         "an empty token cannot distinguish the survivors' content " +
         "(salt/tokenizer/corpus) from this call's, so nothing could be " +
         "safely kept")
@@ -342,7 +580,7 @@ object BinShards {
     val dirPath = new Path(dir)
     // Validate identity (and render the config) BEFORE the marker
     // delete — a rejected call must leave no side effects.
-    val config = configLine("packed", budget, numShards, resumeToken,
+    val config = configLine(layout.name, budget, numShards, resumeToken,
       identity)
     // Crash-window ordering: kill the marker BEFORE touching any file.
     fs.delete(new Path(dirPath, CommitMarker), false)
@@ -365,25 +603,23 @@ object BinShards {
         // Candidates = shard numbers with BOTH files present (from the
         // one listing already in hand); the per-pair validation reads
         // distribute past the driver-loop threshold.
-        val idxNums = names.collect { case ShardFile(n) => n.toLong }.toSet
-        val binNums =
-          names.collect { case ShardBinFile(n) => n.toLong }.toSet
+        val idxNums = names.collect { case layout.IdxFile(n) => n.toLong }.toSet
+        val binNums = names.collect { case layout.BinFile(n) => n.toLong }.toSet
         val candidates =
           (idxNums & binNums).filter(_ < numShards).toSeq.sorted
         keptShards(spark, confSer, dir, candidates,
-          (fsx, d, s) => validShardPair(fsx, d, s, budget, numShards))
+          (fsx, d, s) => validPair(layout, fsx, d, s, budget, numShards))
       }
     names.foreach { n =>
       val keepIt = n match {
-        case ShardFile(num) => kept(num.toLong)
-        case ShardBinFile(num) => kept(num.toLong)
+        case layout.IdxFile(num) => kept(num.toLong)
+        case layout.BinFile(num) => kept(num.toLong)
         case _ => false
       }
       // A dir is owned by ONE artifact kind: sweep the other kind's
       // files too, or a packed write over a former sft dir would leave
       // readNoSplit a valid-looking marker over stale sft data.
-      if (!keepIt && (n.startsWith("shard-") || n.startsWith("sft-") ||
-          n.startsWith(".tmp-")))
+      if (!keepIt && (Layout.all.exists(_.owns(n)) || n.startsWith(".tmp-")))
         fs.delete(new Path(dirPath, n), false)
     }
     // Record this write's config BEFORE any export work: a crash
@@ -394,42 +630,41 @@ object BinShards {
     val todo =
       if (kept.isEmpty) packed
       else packed.filter(!col("shard").isin(kept.toSeq: _*))
-    exportPackedShardFiles(todo, dir, budget, numShards, confSer,
+    exportShardFiles(layout, todo, dir, budget, numShards, confSer,
       minShard = 0L, maxShardExcl = numShards.toLong)
     val written = fs.listStatus(dirPath)
       .count(st => st.getPath.getName match {
-        case ShardFile(_) => true  // anchored: a .tmp- orphan from a
-        case _ => false            // failed attempt must not inflate
-      })                           // the marker's shards= field
+        case layout.IdxFile(_) => true // anchored: a .tmp- orphan from a
+        case _ => false                // failed attempt must not inflate
+      })                               // the marker's shards= field
     val mk = fs.create(new Path(dirPath, CommitMarker), true)
-    mk.write((s"version=$Version\nbudget=$budget\nshards=$written\n" +
-      identityLines("BinShards.write", identity)).getBytes("UTF-8"))
+    mk.write((s"version=$Version\n${layout.kindLine}budget=$budget\n" +
+      s"shards=$written\n" + identityLines(fn, identity)).getBytes("UTF-8"))
     mk.close()
     written.toLong
   }
 
   /**
-   * The packed-format file exporter shared by [[write]] and the
-   * managed epoch-append family ([[BinFamily.appendEpoch]]): one file
-   * PAIR per shard written by the one task owning the shard's hash
-   * partition (temp+rename; the task-completion listener closes a
-   * mid-shard casualty's temp handle). `[minShard, maxShardExcl)` is
-   * the caller's ownership claim over the shard-number space — a frame
-   * row outside it fails loud in the writing task, so an append can
-   * never silently overwrite another epoch's files (and a plain write
-   * can never emit a shard past its declared count, which the marker's
-   * file-count field would otherwise absorb).
+   * The file exporter shared by the writer and the managed epoch-append
+   * family ([[BinFamily.appendEpoch]]): one file PAIR per shard written
+   * by the one task owning the shard's hash partition (temp+rename; the
+   * task-completion listener closes a mid-shard casualty's temp handle).
+   * `[minShard, maxShardExcl)` is the caller's ownership claim over the
+   * shard-number space — a frame row outside it fails loud in the
+   * writing task, so an append can never silently overwrite another
+   * epoch's files (and a plain write can never emit a shard past its
+   * declared count, which would %05d-widen past the name domain every
+   * reader matches — invisible files behind a valid marker).
    */
-  private[sources] def exportPackedShardFiles(frame: DataFrame,
+  private[sources] def exportShardFiles(layout: Layout, frame: DataFrame,
       dir: String, budget: Int, numPartitions: Int,
       confSer: org.apache.spark.SerializableWritable[Configuration],
       minShard: Long, maxShardExcl: Long): Unit = {
+    val fn = layout.writer
     frame
-      .select(col("shard").cast("long").as("shard"),
-        col("seq").cast("long").as("seq"), col("ids"),
-        col("n_ids").cast("long").as("n_ids"))
+      .select(layout.exportCols: _*)
       .repartition(numPartitions, col("shard"))
-      .sortWithinPartitions("shard", "seq")
+      .sortWithinPartitions("shard", layout.unit)
       .foreachPartition { (it: Iterator[Row]) =>
         val conf = confSer.value
         val attempt = Option(org.apache.spark.TaskContext.get())
@@ -446,7 +681,8 @@ object BinShards {
           .foreach(_.addTaskCompletionListener[Unit] { _ =>
             if (out != null) try out.close() catch { case _: Exception => }
           })
-        val lens = scala.collection.mutable.ArrayBuffer.empty[Int]
+        val lens = ArrayBuffer.empty[Int]
+        val starts = ArrayBuffer.empty[Array[Long]]
         var nIds = 0L
         val buf = ByteBuffer.allocate(1 << 16).order(ByteOrder.LITTLE_ENDIAN)
         def flushBuf(): Unit = {
@@ -459,44 +695,34 @@ object BinShards {
         def closeShard(): Unit = if (shard != Long.MinValue) {
           val fsx = fsOf(dir, conf)
           flushBuf(); out.close(); out = null
-          val idxBuf = ByteBuffer
-            .allocate(HeaderBytes + 4 * lens.length)
-            .order(ByteOrder.LITTLE_ENDIAN)
-          idxBuf.putInt(Magic).putInt(Version).putInt(budget)
-            .putLong(lens.length.toLong).putLong(nIds)
-          lens.foreach(idxBuf.putInt)
-          val tmpIdx = new Path(dir, f".tmp-$attempt-shard-$shard%05d.idx")
+          val idxBytes = layout.encodeIdx(budget, lens, nIds, starts)
+          val tmpIdx = new Path(dir, s".tmp-$attempt-${layout.idxName(shard)}")
           val io = fsx.create(tmpIdx, true)
-          try io.write(idxBuf.array, 0, idxBuf.position())
-          finally io.close()
-          val finBin = new Path(dir, f"shard-$shard%05d.bin")
-          val finIdx = new Path(dir, f"shard-$shard%05d.idx")
+          try io.write(idxBytes) finally io.close()
+          val finBin = new Path(dir, layout.binName(shard))
+          val finIdx = new Path(dir, layout.idxName(shard))
           fsx.delete(finBin, false); fsx.delete(finIdx, false)
           require(fsx.rename(tmpBin, finBin) && fsx.rename(tmpIdx, finIdx),
-            s"BinShards.write: rename failed for shard $shard")
+            s"$fn: rename failed for shard $shard")
         }
         it.foreach { r =>
           val s = r.getLong(0)
           require(s >= minShard && s < maxShardExcl,
-            s"BinShards.write: shard $s outside this write's owned " +
+            s"$fn: shard $s outside this write's owned " +
               s"range [$minShard, $maxShardExcl) — wrong numShards, or " +
               "an append frame not shifted to its epoch's span")
           if (s != shard) {
             closeShard()
-            shard = s; lens.clear(); nIds = 0L
-            tmpBin = new Path(dir, f".tmp-$attempt-shard-$shard%05d.bin")
+            shard = s; lens.clear(); starts.clear(); nIds = 0L
+            tmpBin = new Path(dir, s".tmp-$attempt-${layout.binName(shard)}")
             out = fsOf(dir, conf).create(tmpBin, true)
           }
-          val seq = r.getLong(1)
-          require(seq == lens.length.toLong,
-            s"BinShards.write: shard $shard sequences not dense at $seq " +
-              s"(expected ${lens.length}) — not a packIdSequences frame?")
-          require(lens.isEmpty || lens.last == budget,
-            s"BinShards.write: shard $shard seq ${lens.length - 1} is " +
-              "short but not final — not a packIdSequences frame?")
+          val unit = r.getLong(1)
+          require(unit == lens.length.toLong,
+            s"$fn: shard $shard ${layout.units} not dense at $unit " +
+              s"(expected ${lens.length}) — not a ${layout.frameName} frame?")
           val ids = r.getSeq[Int](2)
-          require(ids.length.toLong == r.getLong(3) && ids.length <= budget,
-            s"BinShards.write: shard $shard seq $seq n_ids mismatch/over")
+          starts += layout.checkRow(r, shard, unit, ids, lens, budget)
           ids.foreach(putInt)
           lens += ids.length
           nIds += ids.length.toLong
@@ -514,8 +740,22 @@ object BinShards {
    * listing (numShards entries); each shard streams through one task,
    * one sequence in memory at a time.
    */
-  def read(spark: SparkSession, dirOrRoot: String): DataFrame = {
-    import spark.implicits._
+  def read(spark: SparkSession, dirOrRoot: String): DataFrame =
+    readFrame(spark, dirOrRoot, Packed)
+
+  /**
+   * Read SFT binary shard files back as the exact
+   * [[graft.ops.TrainShuffle.packNoSplitIds]] frame: (shard, bin, ids,
+   * n_ids, n_docs, starts). Same marker/validation posture as [[read]];
+   * one bin in memory at a time.
+   */
+  def readNoSplit(spark: SparkSession, dirOrRoot: String): DataFrame =
+    readFrame(spark, dirOrRoot, Sft)
+
+  /** The one bulk reader behind [[read]] and [[readNoSplit]]. */
+  private[graft] def readFrame(spark: SparkSession, dirOrRoot: String,
+      layout: Layout): DataFrame = {
+    val fn = layout.reader
     // A managed BinFamily root resolves to its active generation; a
     // plain export dir passes through (all read-side entry points).
     val dir = BinFamily.resolveDir(spark, dirOrRoot)
@@ -524,41 +764,42 @@ object BinShards {
     val fs = fsOf(dir, confSer.value)
     val dirPath = new Path(dir)
     require(fs.exists(new Path(dirPath, CommitMarker)),
-      s"BinShards.read: no $CommitMarker under $dir — torn or foreign " +
+      s"$fn: no $CommitMarker under $dir — torn or foreign " +
         "export; re-run the write")
     val paths = fs.listStatus(dirPath)
       .map(_.getPath.getName)
-      .collect { case n @ ShardFile(_) => s"$dir/$n" }
+      .collect { case n @ layout.IdxFile(_) => s"$dir/$n" }
       .sorted.toSeq
     if (paths.isEmpty)
-      return spark.emptyDataset[(Long, Long, Array[Int], Long)]
-        .toDF("shard", "seq", "ids", "n_ids")
+      return spark.emptyDataset[layout.R](layout.encoder)
+        .toDF(layout.columns: _*)
+    import spark.implicits._
     spark.createDataset(paths)
       .repartition(paths.size)
       .flatMap { idxPath =>
         val conf = confSer.value
         val shard = new Path(idxPath).getName match {
-          case ShardFile(num) => num.toLong
+          case layout.IdxFile(num) => num.toLong
           case other => throw new IllegalArgumentException(
-            s"BinShards.read: unexpected shard file name $other")
+            s"$fn: unexpected shard file name $other")
         }
         val fsx = fsOf(idxPath, conf)
         val idxSt = fsx.getFileStatus(new Path(idxPath))
-        require(idxSt.getLen >= HeaderBytes && idxSt.getLen <= (1L << 31) - 1,
-          s"BinShards.read: $idxPath header/size out of range " +
+        require(idxSt.getLen >= layout.headerBytes &&
+            idxSt.getLen <= (1L << 31) - 1,
+          s"$fn: $idxPath header/size out of range " +
             s"(${idxSt.getLen} bytes) — truncated, or a shard far past " +
             "the one-training-file contract (re-shard the export)")
         val idxBytes = new Array[Byte](idxSt.getLen.toInt)
         val in = fsx.open(new Path(idxPath))
         in.readFully(0L, idxBytes); in.close()
-        // The ONE shared validation implementation (parsePackedIdx) —
-        // the resume keep-test wraps the same parse, so the two can
+        // The ONE shared validation implementation (the layout's parse)
+        // — the resume keep-test wraps the same parse, so the two can
         // never drift on a format change.
-        val (budget, nSeqs, nIds, lens) = parsePackedIdx(idxBytes,
-          idxSt.getLen, s"BinShards.read: $idxPath")
+        val idx = layout.parse(idxBytes, idxSt.getLen, s"$fn: $idxPath")
         val binPath = new Path(idxPath.stripSuffix(".idx") + ".bin")
-        require(fsx.getFileStatus(binPath).getLen == 4L * nIds,
-          s"BinShards.read: $binPath size != 4 * n_ids")
+        require(fsx.getFileStatus(binPath).getLen == 4L * idx.nIds,
+          s"$fn: $binPath size != 4 * n_ids")
         val bin = fsx.open(binPath)
         var binClosed = false
         def closeBin(): Unit = if (!binClosed) { binClosed = true; bin.close() }
@@ -567,38 +808,32 @@ object BinShards {
         // teardown: task completion ALWAYS fires, drained or not.
         Option(org.apache.spark.TaskContext.get())
           .foreach(_.addTaskCompletionListener[Unit](_ => closeBin()))
-        val byteBuf = new Array[Byte](4 * budget)
-        // Lazy per-sequence stream: one budget-sized buffer per task,
-        // never a whole shard in memory; the handle closes with the
-        // last sequence (eager for the common drained case) or at task
-        // completion (the listener above) — whichever comes first.
-        new Iterator[(Long, Long, Array[Int], Long)] {
-          private var i = 0
-          private var off = 0L
-          def hasNext: Boolean = i < nSeqs
-          def next(): (Long, Long, Array[Int], Long) = {
-            val len = lens(i)
-            bin.readFully(off, byteBuf, 0, 4 * len)
-            off += 4L * len
-            val bb = ByteBuffer.wrap(byteBuf, 0, 4 * len)
-              .order(ByteOrder.LITTLE_ENDIAN)
-            val ids = Array.fill(len)(bb.getInt())
-            val row = (shard, i.toLong, ids, len.toLong)
-            i += 1
-            if (i == nSeqs.toInt) closeBin()
-            row
-          }
+        val byteBuf = new Array[Byte](4 * idx.budget)
+        val n = idx.lens.length
+        // Lazy per-unit stream over the data file, read in order: one
+        // budget-sized buffer per task, never a whole shard in memory;
+        // the handle closes with the last unit (eager for the common
+        // drained case) or at task completion (the listener above) —
+        // whichever comes first.
+        Iterator.tabulate(n) { i =>
+          val len = idx.lens(i)
+          bin.readFully(byteBuf, 0, 4 * len)
+          val bb = ByteBuffer.wrap(byteBuf, 0, 4 * len)
+            .order(ByteOrder.LITTLE_ENDIAN)
+          val row = layout.row(shard, i, Array.fill(len)(bb.getInt()), idx)
+          if (i == n - 1) closeBin()
+          row
         }
-      }
-      .toDF("shard", "seq", "ids", "n_ids")
+      }(layout.encoder)
+      .toDF(layout.columns: _*)
   }
 
   /**
    * Parse the commit marker of an exported directory — the artifact's
    * own identity row (version, budget, shard count, and `kind=sft` for
    * the no-split twin): one bounded driver read, the dispatch point for
-   * kind-agnostic consumers like the `graft_bin_digest` TVF. Refuses a
-   * marker-less (torn/foreign) dir exactly like the readers.
+   * kind-agnostic consumers ([[Layout.of]]). Refuses a marker-less
+   * (torn/foreign) dir exactly like the readers.
    */
   def commitInfo(spark: SparkSession, dirOrRoot: String): Map[String, String] = {
     val dir = BinFamily.resolveDir(spark, dirOrRoot)
@@ -642,20 +877,15 @@ object BinShards {
     require(fs.exists(new Path(dir, CommitMarker)),
       s"BinShards.readSequence: no $CommitMarker under $dir — torn or " +
         "foreign export; re-run the write")
-    val idxPath = new Path(dir, f"shard-$shard%05d.idx")
+    val idxPath = new Path(dir, Packed.idxName(shard))
     require(fs.exists(idxPath),
       s"BinShards.readSequence: no shard $shard under $dir")
     val header = new Array[Byte](HeaderBytes)
     val in = fs.open(idxPath)
     try {
       in.readFully(0L, header)
-      val h = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-      require(h.getInt() == Magic && h.getInt() == Version,
-        s"BinShards.readSequence: $idxPath bad magic/version")
-      val budget = h.getInt()
-      require(budget > 0 && budget <= MaxBudget,
-        s"BinShards.readSequence: $idxPath bad budget $budget — corrupt " +
-          "or foreign idx")
+      val (h, budget) =
+        Packed.header(header, s"BinShards.readSequence: $idxPath")
       val nSeqs = h.getLong()
       require(seq >= 0 && seq < nSeqs,
         s"BinShards.readSequence: seq $seq out of range [0, $nSeqs) in " +
@@ -667,7 +897,7 @@ object BinShards {
       require(len > 0 && len <= budget &&
           (len == budget || seq == nSeqs - 1),
         s"BinShards.readSequence: shard $shard seq $seq bad length $len")
-      val binPath = new Path(dir, f"shard-$shard%05d.bin")
+      val binPath = new Path(dir, Packed.binName(shard))
       val bytes = new Array[Byte](4 * len)
       val bin = fs.open(binPath)
       try bin.readFully(4L * seq * budget, bytes) finally bin.close()
@@ -698,20 +928,14 @@ object BinShards {
     require(fs.exists(new Path(dir, CommitMarker)),
       s"BinShards.readBin: no $CommitMarker under $dir — torn or " +
         "foreign export; re-run the write")
-    val idxPath = new Path(dir, f"sft-$shard%05d.idx")
+    val idxPath = new Path(dir, Sft.idxName(shard))
     require(fs.exists(idxPath),
       s"BinShards.readBin: no shard $shard under $dir")
     val header = new Array[Byte](SftHeaderBytes)
     val in = fs.open(idxPath)
     try {
       in.readFully(0L, header)
-      val h = ByteBuffer.wrap(header).order(ByteOrder.LITTLE_ENDIAN)
-      require(h.getInt() == MagicSft && h.getInt() == Version,
-        s"BinShards.readBin: $idxPath bad magic/version")
-      val budget = h.getInt()
-      require(budget > 0 && budget <= MaxBudget,
-        s"BinShards.readBin: $idxPath bad budget $budget — corrupt or " +
-          "foreign idx")
+      val (h, budget) = Sft.header(header, s"BinShards.readBin: $idxPath")
       val nBins = h.getLong()
       val nIds = h.getLong()
       val nDocs = h.getLong()
@@ -748,302 +972,12 @@ object BinShards {
           starts.last <= len.toLong),
         s"BinShards.readBin: shard $shard bin $bin starts not ascending " +
           "within the bin's extent")
-      val binPath = new Path(dir, f"sft-$shard%05d.bin")
+      val binPath = new Path(dir, Sft.binName(shard))
       val bytes = new Array[Byte](4 * len)
       val binIn = fs.open(binPath)
       try binIn.readFully(4L * idOff, bytes) finally binIn.close()
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
       (Array.fill(len)(bb.getInt()), starts)
     } finally in.close()
-  }
-
-  /**
-   * Write a [[graft.ops.TrainShuffle.packNoSplitIds]] frame (the SFT
-   * padded-bin export) as binary shard files — the no-split twin of
-   * [[write]]. Layout per shard:
-   *  - `sft-SSSSS.bin` — the bins' id streams concatenated in `bin`
-   *    order, each UNPADDED (n_ids <= budget; pad-id policy belongs to
-   *    the consumer), int32 LE.
-   *  - `sft-SSSSS.idx` — header (magic `GRFS`, version, budget,
-   *    n_bins int64, n_ids int64, n_docs int64) then three fixed-width
-   *    sections: per-bin int32 id counts, per-bin int32 doc counts,
-   *    and the flattened int64 doc-boundary `starts` in bin order —
-   *    the loss-mask metadata ships INSIDE the artifact (the point of
-   *    no-split packing), and every section is prefix-sum seekable.
-   * Same commit-marker, temp+rename, stale-cleanup and single-writer
-   * posture as [[write]]; a directory is owned by ONE artifact kind
-   * (the writer clears both prefixes). `resume`, `resumeToken` and
-   * `identity` carry [[write]]'s exact contract (two-layer config gate,
-   * non-empty token required under resume, identity stamped into the
-   * marker) applied to the sft pair validation ([[parseSftIdx]] — the
-   * same parse [[readNoSplit]] trusts).
-   */
-  def writeNoSplit(packed: DataFrame, dir: String, budget: Int,
-      numShards: Int, resume: Boolean = false,
-      resumeToken: String = "",
-      identity: Map[String, String] = Map.empty): Long = {
-    require(budget > 0,
-      s"BinShards.writeNoSplit: budget must be positive, got $budget")
-    require(numShards > 0 && numShards <= MaxShards,
-      s"BinShards.writeNoSplit: numShards must be in [1, $MaxShards] " +
-        s"(the %05d shard-name domain every reader matches), got $numShards")
-    require(!resumeToken.contains("\n"),
-      "BinShards.writeNoSplit: resumeToken must be newline-free")
-    require(!resume || resumeToken.nonEmpty,
-      "BinShards.writeNoSplit: resume=true requires a non-empty " +
-        "resumeToken — an empty token cannot distinguish the survivors' " +
-        "content (salt/tokenizer/corpus) from this call's, so nothing " +
-        "could be safely kept")
-    val spark = packed.sparkSession
-    val confSer = new org.apache.spark.SerializableWritable(
-      spark.sparkContext.hadoopConfiguration)
-    val fs = fsOf(dir, confSer.value)
-    val dirPath = new Path(dir)
-    // Same no-side-effects-on-rejection ordering as [[write]].
-    val config = configLine("sft", budget, numShards, resumeToken,
-      identity)
-    fs.delete(new Path(dirPath, CommitMarker), false)
-    fs.mkdirs(dirPath)
-    val configMatches =
-      readConfigSidecar(fs, dir, strict = false).contains(config)
-    val names = fs.listStatus(dirPath).map(_.getPath.getName)
-    val kept: Set[Long] =
-      if (!resume || !configMatches) Set.empty
-      else {
-        val idxNums = names.collect { case SftFile(n) => n.toLong }.toSet
-        val binNums = names.collect { case SftBinFile(n) => n.toLong }.toSet
-        val candidates =
-          (idxNums & binNums).filter(_ < numShards).toSeq.sorted
-        keptShards(spark, confSer, dir, candidates,
-          (fsx, d, s) => validSftPair(fsx, d, s, budget, numShards))
-      }
-    names.foreach { n =>
-      val keepIt = n match {
-        case SftFile(num) => kept(num.toLong)
-        case SftBinFile(num) => kept(num.toLong)
-        case _ => false
-      }
-      if (!keepIt && (n.startsWith("shard-") || n.startsWith("sft-") ||
-          n.startsWith(".tmp-")))
-        fs.delete(new Path(dirPath, n), false)
-    }
-    // Record this write's config so a later resume (or a packed RESUME
-    // over this dir — kind mismatch) trusts exactly the right files.
-    val cfgOut = fs.create(new Path(dirPath, ConfigMarker), true)
-    cfgOut.write(config.getBytes("UTF-8"))
-    cfgOut.close()
-    val todo =
-      if (kept.isEmpty) packed
-      else packed.filter(!col("shard").isin(kept.toSeq: _*))
-    exportSftShardFiles(todo, dir, budget, numShards, confSer,
-      minShard = 0L, maxShardExcl = numShards.toLong)
-    val written = fs.listStatus(dirPath)
-      .count(st => st.getPath.getName match {
-        case SftFile(_) => true // anchored, as in [[write]]
-        case _ => false
-      })
-    val mk = fs.create(new Path(dirPath, CommitMarker), true)
-    mk.write((s"version=$Version\nkind=sft\nbudget=$budget\n" +
-      s"shards=$written\n" +
-      identityLines("BinShards.writeNoSplit", identity)).getBytes("UTF-8"))
-    mk.close()
-    written.toLong
-  }
-
-  /**
-   * The SFT-format file exporter shared by [[writeNoSplit]] and the
-   * managed epoch-append family ([[BinFamily]]): one file PAIR per
-   * shard written by the one task owning the shard's hash partition
-   * (temp+rename; task-completion listener closes a mid-shard
-   * casualty's temp handle). `[minShard, maxShardExcl)` is the
-   * caller's ownership claim over the shard-number space — the
-   * [[exportPackedShardFiles]] contract applied to the no-split
-   * layout: a frame row outside it fails loud in the writing task, so
-   * an append can never silently overwrite another epoch's files, and
-   * a plain write can never emit a shard past its declared count
-   * (which would %05d-widen past the name domain every reader
-   * matches — invisible files behind a valid marker).
-   */
-  private[sources] def exportSftShardFiles(frame: DataFrame,
-      dir: String, budget: Int, numPartitions: Int,
-      confSer: org.apache.spark.SerializableWritable[Configuration],
-      minShard: Long, maxShardExcl: Long): Unit = {
-    frame
-      .select(col("shard").cast("long").as("shard"),
-        col("bin").cast("long").as("bin"), col("ids"),
-        col("n_ids").cast("long").as("n_ids"),
-        col("n_docs").cast("long").as("n_docs"), col("starts"))
-      .repartition(numPartitions, col("shard"))
-      .sortWithinPartitions("shard", "bin")
-      .foreachPartition { (it: Iterator[Row]) =>
-        val conf = confSer.value
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        var shard = Long.MinValue
-        var out: org.apache.hadoop.fs.FSDataOutputStream = null
-        var tmpBin: Path = null
-        // Same mid-shard failure posture as [[write]]: task completion
-        // closes whatever temp handle is open.
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit] { _ =>
-            if (out != null) try out.close() catch { case _: Exception => }
-          })
-        val lens = scala.collection.mutable.ArrayBuffer.empty[Int]
-        val docCounts = scala.collection.mutable.ArrayBuffer.empty[Int]
-        val starts = scala.collection.mutable.ArrayBuffer.empty[Long]
-        var nIds = 0L
-        val buf = ByteBuffer.allocate(1 << 16).order(ByteOrder.LITTLE_ENDIAN)
-        def flushBuf(): Unit = {
-          out.write(buf.array, 0, buf.position()); buf.clear()
-        }
-        def putInt(v: Int): Unit = {
-          if (buf.remaining() < 4) flushBuf()
-          buf.putInt(v)
-        }
-        def closeShard(): Unit = if (shard != Long.MinValue) {
-          val fsx = fsOf(dir, conf)
-          flushBuf(); out.close(); out = null
-          val idxBuf = ByteBuffer
-            .allocate(SftHeaderBytes + 4 * lens.length +
-              4 * docCounts.length + 8 * starts.length)
-            .order(ByteOrder.LITTLE_ENDIAN)
-          idxBuf.putInt(MagicSft).putInt(Version).putInt(budget)
-            .putLong(lens.length.toLong).putLong(nIds)
-            .putLong(starts.length.toLong)
-          lens.foreach(idxBuf.putInt)
-          docCounts.foreach(idxBuf.putInt)
-          starts.foreach(idxBuf.putLong)
-          val tmpIdx = new Path(dir, f".tmp-$attempt-sft-$shard%05d.idx")
-          val io = fsx.create(tmpIdx, true)
-          try io.write(idxBuf.array, 0, idxBuf.position())
-          finally io.close()
-          val finBin = new Path(dir, f"sft-$shard%05d.bin")
-          val finIdx = new Path(dir, f"sft-$shard%05d.idx")
-          fsx.delete(finBin, false); fsx.delete(finIdx, false)
-          require(fsx.rename(tmpBin, finBin) && fsx.rename(tmpIdx, finIdx),
-            s"BinShards.writeNoSplit: rename failed for shard $shard")
-        }
-        it.foreach { r =>
-          val s = r.getLong(0)
-          require(s >= minShard && s < maxShardExcl,
-            s"BinShards.writeNoSplit: shard $s outside this write's " +
-              s"owned range [$minShard, $maxShardExcl) — wrong " +
-              "numShards, or an append frame not shifted to its " +
-              "epoch's span")
-          if (s != shard) {
-            closeShard()
-            shard = s; lens.clear(); docCounts.clear(); starts.clear()
-            nIds = 0L
-            tmpBin = new Path(dir, f".tmp-$attempt-sft-$shard%05d.bin")
-            out = fsOf(dir, conf).create(tmpBin, true)
-          }
-          val bin = r.getLong(1)
-          require(bin == lens.length.toLong,
-            s"BinShards.writeNoSplit: shard $shard bins not dense at " +
-              s"$bin (expected ${lens.length}) — not a packNoSplitIds frame?")
-          val ids = r.getSeq[Int](2)
-          require(ids.length.toLong == r.getLong(3) && ids.length <= budget,
-            s"BinShards.writeNoSplit: shard $shard bin $bin n_ids " +
-              "mismatch/over budget")
-          val binStarts = r.getSeq[Long](5)
-          require(binStarts.length.toLong == r.getLong(4),
-            s"BinShards.writeNoSplit: shard $shard bin $bin n_docs != " +
-              "starts length")
-          require(binStarts.isEmpty || (binStarts.head == 0L &&
-              binStarts.zip(binStarts.tail).forall(p => p._1 <= p._2) &&
-              binStarts.last <= ids.length.toLong),
-            s"BinShards.writeNoSplit: shard $shard bin $bin starts not " +
-              "ascending within the bin's extent")
-          ids.foreach(putInt)
-          lens += ids.length
-          docCounts += binStarts.length
-          starts ++= binStarts
-          nIds += ids.length.toLong
-        }
-        closeShard()
-      }
-  }
-
-  /**
-   * Read SFT binary shard files back as the exact
-   * [[graft.ops.TrainShuffle.packNoSplitIds]] frame: (shard, bin, ids,
-   * n_ids, n_docs, starts). Same marker/validation posture as [[read]];
-   * one bin in memory at a time.
-   */
-  def readNoSplit(spark: SparkSession, dirOrRoot: String): DataFrame = {
-    import spark.implicits._
-    val dir = BinFamily.resolveDir(spark, dirOrRoot)
-    val confSer = new org.apache.spark.SerializableWritable(
-      spark.sparkContext.hadoopConfiguration)
-    val fs = fsOf(dir, confSer.value)
-    val dirPath = new Path(dir)
-    require(fs.exists(new Path(dirPath, CommitMarker)),
-      s"BinShards.readNoSplit: no $CommitMarker under $dir — torn or " +
-        "foreign export; re-run the write")
-    val paths = fs.listStatus(dirPath)
-      .map(_.getPath.getName)
-      .collect { case n @ SftFile(_) => s"$dir/$n" }
-      .sorted.toSeq
-    if (paths.isEmpty)
-      return spark
-        .emptyDataset[(Long, Long, Array[Int], Long, Long, Array[Long])]
-        .toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts")
-    spark.createDataset(paths)
-      .repartition(paths.size)
-      .flatMap { idxPath =>
-        val conf = confSer.value
-        val shard = new Path(idxPath).getName match {
-          case SftFile(num) => num.toLong
-          case other => throw new IllegalArgumentException(
-            s"BinShards.readNoSplit: unexpected shard file name $other")
-        }
-        val fsx = fsOf(idxPath, conf)
-        val idxSt = fsx.getFileStatus(new Path(idxPath))
-        require(idxSt.getLen >= SftHeaderBytes &&
-            idxSt.getLen <= (1L << 31) - 1,
-          s"BinShards.readNoSplit: $idxPath header/size out of range " +
-            s"(${idxSt.getLen} bytes) — truncated, or a shard far past " +
-            "the one-training-file contract (re-shard the export)")
-        val idxBytes = new Array[Byte](idxSt.getLen.toInt)
-        val in = fsx.open(new Path(idxPath))
-        in.readFully(0L, idxBytes); in.close()
-        // The ONE shared validation implementation (parseSftIdx) — the
-        // resume keep-test and the point lookup wrap the same parse, so
-        // they can never drift on a format change.
-        val (budget, nBins, nIds, _, lens, docCounts, idx) =
-          parseSftIdx(idxBytes, idxSt.getLen,
-            s"BinShards.readNoSplit: $idxPath")
-        val binPath = new Path(idxPath.stripSuffix(".idx") + ".bin")
-        require(fsx.getFileStatus(binPath).getLen == 4L * nIds,
-          s"BinShards.readNoSplit: $binPath size != 4 * n_ids")
-        val bin = fsx.open(binPath)
-        var binClosed = false
-        def closeBin(): Unit = if (!binClosed) { binClosed = true; bin.close() }
-        // Same non-drained-iterator posture as [[read]]: task completion
-        // always fires, so an early-abort consumer can't leak the handle.
-        Option(org.apache.spark.TaskContext.get())
-          .foreach(_.addTaskCompletionListener[Unit](_ => closeBin()))
-        val byteBuf = new Array[Byte](4 * budget)
-        new Iterator[(Long, Long, Array[Int], Long, Long, Array[Long])] {
-          private var i = 0
-          private var off = 0L
-          def hasNext: Boolean = i < nBins
-          def next(): (Long, Long, Array[Int], Long, Long, Array[Long]) = {
-            val len = lens(i)
-            bin.readFully(off, byteBuf, 0, 4 * len)
-            off += 4L * len
-            val bb = ByteBuffer.wrap(byteBuf, 0, 4 * len)
-              .order(ByteOrder.LITTLE_ENDIAN)
-            val ids = Array.fill(len)(bb.getInt())
-            val st = Array.fill(docCounts(i))(idx.getLong())
-            val row = (shard, i.toLong, ids, len.toLong,
-              docCounts(i).toLong, st)
-            i += 1
-            if (i == nBins.toInt) closeBin()
-            row
-          }
-        }
-      }
-      .toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts")
   }
 }

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.functions._
 
 import graft.{GraftCaches, GraftSession}
+import graft.sources.{BinFamily, BinShards}
 
 /**
  * In-JVM A/B of [[graft.sources.BinFamily.appendEpochs]]' concurrent
@@ -34,39 +35,33 @@ object ProfileBinAppend {
         .forEach(f => java.nio.file.Files.deleteIfExists(f))
     }
 
-    def runOnce(sft: Boolean, conc: Int): Double = {
+    // Per layout, the fold chain: two epochs, the fold, a third epoch.
+    def runOnce(layout: BinShards.Layout, conc: Int): Double = {
       clear()
       GraftCaches.clearAll()
       spark.catalog.clearCache()
       System.gc()
       spark.conf.set("spark.graft.appendEpochs.maxConcurrent", conc.toString)
       val t0 = System.nanoTime()
-      if (sft)
-        graft.sources.BinFamily.appendEpochsSft(
-          (0 to 1).map { e =>
-            s"e$e" -> graft.ops.TrainShuffle.packNoSplitIds(
-              docs.filter(col("doc_id") % 2 === e), "doc_id", "text",
-              model, numShards = 8, budget = 256, salt = s"e$e")
-          }, root, budget = 256, shardsPerEpoch = 8)
-      else
-        graft.sources.BinFamily.appendEpochs(
-          (0 to 2).map { e =>
-            s"e$e" -> graft.ops.TrainShuffle.packIdSequences(
-              docs.filter(col("doc_id") % 3 === e), "doc_id", "text",
-              model, numShards = 8, budget = 256, salt = s"e$e")
-          }, root, budget = 256, shardsPerEpoch = 8, compactEvery = 2)
+      BinFamily.appendEpochsImpl(layout,
+        (0 to 2).map { e =>
+          s"e$e" -> layout.pack(docs.filter(col("doc_id") % 3 === e),
+            "doc_id", "text", model, numShards = 8, budget = 256,
+            salt = s"e$e")
+        }, root, budget = 256, shardsPerEpoch = 8, compactEvery = 2,
+        identity = Map.empty)
       (System.nanoTime() - t0) / 1e9
     }
 
-    Seq(true, false).foreach { sft =>
-      val name = if (sft) "sft-append(e0,e1)" else "fold-chain(e0,e1,fold,e2)"
-      runOnce(sft, 1) // warmup
+    BinShards.Layout.all.foreach { layout =>
+      val name = s"${layout.name} fold-chain(e0,e1,fold,e2)"
+      runOnce(layout, 1) // warmup
       val out = (1 to reps).flatMap { _ =>
-        Seq(1 -> runOnce(sft, 1), 3 -> runOnce(sft, 3))
+        Seq(1 -> runOnce(layout, 1), 3 -> runOnce(layout, 3))
       }
       Seq(1, 3).foreach { c =>
         val xs = out.filter(_._1 == c).map(_._2).sorted
-        println(f"[binappend] $name%-28s conc=$c reps=${xs.length} " +
+        println(f"[binappend] $name%-32s conc=$c reps=${xs.length} " +
           f"median=${xs(xs.length / 2)}%6.2f s  all=${
             xs.map(x => f"$x%.2f").mkString(",")}")
       }

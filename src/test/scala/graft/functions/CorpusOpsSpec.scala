@@ -636,6 +636,80 @@ class CorpusOpsSpec extends AnyFunSuite {
     }
   }
 
+  /** One no-split bin: (shard, bin, ids, n_ids, n_docs, starts). */
+  private type Bin = (Long, Long, Seq[Int], Long, Long, Seq[Long])
+
+  test("packNoSplitDigest: per-shard rows equal a plain-Scala digest of the bins") {
+    // Per shard: bins, doc and id masses, the id sum and xor over
+    // absolute positions bin*b + i, and the starts sum
+    // (bin*b + start + 1) * (k + 2); null arrays add no terms, and a
+    // shard with no terms keeps its row with zero digests.
+    def scalaDigest(rows: Seq[Bin], b: Long) =
+      rows.groupBy(_._1).map { case (shard, bins) =>
+        val terms = bins.flatMap { r =>
+          Option(r._3).toSeq.flatMap(_.zipWithIndex.map { case (id, i) =>
+            (r._2 * b + i + 1, id + 2L) })
+        }
+        val starts = bins.flatMap { r =>
+          Option(r._6).toSeq.flatMap(_.zipWithIndex.map { case (st, k) =>
+            (r._2 * b + st + 1) * (k + 2L) })
+        }
+        shard -> Seq(bins.size.toLong, bins.map(_._5).sum,
+          bins.map(_._4).sum,
+          terms.map { case (p, v) => p * v }.sum,
+          terms.map { case (p, v) => p * 1000003L + v }.foldLeft(0L)(_ ^ _),
+          starts.sum)
+      }
+    def check(rows: Seq[Bin], b: Int): Unit = {
+      val digest = graft.ops.TrainShuffle.packNoSplitDigest(
+        rows.toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts"), b)
+      assert(digest.columns.toSeq == Seq("shard", "n_bins", "n_docs",
+        "n_ids", "sum_digest", "xor_digest", "starts_digest"))
+      Seq("n_bins", "sum_digest", "xor_digest", "starts_digest").foreach {
+        c => assert(!digest.schema(c).nullable, c) }
+      val got = digest.collect().map(r => r.getLong(0) ->
+        r.toSeq.drop(1).map(_.asInstanceOf[Long])).toMap
+      assert(got == scalaDigest(rows, b.toLong))
+    }
+    // Shard 0's bins hold no ids (one empty-doc bin, one with null
+    // arrays): its row has zero id digests. Shard 1 mixes empty and full
+    // bins; unk (0) and the separator (-1) keep nonzero terms; shard 2
+    // skips a bin number.
+    val hand: Seq[Bin] = Seq((0L, 0L, Seq(), 0L, 1L, Seq(0L)),
+      (0L, 1L, null, 0L, 0L, null),
+      (1L, 0L, Seq(5, -1, 0), 3L, 2L, Seq(0L, 2L)),
+      (1L, 1L, Seq(), 0L, 1L, Seq(0L)), (1L, 2L, Seq(3), 1L, 1L, Seq(0L)),
+      (2L, 3L, Seq(7, 9), 2L, 1L, Seq(0L)))
+    check(hand, 4)
+    // A real pack, at two budgets, multi-doc bins included.
+    val df = docs((0L until 30L).map(i =>
+      i -> (("alpha beta g" + (i % 5) + " ") * ((i % 4).toInt + 1)).trim): _*)
+    val model = graft.functions.Bpe.bpeTrain(df, "text", numMerges = 8)
+    Seq(16, 64).foreach { b =>
+      val rows = graft.ops.TrainShuffle.packNoSplitIds(
+          df, "doc_id", "text", model, numShards = 3, budget = b)
+        .collect().map(r => (r.getLong(0), r.getLong(1),
+          r.getSeq[Int](2).toSeq, r.getLong(3), r.getLong(4),
+          r.getSeq[Long](5).toSeq)).toSeq
+      assert(b < 64 || rows.exists(_._6.length > 1),
+        "fixture must pack multi-doc bins")
+      check(rows, b)
+    }
+    // An overflowing position fails loud, in the id terms and in the
+    // starts terms alike (exact arithmetic, as ANSI SQL would).
+    def overflows(rows: Seq[Bin]): Boolean = {
+      val e = intercept[Exception] {
+        graft.ops.TrainShuffle.packNoSplitDigest(
+          rows.toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts"), 4)
+          .collect()
+      }
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException])
+    }
+    assert(overflows(Seq((0L, Long.MaxValue / 2, Seq(1), 1L, 1L, Seq(0L)))))
+    assert(overflows(Seq((0L, 0L, Seq(1), 1L, 1L, Seq(Long.MaxValue)))))
+  }
+
   test("packSegments: slices match the packed id stream and reassemble each doc") {
     val rows = (0L until 40L).map(i =>
       i -> (("alpha beta g" + (i % 5) + " ") * ((i % 4).toInt + 1)).trim)

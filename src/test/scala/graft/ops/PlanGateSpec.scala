@@ -278,11 +278,14 @@ class PlanGateSpec extends AnyFunSuite {
     // ceiling alone does not see it.
     "pack_ids_digest" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
       maxBroadcastJoins = 0, minMapPartitions = 2),
-    // SFT digest: the packed frame feeds THREE rollup branches (meta,
-    // ids explode, starts explode) — all must read the cache; the
-    // numShards-row rollup joins stay broadcast.
-    "pack_nosplit_digest" -> Gate(minCachedScans = 3,
-      minBroadcastJoins = 2, maxSortMergeJoins = 0),
+    // SFT digest, one pass like pack_ids_digest: the per-bin fold (a
+    // mapPartitions — with the encode and the pack's typed pass, the
+    // floor of 3) feeds one groupBy(shard), uncached. Exchanges: the
+    // pack's shard exchange, its (shard, bin) gather, the digest rollup
+    // and the presentation sort. No join: the three-branch digest (meta,
+    // ids and starts rollups) joins two of them back.
+    "pack_nosplit_digest" -> Gate(maxShuffles = 4, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 3),
     // Binary validator: the FILE-read frame (BinShards.read, a
     // mapPartitions) feeds the one-pass digest fold (the second) — read
     // once, uncached. Exchanges: the read's per-file repartition, the
@@ -290,10 +293,10 @@ class PlanGateSpec extends AnyFunSuite {
     // re-reads the shards through its own repartition and joins back.
     "bin_digest" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
       maxBroadcastJoins = 0, minMapPartitions = 2),
-    // SFT binary validator: three rollup branches over the file-read
-    // frame (meta, ids, starts).
-    "bin_digest_sft" -> Gate(minCachedScans = 3, minBroadcastJoins = 2,
-      maxSortMergeJoins = 0),
+    // SFT binary validator: bin_digest's shape — the file-read frame
+    // (readNoSplit, a mapPartitions) feeds the one-pass fold, read once.
+    "bin_digest_sft" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 2),
     // Managed epoch-append validators (BinFamily): the final
     // generation's file-read frame feeds the one-pass digest exactly
     // like bin_digest — the appends/fold run at construction time, the
@@ -302,14 +305,13 @@ class PlanGateSpec extends AnyFunSuite {
       maxBroadcastJoins = 0, minMapPartitions = 2),
     "bin_fold_digest" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
       maxBroadcastJoins = 0, minMapPartitions = 2),
-    // SFT family validator: three rollup branches (meta, ids, starts)
-    // over the managed generation's file-read frame — bin_digest_sft's
-    // shape behind the append layout.
-    "bin_append_digest_sft" -> Gate(minCachedScans = 3,
-      minBroadcastJoins = 2, maxSortMergeJoins = 0),
+    // SFT family validator: bin_digest_sft's shape over the managed
+    // generation's file-read frame.
+    "bin_append_digest_sft" -> Gate(maxShuffles = 3, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 2),
     // SFT manifest = the pack_nosplit_digest shape + constant columns.
-    "export_manifest_sft" -> Gate(minCachedScans = 3,
-      minBroadcastJoins = 2, maxSortMergeJoins = 0),
+    "export_manifest_sft" -> Gate(maxShuffles = 4, maxSortMergeJoins = 0,
+      maxBroadcastJoins = 0, minMapPartitions = 3),
     // Multi-epoch export: ONE shared encode pass (the enc cache feeds
     // both epoch packs — below 2 cached scans the encode re-runs per
     // salt). Per epoch the pack's shard exchange and the one-pass

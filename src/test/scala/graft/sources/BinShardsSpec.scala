@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
 import graft.ops.TrainShuffle
+import graft.sources.BinShards.{Layout, Packed, Sft}
 
 /** Binary shard export ([[BinShards]]): bit-identical round trip against
   * the packed frame, digest stability through the files, crash-window
@@ -24,16 +25,29 @@ class BinShardsSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def packedFrame(budget: Int, numShards: Int) = {
+  private def layoutFrame(l: Layout, budget: Int, numShards: Int) = {
     val docs = GraftSession.table(spark, sf, "documents")
     val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 16)
-    TrainShuffle.packIdSequences(docs, "doc_id", "text", model,
-      numShards, budget = budget)
+    l.pack(docs, "doc_id", "text", model, numShards, budget)
   }
+
+  private def packedFrame(budget: Int, numShards: Int) =
+    layoutFrame(Packed, budget, numShards)
 
   private def collectPacked(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getSeq[Int](2).toList, r.getLong(3))).toSet
+
+  /** Each layout with the budget its fixture packs at (sft bins must
+    * hold several docs). */
+  private val layouts = Seq(Packed -> 32, Sft -> 512)
+
+  /** Any layout's frame as a set of rows, arrays as lists. */
+  private def collectRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.map {
+      case a: scala.collection.Seq[_] => a.toList
+      case v => v
+    }).toSet
 
   test("round trip is bit-identical and the digest survives the files") {
     val budget = 64
@@ -65,43 +79,49 @@ class BinShardsSpec extends AnyFunSuite {
   }
 
   test("torn export: a marker-less dir refuses to read; rewrite heals it") {
-    val budget = 32
-    val packed = packedFrame(budget, 2)
-    val dir = Files.createTempDirectory("binshards-torn-").toString
-    BinShards.write(packed, dir, budget, 2)
-    Files.delete(Paths.get(dir, "_BIN_COMMIT"))
-    val e = intercept[IllegalArgumentException] {
-      BinShards.read(spark, dir)
+    layouts.foreach { case (l, budget) =>
+      val packed = layoutFrame(l, budget, 2)
+      val dir =
+        Files.createTempDirectory(s"binshards-torn-${l.name}-").toString
+      BinShards.writeFrame(l, packed, dir, budget, 2)
+      Files.delete(Paths.get(dir, "_BIN_COMMIT"))
+      val e = intercept[IllegalArgumentException] {
+        BinShards.readFrame(spark, dir, l)
+      }
+      assert(e.getMessage.contains("_BIN_COMMIT"), s"${l.name}: $e")
+      BinShards.writeFrame(l, packed, dir, budget, 2)
+      assert(collectRows(BinShards.readFrame(spark, dir, l)) ==
+        collectRows(packed), l.name)
     }
-    assert(e.getMessage.contains("_BIN_COMMIT"), s"$e")
-    BinShards.write(packed, dir, budget, 2)
-    assert(collectPacked(BinShards.read(spark, dir)) == collectPacked(packed))
   }
 
   test("corrupt index fails loud; narrowed re-export leaves no stale shards") {
-    val budget = 32
-    val packed = packedFrame(budget, 4)
-    val dir = Files.createTempDirectory("binshards-corrupt-").toString
-    BinShards.write(packed, dir, budget, 4)
-    // Flip the magic: the reader must refuse the shard.
-    val idx = Paths.get(dir, "shard-00001.idx")
-    val bytes = Files.readAllBytes(idx)
-    bytes(0) = (bytes(0) ^ 0x7f).toByte
-    Files.write(idx, bytes)
-    // Drop the local-FS checksum sidecar so the reader sees the
-    // corrupted bytes themselves (on HDFS/object stores the block
-    // checksum would catch this first — both paths are loud).
-    Files.deleteIfExists(Paths.get(dir, ".shard-00001.idx.crc"))
-    val e = intercept[Exception] { BinShards.read(spark, dir).collect() }
-    assert(e.getMessage != null && e.getMessage.contains("magic"),
-      s"corrupt idx must fail loud: $e")
-    // Narrowed re-export (4 -> 2 shards): stale shard-00002/3 removed.
-    BinShards.write(packedFrame(budget, 2), dir, budget, 2)
-    assert(!Files.exists(Paths.get(dir, "shard-00002.idx")) &&
-      !Files.exists(Paths.get(dir, "shard-00003.bin")),
-      "stale shards from the wider export must be gone")
-    assert(collectPacked(BinShards.read(spark, dir)) ==
-      collectPacked(packedFrame(budget, 2)))
+    layouts.foreach { case (l, budget) =>
+      val dir =
+        Files.createTempDirectory(s"binshards-corrupt-${l.name}-").toString
+      BinShards.writeFrame(l, layoutFrame(l, budget, 4), dir, budget, 4)
+      // Flip the magic: the reader must refuse the shard.
+      val idx = Paths.get(dir, l.idxName(1))
+      val bytes = Files.readAllBytes(idx)
+      bytes(0) = (bytes(0) ^ 0x7f).toByte
+      Files.write(idx, bytes)
+      // Drop the local-FS checksum sidecar so the reader sees the
+      // corrupted bytes themselves (on HDFS/object stores the block
+      // checksum would catch this first — both paths are loud).
+      Files.deleteIfExists(Paths.get(dir, s".${l.idxName(1)}.crc"))
+      val e = intercept[Exception] {
+        BinShards.readFrame(spark, dir, l).collect()
+      }
+      assert(e.getMessage != null && e.getMessage.contains("magic"),
+        s"${l.name}: corrupt idx must fail loud: $e")
+      // Narrowed re-export (4 -> 2 shards): stale shards 2/3 removed.
+      BinShards.writeFrame(l, layoutFrame(l, budget, 2), dir, budget, 2)
+      assert(!Files.exists(Paths.get(dir, l.idxName(2))) &&
+        !Files.exists(Paths.get(dir, l.binName(3))),
+        s"${l.name}: stale shards from the wider export must be gone")
+      assert(collectRows(BinShards.readFrame(spark, dir, l)) ==
+        collectRows(layoutFrame(l, budget, 2)), l.name)
+    }
   }
 
   test("SFT export: round trip bit-identical, boundary metadata intact, digests survive the files") {
@@ -272,12 +292,8 @@ class BinShardsSpec extends AnyFunSuite {
       "a packed write must sweep the other kind's files")
   }
 
-  private def sftPacked(budget: Int, numShards: Int) = {
-    val docs = GraftSession.table(spark, sf, "documents")
-    val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 16)
-    TrainShuffle.packNoSplitIds(docs, "doc_id", "text", model,
-      numShards, budget = budget)
-  }
+  private def sftPacked(budget: Int, numShards: Int) =
+    layoutFrame(Sft, budget, numShards)
 
   private def collectSft(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -406,32 +422,107 @@ class BinShardsSpec extends AnyFunSuite {
 
   test("write validates the frame: non-dense or oversized sequences are loud") {
     val dir = Files.createTempDirectory("binshards-bad-").toString
-    val gap = Seq((0L, 0L, Array(1, 2), 2L), (0L, 2L, Array(3), 1L))
-      .toDF("shard", "seq", "ids", "n_ids")
-    val e1 = intercept[Exception] { BinShards.write(gap, dir, 2, 1) }
-    assert(e1.getMessage.contains("not dense"), s"$e1")
-    val over = Seq((0L, 0L, Array(1, 2, 3), 3L))
-      .toDF("shard", "seq", "ids", "n_ids")
-    val e2 = intercept[Exception] { BinShards.write(over, dir, 2, 1) }
-    assert(e2.getMessage.contains("n_ids mismatch/over"), s"$e2")
-    val short = Seq((0L, 0L, Array(1), 1L), (0L, 1L, Array(2, 3), 2L))
-      .toDF("shard", "seq", "ids", "n_ids")
-    val e3 = intercept[Exception] { BinShards.write(short, dir, 2, 1) }
-    assert(e3.getMessage.contains("short but not final"), s"$e3")
-    // The ownership claim holds on BOTH exporters: a shard at/past the
-    // declared count would %05d-widen past the name domain every
-    // reader and sweeper matches — invisible files behind a valid
-    // marker. The packed writer refuses via its range claim; the sft
-    // writer must too.
-    val oor = Seq((5L, 0L, Array(1, 2), 2L))
-      .toDF("shard", "seq", "ids", "n_ids")
-    val e4 = intercept[Exception] { BinShards.write(oor, dir, 2, 4) }
-    assert(e4.getMessage.contains("outside"), s"$e4")
-    val oorSft = Seq((5L, 0L, Array(1, 2), 2L, 1L, Array(0L)))
-      .toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts")
-    val e5 = intercept[Exception] {
-      BinShards.writeNoSplit(oorSft, dir, 2, 4)
+    // One row per (shard, unit, ids) in the layout's frame shape; an sft
+    // unit holds one doc starting at 0.
+    def units(l: Layout, rows: (Long, Long, Seq[Int])*) = l match {
+      case Packed => rows.map { case (s, u, ids) =>
+        (s, u, ids, ids.length.toLong) }.toDF(l.columns: _*)
+      case Sft => rows.map { case (s, u, ids) =>
+        (s, u, ids, ids.length.toLong, 1L, Seq(0L)) }.toDF(l.columns: _*)
     }
-    assert(e5.getMessage.contains("outside"), s"$e5")
+    def refused(l: Layout, df: org.apache.spark.sql.DataFrame,
+        numShards: Int, want: String): Unit = {
+      val e = intercept[Exception] {
+        BinShards.writeFrame(l, df, dir, 2, numShards)
+      }
+      assert(e.getMessage.contains(want), s"${l.name}: $e")
+    }
+    Seq(Packed, Sft).foreach { l =>
+      refused(l, units(l, (0L, 0L, Seq(1, 2)), (0L, 2L, Seq(3))), 1,
+        "not dense")
+      refused(l, units(l, (0L, 0L, Seq(1, 2, 3))), 1, "n_ids mismatch/over")
+      // The ownership claim: a shard at/past the declared count would
+      // %05d-widen past the name domain every reader and sweeper
+      // matches — invisible files behind a valid marker.
+      refused(l, units(l, (5L, 0L, Seq(1, 2))), 4, "outside")
+    }
+    refused(Packed, units(Packed, (0L, 0L, Seq(1)), (0L, 1L, Seq(2, 3))), 1,
+      "short but not final")
+    // The sft rows carry their doc starts: ascending inside the bin's
+    // extent, one per doc.
+    refused(Sft, Seq((0L, 0L, Seq(1, 2), 2L, 2L, Seq(1L, 0L)))
+      .toDF(Sft.columns: _*), 1, "starts not ascending")
+    refused(Sft, Seq((0L, 0L, Seq(1, 2), 2L, 2L, Seq(0L)))
+      .toDF(Sft.columns: _*), 1, "n_docs != starts length")
+  }
+
+  test("on-disk format: each layout's files are the documented little-endian encoding") {
+    // Plain little-endian encodings of the fields the scaladoc lists.
+    def i32(vs: Int*): Array[Byte] =
+      vs.flatMap(v => (0 until 4).map(k => (v >>> (8 * k)).toByte)).toArray
+    def i64(vs: Long*): Array[Byte] =
+      vs.flatMap(v => (0 until 8).map(k => (v >>> (8 * k)).toByte)).toArray
+    val utf8 = (s: String) => s.getBytes("UTF-8")
+    val ident = Map("vocab_size" -> "9")
+    // Budget 4, two shards. Packed: shard 0 holds a full sequence and a
+    // short final one (the separator -1 verbatim); shard 1 one short
+    // sequence. Sft: shard 0 holds a two-doc bin and an empty-doc bin,
+    // shard 1 one full bin.
+    val packedRows = Seq((0L, 0L, Seq(1, 2, 3, 4), 4L),
+      (0L, 1L, Seq(-1, 5), 2L), (1L, 0L, Seq(7), 1L))
+    val sftRows = Seq((0L, 0L, Seq(1, 2, 3), 3L, 2L, Seq(0L, 2L)),
+      (0L, 1L, Seq[Int](), 0L, 1L, Seq(0L)),
+      (1L, 0L, Seq(9, -1, 4, 4), 4L, 1L, Seq(0L)))
+    val want: Map[Layout, Map[String, Array[Byte]]] = Map(
+      Packed -> Map(
+        "shard-00000.idx" -> (i32(0x47524654, 1, 4) ++ i64(2, 6) ++
+          i32(4, 2)),
+        "shard-00000.bin" -> i32(1, 2, 3, 4, -1, 5),
+        "shard-00001.idx" -> (i32(0x47524654, 1, 4) ++ i64(1, 1) ++ i32(1)),
+        "shard-00001.bin" -> i32(7)),
+      Sft -> Map(
+        "sft-00000.idx" -> (i32(0x47524653, 1, 4) ++ i64(2, 3, 3) ++
+          i32(3, 0) ++ i32(2, 1) ++ i64(0, 2, 0)),
+        "sft-00000.bin" -> i32(1, 2, 3),
+        "sft-00001.idx" -> (i32(0x47524653, 1, 4) ++ i64(1, 4, 1) ++
+          i32(4) ++ i32(1) ++ i64(0)),
+        "sft-00001.bin" -> i32(9, -1, 4, 4)))
+    def check(l: Layout, dir: String,
+        markers: Map[String, String]): Unit = {
+      val names = Files.list(Paths.get(dir)).toArray.toSeq
+        .map(_.asInstanceOf[java.nio.file.Path].getFileName.toString)
+        .filterNot(_.startsWith(".")).toSet
+      assert(names == want(l).keySet ++ markers.keySet, s"${l.name}: $names")
+      (want(l) ++ markers.map { case (k, v) => k -> utf8(v) }).foreach {
+        case (n, bytes) =>
+          assert(Files.readAllBytes(Paths.get(dir, n)).toSeq == bytes.toSeq,
+            s"${l.name}: $n bytes differ from the documented encoding")
+      }
+    }
+    Seq(Packed -> packedRows.toDF(Packed.columns: _*),
+        Sft -> sftRows.toDF(Sft.columns: _*)).foreach { case (l, frame) =>
+      val kindLine = if (l == Sft) "kind=sft\n" else ""
+      val dir = Files.createTempDirectory(s"binshards-fmt-${l.name}-").toString
+      assert(BinShards.writeFrame(l, frame, dir, 4, 2, resumeToken = "tok",
+        identity = ident) == 2L)
+      check(l, dir, Map(
+        "_BIN_COMMIT" ->
+          s"version=1\n${kindLine}budget=4\nshards=2\nvocab_size=9\n",
+        "_BIN_CONFIG" -> (s"version=1\nkind=${l.name}\nbudget=4\nshards=2\n" +
+          "token=tok\nvocab_size=9\n")))
+      assert(collectRows(BinShards.readFrame(spark, dir, l)) ==
+        collectRows(frame), l.name)
+      // The same frame appended as one managed epoch: the same pair
+      // bytes, plus the family's marker, config and ledger.
+      val root = Files.createTempDirectory(s"binshards-fmtfam-${l.name}-")
+        .toString
+      BinFamily.appendEpochsImpl(l, Seq("e0" -> frame), root, 4, 2, 64, ident)
+      check(l, BinFamily.resolveDir(spark, root), Map(
+        "_BIN_COMMIT" ->
+          s"version=1\n${kindLine}budget=4\nshards=2\nepochs=1\nvocab_size=9\n",
+        "_BIN_CONFIG" -> (s"version=1\nkind=${l.name}-epochs\nbudget=4\n" +
+          "shards=2\ntoken=\nvocab_size=9\n"),
+        "_BIN_EPOCHS" -> "epoch=e0 start=0 span=2 files=2\n"))
+    }
   }
 }
