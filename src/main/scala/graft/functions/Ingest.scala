@@ -1475,7 +1475,8 @@ object Ingest {
   }
 
   /** Fold the current generation into a compacted successor (via the
-    * index family's `compact(src, dest)`) and flip CURRENT. Crash-safe:
+    * index family's `compact(src, dest)`, whose result it returns) and
+    * flip CURRENT. Crash-safe:
     * dying before the flip leaves CURRENT on the old (still-complete)
     * generation and the next trigger re-compacts — the compact functions
     * all `mode("overwrite")` the successor, so a stale partial successor
@@ -1493,12 +1494,12 @@ object Ingest {
     * which at the default thresholds is hundreds of batches away. */
   private[graft] def rollGeneration(
       spark: SparkSession, root: String, curDir: String)(
-      compact: (String, String) => Long): Unit = {
+      compact: (String, String) => Long): Long = {
     val fs = rootFs(spark, root)
     val curName = new Path(curDir).getName
     val curNum = curName.stripPrefix("gen-").toInt
     val nextName = f"gen-${curNum + 1}%05d"
-    compact(curDir, new Path(root, nextName).toString)
+    val compacted = compact(curDir, new Path(root, nextName).toString)
     writeCurrent(fs, new Path(root, "CURRENT"), nextName)
     // Sweep superseded generations EXCEPT the newest one (the grace
     // generation in-flight readers may still be scanning), incl. orphans
@@ -1510,6 +1511,7 @@ object Ingest {
           n.stripPrefix("gen-").toInt < curNum)
         fs.delete(st.getPath, true)
     }
+    compacted
   }
 
   /** Read a persisted chunk index for screening: either an

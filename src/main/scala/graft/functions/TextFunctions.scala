@@ -716,7 +716,7 @@ object TextFunctions {
     * — shared by [[nbClassify]] and the oracle literal dump so both
     * derive from ONE code path (and, at Verify time, one JVM's ln).
     *
-    * MODEL POSTURE (the mix_temperature / repackSequences discipline):
+    * MODEL POSTURE (the mix_temperature discipline):
     * the corpus pays exactly TWO aggregations — the (label, word)
     * occurrence counts and the per-label doc counts — and both collect
     * to the driver, because their results ARE the model: the

@@ -220,47 +220,33 @@ object TrainShuffle {
     val laid = seqPack(enc, "doc_id", "", numShards, budget, salt,
         tokensCol = "n_tokens_bpe", carryCols = Seq("token_ids"))
       .withColumn("n_seqs", max(col("seq_last")).over(wShard) + 1L)
-    gatherSequences(
-      sliceBySequence(laid, Seq("shard", "n_seqs"), col("tok_start"),
-        concat(col("token_ids"), array(lit(sepId))), budget)
-        .filter(col("seq") < col("n_seqs")),
-      Seq("shard", "seq"))
-  }
-
-  /**
-   * The id arrays of `df`, cut at `budget`-sized sequence boundaries:
-   * one row per sequence an array overlaps, where `start` is the
-   * absolute stream position of the array's first id. Emits the `keep`
-   * columns plus `seq` (the sequence), `abs` (the stream position of
-   * the slice's first id) and `part` (the slice). Empty and null arrays
-   * emit nothing. [[gatherSequences]] rebuilds the sequences.
-   */
-  private def sliceBySequence(df: DataFrame, keep: Seq[String],
-      start: Column, ids: Column, budget: Int): DataFrame = {
+    // Each document's ids plus separator, cut at `budget`-sized sequence
+    // boundaries: one slice (`part`) per sequence it overlaps, `abs` the
+    // stream position of the slice's first id (null arrays emit nothing);
+    // each (shard, seq) group then concatenates its slices in stream
+    // order.
     val b = budget.toLong
-    df.select(keep.map(col) :+ start.as("_start") :+ ids.as("_ids"): _*)
+    laid.select(col("shard"), col("n_seqs"), col("tok_start").as("_start"),
+        concat(col("token_ids"), array(lit(sepId))).as("_ids"))
       .filter(size(col("_ids")) > 0)
       .withColumn("_end", col("_start") + size(col("_ids")))
       .withColumn("_k", explode(sequence(expr(s"_start div $b"),
         expr(s"(_end - 1) div $b"))))
       .withColumn("abs", greatest(col("_start"), col("_k") * b))
-      .select(keep.map(col) :+ expr(s"abs div $b").as("seq") :+ col("abs") :+
+      .select(col("shard"), col("n_seqs"), expr(s"abs div $b").as("seq"),
+        col("abs"),
         slice(col("_ids"), (col("abs") - col("_start") + 1).cast("int"),
           (least(col("_end"), (col("_k") + 1L) * b) - col("abs"))
-            .cast("int")).as("part"): _*)
-  }
-
-  /** Groups [[sliceBySequence]] rows by `keys` and concatenates each
-    * group's slices in stream order: `keys` plus `ids` and its length
-    * `n_ids`, both non-null as a token-level rebuild made them. */
-  private def gatherSequences(slices: DataFrame, keys: Seq[String]): DataFrame =
-    slices.groupBy(keys.map(col): _*)
+            .cast("int")).as("part"))
+      .filter(col("seq") < col("n_seqs"))
+      .groupBy(col("shard"), col("seq"))
       .agg(array_sort(collect_list(struct(col("abs"), col("part"))))
         .as("parts"))
-      .select(keys.map(col) :+ coalesce(
+      .select(col("shard"), col("seq"), coalesce(
         flatten(transform(col("parts"), p => p.getField("part"))),
-        typedLit(Array.empty[Int])).as("ids"): _*)
+        typedLit(Array.empty[Int])).as("ids"))
       .withColumn("n_ids", size(col("ids")).cast("long"))
+  }
 
   /**
    * Per-sequence SEGMENT table of the [[seqPack]] layout — the
@@ -837,144 +823,6 @@ object TrainShuffle {
         .select(lit(salt).as("epoch"), col("shard"), col("n_seqs"),
           col("n_ids"), col("sum_digest"), col("xor_digest"))
     }.reduce(_ unionByName _)
-  }
-
-  /**
-   * Re-chunk an already-packed frame's token streams into a FRESH
-   * canonical packed layout — the compaction primitive of the managed
-   * binary-export family ([[graft.sources.BinFamily]]): an
-   * epoch-appended artifact accumulates one short unpadded tail per
-   * appended epoch and an ever-growing shard count; folding
-   * concatenates the artifact's id streams in (shard, seq) order into
-   * one logical stream (in-band separators ride along verbatim — the
-   * ids are ALREADY encoded, so compaction never re-pays the corpus
-   * encode) and re-chunks it into `budget`-sized sequences dealt into
-   * at most `numShards` dense shards of contiguous sequence ranges.
-   * Only the globally-final sequence can be short, and it lands as the
-   * last sequence of the last shard — the packed `.idx` invariant
-   * (budget-aligned O(1) seeks) is restored for the whole artifact.
-   * Total id count and stream ORDER are preserved exactly; sequence
-   * boundaries move only at the old epoch seams.
-   *
-   * Input contract: `packed` must itself satisfy the packed invariant
-   * (per shard: dense seqs, every non-final exactly `budget` ids) —
-   * [[graft.sources.BinShards.read]] output always does (the packed
-   * layout's idx parse enforces it file-side); VALIDATED here anyway
-   * per shard from the same bounded rollup that sizes the layout, so
-   * a hand-built frame fails loud instead of silently misaligning.
-   *
-   * Scale shape: within a shard the invariant makes seq `s` start at
-   * offset `s*budget` — NO window anywhere; the cross-shard base
-   * offsets are a one-row-per-shard rollup collected to the driver
-   * (bounded by [[graft.sources.BinShards.MaxShards]]) and broadcast
-   * back. Each input sequence moves as the one or two slices its
-   * output sequences take of it (not as exploded ids), gathered into
-   * budget-bounded groups on ONE shuffle — [[packIdSequencesEnc]]'s
-   * segment posture and helper.
-   *
-   * Output: (shard, seq, ids, n_ids) — a frame
-   * [[graft.sources.BinShards.write]] accepts verbatim.
-   */
-  def repackSequences(packed: DataFrame, budget: Int,
-      numShards: Int): DataFrame = {
-    require(budget > 0,
-      s"repackSequences: budget must be positive, got $budget")
-    require(numShards > 0,
-      s"repackSequences: numShards must be positive, got $numShards")
-    val spark = packed.sparkSession
-    import spark.implicits._
-    // ONE bounded rollup: per input shard, the id total (sizes the
-    // cross-shard base offsets) plus the invariant witnesses — dense
-    // seq numbering, nothing over budget, every non-final seq full
-    // (total minus the FINAL seq's length must be exactly
-    // (count-1)*budget).
-    val meta = packed.groupBy("shard").agg(
-        sum("n_ids").as("t"), count(lit(1)).as("c"),
-        (max("seq") + 1L).as("m"), max("n_ids").as("mx"),
-        min("n_ids").as("mn"),
-        max(struct(col("seq"), col("n_ids"))).getField("n_ids").as("fl"))
-      .orderBy("shard")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6)))
-    require(meta.nonEmpty, "repackSequences: empty packed frame")
-    meta.foreach { case (s, t, c, m, mx, mn, fl) =>
-      require(c == m && mx <= budget && mn > 0 &&
-          t - fl == (c - 1L) * budget,
-        s"repackSequences: input shard $s violates the packed invariant " +
-          s"(dense seqs, all non-final exactly $budget ids) — " +
-          s"n_seqs=$c max_seq+1=$m max_len=$mx min_len=$mn " +
-          s"total=$t final_len=$fl")
-    }
-    val total = meta.map(_._2).sum
-    val bases = meta.map(_._2).scanLeft(0L)(_ + _).dropRight(1)
-    val nSeqsOut = (total + budget - 1) / budget
-    val perShard = (nSeqsOut + numShards - 1) / numShards
-    val baseDf = broadcast(
-      spark.createDataset(meta.map(_._1).zip(bases).toSeq)
-        .toDF("shard", "base"))
-    // An input sequence overlaps at most two output sequences, so it
-    // moves as one or two slices; `seq` below is the global output
-    // sequence, dealt into shards of `perShard` contiguous sequences.
-    gatherSequences(
-      sliceBySequence(packed.join(baseDf, "shard"), Nil,
-        col("base") + col("seq") * budget.toLong, col("ids"), budget),
-      Seq("seq"))
-      .select(expr(s"seq div $perShard").as("shard"),
-        (col("seq") % perShard).as("seq"), col("ids"), col("n_ids"))
-  }
-
-  /**
-   * Canonical RE-LAYOUT of a [[packNoSplitIds]] frame into a dense
-   * `numShards`-shard successor — the SFT fold's compaction primitive,
-   * [[repackSequences]]'s posture for padded bins. Bins are
-   * SELF-CONTAINED training units (doc boundaries ride inside), so
-   * compaction only RENUMBERS them densely in (shard, bin) order —
-   * global bin `g = base(shard) + bin`, out shard `g div perBins`, out
-   * bin `g % perBins`, `perBins = ceil(totalBins / numShards)` — and
-   * never re-packs, re-bins or re-encodes: every bin's (ids, starts)
-   * payload passes through byte-identical. A fold therefore preserves
-   * the bin MULTISET exactly (ids, n_ids, n_docs, starts all
-   * unchanged per bin), and only the (shard, bin) addressing moves.
-   *
-   * Input contract: dense bins per shard (the [[packNoSplitIds]] /
-   * [[graft.sources.BinShards.readNoSplit]] invariant) — validated
-   * from the same bounded one-row-per-shard rollup that sizes the
-   * cross-shard bases (collected bounded by
-   * [[graft.sources.BinShards.MaxShards]], broadcast back). No window,
-   * no explode — the re-layout is a projection.
-   *
-   * Output: (shard, bin, ids, n_ids, n_docs, starts) — a frame
-   * [[graft.sources.BinShards.writeNoSplit]] accepts verbatim.
-   */
-  def relayoutBins(packed: DataFrame, numShards: Int): DataFrame = {
-    require(numShards > 0,
-      s"relayoutBins: numShards must be positive, got $numShards")
-    val spark = packed.sparkSession
-    import spark.implicits._
-    val meta = packed.groupBy("shard")
-      .agg(count(lit(1)).as("c"), (max("bin") + 1L).as("m"))
-      .orderBy("shard")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    require(meta.nonEmpty, "relayoutBins: empty packed frame")
-    meta.foreach { case (s, c, m) =>
-      require(c == m,
-        s"relayoutBins: input shard $s bins not dense ($c rows, " +
-          s"max bin + 1 = $m) — not a packNoSplitIds frame")
-    }
-    val total = meta.map(_._2).sum
-    val bases = meta.map(_._2).scanLeft(0L)(_ + _).dropRight(1)
-    val perBins = (total + numShards - 1) / numShards
-    val baseDf = broadcast(
-      spark.createDataset(meta.map(_._1).zip(bases).toSeq)
-        .toDF("shard", "base"))
-    packed.join(baseDf, "shard")
-      .select((col("base") + col("bin")).as("g"), col("ids"),
-        col("n_ids"), col("n_docs"), col("starts"))
-      .select(expr(s"g div $perBins").as("shard"),
-        (col("g") % perBins).as("bin"), col("ids"), col("n_ids"),
-        col("n_docs"), col("starts"))
   }
 
   /**

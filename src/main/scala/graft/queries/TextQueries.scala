@@ -1451,13 +1451,13 @@ private[graft] object TextQueries {
     rendered("bin_fold_digest", (s, dir) => {
       // The managed family's FOLD + post-fold append: three batches at
       // compactEvery=2 — e0 and e1 append into reserved spans, the
-      // fold re-chunks the generation's id STREAMS (repackSequences —
-      // compaction never re-encodes) into a dense successor and flips
-      // CURRENT, then e2 appends onto the folded generation at the
-      // carried-forward shard base. The digest rows re-read the final
-      // generation's bytes; the oracle replays both batch layouts,
-      // re-chunks their concatenated kept streams with the exact
-      // ceil-division arithmetic repackSequences uses, and shifts the
+      // fold copies the generation's id STREAMS by byte range
+      // (BinShards.fold — compaction never re-encodes) into a dense
+      // successor and flips CURRENT, then e2 appends onto the folded
+      // generation at the carried-forward shard base. The digest rows
+      // re-read the final generation's bytes; the oracle replays both
+      // batch layouts, re-chunks their concatenated kept streams with
+      // the exact ceil-division arithmetic the fold uses, and shifts the
       // third layout past the folded shard count.
       val docs = GraftSession.table(s, dir, "documents")
       val model = graft.functions.Bpe.bpeTrain(docs, "text", numMerges = 40)
@@ -1481,7 +1481,7 @@ private[graft] object TextQueries {
       // bin_fold_digest: the fold replay — e0/e1's kept streams are
       // concatenated in generation-shard order (cross-shard bases =
       // prefix sums of kept id counts), re-chunked at 256 and dealt into
-      // ceil-division shard groups EXACTLY as repackSequences does, then
+      // ceil-division shard groups EXACTLY as BinShards.fold does, then
       // e2's layout is shifted past the folded shard count. Gates the
       // compaction arithmetic end to end from the final artifact's bytes.
       val tails = Seq(

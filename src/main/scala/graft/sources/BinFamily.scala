@@ -41,10 +41,11 @@ import org.apache.spark.sql.functions._
  * point seeks stay valid per shard.
  *
  * Fold contract: once the generation holds >= `compactEvery` committed
- * epochs, it is compacted — [[graft.ops.TrainShuffle.repackSequences]]
- * re-chunks the generation's id STREAMS (already encoded; compaction
- * never re-encodes) into a dense canonical successor generation of at
- * most `shardsPerEpoch` shards, and `CURRENT` flips. Superseded
+ * epochs, it is compacted — [[BinShards.fold]] copies the generation's
+ * bytes (already encoded; compaction never re-encodes) by range into a
+ * dense canonical successor generation of at most `shardsPerEpoch`
+ * shards: packed sequences re-chunk at `budget`, sft bins renumber
+ * densely. Then `CURRENT` flips. Superseded
  * generations follow the family's one-roll grace contract (the
  * just-superseded generation survives until the NEXT roll for in-flight
  * readers).
@@ -57,7 +58,8 @@ import org.apache.spark.sql.functions._
  * ledger INTERSECTED with the root markers (a ledger entry without its
  * root marker is a crashed append and is swept). A crash mid-FOLD
  * leaves `CURRENT` on the old, still-complete generation; the next
- * append re-triggers the fold into the same successor (full overwrite).
+ * append re-triggers the fold, which clears the successor and rebuilds
+ * it from the unchanged old generation's bytes.
  * Single logical writer per root assumed, as for every managed family.
  */
 object BinFamily {
@@ -129,11 +131,6 @@ object BinFamily {
     try out.write(config.getBytes("UTF-8")) finally out.close()
   }
 
-  private def countShardFiles(fs: FileSystem, gen: String,
-      layout: BinShards.Layout): Long =
-    fs.listStatus(new Path(gen))
-      .count(st => layout.IdxFile.matches(st.getPath.getName)).toLong
-
   private def stampCommit(fs: FileSystem, gen: String,
       layout: BinShards.Layout, budget: Int, shards: Long, epochs: Long,
       identity: Map[String, String]): Unit = {
@@ -194,7 +191,9 @@ object BinFamily {
    *
    * Returns the CURRENT generation's shard-file count after the last
    * newly-applied epoch (post-fold when one fired), or -1 when every
-   * epoch was already committed (the replayed-batch no-op).
+   * epoch was already committed (the replayed-batch no-op). A caller
+   * that needs each epoch committed before the next one starts calls
+   * [[appendEpoch]] once per epoch instead.
    */
   def appendEpochs(batches: Seq[(String, DataFrame)], root: String,
       budget: Int, shardsPerEpoch: Int, compactEvery: Int = 64,
@@ -211,11 +210,10 @@ object BinFamily {
    * replay, and config gate, over the `sft-*` file pair layout
    * ([[BinShards.writeNoSplit]]'s format, commit marker `kind=sft`
    * so every kind-dispatched reader/TVF resolves the managed root
-   * correctly). The fold RE-LAYOUTS bins densely
-   * ([[graft.ops.TrainShuffle.relayoutBins]] — bins are
-   * self-contained training units, so compaction renumbers them and
-   * never re-packs or re-encodes; each bin's ids and doc-boundary
-   * starts ride through byte-identical).
+   * correctly). The fold RE-LAYOUTS bins densely ([[BinShards.fold]] —
+   * bins are self-contained training units, so compaction renumbers
+   * them and never re-packs or re-encodes; each bin's ids and
+   * doc-boundary starts ride through byte-identical).
    */
   def appendEpochSft(packedBatch: DataFrame, root: String, budget: Int,
       shardsPerEpoch: Int, epochId: String, compactEvery: Int = 64,
@@ -233,15 +231,8 @@ object BinFamily {
 
   /** At most this many epoch exports in flight per group (guide §2.6:
     * 2-3 concurrent jobs back-fill stage tails without fighting for
-    * executors; each export is itself a full-width Spark job).
-    * Overridable per session via `spark.graft.appendEpochs.maxConcurrent`
-    * (1 = strictly serial exports, the pre-round-18 behavior). */
+    * executors; each export is itself a full-width Spark job). */
   private val MaxConcurrentEpochExports = 3
-
-  private def maxConcurrent(spark: SparkSession): Int =
-    math.max(1, spark.conf
-      .get("spark.graft.appendEpochs.maxConcurrent",
-        MaxConcurrentEpochExports.toString).toInt)
 
   /** The one append loop behind the four public entry points, for
     * either binary layout. */
@@ -357,7 +348,7 @@ object BinFamily {
         } finally sc.setJobDescription(callerDescription)
       }
       graft.DriverActions.runAll(sc,
-        group.indices.map(i => () => exportOne(i)), maxConcurrent(spark))
+        group.indices.map(i => () => exportOne(i)), MaxConcurrentEpochExports)
       // ONE post-export listing serves every count — on object storage
       // a wide generation's listing is the append's dominant fixed
       // cost, so it must not run once per epoch over an unchanged dir.
@@ -378,30 +369,26 @@ object BinFamily {
       group.foreach { case (epochId, _) =>
         fs.create(new Path(markersDir, epochId), true).close() }
       result =
-        if (epochCount >= compactEvery) {
-          // Fold: re-chunk / re-layout (NEVER re-encode) into a dense
+        if (epochCount >= compactEvery)
+          // Fold: copy by byte range (NEVER re-encode) into a dense
           // canonical successor and flip CURRENT. A crash mid-fold
           // leaves CURRENT on the old complete generation; the next
           // append re-triggers.
           graft.functions.Ingest.rollGeneration(spark, root, genDir) {
             (src, dest) =>
-              val w = BinShards.writeFrame(layout,
-                layout.fold(BinShards.readFrame(spark, src, layout), budget,
-                  shardsPerEpoch),
-                dest, budget, shardsPerEpoch, identity = identity)
-              // Post-stamp the successor as a family generation: the
-              // fold base entry carries the dense shard count forward,
-              // the config flips to the family form so the next
-              // append's gate matches, and the marker gains the
-              // family's epochs field.
+              val w = BinShards.fold(spark, layout, src, dest, budget,
+                shardsPerEpoch)
+              // Stamp the successor as a family generation: the fold
+              // base entry carries the dense shard count forward, the
+              // config is the family's so the next append's gate
+              // matches, and the marker lands last.
               val dfs = BinShards.fsOf(dest, confSer.value)
               writeEpochs(dfs, dest, Seq(EpochEntry(FoldedEpoch, 0L, w, w)))
               writeConfig(dfs, dest, config)
               stampCommit(dfs, dest, layout, budget, w, 0L, identity)
               w
           }
-          countShardFiles(fs, resolveDir(spark, root), layout)
-        } else totalFiles
+        else totalFiles
     }
     result
   }

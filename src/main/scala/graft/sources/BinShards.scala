@@ -109,11 +109,11 @@ object BinShards {
    * One of the two binary layouts: everything the packed (`shard-*`,
    * `GRFT`) and no-split (`sft-*`, `GRFS`) formats differ in — file
    * names, header, idx parse and encoding, the per-unit row checks, the
-   * frame columns, the marker and config kind strings, and the
-   * primitives that produce, fold and digest the frame. [[Layout.of]]
-   * (a commit marker) and [[Layout.named]] (a `kind` argument) are the
-   * only dispatch points; the shared bodies call these members and never
-   * branch on the layout.
+   * frame columns, the marker and config kind strings, the byte slices
+   * a fold copies, and the primitives that produce and digest the
+   * frame. [[Layout.of]] (a commit marker) and [[Layout.named]] (a
+   * `kind` argument) are the only dispatch points; the shared bodies
+   * call these members and never branch on the layout.
    */
   private[graft] sealed abstract class Layout(
       // The `kind` argument and the `_BIN_CONFIG` kind.
@@ -187,8 +187,20 @@ object BinShards {
         model: graft.functions.Bpe.TokenizerModel, numShards: Int,
         budget: Int, salt: String = "shuf"): DataFrame
 
-    /** Compact a frame into a dense `numShards`-shard successor. */
-    def fold(frame: DataFrame, budget: Int, numShards: Int): DataFrame
+    /** The count a [[fold]] sizes its output in (packed: ids, sft:
+      * bins), read from a header after [[header]]. */
+    private[sources] def foldCount(h: ByteBuffer): Long
+
+    /** How many [[foldCount]] units one output unit holds: a fold
+      * deals whole output units to shards. */
+    private[sources] def foldUnit(budget: Int): Int
+
+    /** Fold: units `[a, b)` of one parsed input. Appends the entries
+      * they add to the output's length and starts tables and returns
+      * their byte range `[from, to)` in the input `.bin`. */
+    private[sources] def foldSlice(idx: Idx, a: Long, b: Long,
+        budget: Int, lens: ArrayBuffer[Int],
+        starts: ArrayBuffer[Array[Long]]): (Long, Long)
 
     /** The per-shard integrity digest of a frame. */
     def digest(frame: DataFrame, budget: Int): DataFrame
@@ -274,8 +286,27 @@ object BinShards {
       TrainShuffle.packIdSequences(df, idCol, textCol, model, numShards,
         budget, salt)
 
-    def fold(frame: DataFrame, budget: Int, numShards: Int): DataFrame =
-      TrainShuffle.repackSequences(frame, budget, numShards)
+    private[sources] def foldCount(h: ByteBuffer): Long = {
+      h.getLong() // n_seqs
+      h.getLong() // n_ids
+    }
+
+    private[sources] def foldUnit(budget: Int): Int = budget
+
+    /** Re-chunks as it goes: tops up the open sequence, then opens
+      * `budget`-sized ones, so only the stream's final one is short. */
+    private[sources] def foldSlice(idx: Idx, a: Long, b: Long,
+        budget: Int, lens: ArrayBuffer[Int],
+        starts: ArrayBuffer[Array[Long]]): (Long, Long) = {
+      var n = b - a
+      while (n > 0) {
+        if (lens.isEmpty || lens.last == budget) lens += 0
+        val t = math.min(n, (budget - lens.last).toLong).toInt
+        lens(lens.length - 1) += t
+        n -= t
+      }
+      (4L * a, 4L * b)
+    }
 
     def digest(frame: DataFrame, budget: Int): DataFrame =
       TrainShuffle.packDigest(frame, budget)
@@ -366,8 +397,27 @@ object BinShards {
       TrainShuffle.packNoSplitIds(df, idCol, textCol, model, numShards,
         budget, salt)
 
-    def fold(frame: DataFrame, budget: Int, numShards: Int): DataFrame =
-      TrainShuffle.relayoutBins(frame, numShards)
+    private[sources] def foldCount(h: ByteBuffer): Long =
+      h.getLong() // n_bins
+
+    private[sources] def foldUnit(budget: Int): Int = 1
+
+    /** Renumbers: whole bins, their lengths and starts as they are. */
+    private[sources] def foldSlice(idx: Idx, a: Long, b: Long,
+        budget: Int, lens: ArrayBuffer[Int],
+        starts: ArrayBuffer[Array[Long]]): (Long, Long) = {
+      val (ai, bi) = (a.toInt, b.toInt)
+      val from = idx.lens.iterator.take(ai).map(_.toLong).sum
+      var doc = idx.rest.position() +
+        8 * idx.docCounts.iterator.take(ai).map(_.toLong).sum
+      (ai until bi).foreach { j =>
+        lens += idx.lens(j)
+        starts += Array.tabulate(idx.docCounts(j))(d =>
+          idx.rest.getLong((doc + 8L * d).toInt))
+        doc += 8L * idx.docCounts(j)
+      }
+      (4L * from, 4L * (from + idx.lens.slice(ai, bi).map(_.toLong).sum))
+    }
 
     def digest(frame: DataFrame, budget: Int): DataFrame =
       TrainShuffle.packNoSplitDigest(frame, budget)
@@ -379,20 +429,48 @@ object BinShards {
     * bin size exactly 4*n_ids. Validation failures of any kind
     * (truncated, foreign, corrupt) just mean "rewrite it". */
   private def validPair(layout: Layout, fs: FileSystem, dir: String,
-      s: Long, budget: Int, numShards: Int): Boolean = {
-    if (s >= numShards) return false
-    val idxPath = new Path(dir, layout.idxName(s))
-    val binPath = new Path(dir, layout.binName(s))
-    try {
-      if (!fs.exists(idxPath) || !fs.exists(binPath)) return false
-      val len = fs.getFileStatus(idxPath).getLen
-      if (len < layout.headerBytes || len > (1L << 31) - 1) return false
-      val bytes = new Array[Byte](len.toInt)
-      val in = fs.open(idxPath)
-      try in.readFully(0L, bytes) finally in.close()
-      val idx = layout.parse(bytes, len, idxPath.toString)
-      idx.budget == budget && fs.getFileStatus(binPath).getLen == 4L * idx.nIds
-    } catch { case _: Exception => false }
+      s: Long, budget: Int, numShards: Int): Boolean =
+    s < numShards && (try {
+      readPair(layout, fs, new Path(dir, layout.idxName(s)), "")._1.budget ==
+        budget
+    } catch { case _: Exception => false })
+
+  /** One pair's idx, read whole and validated by [[Layout.parse]], and
+    * its `.bin` path, whose size is checked against `n_ids` — the one
+    * pair check behind the bulk reader, the resume keep-test and the
+    * fold. */
+  private def readPair(layout: Layout, fs: FileSystem, idxPath: Path,
+      fn: String): (Idx, Path) = {
+    val len = fs.getFileStatus(idxPath).getLen
+    require(len >= layout.headerBytes && len <= (1L << 31) - 1,
+      s"$fn: $idxPath header/size out of range ($len bytes) — truncated, " +
+        "or a shard far past the one-training-file contract (re-shard the " +
+        "export)")
+    val bytes = new Array[Byte](len.toInt)
+    val in = fs.open(idxPath)
+    try in.readFully(0L, bytes) finally in.close()
+    val idx = layout.parse(bytes, len, s"$fn: $idxPath")
+    val binPath = new Path(idxPath.toString.stripSuffix(".idx") + ".bin")
+    require(fs.getFileStatus(binPath).getLen == 4L * idx.nIds,
+      s"$fn: $binPath size != 4 * n_ids")
+    (idx, binPath)
+  }
+
+  /** Land one shard pair: `idxBytes` go to a temp file, then both temps
+    * rename over the final names — a re-run or a speculative attempt
+    * replaces files one by one and never interleaves bytes. Shared by
+    * the exporter and the fold. */
+  private def commitPair(fs: FileSystem, dir: String, layout: Layout,
+      shard: Long, attempt: Long, tmpBin: Path, idxBytes: Array[Byte],
+      fn: String): Unit = {
+    val tmpIdx = new Path(dir, s".tmp-$attempt-${layout.idxName(shard)}")
+    val io = fs.create(tmpIdx, true)
+    try io.write(idxBytes) finally io.close()
+    val finBin = new Path(dir, layout.binName(shard))
+    val finIdx = new Path(dir, layout.idxName(shard))
+    fs.delete(finBin, false); fs.delete(finIdx, false)
+    require(fs.rename(tmpBin, finBin) && fs.rename(tmpIdx, finIdx),
+      s"$fn: rename failed for shard $shard")
   }
 
   /** Run the resume keep-test over the candidate shard numbers. Small
@@ -693,17 +771,9 @@ object BinShards {
           buf.putInt(v)
         }
         def closeShard(): Unit = if (shard != Long.MinValue) {
-          val fsx = fsOf(dir, conf)
           flushBuf(); out.close(); out = null
-          val idxBytes = layout.encodeIdx(budget, lens, nIds, starts)
-          val tmpIdx = new Path(dir, s".tmp-$attempt-${layout.idxName(shard)}")
-          val io = fsx.create(tmpIdx, true)
-          try io.write(idxBytes) finally io.close()
-          val finBin = new Path(dir, layout.binName(shard))
-          val finIdx = new Path(dir, layout.idxName(shard))
-          fsx.delete(finBin, false); fsx.delete(finIdx, false)
-          require(fsx.rename(tmpBin, finBin) && fsx.rename(tmpIdx, finIdx),
-            s"$fn: rename failed for shard $shard")
+          commitPair(fsOf(dir, conf), dir, layout, shard, attempt, tmpBin,
+            layout.encodeIdx(budget, lens, nIds, starts), fn)
         }
         it.foreach { r =>
           val s = r.getLong(0)
@@ -729,6 +799,98 @@ object BinShards {
         }
         closeShard()
       }
+  }
+
+  /**
+   * Fold the committed generation `src` into a dense successor of at most
+   * `numShards` pairs under `dest` by byte range — the managed family's
+   * compaction ([[BinFamily]]). The format fixes every output byte:
+   *  - packed: the `.bin` files in shard-number order are one stream of
+   *    T ids, re-chunked into `nOut = ceil(T/budget)` sequences dealt
+   *    `per = ceil(nOut/numShards)` to a shard, so output shard k is the
+   *    stream's byte range `[4·k·per·budget, 4·min((k+1)·per·budget, T))`;
+   *  - sft: the B bins renumber densely, `per = ceil(B/numShards)` to a
+   *    shard, each with its slices of the input idx sections.
+   * Sizing reads only the input idx headers; then ONE job runs a task per
+   * output shard, which validates every input pair it overlaps in full
+   * and streams its range into a temp pair ([[commitPair]]). `dest` is
+   * cleared first, so a torn successor is rebuilt, never trusted. Returns
+   * the pair count; the caller stamps the marker last.
+   */
+  private[sources] def fold(spark: SparkSession, layout: Layout, src: String,
+      dest: String, budget: Int, numShards: Int): Long = {
+    val fn = s"${layout.appender} fold"
+    val confSer = new org.apache.spark.SerializableWritable(
+      spark.sparkContext.hadoopConfiguration)
+    val fs = fsOf(src, confSer.value)
+    require(fs.exists(new Path(src, CommitMarker)),
+      s"$fn: no $CommitMarker under $src — torn or foreign generation")
+    val inputs = fs.listStatus(new Path(src))
+      .filter(st => layout.IdxFile.matches(st.getPath.getName))
+      .sortBy(_.getPath.getName)
+    val counts = inputs.map { st =>
+      val p = st.getPath
+      require(st.getLen >= layout.headerBytes, s"$fn: $p truncated header")
+      val bytes = new Array[Byte](layout.headerBytes)
+      val in = fs.open(p)
+      try in.readFully(0L, bytes) finally in.close()
+      val c = layout.foldCount(layout.header(bytes, s"$fn: $p")._1)
+      // Every input must overlap some task, or its full check never runs.
+      require(c > 0, s"$fn: $p holds no ${layout.units}")
+      c
+    }
+    val bases = counts.scanLeft(0L)(_ + _)
+    val total = bases.last
+    val q = layout.foldUnit(budget).toLong
+    val per = ((total + q - 1) / q + numShards - 1) / numShards * q
+    val nOut = if (total == 0L) 0 else ((total + per - 1) / per).toInt
+    val destPath = new Path(dest)
+    val dfs = fsOf(dest, confSer.value)
+    dfs.delete(destPath, true)
+    dfs.mkdirs(destPath)
+    val srcNames = inputs.map(_.getPath.toString)
+    if (nOut > 0) spark.sparkContext.parallelize(0 until nOut, nOut).foreach {
+      k =>
+        val fsx = fsOf(dest, confSer.value)
+        val attempt = org.apache.spark.TaskContext.get().taskAttemptId()
+        val (lo, hi) = (k * per, math.min((k + 1) * per, total))
+        val tmpBin = new Path(dest, s".tmp-$attempt-${layout.binName(k)}")
+        val out = fsx.create(tmpBin, true)
+        // A failing task must not leak the temp handle (the exporter's
+        // posture); the orphan temp file dies with the next clear.
+        org.apache.spark.TaskContext.get()
+          .addTaskCompletionListener[Unit] { _ =>
+            try out.close() catch { case _: Exception => }
+          }
+        val lens = ArrayBuffer.empty[Int]
+        val starts = ArrayBuffer.empty[Array[Long]]
+        val buf = new Array[Byte](1 << 16)
+        srcNames.indices.filter(i => bases(i) < hi && bases(i + 1) > lo)
+          .foreach { i =>
+            val idxPath = new Path(srcNames(i))
+            val (idx, binPath) = readPair(layout, fsx, idxPath, fn)
+            require(idx.budget == budget, s"$fn: $idxPath budget " +
+              s"${idx.budget} is not the family's $budget")
+            val (from, to) = layout.foldSlice(idx, math.max(lo - bases(i), 0L),
+              math.min(hi, bases(i + 1)) - bases(i), budget, lens, starts)
+            val in = fsx.open(binPath)
+            try {
+              in.seek(from)
+              var left = to - from
+              while (left > 0) {
+                val n = math.min(left, buf.length.toLong).toInt
+                in.readFully(buf, 0, n)
+                out.write(buf, 0, n)
+                left -= n
+              }
+            } finally in.close()
+          }
+        out.close()
+        commitPair(fsx, dest, layout, k, attempt, tmpBin,
+          layout.encodeIdx(budget, lens, lens.iterator.map(_.toLong).sum,
+            starts), fn)
+    }
+    nOut.toLong
   }
 
   /**
@@ -784,22 +946,7 @@ object BinShards {
             s"$fn: unexpected shard file name $other")
         }
         val fsx = fsOf(idxPath, conf)
-        val idxSt = fsx.getFileStatus(new Path(idxPath))
-        require(idxSt.getLen >= layout.headerBytes &&
-            idxSt.getLen <= (1L << 31) - 1,
-          s"$fn: $idxPath header/size out of range " +
-            s"(${idxSt.getLen} bytes) — truncated, or a shard far past " +
-            "the one-training-file contract (re-shard the export)")
-        val idxBytes = new Array[Byte](idxSt.getLen.toInt)
-        val in = fsx.open(new Path(idxPath))
-        in.readFully(0L, idxBytes); in.close()
-        // The ONE shared validation implementation (the layout's parse)
-        // — the resume keep-test wraps the same parse, so the two can
-        // never drift on a format change.
-        val idx = layout.parse(idxBytes, idxSt.getLen, s"$fn: $idxPath")
-        val binPath = new Path(idxPath.stripSuffix(".idx") + ".bin")
-        require(fsx.getFileStatus(binPath).getLen == 4L * idx.nIds,
-          s"$fn: $binPath size != 4 * n_ids")
+        val (idx, binPath) = readPair(layout, fsx, new Path(idxPath), fn)
         val bin = fsx.open(binPath)
         var binClosed = false
         def closeBin(): Unit = if (!binClosed) { binClosed = true; bin.close() }

@@ -7,11 +7,11 @@ import graft.sources.{BinFamily, BinShards}
 
 /**
  * In-JVM A/B of [[graft.sources.BinFamily.appendEpochs]]' concurrent
- * epoch exports vs the serial replay (the
- * `spark.graft.appendEpochs.maxConcurrent` knob): alternating
- * serial/concurrent reps inside ONE session, so box-level load drift —
- * this sandbox swings ±30% between JVMs — cancels out of the
- * comparison. Run:
+ * epoch exports vs the serial replay (one `appendEpoch` call per epoch,
+ * which the batch call's contract makes byte-equivalent), over each
+ * layout's fold chain: alternating serial/batch reps inside ONE session,
+ * so load drift between JVMs (up to 30% under CPU steal) cancels out
+ * of the comparison. Run:
  *
  *   sbt "runMain graft.tools.ProfileBinAppend /root/testdata/sf0.1 3"
  */
@@ -35,33 +35,36 @@ object ProfileBinAppend {
         .forEach(f => java.nio.file.Files.deleteIfExists(f))
     }
 
-    // Per layout, the fold chain: two epochs, the fold, a third epoch.
-    def runOnce(layout: BinShards.Layout, conc: Int): Double = {
+    // Per layout, the fold chain: two epochs, the fold, a third epoch —
+    // as one batch call, or as one call per epoch.
+    def runOnce(layout: BinShards.Layout, batch: Boolean): Double = {
       clear()
       GraftCaches.clearAll()
       spark.catalog.clearCache()
       System.gc()
-      spark.conf.set("spark.graft.appendEpochs.maxConcurrent", conc.toString)
+      val epochs = (0 to 2).map { e =>
+        s"e$e" -> layout.pack(docs.filter(col("doc_id") % 3 === e),
+          "doc_id", "text", model, numShards = 8, budget = 256,
+          salt = s"e$e")
+      }
+      def append(es: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit =
+        BinFamily.appendEpochsImpl(layout, es, root, budget = 256,
+          shardsPerEpoch = 8, compactEvery = 2, identity = Map.empty)
       val t0 = System.nanoTime()
-      BinFamily.appendEpochsImpl(layout,
-        (0 to 2).map { e =>
-          s"e$e" -> layout.pack(docs.filter(col("doc_id") % 3 === e),
-            "doc_id", "text", model, numShards = 8, budget = 256,
-            salt = s"e$e")
-        }, root, budget = 256, shardsPerEpoch = 8, compactEvery = 2,
-        identity = Map.empty)
+      if (batch) append(epochs) else epochs.foreach(e => append(Seq(e)))
       (System.nanoTime() - t0) / 1e9
     }
 
     BinShards.Layout.all.foreach { layout =>
       val name = s"${layout.name} fold-chain(e0,e1,fold,e2)"
-      runOnce(layout, 1) // warmup
+      runOnce(layout, batch = false) // warmup
       val out = (1 to reps).flatMap { _ =>
-        Seq(1 -> runOnce(layout, 1), 3 -> runOnce(layout, 3))
+        Seq("serial" -> runOnce(layout, batch = false),
+          "batch" -> runOnce(layout, batch = true))
       }
-      Seq(1, 3).foreach { c =>
+      Seq("serial", "batch").foreach { c =>
         val xs = out.filter(_._1 == c).map(_._2).sorted
-        println(f"[binappend] $name%-32s conc=$c reps=${xs.length} " +
+        println(f"[binappend] $name%-32s $c%-6s reps=${xs.length} " +
           f"median=${xs(xs.length / 2)}%6.2f s  all=${
             xs.map(x => f"$x%.2f").mkString(",")}")
       }

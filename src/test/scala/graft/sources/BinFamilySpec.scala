@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -11,8 +12,8 @@ import graft.ops.TrainShuffle
 
 /** The managed binary-export family ([[BinFamily]]): batch-sized epoch
   * appends into reserved shard spans, idempotent replay, crash repair,
-  * the config gate, and the fold (repack + CURRENT flip + grace
-  * generation) — plus [[TrainShuffle.repackSequences]]'s own contract. */
+  * the config gate, and the byte-range fold ([[BinShards.fold]] + CURRENT
+  * flip + grace generation), checked against plain-Scala models. */
 class BinFamilySpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -47,6 +48,43 @@ class BinFamilySpec extends AnyFunSuite {
   private def collectPacked(df: DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getSeq[Int](2).toList, r.getLong(3))).toSet
+
+  /** Any frame's rows, arrays as lists. */
+  private def rowsOf(df: DataFrame) = df.collect().map(_.toSeq.map {
+    case a: scala.collection.Seq[_] => a.toList
+    case v => v
+  }).toSet
+
+  /** The packed fold, modeled: the streams concatenated in (shard, seq)
+    * order, cut every `budget` ids, the pieces dealt `per` to a shard. */
+  private def packedFoldModel(rows: Set[(Long, Long, List[Int], Long)],
+      numShards: Int) = {
+    val seqs = rows.toSeq.sortBy(r => (r._1, r._2)).flatMap(_._3)
+      .grouped(budget).toSeq
+    val per = (seqs.size + numShards - 1) / numShards
+    seqs.zipWithIndex.map { case (ids, g) =>
+      ((g / per).toLong, (g % per).toLong, ids.toList, ids.size.toLong)
+    }.toSet
+  }
+
+  /** A raw packed pair written byte by byte (header budget `hdrBudget`),
+    * its stale checksum files dropped. */
+  private def writeRawPair(gen: String, shard: Int, hdrBudget: Int,
+      lens: Seq[Int]): Unit = {
+    val ids = 1 to lens.sum
+    val idx = ByteBuffer.allocate(28 + 4 * lens.size)
+      .order(ByteOrder.LITTLE_ENDIAN)
+    idx.putInt(BinShards.Magic).putInt(1).putInt(hdrBudget)
+      .putLong(lens.size.toLong).putLong(ids.size.toLong)
+    lens.foreach(idx.putInt)
+    val bin = ByteBuffer.allocate(4 * ids.size).order(ByteOrder.LITTLE_ENDIAN)
+    ids.foreach(bin.putInt)
+    Seq(BinShards.Packed.idxName(shard) -> idx.array,
+        BinShards.Packed.binName(shard) -> bin.array).foreach { case (n, b) =>
+      Files.write(Paths.get(gen, n), b)
+      Files.deleteIfExists(Paths.get(gen, s".$n.crc"))
+    }
+  }
 
   test("append: epochs land in disjoint reserved spans; replay is a no-op; crash repair") {
     val root = Files.createTempDirectory("binfam-").toString
@@ -113,14 +151,14 @@ class BinFamilySpec extends AnyFunSuite {
     val preFold = (0 until 2).map(shifted).reduce(_ unionByName _)
     BinFamily.appendEpoch(pack(1), root, budget, span, "e1",
       compactEvery = 2)
-    // CURRENT flipped; the folded generation equals repackSequences of
+    // CURRENT flipped; the folded generation is the model's re-chunk of
     // the pre-fold artifact (same global stream, canonical chunking).
     val gen = BinFamily.resolveDir(spark, root)
     assert(gen.endsWith("gen-00001"), s"CURRENT must flip, got $gen")
     val folded = BinShards.read(spark, root)
     assert(collectPacked(folded) ==
-      collectPacked(TrainShuffle.repackSequences(preFold, budget, span)),
-      "the folded generation must be the canonical repack of the stream")
+      packedFoldModel(collectPacked(preFold), span),
+      "the folded generation must be the canonical re-chunk of the stream")
     // Dense canonical shape: shards 0..W-1, every non-final seq of
     // every shard full, only the global last short.
     val rows = folded.collect()
@@ -211,6 +249,12 @@ class BinFamilySpec extends AnyFunSuite {
     val folded = BinShards.readNoSplit(spark, root2)
     assert(orderedPayloads(folded) == preFold,
       "the fold must re-layout bins byte-identically in global order")
+    // The model: bins renumbered densely, `per` to a shard.
+    val per = (preFold.size + span - 1) / span
+    assert(collectSft(folded) == preFold.zipWithIndex.map {
+        case ((ids, n, d, st), g) =>
+          ((g / per).toLong, (g % per).toLong, ids, n, d, st)
+      }.toSet, "the folded bins must be the dense renumbering")
     val fShards = folded.select("shard").distinct().collect()
       .map(_.getLong(0)).toSet
     assert(fShards == (0L until fShards.size.toLong).toSet &&
@@ -223,14 +267,6 @@ class BinFamilySpec extends AnyFunSuite {
     assert(BinFamily.appendEpochSft(packSft(0), root2, budget, span,
       "e0", compactEvery = 2) == -1L,
       "root markers outlive sft generations too")
-    // relayoutBins refuses a non-dense frame loud.
-    val eDense = intercept[Exception] {
-      TrainShuffle.relayoutBins(
-        Seq((0L, 1L, Array(1, 2), 2L, 1L, Array(0L)))
-          .toDF("shard", "bin", "ids", "n_ids", "n_docs", "starts"), 2)
-        .collect()
-    }
-    assert(eDense.getMessage.contains("not dense"), s"$eDense")
   }
 
   test("appendEpochs (concurrent exports) is byte-equivalent to the serial replay across a fold") {
@@ -300,63 +336,139 @@ class BinFamilySpec extends AnyFunSuite {
   }
 
   test("a failed concurrent append leaves no live export jobs; a clean retry matches the uninterrupted append") {
-    val key = "spark.graft.appendEpochs.maxConcurrent"
-    spark.conf.set(key, "2")
-    try {
-      // e0 packs into twice the declared span: its range claim fails in
-      // the first task, while e1's export stalls 4 s in its first rows.
-      val misPacked = TrainShuffle.packIdSequences(batch(0), "doc_id",
-        "text", model, numShards = span * 2, budget = budget,
-        salt = "fam-e0")
-      val stall = udf { (seq: Long) => if (seq == 0L) Thread.sleep(4000); seq }
-      val slow = pack(1).withColumn("seq", stall(col("seq")))
-      val root = Files.createTempDirectory("binfam-fail-").toString
-      val e = intercept[Exception] {
-        BinFamily.appendEpochs(Seq("e0" -> misPacked, "e1" -> slow),
-          root, budget, span, compactEvery = 10)
-      }
-      assert(e.getMessage.contains("range"), s"$e")
-      // A failed job's end event trails its waiter by a moment; a live
-      // sibling export would stay active for seconds.
-      val sc = spark.sparkContext
-      val deadline = System.nanoTime() + 2000L * 1000 * 1000
-      while (sc.statusTracker.getActiveJobIds.nonEmpty &&
-          System.nanoTime() < deadline) {
-        Thread.sleep(50)
-        org.apache.spark.ListenerBusBridge.drain(sc)
-      }
-      assert(sc.statusTracker.getActiveJobIds.isEmpty,
-        "a sibling export outlived the failed append")
-      val clean = Files.createTempDirectory("binfam-clean-").toString
-      for (r <- Seq(root, clean))
-        assert(BinFamily.appendEpochs((0 until 2).map(i => s"e$i" -> pack(i)),
-          r, budget, span, compactEvery = 10) >= 0L)
-      def digest(r: String) = TrainShuffle.packDigest(
-          BinShards.read(spark, r), budget)
-        .orderBy("shard").collect().map(_.toSeq).toSeq
-      assert(digest(root) == digest(clean),
-        "the retried append must reproduce the uninterrupted artifact")
-    } finally spark.conf.unset(key)
+    // e0 packs into twice the declared span: its range claim fails in
+    // the first task, while e1's export stalls 4 s in its first rows.
+    val misPacked = TrainShuffle.packIdSequences(batch(0), "doc_id",
+      "text", model, numShards = span * 2, budget = budget,
+      salt = "fam-e0")
+    val stall = udf { (seq: Long) => if (seq == 0L) Thread.sleep(4000); seq }
+    val slow = pack(1).withColumn("seq", stall(col("seq")))
+    val root = Files.createTempDirectory("binfam-fail-").toString
+    val e = intercept[Exception] {
+      BinFamily.appendEpochs(Seq("e0" -> misPacked, "e1" -> slow),
+        root, budget, span, compactEvery = 10)
+    }
+    assert(e.getMessage.contains("range"), s"$e")
+    // A failed job's end event trails its waiter by a moment; a live
+    // sibling export would stay active for seconds.
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 2000L * 1000 * 1000
+    while (sc.statusTracker.getActiveJobIds.nonEmpty &&
+        System.nanoTime() < deadline) {
+      Thread.sleep(50)
+      org.apache.spark.ListenerBusBridge.drain(sc)
+    }
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "a sibling export outlived the failed append")
+    val clean = Files.createTempDirectory("binfam-clean-").toString
+    for (r <- Seq(root, clean))
+      assert(BinFamily.appendEpochs((0 until 2).map(i => s"e$i" -> pack(i)),
+        r, budget, span, compactEvery = 10) >= 0L)
+    def digest(r: String) = TrainShuffle.packDigest(
+        BinShards.read(spark, r), budget)
+      .orderBy("shard").collect().map(_.toSeq).toSeq
+    assert(digest(root) == digest(clean),
+      "the retried append must reproduce the uninterrupted artifact")
   }
 
-  test("repackSequences validates the packed invariant loud") {
-    val bad = Seq((0L, 0L, Array(1, 2), 2L), (0L, 1L, Array(3, 4, 5), 3L))
-      .toDF("shard", "seq", "ids", "n_ids") // non-final short at budget 3
-    val e = intercept[IllegalArgumentException] {
-      TrainShuffle.repackSequences(bad, 3, 2).collect()
+  test("fold by byte range: hand-built inputs re-chunk across shard seams; an invalid input fails loud and CURRENT stays") {
+    def frame(rows: (Long, Long, Seq[Int])*): DataFrame =
+      rows.map(r => (r._1, r._2, r._3.toArray, r._3.size.toLong))
+        .toDF(BinShards.Packed.columns: _*)
+    // Budget 3, span 2. e0: shard 0 = (1,2,3),(4), shard 1 = (5,6); e1's
+    // shard 1 = (7,8,9),(10) lands as shard 3, so shard 2 is absent. The
+    // stream 1..10 re-chunks to (1,2,3),(4,5,6) | (7,8,9),(10).
+    val e0 = frame((0L, 0L, Seq(1, 2, 3)), (0L, 1L, Seq(4)),
+      (1L, 0L, Seq(5, 6)))
+    val e1 = frame((1L, 0L, Seq(7, 8, 9)), (1L, 1L, Seq(10)))
+    val root = Files.createTempDirectory("binfam-hand-").toString
+    BinFamily.appendEpoch(e0, root, 3, span, "e0", compactEvery = 2)
+    assert(BinFamily.appendEpoch(e1, root, 3, span, "e1",
+      compactEvery = 2) == 2L)
+    assert(collectPacked(BinShards.read(spark, root)) == Set(
+      (0L, 0L, List(1, 2, 3), 3L), (0L, 1L, List(4, 5, 6), 3L),
+      (1L, 0L, List(7, 8, 9), 3L), (1L, 1L, List(10), 1L)))
+    // Invalid inputs, written byte by byte over e0's shard 0: a short
+    // non-final sequence, and an idx whose budget is not the family's.
+    Seq((3, Seq(2, 3), "inconsistent sequence lengths"),
+        (4, Seq(4), "budget 4 is not the family's 3")).foreach {
+      case (hdrBudget, lens, why) =>
+        val bad = Files.createTempDirectory("binfam-bad-").toString
+        BinFamily.appendEpoch(e0, bad, 3, span, "e0", compactEvery = 2)
+        val gen = BinFamily.resolveDir(spark, bad)
+        writeRawPair(gen, 0, hdrBudget, lens)
+        val e = intercept[Exception] {
+          BinFamily.appendEpoch(e1, bad, 3, span, "e1", compactEvery = 2)
+        }
+        assert(e.getMessage.contains(s"$gen/shard-00000.idx") &&
+          e.getMessage.contains(why), s"$e")
+        assert(new String(Files.readAllBytes(Paths.get(bad, "CURRENT")),
+          "UTF-8").trim == "gen-00000",
+          "CURRENT must stay on the old generation")
     }
-    assert(e.getMessage.contains("packed invariant"), s"$e")
-    // A valid hand-built frame re-chunks across shard seams in stream
-    // order: shard 0 = (1,2,3),(4) and shard 1 = (5,6) — both with
-    // unpadded tails — concatenate to the single stream 1..6 and
-    // re-chunk to ((1,2,3),(4,5,6)) at budget 3 over 2 shards.
-    val ok = Seq((0L, 0L, Array(1, 2, 3), 3L), (0L, 1L, Array(4), 1L),
-        (1L, 0L, Array(5, 6), 2L))
-      .toDF("shard", "seq", "ids", "n_ids")
-    val out = TrainShuffle.repackSequences(ok, 3, 2).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Int](2).toList))
-      .toSet
-    assert(out == Set((0L, 0L, List(1, 2, 3)), (1L, 0L, List(4, 5, 6))),
-      s"$out")
+  }
+
+  test("a fold of an all-empty generation commits an empty successor; later epochs append") {
+    import BinShards.{Packed, Sft}
+    val emptyFrames = Map[BinShards.Layout, DataFrame](
+      Packed -> Seq.empty[(Long, Long, Array[Int], Long)]
+        .toDF(Packed.columns: _*),
+      Sft -> Seq.empty[(Long, Long, Array[Int], Long, Long, Array[Long])]
+        .toDF(Sft.columns: _*))
+    val thirds = Map[BinShards.Layout, DataFrame](
+      Packed -> Seq((0L, 0L, Array(1, 2, 3, 4), 4L), (0L, 1L, Array(5), 1L),
+        (1L, 0L, Array(6), 1L)).toDF(Packed.columns: _*),
+      Sft -> Seq((0L, 0L, Array(1, 2, 3), 3L, 2L, Array(0L, 2L)),
+        (1L, 0L, Array(4), 1L, 1L, Array(0L))).toDF(Sft.columns: _*))
+    BinShards.Layout.all.foreach { l =>
+      val root = Files.createTempDirectory(s"binfam-empty-${l.name}-").toString
+      assert(BinFamily.appendEpochsImpl(l, Seq("e0" -> emptyFrames(l),
+        "e1" -> emptyFrames(l)), root, 4, 2, 2, Map.empty) == 0L, l.name)
+      val gen = BinFamily.resolveDir(spark, root)
+      assert(gen.endsWith("gen-00001"), s"${l.name}: CURRENT must flip")
+      val info = BinShards.commitInfo(spark, root)
+      assert(info("shards") == "0" && info("epochs") == "0", s"$info")
+      assert(new String(Files.readAllBytes(Paths.get(gen, "_BIN_EPOCHS")),
+        "UTF-8") == "epoch=__folded__ start=0 span=0 files=0\n")
+      assert(BinFamily.appendEpochsImpl(l, Seq("e2" -> thirds(l)), root, 4,
+        2, 2, Map.empty) == 2L, l.name)
+      assert(rowsOf(BinShards.readFrame(spark, root, l)) == rowsOf(thirds(l)),
+        s"${l.name}: the post-fold epoch must read back at base 0")
+    }
+  }
+
+  test("a fold over a torn successor rebuilds it byte-identical to the uninterrupted fold") {
+    BinShards.Layout.all.foreach { l =>
+      val epochs = (0 until 2).map(i => s"e$i" -> l.pack(batch(i), "doc_id",
+        "text", model, span, budget, s"fam-e$i"))
+      def append(root: String, i: Int): Unit =
+        BinFamily.appendEpochsImpl(l, Seq(epochs(i)), root, budget, span, 2,
+          Map("vocab_size" -> "7"))
+      val clean = Files.createTempDirectory(s"binfam-clean-${l.name}-")
+      val torn = Files.createTempDirectory(s"binfam-torn-${l.name}-")
+      Seq(0, 1).foreach(i => append(clean.toString, i))
+      // A crashed fold's leftovers: a temp file, a stale pair past the new
+      // shard count, and no marker.
+      append(torn.toString, 0)
+      val succ = Files.createDirectories(torn.resolve("gen-00001"))
+      Files.write(succ.resolve(s".tmp-7-${l.binName(0)}"), Array[Byte](1, 2))
+      Seq(l.idxName(0) -> l.idxName(span + 3),
+          l.binName(0) -> l.binName(span + 3)).foreach { case (from, to) =>
+        Files.copy(torn.resolve("gen-00000").resolve(from), succ.resolve(to))
+      }
+      append(torn.toString, 1)
+      import scala.jdk.CollectionConverters._
+      def folded(root: java.nio.file.Path) = root.resolve("gen-00001")
+      def files(root: java.nio.file.Path) = Files.list(folded(root))
+        .iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+      // Pairs, ledger, config and marker (and their checksums) all match.
+      assert(files(torn) == files(clean), l.name)
+      assert(files(clean).contains("_BIN_COMMIT"), l.name)
+      files(clean).foreach { n =>
+        assert(Files.readAllBytes(folded(torn).resolve(n)).toSeq ==
+          Files.readAllBytes(folded(clean).resolve(n)).toSeq,
+          s"${l.name}: $n differs from the uninterrupted fold")
+      }
+    }
   }
 }
