@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.expressions.{DotProduct, SortedIntersectCount}
 import graft.functions.{Bpe, Dedup, Hybrid, IVF, Ingest, PQ, Spans, TextFunctions, Vectors}
 import graft.ops.{CorpusMix, Curation, FimTransform, TrainShuffle}
-import graft.sources.{BinFamily, BinShards}
+import graft.sources.{BinFamily, BinShards, ManagedRoot}
 import graft.sources.BinShards.Layout
 
 /**
@@ -253,7 +253,7 @@ object GraftExtensions {
     * TVFs are a read surface). */
   private def committedNdDir(a: Args, i: Int): String = {
     val ndPath = a.str(i, "nd_index_path")
-    val ndDir = Ingest.ndIndexDir(a.spark, ndPath)
+    val ndDir = ManagedRoot.resolve(a.spark, ndPath)
     if (!Dedup.hasCommittedParquet(a.spark, ndDir))
       a.fail(s"no committed near-dup index at $ndPath")
     ndDir
@@ -391,7 +391,7 @@ object GraftExtensions {
           // loud on a corrupt marker; default 5 for a pre-marker
           // store) and the current generation's committed epochs.
           val k = Spans.storedK(spark, spanRoot).getOrElse(5)
-          val dir = Ingest.spanIndexDirAt(spark, spanRoot)
+          val dir = ManagedRoot.resolve(spark, spanRoot)
           Some((Spans.spanIndexRead(spark, dir), k,
             a.dbl(7, "max_boilerplate")))
         }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{Dedup, IVF, Ingest}
+import graft.functions.{IVF, Ingest}
 
 /**
  * The COMPLETE incremental-ingestion loop executed end-to-end across
@@ -89,8 +89,8 @@ object FullIngestDemo {
     // accepted doc short-circuits to accepted_prior instead of rejecting
     // against its own stored chunks — and every append no-ops.
     val ndRows = Ingest.ndIndexAt(spark, ndDir).count()
-    val chTotal = Dedup
-      .chunkIndexRead(spark, Ingest.currentChunkDir(spark, chDir))
+    val chTotal = Ingest
+      .chunkIndexAt(spark, chDir)
       .agg(org.apache.spark.sql.functions.sum("df_cnt")).collect()(0).getLong(0)
     val (r2b, d2b) = ingest(batch2, Map(6L -> vecOf(6)), "epoch-2")
     assert(d2b == d2 + (6L -> Ingest.AcceptedPrior),
@@ -100,8 +100,8 @@ object FullIngestDemo {
       s"retry must no-op: $r2b")
     assert(Ingest.ndIndexAt(spark, ndDir).count() == ndRows,
       "retry grew nd index")
-    assert(Dedup
-      .chunkIndexRead(spark, Ingest.currentChunkDir(spark, chDir))
+    assert(Ingest
+      .chunkIndexAt(spark, chDir)
       .agg(org.apache.spark.sql.functions.sum("df_cnt")).collect()(0).getLong(0)
       == chTotal, "retry grew chunk index")
     // IvfIndex.read resolves the managed generation layout the loop

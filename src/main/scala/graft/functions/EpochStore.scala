@@ -69,15 +69,7 @@ private[functions] object EpochStore {
       schema: StructType,
       keyCol: String,
       cntCol: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val epochs =
-      if (fs.exists(p))
-        fs.listStatus(p).filter(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-          .map(_.getPath.toString).toIndexedSeq
-      else IndexedSeq.empty[String]
+    val epochs = committedDirs(spark, indexPath).map(_.toString)
     val raw =
       if (epochs.isEmpty)
         spark.createDataFrame(
@@ -88,6 +80,26 @@ private[functions] object EpochStore {
           .select(keyCol, cntCol)
     raw.groupBy(keyCol).agg(sum(cntCol).as(cntCol))
   }
+
+  /** The committed epoch directories under `indexPath` (the `batch_id=`
+    * partitions whose `_SUCCESS` marker is present); empty when absent. */
+  def committedDirs(spark: SparkSession,
+      indexPath: String): IndexedSeq[org.apache.hadoop.fs.Path] = {
+    val p = new org.apache.hadoop.fs.Path(indexPath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) IndexedSeq.empty
+    else fs.listStatus(p).toIndexedSeq.filter(st =>
+      st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
+        fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
+      .map(_.getPath)
+  }
+
+  /** The names of the committed epochs under `indexPath`. [[append]]
+    * writes `batch_id=<epoch>` literally (its own directory layout, not
+    * a partitioned writer), so the name maps back by prefix strip alone;
+    * no partition-escape decoding. */
+  def committedEpochs(spark: SparkSession, indexPath: String): Seq[String] =
+    committedDirs(spark, indexPath).map(_.getName.stripPrefix("batch_id="))
 
   /** Fold every committed epoch into one compacted epoch at `destPath`
     * (copy, never in-place — parquet directory swaps are not atomic on

@@ -413,13 +413,13 @@ object IVF {
 
   object IvfIndex {
     /** Read a persisted index: either a flat [[IvfIndex.write]] directory
-      * or an [[Ingest.ingestBatch]]-managed root (detected by its
-      * `CURRENT` pointer — resolves to the active generation, so readers
-      * keep working across compaction rolls; the just-superseded
-      * generation survives one roll as the in-flight-reader grace
-      * window). */
+      * or an [[Ingest.ingestBatch]]-managed root, resolved to its active
+      * generation by [[graft.sources.ManagedRoot.resolve]] (a damaged
+      * pointer fails loud), so readers keep working across compaction
+      * rolls; the just-superseded generation survives one roll as the
+      * in-flight-reader grace window. */
     def read(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-      val dir = Ingest.ivfIndexDirAt(spark, path)
+      val dir = graft.sources.ManagedRoot.resolve(spark, path)
       IvfIndex(
         spark.read.parquet(dir + "/centroids"),
         spark.read.parquet(dir + "/vectors"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.GraftCaches.Cacheable
+import graft.sources.ManagedRoot
 
 /**
  * The recurring-ingestion loop as a FIRST-CLASS operator: screen an
@@ -496,7 +497,7 @@ object Ingest {
    *     training on the first accepted batch.
    *
    * The chunk index lives under a MANAGED generation layout at
-   * `chunkRootPath` (see [[currentChunkDir]]): epochs append into the
+   * `chunkRootPath` (see [[ManagedRoot]]): epochs append into the
    * current generation; once it holds >= `compactEvery` committed
    * epochs, the generation is compacted into a single-epoch successor
    * and the `CURRENT` pointer flips — [[Dedup.chunkIndexRead]]'s
@@ -715,15 +716,29 @@ object Ingest {
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
       .graftCached
 
-    // Near-dup index layout: managed generations for anything that is
-    // not already a committed FLAT index (legacy layout — left as-is;
-    // its appends still work, it just never compacts).
-    val ndFs = rootFs(spark, ndIndexPath)
-    val ndManaged =
-      ndFs.exists(new Path(ndIndexPath, "CURRENT")) ||
-        !Dedup.hasCommittedParquet(spark, ndIndexPath)
-    val ndDir =
-      if (ndManaged) currentGenDir(spark, ndIndexPath) else ndIndexPath
+    // Every armed family's generation opens BEFORE the screen and any
+    // append ([[ManagedRoot]]), so a damaged CURRENT pointer fails here
+    // with every store untouched. The near-dup and vector families are
+    // managed unless already a committed FLAT index (legacy layout —
+    // left as-is; its appends still work, it just never compacts). The
+    // vector families open only when embeddings arrive to append.
+    val ndGen = ManagedRoot.open(spark, ndIndexPath,
+      Dedup.hasCommittedParquet(spark, ndIndexPath))
+    val ndDir = ndGen.getOrElse(ndIndexPath)
+    val chunkDir = ManagedRoot.open(spark, chunkRootPath)
+    // The k guard lives at the ROOT (it must survive generation rolls):
+    // screening a k=5 store with k=6 would silently match nothing.
+    val spanDirOpt = spanRootPath.map { root =>
+      Spans.recordOrCheckK(spark, root, spanK)
+      ManagedRoot.open(spark, root)
+    }
+    val ivfGen = ivfIndexPath.filter(_ => embeddings.isDefined)
+      .map(path => path -> ManagedRoot.open(spark, path, ivfBuilt(spark, path)))
+    val pqGen = pqIndexPath.filter(_ => embeddings.isDefined)
+      .map(path => path -> ManagedRoot.open(spark, path, pqBuilt(spark, path)))
+    // The bin family opens inside its own append; resolve it here only
+    // to fail loud on a damaged pointer before the other appends.
+    binExportRootPath.foreach(ManagedRoot.resolve(spark, _))
 
     // Bootstrap: an absent (or committed-file-free) near-dup index means
     // nothing was ever ingested — every screen passes trivially against
@@ -738,15 +753,8 @@ object Ingest {
     // file list makes the refresh re-read the same bytes, so the
     // decisions survive the appends unchanged.
     val ndIndex = ndSnapshot(spark, ndDir).getOrElse(emptyNdFrame(spark))
-    val chunkDir = currentChunkDir(spark, chunkRootPath)
     val chunkIdx = Dedup.chunkIndexRead(spark, chunkDir)
 
-    // The k guard lives at the ROOT (it must survive generation rolls):
-    // screening a k=5 store with k=6 would silently match nothing.
-    val spanDirOpt = spanRootPath.map { root =>
-      Spans.recordOrCheckK(spark, root, spanK)
-      currentGenDir(spark, root)
-    }
     // The whole gated decision spine (base screen + quality/span/outlier
     // gates in precedence order) is ONE shared implementation —
     // [[gatedDecisions]], also exposed read-only as [[screenBatchGated]]
@@ -812,38 +820,18 @@ object Ingest {
     // 2. chunk epoch, idempotent across compaction via the root-level
     //    epoch marker (the generation-local _SUCCESS dies when its
     //    generation is compacted away).
-    val fs = rootFs(spark, chunkRootPath)
-    val epochMarker = new Path(new Path(chunkRootPath, "epochs"), epoch)
-    val appendedChunks =
-      if (fs.exists(epochMarker)) -1L
-      else {
-        val n = Dedup.chunkIndexAppend(
-          acceptedAll, "doc_id", "text", chunkDir, epoch,
-          divisor, maxChunkTokens)
-        fs.mkdirs(epochMarker.getParent)
-        fs.create(epochMarker, true).close()
-        n
-      }
+    val appendedChunks = ManagedRoot.epochOnce(spark, chunkRootPath, epoch)(
+      Dedup.chunkIndexAppend(acceptedAll, "doc_id", "text", chunkDir, epoch,
+        divisor, maxChunkTokens))
 
     // 2b. span epoch append (the optional fifth family): spans of ALL
     //     accepted docs (new + prior), the chunk step's crash-window
     //     rationale — a retry that died between steps 1 and 2b still
     //     records the crashed docs' spans. Root-level epoch marker for
     //     replay-past-compaction idempotence, exactly as for chunks.
-    val appendedSpans = spanRootPath match {
-      case Some(root) =>
-        val sfs = rootFs(spark, root)
-        val spanMarker = new Path(new Path(root, "epochs"), epoch)
-        if (sfs.exists(spanMarker)) -1L
-        else {
-          val n = Spans.spanIndexAppend(
-            acceptedAll, "doc_id", "text", spanDirOpt.get, epoch, spanK)
-          sfs.mkdirs(spanMarker.getParent)
-          sfs.create(spanMarker, true).close()
-          n
-        }
-      case None => 0L
-    }
+    val appendedSpans = spanRootPath.fold(0L)(root =>
+      ManagedRoot.epochOnce(spark, root, epoch)(Spans.spanIndexAppend(
+        acceptedAll, "doc_id", "text", spanDirOpt.get, epoch, spanK)))
 
     // 3. vectors: all accepted docs' embeddings (by-vec-id idempotence
     //    makes the prior ones no-ops — and covers the crash window where
@@ -856,7 +844,7 @@ object Ingest {
     //    successor), so probe latency stays flat across hundreds of
     //    appends; a pre-existing FLAT index (committed centroids/vectors
     //    at the root) keeps working append-only and is never converted
-    //    in place. Resolve either layout via [[ivfIndexDirAt]] /
+    //    in place. Resolve either layout via [[ManagedRoot.resolve]] /
     //    [[IVF.IvfIndex.read]].
     // Shared by BOTH vector families (IVF below, PQ after it): the
     // accepted docs' embeddings and the embedding-coverage audit.
@@ -887,17 +875,11 @@ object Ingest {
     }
 
     val (appendedVectors, ivfCompacted) =
-      (acceptedVecs, ivfIndexPath) match {
-        case (Some(e), Some(path)) =>
-          val ivfFs = rootFs(spark, path)
-          val ivfManaged = ivfFs.exists(new Path(path, "CURRENT")) ||
-            !(Dedup.hasCommittedParquet(spark, path + "/centroids") &&
-              Dedup.hasCommittedParquet(spark, path + "/vectors"))
-          val ivfDir = if (ivfManaged) currentGenDir(spark, path) else path
-          val built = Dedup.hasCommittedParquet(spark, ivfDir + "/centroids") &&
-            Dedup.hasCommittedParquet(spark, ivfDir + "/vectors")
+      (acceptedVecs, ivfGen) match {
+        case (Some(e), Some((path, gen))) =>
+          val ivfDir = gen.getOrElse(path)
           val n =
-            if (!built) {
+            if (!ivfBuilt(spark, ivfDir)) {
               // First accepted batch trains the quantizer. A crash
               // mid-build leaves an incomplete index (no committed
               // centroids+vectors pair), which the retry detects and
@@ -906,14 +888,8 @@ object Ingest {
               if (cnt > 0) IVF.buildIvfIndex(e, ivfNlist).write(ivfDir)
               cnt
             } else IVF.indexAppend(e, ivfDir)
-          val rolled = ivfManaged &&
-            committedParquetFiles(ivfFs, ivfDir + "/vectors") >=
-              ivfCompactFiles && {
-              rollGeneration(spark, path, ivfDir)(
-                IVF.indexCompact(spark, _, _))
-              true
-            }
-          (n, rolled)
+          (n, ManagedRoot.rollPastFiles(spark, path, gen, "/vectors",
+            ivfCompactFiles)(IVF.indexCompact(spark, _, _)))
         case _ => (0L, false)
       }
 
@@ -931,18 +907,11 @@ object Ingest {
     //     so a loop can maintain BOTH families and serve cheap recurring
     //     screens from PQ while keeping exact-embedding ranking on IVF.
     val (appendedCodes, pqCompacted) =
-      (acceptedVecs, pqIndexPath) match {
-        case (Some(e), Some(path)) =>
-          val pqFs = rootFs(spark, path)
-          def committedPq(dir: String): Boolean =
-            Dedup.hasCommittedParquet(spark, dir + "/centroids") &&
-              Dedup.hasCommittedParquet(spark, dir + "/codebooks") &&
-              Dedup.hasCommittedParquet(spark, dir + "/codes")
-          val pqManaged = pqFs.exists(new Path(path, "CURRENT")) ||
-            !committedPq(path)
-          val pqDir = if (pqManaged) currentGenDir(spark, path) else path
+      (acceptedVecs, pqGen) match {
+        case (Some(e), Some((path, gen))) =>
+          val pqDir = gen.getOrElse(path)
           val n =
-            if (!committedPq(pqDir)) {
+            if (!pqBuilt(spark, pqDir)) {
               // First accepted batch trains the quantizers; a crash
               // mid-build leaves an incomplete triple that the retry
               // detects and rebuilds via overwrite. Per-subspace k is
@@ -958,14 +927,8 @@ object Ingest {
               }
               cnt
             } else PQ.indexAppend(e, pqDir)
-          val rolled = pqManaged &&
-            committedParquetFiles(pqFs, pqDir + "/codes") >=
-              pqCompactFiles && {
-              rollGeneration(spark, path, pqDir)(
-                PQ.indexCompact(spark, _, _))
-              true
-            }
-          (n, rolled)
+          (n, ManagedRoot.rollPastFiles(spark, path, gen, "/codes",
+            pqCompactFiles)(PQ.indexCompact(spark, _, _)))
         case _ => (0L, false)
       }
 
@@ -1000,22 +963,12 @@ object Ingest {
     }
 
     // Compaction policy: count COMMITTED epochs in the current
-    // generation; at the threshold, fold them into a single-epoch
-    // successor generation and flip CURRENT.
-    val epochCount = fs.listStatus(new Path(chunkDir)).count(st =>
-      st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-        fs.exists(new Path(st.getPath, "_SUCCESS")))
-    val compacted =
-      if (epochCount >= compactEvery) {
-        // Marker repair first: folding an orphan epoch (committed
-        // gen-local, root marker lost to a crash) without its marker
-        // would let that epoch's retry double-count df_cnt in the new
-        // generation. See [[repairEpochMarkers]].
-        repairEpochMarkers(fs, chunkRootPath, chunkDir)
-        rollGeneration(spark, chunkRootPath, chunkDir)(
-          Dedup.chunkIndexCompact(spark, _, _))
-        true
-      } else false
+    // generation; at the threshold, repair their root markers and fold
+    // them into a single-epoch successor generation
+    // ([[ManagedRoot.rollPastEpochs]]).
+    val compacted = ManagedRoot.rollPastEpochs(spark, chunkRootPath,
+      chunkDir, EpochStore.committedEpochs(spark, chunkDir), compactEvery)(
+      Dedup.chunkIndexCompact(spark, _, _))
 
     // Same policy for the near-dup generation, measured in committed
     // parquet files (appends land whole files, not epochs). The roll
@@ -1023,28 +976,14 @@ object Ingest {
     // cached decisions frame never depends on a swept directory within
     // this call; a caller holding `decisions` across a later eviction
     // should write it out first (it is one row per batch doc).
-    val ndCompacted =
-      ndManaged && committedParquetFiles(ndFs, ndDir) >= ndCompactFiles && {
-        rollGeneration(spark, ndIndexPath, ndDir)(
-          Dedup.nearDupIndexCompact(spark, _, _))
-        true
-      }
+    val ndCompacted = ManagedRoot.rollPastFiles(spark, ndIndexPath, ndGen,
+      "", ndCompactFiles)(Dedup.nearDupIndexCompact(spark, _, _))
 
-    // Span-generation compaction: committed epochs in the current
-    // generation, folded past spanCompactEvery — the chunk policy.
+    // Span-generation compaction: the chunk policy, past spanCompactEvery.
     val spanCompacted = spanRootPath.exists { root =>
-      val sfs = rootFs(spark, root)
-      val spanDir = spanDirOpt.get
-      val spanEpochs = sfs.listStatus(new Path(spanDir)).count(st =>
-        st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-          sfs.exists(new Path(st.getPath, "_SUCCESS")))
-      spanEpochs >= spanCompactEvery && {
-        // Same orphan-epoch marker repair as the chunk roll above.
-        repairEpochMarkers(sfs, root, spanDir)
-        rollGeneration(spark, root, spanDir)(
-          Spans.spanIndexCompact(spark, _, _))
-        true
-      }
+      ManagedRoot.rollPastEpochs(spark, root, spanDirOpt.get,
+        EpochStore.committedEpochs(spark, spanDirOpt.get), spanCompactEvery)(
+        Spans.spanIndexCompact(spark, _, _))
     }
 
     IngestReport(decisions, appendedDocs, appendedChunks, appendedVectors,
@@ -1195,36 +1134,25 @@ object Ingest {
       }
   }
 
-  /** Resolve the directory holding a persisted IVF index's
-    * centroids/vectors pair: a managed root's active generation (detected
-    * by `CURRENT`), or the path itself (flat [[IVF.buildIvfIndex]]
-    * layout). [[IVF.IvfIndex.read]] applies the same resolution, so
-    * readers need this only for file-level work. */
-  def ivfIndexDirAt(spark: SparkSession, path: String): String = {
-    val fs = rootFs(spark, path)
-    if (fs.exists(new Path(path, "CURRENT"))) currentGenDir(spark, path)
-    else path
-  }
+  /** Whether `dir` holds a committed IVF centroids/vectors pair. */
+  private def ivfBuilt(spark: SparkSession, dir: String): Boolean =
+    Dedup.hasCommittedParquet(spark, dir + "/centroids") &&
+      Dedup.hasCommittedParquet(spark, dir + "/vectors")
 
-  /** Resolve the directory holding a persisted PQ index's
-    * centroids/codebooks/codes triple: a managed root's active generation
-    * (detected by `CURRENT`), or the path itself (flat
-    * [[PQ.PqIndex.write]] layout). [[PQ.PqIndex.read]] applies the same
-    * resolution, so readers need this only for file-level work. */
-  def pqIndexDirAt(spark: SparkSession, path: String): String = {
-    val fs = rootFs(spark, path)
-    if (fs.exists(new Path(path, "CURRENT"))) currentGenDir(spark, path)
-    else path
-  }
+  /** Whether `dir` holds a committed PQ centroids/codebooks/codes triple. */
+  private def pqBuilt(spark: SparkSession, dir: String): Boolean =
+    Dedup.hasCommittedParquet(spark, dir + "/centroids") &&
+      Dedup.hasCommittedParquet(spark, dir + "/codebooks") &&
+      Dedup.hasCommittedParquet(spark, dir + "/codes")
 
   /**
    * Storage-maintenance audit over the loop's index families
-   * (neardup / chunk / ivf / pq) — the
+   * (neardup / chunk / ivf / pq / span) — the
    * observability half of the generation/compaction contract: one row
    * per index root with its layout (`managed` / `flat` / `absent`), the
    * active generation, committed data-file count (the compaction
    * triggers' own metric, so an operator can see HOW CLOSE each family
-   * is to its next roll), row count, and — for the chunk family — the
+   * is to its next roll), row count, and — for the epoch families — the
    * committed epoch count in the active generation plus the root-level
    * epoch markers that outlive compaction (their divergence measures how
    * many epochs the last fold absorbed).
@@ -1235,7 +1163,7 @@ object Ingest {
    *
    * Output: (family, layout, generation, data_files, rows, epochs,
    * epoch_markers), one row per family, ordered by family; `epochs` /
-   * `epoch_markers` are null for the non-chunk families.
+   * `epoch_markers` are null for the non-epoch families.
    */
   def indexReport(
       spark: SparkSession,
@@ -1245,22 +1173,20 @@ object Ingest {
       pqIndexPath: Option[String] = None,
       spanRootPath: Option[String] = None): DataFrame = {
     import spark.implicits._
-    def layoutOf(root: String, committed: => Boolean): String = {
-      val fs = rootFs(spark, root)
-      if (!fs.exists(new Path(root))) "absent"
-      else if (fs.exists(new Path(root, "CURRENT"))) "managed"
+    def layoutOf(root: String, committed: => Boolean): String =
+      if (!rootFs(spark, root).exists(new Path(root))) "absent"
+      else if (ManagedRoot.isManaged(spark, root)) "managed"
       else if (committed) "flat"
       else "absent"
-    }
     def genOf(root: String, layout: String): String =
-      if (layout == "managed") new Path(currentGenDir(spark, root)).getName
+      if (layout == "managed") new Path(ManagedRoot.resolve(spark, root)).getName
       else "-"
 
     val ndLayout = layoutOf(ndIndexPath,
       Dedup.hasCommittedParquet(spark, ndIndexPath))
-    val ndDir = ndIndexDir(spark, ndIndexPath)
     val ndRow = ("neardup", ndLayout, genOf(ndIndexPath, ndLayout),
-      committedParquetFiles(rootFs(spark, ndIndexPath), ndDir).toLong,
+      ManagedRoot.parquetFiles(spark,
+        ManagedRoot.resolve(spark, ndIndexPath)).toLong,
       if (ndLayout == "absent") 0L else ndIndexAt(spark, ndIndexPath).count(),
       None: Option[Long], None: Option[Long])
 
@@ -1274,24 +1200,17 @@ object Ingest {
       if (layout == "absent")
         (family, layout, "-", 0L, 0L, Some(0L), Some(0L))
       else {
-        val dir = new Path(
-          if (layout == "managed") currentGenDir(spark, root) else root)
-        val epochs = fs.listStatus(dir).count(st =>
-          st.isDirectory && st.getPath.getName.startsWith("batch_id=") &&
-            fs.exists(new Path(st.getPath, "_SUCCESS"))).toLong
-        val markerDir = new Path(root, "epochs")
-        val markers =
-          if (fs.exists(markerDir)) fs.listStatus(markerDir).length.toLong
-          else 0L
-        val files = fs.listStatus(dir)
+        val dir = ManagedRoot.resolve(spark, root)
+        val epochs = EpochStore.committedDirs(spark, dir).size.toLong
+        val files = fs.listStatus(new Path(dir))
           .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch_id="))
           .map(d => fs.listStatus(d.getPath)
             .count(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
             .toLong)
           .sum
-        val rows = if (epochs == 0) 0L else readRows(dir.toString)
+        val rows = if (epochs == 0) 0L else readRows(dir)
         (family, layout, genOf(root, layout), files, rows,
-          Some(epochs), Some(markers))
+          Some(epochs), Some(ManagedRoot.markerCount(spark, root)))
       }
     }
 
@@ -1299,26 +1218,21 @@ object Ingest {
       d => Dedup.chunkIndexRead(spark, d).count())
 
     val ivfRow = ivfIndexPath.map { root =>
-      val fs = rootFs(spark, root)
-      val dir = ivfIndexDirAt(spark, root)
-      val built = Dedup.hasCommittedParquet(spark, dir + "/centroids") &&
-        Dedup.hasCommittedParquet(spark, dir + "/vectors")
+      val dir = ManagedRoot.resolve(spark, root)
+      val built = ivfBuilt(spark, dir)
       val layout = layoutOf(root, built)
       ("ivf", layout, genOf(root, layout),
-        committedParquetFiles(fs, dir + "/vectors").toLong,
+        ManagedRoot.parquetFiles(spark, dir + "/vectors").toLong,
         if (built) spark.read.parquet(dir + "/vectors").count() else 0L,
         None: Option[Long], None: Option[Long])
     }
 
     val pqRow = pqIndexPath.map { root =>
-      val fs = rootFs(spark, root)
-      val dir = pqIndexDirAt(spark, root)
-      val built = Dedup.hasCommittedParquet(spark, dir + "/centroids") &&
-        Dedup.hasCommittedParquet(spark, dir + "/codebooks") &&
-        Dedup.hasCommittedParquet(spark, dir + "/codes")
+      val dir = ManagedRoot.resolve(spark, root)
+      val built = pqBuilt(spark, dir)
       val layout = layoutOf(root, built)
       ("pq", layout, genOf(root, layout),
-        committedParquetFiles(fs, dir + "/codes").toLong,
+        ManagedRoot.parquetFiles(spark, dir + "/codes").toLong,
         if (built) spark.read.parquet(dir + "/codes").count() else 0L,
         None: Option[Long], None: Option[Long])
     }
@@ -1334,15 +1248,10 @@ object Ingest {
   }
 
   /** Read a persisted span index for screening: an [[ingestBatch]]-managed
-    * root (detected by its `CURRENT` pointer) or a raw
+    * root (its active generation, [[ManagedRoot.resolve]]) or a raw
     * [[Spans.spanIndexAppend]] epoch directory. */
-  def spanIndexAt(spark: SparkSession, path: String): DataFrame = {
-    val fs = rootFs(spark, path)
-    val dir =
-      if (fs.exists(new Path(path, "CURRENT"))) currentGenDir(spark, path)
-      else path
-    Spans.spanIndexRead(spark, dir)
-  }
+  def spanIndexAt(spark: SparkSession, path: String): DataFrame =
+    Spans.spanIndexRead(spark, ManagedRoot.resolve(spark, path))
 
   /** The k-aware form every consumer that tokenizes with its OWN k must
     * use ([[Spans.checkK]] at the root and the resolved generation):
@@ -1350,56 +1259,9 @@ object Ingest {
     * so a recorded mismatch fails loud instead of reporting clean. */
   def spanIndexAt(spark: SparkSession, path: String, k: Int): DataFrame = {
     Spans.checkK(spark, path, k)
-    val fs = rootFs(spark, path)
-    val dir =
-      if (fs.exists(new Path(path, "CURRENT"))) currentGenDir(spark, path)
-      else path
+    val dir = ManagedRoot.resolve(spark, path)
     if (dir != path) Spans.checkK(spark, dir, k)
     Spans.spanIndexRead(spark, dir)
-  }
-
-  /**
-   * Close the append-crash/compaction race BEFORE a generation roll: a
-   * run that died after committing its gen-local epoch but before
-   * creating the root-level marker leaves an ORPHAN epoch. If a later
-   * call's roll folded that epoch and the crashed epoch then retried,
-   * the retry would re-append into the new generation and df_cnt would
-   * double-count it (membership count>=1 was never affected). Repairing
-   * the marker for every committed gen-local epoch right before folding
-   * makes the fold itself the completion point: after the roll, a retry
-   * of the orphan sees its root marker and skips. Crash-safe: dying
-   * mid-repair just leaves markers the un-rolled generation still
-   * backs; dying between repair and roll leaves markers whose epochs
-   * are committed — both are exactly the normal committed state.
-   */
-  private def repairEpochMarkers(
-      fs: FileSystem, root: String, genDir: String): Unit = {
-    val markers = new Path(root, "epochs")
-    fs.listStatus(new Path(genDir)).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("batch_id=") &&
-          fs.exists(new Path(st.getPath, "_SUCCESS"))) {
-        // EpochStore writes "batch_id=<epoch>" LITERALLY (its own
-        // directory layout, not a partitioned writer), and the root
-        // marker uses the same raw epoch string — so the dir name maps
-        // back by prefix strip alone; no partition-escape decoding.
-        val epoch = n.stripPrefix("batch_id=")
-        val m = new Path(markers, epoch)
-        if (!fs.exists(m)) {
-          fs.mkdirs(markers)
-          fs.create(m, true).close()
-        }
-      }
-    }
-  }
-
-  /** Number of committed parquet data files directly under `dir` (0 when
-    * absent) — the near-dup generation's compaction trigger. */
-  private def committedParquetFiles(fs: FileSystem, dir: String): Int = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) 0
-    else fs.listStatus(p).count(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
   }
 
   /** The typed empty (doc, sig, hs) frame a bootstrap screen runs
@@ -1411,122 +1273,23 @@ object Ingest {
 
   /**
    * Read a persisted near-dup index for screening: either an
-   * [[ingestBatch]]-managed root (detected by its `CURRENT` pointer —
-   * resolves to the active generation) or a flat
-   * [[Dedup.indexAppend]] directory. Returns the typed empty frame when
-   * nothing is committed yet, so a bootstrap screen composes cleanly.
+   * [[ingestBatch]]-managed root (its active generation,
+   * [[ManagedRoot.resolve]]) or a flat [[Dedup.indexAppend]] directory.
+   * Returns the typed empty frame when nothing is committed yet, so a
+   * bootstrap screen composes cleanly.
    */
   def ndIndexAt(spark: SparkSession, path: String): DataFrame =
-    ndSnapshot(spark, ndIndexDir(spark, path)).getOrElse(emptyNdFrame(spark))
-
-  /** Resolve the directory holding a near-dup index's committed rows:
-    * a managed root's active generation (detected by `CURRENT`), or the
-    * path itself (flat [[Dedup.indexAppend]] layout). */
-  def ndIndexDir(spark: SparkSession, path: String): String = {
-    val fs = rootFs(spark, path)
-    if (fs.exists(new Path(path, "CURRENT"))) currentGenDir(spark, path)
-    else path
-  }
-
-  /** Resolve the directory holding a persisted SPAN index: a managed
-    * root's active generation (detected by `CURRENT`), or the path
-    * itself (flat [[Spans.spanIndexAppend]] layout). READ-ONLY — never
-    * bootstraps a generation tree (that is [[ingestBatch]]'s append-side
-    * concern), so a read surface pointed at a wrong path fails loud
-    * downstream instead of minting an empty store. */
-  def spanIndexDirAt(spark: SparkSession, path: String): String = {
-    val fs = rootFs(spark, path)
-    if (fs.exists(new Path(path, "CURRENT"))) currentGenDir(spark, path)
-    else path
-  }
-
-  // ---- managed chunk-index generations -----------------------------------
-
-  /**
-   * Resolve (bootstrapping if needed) the current chunk-index generation
-   * directory under `root`. Layout:
-   * {{{
-   *   <root>/CURRENT            one line: the active generation name
-   *   <root>/gen-00000/...      chunk epochs (batch_id=* partitions)
-   *   <root>/epochs/<epoch>     committed-epoch markers (outlive gens)
-   * }}}
-   * The CURRENT pointer is a single small file — an atomic PUT on object
-   * stores; single writer assumed. Generations superseded by compaction
-   * are deleted best-effort (a crash leaves orphans that the next
-   * compaction sweeps).
-   */
-  def currentChunkDir(spark: SparkSession, root: String): String =
-    currentGenDir(spark, root)
-
-  /** Resolve (bootstrapping if needed) the current generation directory
-    * of a managed index root — the layout shared by the chunk and
-    * near-dup indexes (see [[currentChunkDir]]'s doc for the tree). */
-  private[graft] def currentGenDir(spark: SparkSession, root: String): String = {
-    val fs = rootFs(spark, root)
-    val currentFile = new Path(root, "CURRENT")
-    if (!fs.exists(currentFile)) {
-      fs.mkdirs(new Path(root, "gen-00000"))
-      writeCurrent(fs, currentFile, "gen-00000")
-    }
-    val gen = readCurrent(fs, currentFile)
-    val dir = new Path(root, gen)
-    if (!fs.exists(dir)) fs.mkdirs(dir)
-    dir.toString
-  }
-
-  /** Fold the current generation into a compacted successor (via the
-    * index family's `compact(src, dest)`, whose result it returns) and
-    * flip CURRENT. Crash-safe:
-    * dying before the flip leaves CURRENT on the old (still-complete)
-    * generation and the next trigger re-compacts — the compact functions
-    * all `mode("overwrite")` the successor, so a stale partial successor
-    * is repaired, never trusted. Dying after the flip leaves orphan
-    * generations that the next roll's sweep deletes.
-    *
-    * READER CONTRACT: the JUST-superseded generation is kept through one
-    * roll (the sweep deletes only `gen-N` with N < the pre-roll CURRENT),
-    * so a concurrent reader that resolved [[ndIndexAt]] /
-    * [[chunkIndexAt]] / [[ivfIndexDirAt]] right before the flip can still
-    * materialize its frame afterwards — its files outlive the roll that
-    * superseded them and die only at the NEXT roll. One-writer-
-    * many-readers is therefore safe at one-roll cadence: a reader must
-    * consume (or re-resolve) a frame before a SECOND compaction fires,
-    * which at the default thresholds is hundreds of batches away. */
-  private[graft] def rollGeneration(
-      spark: SparkSession, root: String, curDir: String)(
-      compact: (String, String) => Long): Long = {
-    val fs = rootFs(spark, root)
-    val curName = new Path(curDir).getName
-    val curNum = curName.stripPrefix("gen-").toInt
-    val nextName = f"gen-${curNum + 1}%05d"
-    val compacted = compact(curDir, new Path(root, nextName).toString)
-    writeCurrent(fs, new Path(root, "CURRENT"), nextName)
-    // Sweep superseded generations EXCEPT the newest one (the grace
-    // generation in-flight readers may still be scanning), incl. orphans
-    // of past crashes.
-    fs.listStatus(new Path(root)).foreach { st =>
-      val n = st.getPath.getName
-      if (st.isDirectory && n.startsWith("gen-") &&
-          n.stripPrefix("gen-").forall(_.isDigit) &&
-          n.stripPrefix("gen-").toInt < curNum)
-        fs.delete(st.getPath, true)
-    }
-    compacted
-  }
+    ndSnapshot(spark, ManagedRoot.resolve(spark, path))
+      .getOrElse(emptyNdFrame(spark))
 
   /** Read a persisted chunk index for screening: either an
-    * [[ingestBatch]]-managed root (detected by its `CURRENT` pointer —
-    * resolves to the active generation) or a raw
-    * [[Dedup.chunkIndexAppend]] epoch directory. */
-  def chunkIndexAt(spark: SparkSession, path: String): DataFrame = {
-    val fs = rootFs(spark, path)
-    val dir =
-      if (fs.exists(new Path(path, "CURRENT"))) currentChunkDir(spark, path)
-      else path
-    Dedup.chunkIndexRead(spark, dir)
-  }
+    * [[ingestBatch]]-managed root (its active generation,
+    * [[ManagedRoot.resolve]]) or a raw [[Dedup.chunkIndexAppend]] epoch
+    * directory. */
+  def chunkIndexAt(spark: SparkSession, path: String): DataFrame =
+    Dedup.chunkIndexRead(spark, ManagedRoot.resolve(spark, path))
 
-  private[graft] def rootFs(spark: SparkSession, root: String): FileSystem =
+  private def rootFs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   /** Snapshot read of a flat parquet index: the COMMITTED data files are
@@ -1544,26 +1307,5 @@ object Ingest {
         .map(_.getPath.toString).toIndexedSeq
       if (files.isEmpty) None else Some(spark.read.parquet(files: _*))
     }
-  }
-
-  private[graft] def writeCurrent(fs: FileSystem, file: Path, gen: String): Unit = {
-    val out = fs.create(file, true)
-    try out.write(gen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private[graft] def readCurrent(fs: FileSystem, file: Path): String = {
-    val in = fs.open(file)
-    try {
-      val bytes = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](256)
-      var n = in.read(buf)
-      while (n > 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-      val gen = bytes.toString(java.nio.charset.StandardCharsets.UTF_8).trim
-      require(gen.startsWith("gen-") &&
-        gen.stripPrefix("gen-").forall(_.isDigit) && gen.length > 4,
-        s"corrupt CURRENT pointer at $file: '$gen'")
-      gen
-    } finally in.close()
   }
 }

@@ -310,13 +310,14 @@ object PQ {
 
   object PqIndex {
     /** Read a persisted index: either a flat [[PqIndex.write]] directory
-      * or an [[graft.functions.Ingest.ingestBatch]]-managed root
-      * (detected by its `CURRENT` pointer — resolves to the active
-      * generation, so readers keep working across compaction rolls; the
+      * or an [[graft.functions.Ingest.ingestBatch]]-managed root,
+      * resolved to its active generation by
+      * [[graft.sources.ManagedRoot.resolve]] (a damaged pointer fails
+      * loud), so readers keep working across compaction rolls; the
       * just-superseded generation survives one roll as the
-      * in-flight-reader grace window). */
+      * in-flight-reader grace window. */
     def read(spark: org.apache.spark.sql.SparkSession, path: String): PqIndex = {
-      val dir = Ingest.pqIndexDirAt(spark, path)
+      val dir = graft.sources.ManagedRoot.resolve(spark, path)
       PqIndex(
         spark.read.parquet(dir + "/centroids"),
         spark.read.parquet(dir + "/codebooks"),

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
  * `jaws-effective-processor/src/main/java/org/jlab/jaws/rule/ActivationRule.java:277-314`;
  * this is that posture on the export side).
  *
- * Root layout (the chunk/span/near-dup family tree):
+ * Root layout (the [[ManagedRoot]] tree every managed family shares):
  * {{{
  *   <root>/CURRENT              one line: the active generation name
  *   <root>/gen-00000/           a complete packed BinShards artifact
@@ -73,20 +73,6 @@ object BinFamily {
 
   private final case class EpochEntry(epoch: String, start: Long,
       span: Long, files: Long)
-
-  /** Resolve a possibly-managed directory for the READ side: a root
-    * with a `CURRENT` pointer resolves to its active generation (never
-    * bootstraps — a read must not create state), anything else passes
-    * through. This is what makes every bin reader and TVF accept a
-    * managed root and a plain export dir interchangeably. */
-  def resolveDir(spark: SparkSession, dir: String): String = {
-    val fs = BinShards.fsOf(dir, spark.sparkContext.hadoopConfiguration)
-    val cur = new Path(dir, "CURRENT")
-    if (fs.exists(cur))
-      new Path(dir,
-        graft.functions.Ingest.readCurrent(fs, cur)).toString
-    else dir
-  }
 
   private def parseEpochs(fs: FileSystem, gen: String): Seq[EpochEntry] = {
     val p = new Path(gen, EpochsSidecar)
@@ -261,12 +247,11 @@ object BinFamily {
     val confSer = new org.apache.spark.SerializableWritable(
       spark.sparkContext.hadoopConfiguration)
     val fs = BinShards.fsOf(root, confSer.value)
-    val markersDir = new Path(root, "epochs")
     // Idempotent replay: epochs whose root marker exists touch NOTHING
     // (the managed families' replayed-batch contract). Markers cannot
     // appear mid-call (single logical writer, distinct ids above).
     var remaining = batches.filterNot { case (epochId, _) =>
-      fs.exists(new Path(markersDir, epochId)) }
+      ManagedRoot.hasEpoch(spark, root, epochId) }
     if (remaining.isEmpty) return -1L
     // The family config gate: every append must agree EXACTLY with the
     // generation's recorded (kind, budget, span, identity) — the KIND
@@ -276,7 +261,7 @@ object BinFamily {
       shardsPerEpoch, "", identity)
     var result = -1L
     while (remaining.nonEmpty) {
-      val genDir = graft.functions.Ingest.currentGenDir(spark, root)
+      val genDir = ManagedRoot.open(spark, root)
       val genPath = new Path(genDir)
       readConfig(fs, genDir).foreach { existing =>
         require(existing == config,
@@ -290,8 +275,7 @@ object BinFamily {
       // fold base). An entry without its marker is a crashed append —
       // dropped from the ledger and its span swept below.
       val committed = entries.filter(e =>
-        e.epoch == FoldedEpoch ||
-          fs.exists(new Path(markersDir, e.epoch)))
+        e.epoch == FoldedEpoch || ManagedRoot.hasEpoch(spark, root, e.epoch))
       val cCount = committed.count(_.epoch != FoldedEpoch)
       // The group = the epochs this generation takes before the fold
       // arms (serial equivalence: the serial replay folds exactly when
@@ -365,16 +349,14 @@ object BinFamily {
       val totalFiles = shardNums.length.toLong
       stampCommit(fs, genDir, layout, budget, totalFiles, epochCount,
         identity)
-      fs.mkdirs(markersDir)
-      group.foreach { case (epochId, _) =>
-        fs.create(new Path(markersDir, epochId), true).close() }
+      ManagedRoot.markEpochs(spark, root, group.map(_._1))
       result =
         if (epochCount >= compactEvery)
           // Fold: copy by byte range (NEVER re-encode) into a dense
           // canonical successor and flip CURRENT. A crash mid-fold
           // leaves CURRENT on the old complete generation; the next
           // append re-triggers.
-          graft.functions.Ingest.rollGeneration(spark, root, genDir) {
+          ManagedRoot.roll(spark, root, genDir) {
             (src, dest) =>
               val w = BinShards.fold(spark, layout, src, dest, budget,
                 shardsPerEpoch)

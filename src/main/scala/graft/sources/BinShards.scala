@@ -920,7 +920,7 @@ object BinShards {
     val fn = layout.reader
     // A managed BinFamily root resolves to its active generation; a
     // plain export dir passes through (all read-side entry points).
-    val dir = BinFamily.resolveDir(spark, dirOrRoot)
+    val dir = ManagedRoot.resolve(spark, dirOrRoot)
     val confSer = new org.apache.spark.SerializableWritable(
       spark.sparkContext.hadoopConfiguration)
     val fs = fsOf(dir, confSer.value)
@@ -983,7 +983,7 @@ object BinShards {
    * (torn/foreign) dir exactly like the readers.
    */
   def commitInfo(spark: SparkSession, dirOrRoot: String): Map[String, String] = {
-    val dir = BinFamily.resolveDir(spark, dirOrRoot)
+    val dir = ManagedRoot.resolve(spark, dirOrRoot)
     val fs = fsOf(dir, spark.sparkContext.hadoopConfiguration)
     val marker = new Path(dir, CommitMarker)
     require(fs.exists(marker),
@@ -1018,7 +1018,7 @@ object BinShards {
    */
   def readSequence(spark: SparkSession, dirOrRoot: String, shard: Long,
       seq: Long): Array[Int] = {
-    val dir = BinFamily.resolveDir(spark, dirOrRoot)
+    val dir = ManagedRoot.resolve(spark, dirOrRoot)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(dir, conf)
     require(fs.exists(new Path(dir, CommitMarker)),
@@ -1069,7 +1069,7 @@ object BinShards {
    */
   def readBin(spark: SparkSession, dirOrRoot: String, shard: Long,
       bin: Long): (Array[Int], Array[Long]) = {
-    val dir = BinFamily.resolveDir(spark, dirOrRoot)
+    val dir = ManagedRoot.resolve(spark, dirOrRoot)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = fsOf(dir, conf)
     require(fs.exists(new Path(dir, CommitMarker)),

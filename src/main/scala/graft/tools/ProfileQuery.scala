@@ -40,8 +40,12 @@ object ProfileQuery {
     val stageLog = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, String)]()
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
+      // A caller-set call site when there is one, else the name of the
+      // job's result stage (e.g. `foreach at BinShards.scala:…`).
       val site = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
+        .flatMap(p => Option(p.getProperty("callSite.short")))
+        .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
+        .getOrElse("?")
       jobStart.put(e.jobId, (e.time, site))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = {

@@ -35,6 +35,38 @@ object ScaleStress {
         println(f"[stress] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
       }
 
+    // Run `f` under a task listener; returns f's result with the max and
+    // the total shuffle-read records over its tasks. The listener bus is
+    // drained BEFORE the counters are read: a fixed sleep can return
+    // while TaskEnd events are still queued, under-counting a ceiling and
+    // letting a no-straggler require pass spuriously. listenerBus is
+    // private[spark] (public in bytecode) — reflection reaches the real
+    // waitUntilEmpty(timeoutMillis).
+    def shuffleRead[T](f: => T): (T, Long, Long) = {
+      val maxRead = new java.util.concurrent.atomic.AtomicLong(0)
+      val totalRead = new java.util.concurrent.atomic.AtomicLong(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(
+            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+          val m = te.taskMetrics
+          if (m != null) {
+            val r = m.shuffleReadMetrics.recordsRead
+            maxRead.getAndUpdate(v => math.max(v, r))
+            totalRead.addAndGet(r)
+          }
+        }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        val out = f
+        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+          .invoke(bus, java.lang.Long.valueOf(30000L))
+        (out, maxRead.get(), totalRead.get())
+      } finally sc.removeSparkListener(listener)
+    }
+
     val docs1 = GraftSession.table(spark, dir, "documents")
     val docs20 = times(docs1, "doc_id", 20, 1000000L).cache()
     println(s"[stress] documents x20 = ${docs20.count()} rows")
@@ -114,36 +146,16 @@ object ScaleStress {
       // the old count-over-window, one task received all 100k hot
       // replicas (max task shuffle-read >= 100k); with groupBy+join-back
       // the max task stays at an even share. Asserted, not just timed.
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) maxTask.getAndUpdate(v =>
-            math.max(v, m.shuffleReadMetrics.recordsRead))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val n = 100000L
+      val n = 100000L
+      val (_, ceiling, _) = shuffleRead {
         val hot = spark.range(n).select(col("id").as("doc_id"),
           concat(lit("all rights reserved contact us for terms now doc "),
             col("id"), lit(" pad pad pad pad pad "), col("id")).as("text"))
         println("rows=" + Dedup.chunkDedup(hot, "doc_id", "text").count())
-        // Drain the listener bus BEFORE reading maxTask: a fixed sleep can
-        // return while TaskEnd events are still queued, under-counting the
-        // ceiling and letting the no-straggler require pass spuriously.
-        // listenerBus is private[spark] (public in bytecode) — reflection
-        // reaches the real waitUntilEmpty(timeoutMillis).
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(30000L))
-        val ceiling = maxTask.get()
-        println(s"max task shuffle-read records = $ceiling (hot chunk df = $n)")
-        require(ceiling < n / 2,
-          s"hot chunk funneled into one task: max task read $ceiling of $n replicas")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      println(s"max task shuffle-read records = $ceiling (hot chunk df = $n)")
+      require(ceiling < n / 2,
+        s"hot chunk funneled into one task: max task read $ceiling of $n replicas")
     }
     time("chunk_novelty @ 100k-doc batch vs 100k-doc index, shared hot chunk") {
       // The novelty screen at scale: batch and index docs share ONE hot
@@ -231,7 +243,7 @@ object ScaleStress {
       val byDecision = graft.functions.Ingest.screenBatchGated(
           batch,
           spark.read.parquet(
-            graft.functions.Ingest.ndIndexDir(spark, s"$seedDir/nd")),
+            graft.sources.ManagedRoot.resolve(spark, s"$seedDir/nd")),
           graft.functions.Ingest.chunkIndexAt(spark, s"$seedDir/chunks"),
           "doc_id", "text", dupRatio = 2.0, qualityGate = true,
           spanGate = Some((spanIdx, 5, 0.5)),
@@ -297,18 +309,8 @@ object ScaleStress {
       // partition BEFORE the window's exchange, so the max task
       // shuffle-read stays at heap-survivor scale. Same listener proof
       // as the hot-chunk probe.
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) maxTask.getAndUpdate(v =>
-            math.max(v, m.shuffleReadMetrics.recordsRead))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val n = 100000L
+      val n = 100000L
+      val (_, ceiling, _) = shuffleRead {
         val hot = spark.range(n).select(col("id").as("doc_id"),
           lit("hotdomain.example").as("src"))
         val kept = graft.ops.CorpusMix.sourceCap(hot, "doc_id", "src", 10)
@@ -322,16 +324,11 @@ object ScaleStress {
           .filter(col("kept")).count()
         require(keptHash == 10,
           s"byHash cap must keep exactly 10, got $keptHash")
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(30000L))
-        val ceiling = maxTask.get()
-        println(s"max task shuffle-read records = $ceiling (domain df = $n," +
-          " both keeper modes)")
-        require(ceiling < n / 2,
-          s"hot domain funneled into one task: $ceiling of $n rows")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      println(s"max task shuffle-read records = $ceiling (domain df = $n," +
+        " both keeper modes)")
+      require(ceiling < n / 2,
+        s"hot domain funneled into one task: $ceiling of $n rows")
     }
     time("keep-best winner @ 100k-member mega-cluster — task ceiling asserted") {
       // The keep-best claim under its worst case: ONE cluster holding
@@ -340,18 +337,8 @@ object ScaleStress {
       // 100k rows in one task. Clustering itself is exercised by the
       // CC-chain probe above; here the cluster frame is synthetic so the
       // probe isolates the WINNER aggregate's shape.
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) maxTask.getAndUpdate(v =>
-            math.max(v, m.shuffleReadMetrics.recordsRead))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val n = 100000L
+      val n = 100000L
+      val (_, ceiling, _) = shuffleRead {
         // One cluster (id 0), token counts 1..n so doc n-1 wins. Drives
         // the REAL shared aggregate (Dedup.winnerPerCluster) — the same
         // expression both keep-best forms (longest-wins and the
@@ -363,15 +350,10 @@ object ScaleStress {
           .filter(col("doc_id") === col("keep_id")).collect()
         require(kept.length == 1 && kept.head.getLong(1) == n - 1,
           s"longest doc must win the mega-cluster: ${kept.toSeq}")
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(30000L))
-        val ceiling = maxTask.get()
-        println(s"max task shuffle-read records = $ceiling (cluster size = $n)")
-        require(ceiling < n / 2,
-          s"mega-cluster funneled into one task: $ceiling of $n rows")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      println(s"max task shuffle-read records = $ceiling (cluster size = $n)")
+      require(ceiling < n / 2,
+        s"mega-cluster funneled into one task: $ceiling of $n rows")
     }
     time("bm25_batch @ 100k docs x 100 queries — task ceiling asserted") {
       // The multi-query worst case: EVERY doc matches EVERY query (each
@@ -381,19 +363,9 @@ object ScaleStress {
       // window's exchange — max task shuffle-read stays at survivor
       // scale (k * partitions per query), never the 100k corpus through
       // one reducer. Same listener proof as the hot-domain probe.
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) maxTask.getAndUpdate(v =>
-            math.max(v, m.shuffleReadMetrics.recordsRead))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        import spark.implicits._
-        val n = 100000L
+      import spark.implicits._
+      val n = 100000L
+      val (_, ceiling, _) = shuffleRead {
         val hotDocs = spark.range(n).select(col("id").as("doc_id"),
           lit("t0 t1 t2 t3 t4 t5 t6 t7 t8 t9 pad pad pad pad").as("text"))
         val queries = (0 until 100)
@@ -404,16 +376,11 @@ object ScaleStress {
         val rows = out.count()
         require(rows == 100L * 10L,
           s"every query must fill its top-10, got $rows rows")
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(30000L))
-        val ceiling = maxTask.get()
-        println(s"max task shuffle-read records = $ceiling " +
-          s"(matched pairs = ${n * 100})")
-        require(ceiling < n / 2,
-          s"batch scoring funneled into one task: $ceiling records")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      println(s"max task shuffle-read records = $ceiling " +
+        s"(matched pairs = ${n * 100})")
+      require(ceiling < n / 2,
+        s"batch scoring funneled into one task: $ceiling records")
     }
     time("quality_gopher @ 100k docs (pure map pass)")(
       println("passes=" + graft.functions.TextFunctions
@@ -823,33 +790,18 @@ object ScaleStress {
       require(model.mergeList.length == 64,
         s"hot words repeat plenty — expected all 64 merges, got " +
           s"${model.mergeList.length}")
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) maxTask.getAndUpdate(v =>
-            math.max(v, m.shuffleReadMetrics.recordsRead))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        val total = Bpe.bpeCount(docs, "doc_id", "text", model)
+      val (total, ceiling, _) = shuffleRead {
+        Bpe.bpeCount(docs, "doc_id", "text", model)
           .agg(sum("n_tokens_bpe")).head.getLong(0)
-        // 12+ whitespace words/doc, each >= 1 model token.
-        require(total >= n * 12,
-          s"implausible token mass for 100k 12-word docs: $total")
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(30000L))
-        val ceiling = maxTask.get()
-        println(s"max task shuffle-read records = $ceiling " +
-          s"(docs = $n, token mass = $total)")
-        require(ceiling <= 64,
-          s"the encode pass shuffled row data: $ceiling records " +
-            "(must be the count aggregate's partials only)")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      // 12+ whitespace words/doc, each >= 1 model token.
+      require(total >= n * 12,
+        s"implausible token mass for 100k 12-word docs: $total")
+      println(s"max task shuffle-read records = $ceiling " +
+        s"(docs = $n, token mass = $total)")
+      require(ceiling <= 64,
+        s"the encode pass shuffled row data: $ceiling records " +
+          "(must be the count aggregate's partials only)")
     }
 
     time("pack_nosplit @ 100k docs, 64 shards — balanced greedy, capacity + dominance hold") {
@@ -861,30 +813,15 @@ object ScaleStress {
       // and never fall below the information-theoretic floor
       // ceil(mass/budget).
       import graft.ops.TrainShuffle
-      val maxTask = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) maxTask.getAndUpdate(v =>
-            math.max(v, m.shuffleReadMetrics.recordsRead))
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
       val ff = TrainShuffle.packNoSplit(docs20, "doc_id", "text",
         numShards = 64, budget = 256).cache()
+      // Listener scoped to the cache-fill job ONLY: that is the job whose
+      // shuffle is the doc-sized pack exchange. The later audit
+      // aggregates emit thousands of TINY partial rows that AQE rightly
+      // coalesces into few tasks — record counts there say nothing about
+      // shard balance.
+      val (nDocs, ceiling, _) = shuffleRead(ff.count())
       try {
-        // Listener scoped to the cache-fill job ONLY: that is the job
-        // whose shuffle is the doc-sized pack exchange. The later audit
-        // aggregates emit thousands of TINY partial rows that AQE
-        // rightly coalesces into few tasks — record counts there say
-        // nothing about shard balance.
-        val nDocs = ff.count()
-        val sc0 = spark.sparkContext
-        val bus0 = sc0.getClass.getMethod("listenerBus").invoke(sc0)
-        bus0.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus0, java.lang.Long.valueOf(30000L))
-        val ceiling = maxTask.get()
         require(nDocs == docs20.count(),
           s"packer dropped rows: $nDocs of ${docs20.count()}")
         val overCap = ff.groupBy("shard", "bin")
@@ -913,8 +850,7 @@ object ScaleStress {
         // order of magnitude above this ceiling.
         require(ceiling <= 16384,
           s"a task funneled $ceiling records — shard balance broke")
-        ff.unpersist()
-      } finally spark.sparkContext.removeSparkListener(listener)
+      } finally ff.unpersist()
     }
 
     time("pack_nosplit_ids @ 100k docs — whole-doc arrays ride the exchange, no token explode") {
@@ -930,29 +866,15 @@ object ScaleStress {
       val model = Bpe.bpeTrain(docs20, "text", numMerges = 32,
         maxTrainWords = 4096)
       val nDocs = docs20.count()
-      val totalRead = new java.util.concurrent.atomic.AtomicLong(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val m = te.taskMetrics
-          if (m != null) totalRead.addAndGet(m.shuffleReadMetrics.recordsRead)
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val (_, _, total) = shuffleRead {
         TrainShuffle.packNoSplitIds(docs20, "doc_id", "text", model,
             numShards = 64, budget = 256)
           .write.format("noop").mode("overwrite").save()
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
-          .invoke(bus, java.lang.Long.valueOf(30000L))
-        val total = totalRead.get()
-        println(s"total shuffle-read records = $total over $nDocs docs")
-        require(total <= 4L * nDocs,
-          s"the ids export moved $total records for $nDocs docs — " +
-            "token-level explode or join-back reintroduced")
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      println(s"total shuffle-read records = $total over $nDocs docs")
+      require(total <= 4L * nDocs,
+        s"the ids export moved $total records for $nDocs docs — " +
+          "token-level explode or join-back reintroduced")
     }
 
     time("binary shard export @ 100k docs — round trip digest-gated, flat 4B/id files") {
@@ -1106,7 +1028,7 @@ object ScaleStress {
       }
       val tFirst = appendOne(0)
       (1 until 8).foreach(appendOne)
-      val genDir = BinFamily.resolveDir(spark, root)
+      val genDir = graft.sources.ManagedRoot.resolve(spark, root)
       val early = new java.io.File(
         genDir.stripPrefix("file:"), "shard-00000.bin")
       require(early.exists(), s"probe fixture: no epoch-0 shard at $early")

@@ -177,7 +177,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     val scalaQO = graft.functions.Ingest.screenBatchGated(
         spark.read.parquet(batchDir),
         spark.read.parquet(
-          graft.functions.Ingest.ndIndexDir(spark, nd)),
+          graft.sources.ManagedRoot.resolve(spark, nd)),
         graft.functions.Ingest.chunkIndexAt(spark, ch),
         "doc_id", "text", threshold = 0.7, dupRatio = 2.0,
         qualityGate = true,
@@ -1614,7 +1614,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // marker gone) stays the documented no-op — (false, -1, -1), no
     // throw — so a crashed ingest loop can replay from epoch 0 and
     // reach the epoch that actually needs repair.
-    val gen = graft.sources.BinFamily.resolveDir(spark, base + "/root")
+    val gen = graft.sources.ManagedRoot.resolve(spark, base + "/root")
     val mkPath = java.nio.file.Paths.get(
       gen.stripPrefix("file:"), "_BIN_COMMIT")
     val mkBytes = java.nio.file.Files.readAllBytes(mkPath)

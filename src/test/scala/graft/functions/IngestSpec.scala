@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.ManagedRoot
+
 /** The first-class ingestion operator ([[Ingest.ingestBatch]]): decision
   * correctness, retry-decision stability, idempotent appends across all
   * three index families, crash-window recovery, and the managed
@@ -94,7 +96,7 @@ class IngestSpec extends AnyFunSuite {
     // of rejecting against its own stored chunks — and every append
     // no-ops (the chunk skip distinguishable as -1).
     val ndRows = Ingest.ndIndexAt(spark, nd).count()
-    val chTotal = Dedup.chunkIndexRead(spark, Ingest.currentChunkDir(spark, ch))
+    val chTotal = Ingest.chunkIndexAt(spark, ch)
       .agg(org.apache.spark.sql.functions.sum("df_cnt"))
       .collect()(0).getLong(0)
     val (r2b, d2b) = run(b2, Map(6L -> vecOf(6)), "epoch-2")
@@ -103,11 +105,11 @@ class IngestSpec extends AnyFunSuite {
       r2b.appendedVectors == 0)
     assert(Ingest.ndIndexAt(spark, nd).count() == ndRows,
       "retry grew nd index")
-    assert(Dedup.chunkIndexRead(spark, Ingest.currentChunkDir(spark, ch))
+    assert(Ingest.chunkIndexAt(spark, ch)
       .agg(org.apache.spark.sql.functions.sum("df_cnt"))
       .collect()(0).getLong(0) == chTotal, "retry grew chunk index")
     assert(spark.read.parquet(
-        Ingest.ivfIndexDirAt(spark, ivf) + "/vectors").count() == 3,
+        ManagedRoot.resolve(spark, ivf) + "/vectors").count() == 3,
       "retry grew vector index")
 
     // Batch 3 rejects a near-dup of the batch-2 ACCEPTED doc purely via
@@ -146,7 +148,7 @@ class IngestSpec extends AnyFunSuite {
     // CURRENT pointer is retrofitted around live data.
     assert(!new java.io.File(nd, "CURRENT").exists(),
       "a legacy flat index must not be converted in place")
-    val total = Dedup.chunkIndexRead(spark, Ingest.currentChunkDir(spark, ch))
+    val total = Ingest.chunkIndexAt(spark, ch)
       .agg(org.apache.spark.sql.functions.sum("df_cnt"))
       .collect()(0).getLong(0)
     assert(total > 0, "crashed doc's chunks must land on retry")
@@ -173,11 +175,11 @@ class IngestSpec extends AnyFunSuite {
     }
     assert(!run(1L, "e1").compacted)
     assert(!run(2L, "e2").compacted)
-    val before = Dedup.chunkIndexRead(spark, Ingest.currentChunkDir(spark, ch))
+    val before = Ingest.chunkIndexAt(spark, ch)
       .as[(String, Long)].collect().toMap
     val r3 = run(3L, "e3")
     assert(r3.compacted, "third epoch must trigger compaction")
-    val curDir = Ingest.currentChunkDir(spark, ch)
+    val curDir = ManagedRoot.resolve(spark, ch)
     assert(curDir.endsWith("gen-00001"), s"CURRENT must flip: $curDir")
     assert(new java.io.File(ch, "gen-00000").exists(),
       "the JUST-superseded generation must survive one roll " +
@@ -194,7 +196,7 @@ class IngestSpec extends AnyFunSuite {
     val retry = run(2L, "e2")
     assert(retry.appendedChunks == -1L,
       s"pre-compaction epoch retry must skip, got ${retry.appendedChunks}")
-    assert(Dedup.chunkIndexRead(spark, Ingest.currentChunkDir(spark, ch))
+    assert(Ingest.chunkIndexAt(spark, ch)
       .as[(String, Long)].collect().toMap.values.sum == after.values.sum,
       "epoch retry after compaction must not double-count")
     // And new epochs keep landing in the new generation.
@@ -608,40 +610,49 @@ class IngestSpec extends AnyFunSuite {
   }
 
   test("orphan epoch (crash before root marker) repaired at compaction; retry cannot double-count") {
-    val base = java.nio.file.Files.createTempDirectory("ingest-orphan-").toString
-    val nd = base + "/nd"
-    val ch = base + "/chunks"
     val texts = Map(
       1L -> "the river flows past the old mill near the quiet village green",
       2L -> "quantum processors require cryogenic cooling for stable overnight operation",
       3L -> "ancient pottery fragments reveal trade routes across the mediterranean basin")
-    def run(id: Long, epoch: String) = {
-      val r = Ingest.ingestBatch(docs(id -> texts(id)),
-        "doc_id", "text", nd, ch, epoch, compactEvery = 3)
+    // Both epoch families, one input each: (root name, its compaction
+    // flag, its epoch-append count, its index read).
+    val families = Seq[(String, Ingest.IngestReport => Boolean,
+        Ingest.IngestReport => Long, (SparkSession, String) => DataFrame)](
+      ("chunks", _.compacted, _.appendedChunks, Ingest.chunkIndexAt(_, _)),
+      ("spans", _.spanCompacted, _.appendedSpans, Ingest.spanIndexAt(_, _)))
+    families.foreach { case (family, compacted, appended, read) =>
+      val base = java.nio.file.Files.createTempDirectory("ingest-orphan-").toString
+      val root = s"$base/$family"
+      def run(id: Long, epoch: String) = {
+        val r = Ingest.ingestBatch(docs(id -> texts(id)),
+          "doc_id", "text", base + "/nd", base + "/chunks", epoch,
+          compactEvery = 3, spanRootPath = Some(base + "/spans"),
+          spanCompactEvery = 3)
+        graft.GraftCaches.clearAll()
+        r
+      }
+      def counts() = read(spark, root).collect()
+        .map(r => r.get(0) -> r.getLong(1)).toMap
+      run(1L, "e1")
+      run(2L, "e2")
+      // Simulate the crash window: e2's gen-local epoch committed but the
+      // run died before creating the root marker. Without repair, e3's
+      // compaction folds the orphan and e2's later retry re-appends it
+      // into the new generation — double-counting df_cnt.
+      val marker = new java.io.File(root + "/epochs", "e2")
+      assert(marker.delete(), s"$family fixture: root marker must exist")
+      val r3 = run(3L, "e3")
+      assert(compacted(r3), s"$family: third committed epoch must roll")
+      assert(marker.exists(),
+        s"$family: compaction must repair the orphan's root marker first")
+      val folded = counts()
+      val retry = run(2L, "e2")
+      assert(appended(retry) == -1L,
+        s"$family: repaired epoch's retry must skip, got ${appended(retry)}")
+      assert(counts() == folded,
+        s"$family: retry after repair must not change any df_cnt")
       graft.GraftCaches.clearAll()
-      r
     }
-    run(1L, "e1")
-    run(2L, "e2")
-    // Simulate the crash window: e2's gen-local epoch committed but the
-    // run died before creating the root marker. Without repair, e3's
-    // compaction folds the orphan and e2's later retry re-appends it
-    // into the new generation — double-counting df_cnt.
-    val marker = new java.io.File(ch + "/epochs", "e2")
-    assert(marker.delete(), "fixture: root marker must exist to delete")
-    val r3 = run(3L, "e3")
-    assert(r3.compacted, "third committed epoch must trigger the roll")
-    assert(marker.exists(),
-      "compaction must repair the orphan's root marker before folding")
-    val folded = Dedup.chunkIndexRead(spark, Ingest.currentChunkDir(spark, ch))
-      .as[(String, Long)].collect().toMap
-    val retry = run(2L, "e2")
-    assert(retry.appendedChunks == -1L,
-      s"repaired epoch's retry must skip, got ${retry.appendedChunks}")
-    val after = Dedup.chunkIndexRead(spark, Ingest.currentChunkDir(spark, ch))
-      .as[(String, Long)].collect().toMap
-    assert(after == folded, "retry after repair must not change any df_cnt")
-    graft.GraftCaches.clearAll()
   }
 
   test("near-dup generations: file growth bounded, decisions stable across rolls") {
@@ -940,7 +951,7 @@ class IngestSpec extends AnyFunSuite {
     val r2 = run(2L, "e2")
     assert(r2.appendedVectors == 1 && r2.ivfCompacted,
       s"second vector file must trigger the roll: $r2")
-    val dir2 = Ingest.ivfIndexDirAt(spark, ivf)
+    val dir2 = ManagedRoot.resolve(spark, ivf)
     assert(dir2.endsWith("gen-00001"), s"CURRENT must flip: $dir2")
     // Totals survive the fold, and the compacted successor is ONE
     // cell-sorted file (the flat-probe-latency property).
@@ -974,7 +985,7 @@ class IngestSpec extends AnyFunSuite {
       !new java.io.File(ivf, "gen-00000").exists(),
       "each roll keeps one grace generation and sweeps the rest")
     assert(spark.read.parquet(
-        Ingest.ivfIndexDirAt(spark, ivf) + "/vectors").count() == 4)
+        ManagedRoot.resolve(spark, ivf) + "/vectors").count() == 4)
     graft.GraftCaches.clearAll()
   }
 
@@ -1003,7 +1014,7 @@ class IngestSpec extends AnyFunSuite {
     assert(new java.io.File(pq, "CURRENT").exists(),
       "fresh pq root must be managed")
     assert(r1.appendedCodes == 1 && !r1.pqCompacted, s"bootstrap: $r1")
-    val dir1 = Ingest.pqIndexDirAt(spark, pq)
+    val dir1 = ManagedRoot.resolve(spark, pq)
     for (part <- Seq("centroids", "codebooks", "codes"))
       assert(new java.io.File(dir1, part).exists(), s"missing $part")
     // Second accepted vector encodes with the STORED quantizers, lands
@@ -1011,7 +1022,7 @@ class IngestSpec extends AnyFunSuite {
     val r2 = run(2L, "e2")
     assert(r2.appendedCodes == 1 && r2.pqCompacted,
       s"second code file must trigger the roll: $r2")
-    val dir2 = Ingest.pqIndexDirAt(spark, pq)
+    val dir2 = ManagedRoot.resolve(spark, pq)
     assert(dir2.endsWith("gen-00001"), s"CURRENT must flip: $dir2")
     assert(spark.read.parquet(dir2 + "/codes").count() == 2,
       "compaction lost code rows")
@@ -1045,7 +1056,7 @@ class IngestSpec extends AnyFunSuite {
       !new java.io.File(pq, "gen-00000").exists(),
       "each roll keeps one grace generation and sweeps the rest")
     assert(spark.read.parquet(
-        Ingest.pqIndexDirAt(spark, pq) + "/codes").count() == 4)
+        ManagedRoot.resolve(spark, pq) + "/codes").count() == 4)
     // The audit surfaces the family next to the others.
     val report = Ingest.indexReport(spark, nd, ch, None, Some(pq))
       .select("family", "layout", "generation", "rows")

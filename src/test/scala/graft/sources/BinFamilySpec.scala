@@ -106,7 +106,7 @@ class BinFamilySpec extends AnyFunSuite {
     assert(BinShards.readSequence(spark, root, one._1, one._2).toList ==
       one._3)
     // Replay: the committed epoch returns -1 and touches nothing.
-    val gen = BinFamily.resolveDir(spark, root)
+    val gen = ManagedRoot.resolve(spark, root)
     val mt = Files.getLastModifiedTime(Paths.get(gen, "shard-00000.bin"))
     Thread.sleep(1100)
     assert(BinFamily.appendEpoch(pack(1), root, budget, span,
@@ -153,7 +153,7 @@ class BinFamilySpec extends AnyFunSuite {
       compactEvery = 2)
     // CURRENT flipped; the folded generation is the model's re-chunk of
     // the pre-fold artifact (same global stream, canonical chunking).
-    val gen = BinFamily.resolveDir(spark, root)
+    val gen = ManagedRoot.resolve(spark, root)
     assert(gen.endsWith("gen-00001"), s"CURRENT must flip, got $gen")
     val folded = BinShards.read(spark, root)
     assert(collectPacked(folded) ==
@@ -183,7 +183,7 @@ class BinFamilySpec extends AnyFunSuite {
       shards.size.toLong,
       "the post-fold append must land past the folded base")
     assert(!Files.exists(Paths.get(root, "gen-00000")) ||
-      BinFamily.resolveDir(spark, root).endsWith("gen-00001"),
+      ManagedRoot.resolve(spark, root).endsWith("gen-00001"),
       "pre-fold state must not linger past its grace roll")
     // Replaying a PRE-FOLD epoch is still a no-op: root markers
     // outlive generations.
@@ -238,7 +238,7 @@ class BinFamilySpec extends AnyFunSuite {
       compactEvery = 2)
     BinFamily.appendEpochSft(packSft(1), root2, budget, span, "e1",
       compactEvery = 2)
-    val gen2 = BinFamily.resolveDir(spark, root2)
+    val gen2 = ManagedRoot.resolve(spark, root2)
     assert(gen2.endsWith("gen-00001"), s"CURRENT must flip, got $gen2")
     def orderedPayloads(df: DataFrame) = df
       .orderBy("shard", "bin").collect()
@@ -290,8 +290,8 @@ class BinFamilySpec extends AnyFunSuite {
       "batch append must reproduce the serial artifact")
     // ...and the same FILE BYTES per shard (the resume posture: the
     // artifact identity is its bytes, not just its frame).
-    val serGen = Paths.get(BinFamily.resolveDir(spark, serialRoot))
-    val batGen = Paths.get(BinFamily.resolveDir(spark, batchRoot))
+    val serGen = Paths.get(ManagedRoot.resolve(spark, serialRoot))
+    val batGen = Paths.get(ManagedRoot.resolve(spark, batchRoot))
     import scala.jdk.CollectionConverters._
     def shardFiles(p: java.nio.file.Path) =
       Files.list(p).iterator().asScala.map(_.getFileName.toString)
@@ -395,7 +395,7 @@ class BinFamilySpec extends AnyFunSuite {
       case (hdrBudget, lens, why) =>
         val bad = Files.createTempDirectory("binfam-bad-").toString
         BinFamily.appendEpoch(e0, bad, 3, span, "e0", compactEvery = 2)
-        val gen = BinFamily.resolveDir(spark, bad)
+        val gen = ManagedRoot.resolve(spark, bad)
         writeRawPair(gen, 0, hdrBudget, lens)
         val e = intercept[Exception] {
           BinFamily.appendEpoch(e1, bad, 3, span, "e1", compactEvery = 2)
@@ -424,7 +424,7 @@ class BinFamilySpec extends AnyFunSuite {
       val root = Files.createTempDirectory(s"binfam-empty-${l.name}-").toString
       assert(BinFamily.appendEpochsImpl(l, Seq("e0" -> emptyFrames(l),
         "e1" -> emptyFrames(l)), root, 4, 2, 2, Map.empty) == 0L, l.name)
-      val gen = BinFamily.resolveDir(spark, root)
+      val gen = ManagedRoot.resolve(spark, root)
       assert(gen.endsWith("gen-00001"), s"${l.name}: CURRENT must flip")
       val info = BinShards.commitInfo(spark, root)
       assert(info("shards") == "0" && info("epochs") == "0", s"$info")

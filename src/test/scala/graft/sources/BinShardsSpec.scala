@@ -517,7 +517,7 @@ class BinShardsSpec extends AnyFunSuite {
       val root = Files.createTempDirectory(s"binshards-fmtfam-${l.name}-")
         .toString
       BinFamily.appendEpochsImpl(l, Seq("e0" -> frame), root, 4, 2, 64, ident)
-      check(l, BinFamily.resolveDir(spark, root), Map(
+      check(l, ManagedRoot.resolve(spark, root), Map(
         "_BIN_COMMIT" ->
           s"version=1\n${kindLine}budget=4\nshards=2\nepochs=1\nvocab_size=9\n",
         "_BIN_CONFIG" -> (s"version=1\nkind=${l.name}-epochs\nbudget=4\n" +

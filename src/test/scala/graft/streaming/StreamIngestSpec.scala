@@ -111,7 +111,7 @@ class StreamIngestSpec extends AnyFunSuite {
       s"replay must append nothing: $replay")
     assert(Ingest.ndIndexAt(spark, nd).count() == ndRowsBefore)
     assert(spark.read.parquet(
-      Ingest.ivfIndexDirAt(spark, ivf) + "/vectors").count() == 3)
+      graft.sources.ManagedRoot.resolve(spark, ivf) + "/vectors").count() == 3)
     graft.GraftCaches.clearAll()
   }
 
