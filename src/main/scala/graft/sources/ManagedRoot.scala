@@ -82,7 +82,7 @@ object ManagedRoot {
     else None
 
   /** Whether `path` is a managed root (holds a `CURRENT` pointer). */
-  def isManaged(spark: SparkSession, path: String): Boolean =
+  private[graft] def isManaged(spark: SparkSession, path: String): Boolean =
     fsOf(spark, path).exists(new Path(path, CurrentFile))
 
   private def activeGeneration(fs: FileSystem, root: String,
@@ -133,11 +133,12 @@ object ManagedRoot {
     }
 
   /** Whether `epoch`'s root marker exists. */
-  def hasEpoch(spark: SparkSession, root: String, epoch: String): Boolean =
+  private[graft] def hasEpoch(spark: SparkSession, root: String,
+      epoch: String): Boolean =
     fsOf(spark, root).exists(new Path(new Path(root, MarkerDir), epoch))
 
   /** Write the root markers of `epochs` (existing ones are kept). */
-  def markEpochs(spark: SparkSession, root: String,
+  private[graft] def markEpochs(spark: SparkSession, root: String,
       epochs: Seq[String]): Unit = {
     val fs = fsOf(spark, root)
     val markers = new Path(root, MarkerDir)
@@ -148,7 +149,7 @@ object ManagedRoot {
   }
 
   /** Number of root epoch markers (0 when none). */
-  def markerCount(spark: SparkSession, root: String): Long = {
+  private[graft] def markerCount(spark: SparkSession, root: String): Long = {
     val fs = fsOf(spark, root)
     val markers = new Path(root, MarkerDir)
     if (fs.exists(markers)) fs.listStatus(markers).length.toLong else 0L
@@ -225,7 +226,7 @@ object ManagedRoot {
 
   /** Number of committed parquet data files directly under `dir` (0 when
     * absent) — the file-count trigger's metric. */
-  def parquetFiles(spark: SparkSession, dir: String): Int = {
+  private[graft] def parquetFiles(spark: SparkSession, dir: String): Int = {
     val fs = fsOf(spark, dir)
     val p = new Path(dir)
     if (!fs.exists(p)) 0
