@@ -50,12 +50,11 @@ object FullIngestDemo {
 
     def ingest(batch: DataFrame, embeddings: Map[Long, Array[Float]],
         epoch: String): (Ingest.IngestReport, Map[Long, String]) = {
-      val r = Ingest.ingestBatch(batch, "doc_id", "text", ndDir, chDir,
-        epoch,
+      val r = Ingest.ingestBatch(batch, epoch, Ingest.Loop("doc_id", "text",
+        ndDir, chDir, ivfIndexPath = Some(ivfDir), threshold = 0.7,
+        ivfNlist = 1, spanRootPath = Some(spDir)),
         embeddings = Some(embeddings.toSeq.map { case (id, v) => (id, v) }
-          .toDF("vec_id", "embedding")),
-        ivfIndexPath = Some(ivfDir), threshold = 0.7, ivfNlist = 1,
-        spanRootPath = Some(spDir))
+          .toDF("vec_id", "embedding")))
       val d = r.decisions.as[(Long, String)].collect().toMap
       graft.GraftCaches.clearAll()
       (r, d)

@@ -102,15 +102,15 @@ object GatedIngestDemo {
 
     val reports = ArrayBuffer.empty[(Long, Map[Long, String], Long, Long, Long, Long)]
     val sink: (DataFrame, Long) => Unit = Ingest.ingestSink(
-      "doc_id", "text", nd, ch,
-      dupRatio = 2.0,
-      qualityGate = true,
-      spanRootPath = Some(sp), spanK = 5, maxBoilerplate = 0.5,
-      samplingGate = Some(("score", 100L)),
-      splitTag = Some((splits, "")), leakGate = Some(0.5),
-      tokenizerModelPath = Some(tok),
-      binExportRootPath = Some(bins),
-      binExportShards = 2, binExportBudget = 32,
+      Ingest.Loop("doc_id", "text", nd, ch,
+        dupRatio = 2.0,
+        qualityGate = true,
+        spanRootPath = Some(sp), spanK = 5, maxBoilerplate = 0.5,
+        samplingGate = Some(("score", 100L)),
+        splitTag = Some((splits, "")), leakGate = Some(0.5),
+        tokenizerModelPath = Some(tok),
+        binExportRootPath = Some(bins),
+        binExportShards = 2, binExportBudget = 32),
       onReport = (id, r) => reports += ((id,
         r.decisions.select("doc_id", "decision")
           .as[(Long, String)].collect().toMap,

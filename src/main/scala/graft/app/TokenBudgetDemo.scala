@@ -61,11 +61,9 @@ object TokenBudgetDemo {
     // Ingest with the token stamp armed (fresh indexes: first batch, so
     // screens pass everything except true in-batch dups; what matters
     // here is the STAMP, not the gate mix — GatedIngestDemo covers that).
-    val report = Ingest.ingestBatch(
-      docs, "doc_id", "text",
-      ndIndexPath = s"$root/nd", chunkRootPath = s"$root/chunks",
-      epoch = "e1", dupRatio = 2.0,
-      tokenizerModelPath = Some(s"$root/tok"))
+    val report = Ingest.ingestBatch(docs, "e1", Ingest.Loop("doc_id", "text",
+      s"$root/nd", s"$root/chunks", dupRatio = 2.0,
+      tokenizerModelPath = Some(s"$root/tok")))
     val decisions = report.decisions
       .select(col("doc_id"), col("decision"), col("n_tokens_bpe"))
       .cache()

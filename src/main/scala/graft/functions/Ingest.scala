@@ -256,13 +256,9 @@ object Ingest {
     // text) from the caller's frame — a column-pruned re-read for the
     // TVF's parquet batch; a caller with an expensive upstream frame
     // caches it before the call (ingestBatch does exactly that).
-    gatedDecisions(b,
+    gatedDecisions(batch, idCol, b,
       ndIndex, chunkIndex, threshold, dupRatio, maxDf, shingleN, divisor,
-      maxChunkTokens, qualityGate, spanGate, outlierGate,
-      samplingGate.map { case (scoreCol, maxScore) =>
-        (batch.select(col(idCol).cast("long").as("doc_id"),
-          col(scoreCol).cast("long").as("score")), maxScore)
-      },
+      maxChunkTokens, qualityGate, spanGate, outlierGate, samplingGate,
       leakGate)
   }
 
@@ -295,7 +291,8 @@ object Ingest {
 
   /** The shared gate spine of [[ingestBatch]] / [[screenBatchGated]]:
     * base screen, then the armed gates in precedence order, each
-    * flipping only current [[Accepted]] rows.
+    * flipping only current [[Accepted]] rows. `batch` is the caller's
+    * frame, read only for the sampling gate's score column.
     *
     * PLAN-SHAPE INVARIANT (load-bearing): every gate layer references
     * the PREVIOUS decisions frame exactly ONCE (the flip join) and
@@ -309,6 +306,8 @@ object Ingest {
     * layer rejected are computed and discarded — one cheap map pass
     * per gate over batch-sized input, bought for a linear plan. */
   private def gatedDecisions(
+      batch: DataFrame,
+      idCol: String,
       b: DataFrame, // (doc_id, text)
       ndIndex: DataFrame,
       chunkIndex: DataFrame,
@@ -321,136 +320,107 @@ object Ingest {
       qualityGate: Boolean,
       spanGate: Option[(DataFrame, Int, Double)],
       outlierGate: Option[(IVF.OutlierModel, Double, DataFrame)],
-      samplingGate: Option[(DataFrame, Long)] = None, // ((doc_id, score), max)
-      leakGate: Option[(Double, Seq[(String, Long)])] = None)
+      samplingGate: Option[(String, Long)],
+      leakGate: Option[(Double, Seq[(String, Long)])])
       : DataFrame = {
     val screened0 = screenBatch(b, ndIndex, chunkIndex, "doc_id", "text",
       threshold, dupRatio, maxDf, shingleN, divisor, maxChunkTokens)
-    // Optional SAMPLING gate, FIRST among the optional gates (cheaper
-    // even than the quality pass: one projection of the caller-supplied
-    // score column + one id join — no tokenize, no store): current
-    // acceptances whose deterministic importance draw is not kept flip
-    // to rejected_sampled. A null score on an ACCEPTED doc fails LOUD
-    // (the knnVote loud-label discipline — a sampling gate that
-    // silently kept unscored docs would bias the draw); rejected/prior
-    // docs never flip on it.
-    val screenedS = samplingGate match {
-      case Some((scores, maxScore)) =>
-        val draws = graft.ops.CorpusMix.importanceSample(
-            scores, "doc_id", "score", maxScore)
-          .select(col("doc_id"), col("kept"))
-        screened0.join(draws, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("decision") === Accepted && col("kept").isNull,
-              raise_error(concat(lit("ingest sampling gate: no score row " +
-                "for accepted doc_id="), col("doc_id"),
-                lit(" — the score column must cover the batch"))))
-              .when(col("decision") === Accepted && !col("kept"),
-                lit(RejectedSampled))
-              .otherwise(col("decision")).as("decision"))
-      case None => screened0
+    // Each armed gate is (flags, label, fires): a (doc_id, flag) frame
+    // and the condition on its flag that flips a current acceptance to
+    // `label`. Listed in precedence order.
+    //
+    // SAMPLING, first among the optional gates (cheaper even than the
+    // quality pass: one projection of the caller-supplied score column +
+    // one id join — no tokenize, no store): acceptances whose
+    // deterministic importance draw is not kept flip. A missing score
+    // row on an ACCEPTED doc fails LOUD (the knnVote loud-label
+    // discipline — a sampling gate that silently kept unscored docs
+    // would bias the draw); rejected/prior docs never flip on it.
+    val sampling = samplingGate.map { case (scoreCol, maxScore) =>
+      val draws = graft.ops.CorpusMix.importanceSample(
+          batch.select(col(idCol).cast("long").as("doc_id"),
+            col(scoreCol).cast("long").as("score")),
+          "doc_id", "score", maxScore)
+        .select(col("doc_id"), col("kept"))
+      (draws, RejectedSampled,
+        when(col("kept").isNull, raise_error(concat(
+            lit("ingest sampling gate: no score row for accepted doc_id="),
+            col("doc_id"),
+            lit(" — the score column must cover the batch"))).cast("boolean"))
+          .otherwise(!col("kept")))
     }
-    // Optional STRUCTURAL-QUALITY gate: acceptances failing the Gopher
-    // rules flip to rejected_quality and never reach any index. Flags
-    // come from ONE typed pass over the WHOLE batch (the plan-shape
-    // invariant above); the flip still applies only to currently
-    // Accepted rows, so decisions are identical to an acceptance-only
-    // pass. Pure function of the doc — retry-stable.
-    val screenedQ =
-      if (!qualityGate) screenedS
-      else {
-        val flags = TextFunctions.gopherStats(b, "doc_id", "text")
-          .toDF().select(col("doc_id"), col("passes"))
-        screenedS.join(flags, Seq("doc_id"), "left")
+    // STRUCTURAL QUALITY: acceptances failing the Gopher rules flip.
+    // Flags come from ONE typed pass over the WHOLE batch. Pure function
+    // of the doc — retry-stable.
+    val quality = Option.when(qualityGate)(
+      (TextFunctions.gopherStats(b, "doc_id", "text")
+        .toDF().select(col("doc_id"), col("passes")),
+        RejectedQuality, !coalesce(col("passes"), lit(true))))
+    // BOILERPLATE against the persisted span index: acceptances whose
+    // stored-span coverage reaches maxBoilerplate flip. The span screen's
+    // eager broadcast-guard job touches only `b`, never the decision
+    // spine; n_spans == 0 (short/empty doc) passes; x/n is one IEEE op.
+    val span = spanGate.map { case (spanIdx, spanK, maxBoilerplate) =>
+      (Spans.spanScreenIndexed(b, spanIdx, "doc_id", "text", spanK)
+        .select(col("doc_id"),
+          (col("n_spans") > 0L &&
+            col("n_ref_spans").cast("double") / col("n_spans") >=
+              maxBoilerplate).as("bp")),
+        RejectedBoilerplate, coalesce(col("bp"), lit(false)))
+    }
+    // VECTOR OUTLIER: acceptances whose embedding is an outlier against
+    // the persisted yardstick ([[IVF.OutlierModel]], a FIXED boundary
+    // trained once — the embedOutliersTrain/Score contract) flip.
+    // Retry-stable by construction: the model is fixed and a gated doc
+    // is never indexed, so its retry re-screens identically; a doc that
+    // PASSED the gate short-circuits to accepted_prior on retry. Docs
+    // without an embedding row cannot be screened and pass — the
+    // coverage gap is what `acceptedWithoutVector` audits.
+    val outlier = outlierGate.map { case (model, factor, embeddings) =>
+      val batchVecs = embeddings
+        .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+        .join(b.select(col("doc_id").as("vec_id")), Seq("vec_id"),
+          "left_semi")
+      (IVF.embedOutliersScore(model, batchVecs, factor)
+        .select(col("vec_id").as("doc_id"), col("outlier")),
+        RejectedOutlier, coalesce(col("outlier"), lit(false)))
+    }
+    // SPLIT LEAKAGE, LAST in precedence (the second store-banded screen
+    // — every earlier gate is cheaper): batch docs with a stored
+    // near-dup at the looser `leakThreshold` whose id-draw split differs
+    // from their own flip. Both split columns are stateless md5
+    // projections of the IDS the pair frame already carries (the
+    // splitTag draw exactly — splitAssign with the default salt), so the
+    // index needs no split column and the flags are pure functions of
+    // (pair, ids): retry-stable.
+    val leak = leakGate.map { case (leakThreshold, splits) =>
+      val pairs = Dedup.nearDupJoinIndexed(b, ndIndex, "doc_id", "text",
+          leakThreshold, shingleN)
+        .select(col("left_id"), col("right_id"))
+      val leftSplit = graft.ops.CorpusMix.splitAssign(
+          pairs.select(col("left_id")).distinct(), "left_id", splits)
+        .select(col("doc_id").as("left_id"), col("split").as("split_l"))
+      val rightSplit = graft.ops.CorpusMix.splitAssign(
+          pairs.select(col("right_id")).distinct(), "right_id", splits)
+        .select(col("doc_id").as("right_id"), col("split").as("split_r"))
+      (pairs
+        .join(leftSplit, Seq("left_id"))
+        .join(rightSplit, Seq("right_id"))
+        .filter(col("split_l") =!= col("split_r"))
+        .select(col("left_id").as("doc_id")).distinct()
+        .withColumn("leaks", lit(true)),
+        RejectedLeak, coalesce(col("leaks"), lit(false)))
+    }
+    // The one join-and-flip: each layer joins its flags onto the
+    // previous decisions ONCE (the invariant above) and flips only
+    // current acceptances.
+    Seq(sampling, quality, span, outlier, leak).flatten
+      .foldLeft(screened0) { case (prev, (flags, label, fires)) =>
+        prev.join(flags, Seq("doc_id"), "left")
           .select(col("doc_id"),
-            when(col("decision") === Accepted &&
-                !coalesce(col("passes"), lit(true)),
-              lit(RejectedQuality))
+            when(col("decision") === Accepted && fires, lit(label))
               .otherwise(col("decision")).as("decision"))
       }
-    // Optional boilerplate gate against the persisted span index:
-    // acceptances whose stored-span coverage reaches maxBoilerplate flip
-    // to rejected_boilerplate. The span screen runs over the WHOLE
-    // batch (plan-shape invariant — its eager broadcast-guard job now
-    // touches only `b`, never the decision spine); n_spans == 0
-    // (short/empty doc) passes; x/n is one IEEE op.
-    val screened = spanGate match {
-      case Some((spanIdx, spanK, maxBoilerplate)) =>
-        val flags = Spans.spanScreenIndexed(b, spanIdx, "doc_id", "text",
-            spanK)
-          .select(col("doc_id"),
-            (col("n_spans") > 0L &&
-              col("n_ref_spans").cast("double") / col("n_spans") >=
-                maxBoilerplate).as("bp"))
-        screenedQ.join(flags, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("decision") === Accepted &&
-                coalesce(col("bp"), lit(false)),
-              lit(RejectedBoilerplate))
-              .otherwise(col("decision")).as("decision"))
-      case None => screenedQ
-    }
-    // Optional vector-quality gate: docs the text screens ACCEPTED whose
-    // embedding is an outlier against the persisted yardstick
-    // ([[IVF.OutlierModel]], a FIXED boundary trained once — the
-    // embedOutliersTrain/Score contract) flip to rejected_outlier and
-    // never reach any index. Retry-stable by construction: the model is
-    // fixed and a gated doc is never indexed, so its retry re-screens
-    // identically; a doc that PASSED the gate short-circuits to
-    // accepted_prior before the gate on retry (decision != accepted).
-    // Docs without an embedding row cannot be screened and pass — the
-    // coverage gap is what `acceptedWithoutVector` audits.
-    val screenedO = outlierGate match {
-      case Some((model, factor, embeddings)) =>
-        val batchVecs = embeddings
-          .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
-          .join(b.select(col("doc_id").as("vec_id")), Seq("vec_id"),
-            "left_semi")
-        val flags = IVF.embedOutliersScore(model, batchVecs, factor)
-          .select(col("vec_id").as("doc_id"), col("outlier"))
-        screened.join(flags, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("decision") === Accepted &&
-                coalesce(col("outlier"), lit(false)),
-              lit(RejectedOutlier))
-              .otherwise(col("decision")).as("decision"))
-      case None => screened
-    }
-    // Optional split-LEAKAGE gate, LAST in precedence (the second
-    // store-banded screen — every earlier gate is cheaper): batch docs
-    // with a stored near-dup at the looser `leakThreshold` whose
-    // id-draw split differs from their own flip to rejected_leak.
-    // Both split columns are stateless md5 projections of the IDS the
-    // pair frame already carries (the splitTag draw exactly —
-    // splitAssign with the default salt), so the index needs no split
-    // column and the flags are pure functions of (pair, ids):
-    // retry-stable, plan-shape linear (one more flag frame in the
-    // left-join chain, whole-batch as all gates).
-    leakGate match {
-      case Some((leakThreshold, splits)) =>
-        val pairs = Dedup.nearDupJoinIndexed(b, ndIndex, "doc_id", "text",
-            leakThreshold, shingleN)
-          .select(col("left_id"), col("right_id"))
-        val leftSplit = graft.ops.CorpusMix.splitAssign(
-            pairs.select(col("left_id")).distinct(), "left_id", splits)
-          .select(col("doc_id").as("left_id"), col("split").as("split_l"))
-        val rightSplit = graft.ops.CorpusMix.splitAssign(
-            pairs.select(col("right_id")).distinct(), "right_id", splits)
-          .select(col("doc_id").as("right_id"), col("split").as("split_r"))
-        val flags = pairs
-          .join(leftSplit, Seq("left_id"))
-          .join(rightSplit, Seq("right_id"))
-          .filter(col("split_l") =!= col("split_r"))
-          .select(col("left_id").as("doc_id")).distinct()
-          .withColumn("leaks", lit(true))
-        screenedO.join(flags, Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            when(col("decision") === Accepted &&
-                coalesce(col("leaks"), lit(false)),
-              lit(RejectedLeak))
-              .otherwise(col("decision")).as("decision"))
-      case None => screenedO
-    }
   }
 
   /**
@@ -476,58 +446,15 @@ object Ingest {
       binShards: Long = 0L)
 
   /**
-   * Screen `batch` against the PERSISTED indexes and append the accepted
-   * docs — the whole crash-safe ingestion step as one call.
-   *
-   * Idempotence & crash windows (append order is load-bearing):
-   *  1. near-dup index append FIRST ([[Dedup.indexAppend]], by-doc-id
-   *     idempotent). A doc lands here exactly when accepted, so on any
-   *     later retry it short-circuits to `accepted_prior` — decisions
-   *     are stable across retries no matter where the previous run died.
-   *  2. chunk epoch append ([[Dedup.chunkIndexAppend]], by-epoch-name
-   *     idempotent) writes the chunks of ALL accepted docs in the batch
-   *     (new + prior): a retry that died between steps 1 and 2 still
-   *     records the crashed docs' chunks when it rewrites the epoch.
-   *     Corollary, documented trade: a doc ACCEPTED in an earlier epoch
-   *     and re-offered in a later batch re-counts its chunks once more —
-   *     the conservative direction for a duplication screen (re-offers
-   *     of identical content are themselves duplication evidence).
-   *  3. vector append last ([[IVF.indexAppend]], by-vec-id idempotent)
-   *     for all accepted docs' embeddings; bootstraps the IVF index by
-   *     training on the first accepted batch.
-   *
-   * The chunk index lives under a MANAGED generation layout at
-   * `chunkRootPath` (see [[ManagedRoot]]): epochs append into the
-   * current generation; once it holds >= `compactEvery` committed
-   * epochs, the generation is compacted into a single-epoch successor
-   * and the `CURRENT` pointer flips — [[Dedup.chunkIndexRead]]'s
-   * per-screen merge cost stays flat no matter how many batches have
-   * ever been ingested. Epoch-name idempotence survives compaction via
-   * per-epoch marker files under `<root>/epochs/` (the generation-local
-   * `_SUCCESS` markers die with their generation). Single writer
-   * assumed, as for all the index-append family.
-   *
-   * The NEAR-DUP index gets the same treatment: a FRESH `ndIndexPath`
-   * is laid out as a managed root (CURRENT pointer + generation dirs),
-   * [[Dedup.indexAppend]] lands each batch's signatures in the current
-   * generation, and once the generation holds >= `ndCompactFiles`
-   * committed parquet files it is folded ([[Dedup.nearDupIndexCompact]])
-   * into a bounded-file-count successor — the screen reads this index IN
-   * FULL every batch, so unbounded small-file accumulation is the first
-   * thing that would rot in a long-running loop. A pre-existing FLAT
-   * index (committed parquet files at the root, the pre-generation
-   * layout) keeps working append-only and is never compacted in place —
-   * point a fresh root at it via one [[Dedup.nearDupIndexCompact]] copy
-   * to adopt the managed layout. Read the index for ad-hoc screening via
-   * [[ndIndexAt]], which resolves either layout. Each roll rewrites the
-   * whole index, so choose `ndCompactFiles` such that rolls stay rare
-   * relative to append volume (the default folds every ~few hundred
-   * batches; a leveled scheme is deliberately out of scope — one flat
-   * fold keeps every reader a plain parquet scan).
-   *
-   * `embeddings` (vec_id = doc id, embedding Array[Float]) covers
-   * whatever batch docs have vectors; it is semi-joined to the accepted
-   * ids before the append.
+   * The ingestion loop's settings: every argument of [[ingestBatch]] and
+   * [[ingestSink]] that stays fixed from one batch to the next — the id
+   * and text columns, the six index families' roots (`ndIndexPath`,
+   * `chunkRootPath`, `ivfIndexPath`, `pqIndexPath`, `spanRootPath`,
+   * `binExportRootPath`; their layouts and compaction thresholds are
+   * described on [[ingestBatch]]), and every screen, gate, compaction
+   * and tokenizer setting. Constructing a `Loop` checks every contract
+   * that depends on these values alone, so a mis-armed loop fails before
+   * it reads a batch, and a mis-armed stream before `.start()`.
    *
    * `outlierModelPath` arms the optional VECTOR-QUALITY gate: text-screen
    * acceptances whose embedding flags against the persisted
@@ -639,15 +566,15 @@ object Ingest {
    * under a replayed epoch via the family's own root marker; validate
    * any time with `graft_bin_digest(root)` / `graft_bin_manifest`.
    */
-  def ingestBatch(
-      batch: DataFrame,
+  final case class Loop(
       idCol: String,
       textCol: String,
       ndIndexPath: String,
       chunkRootPath: String,
-      epoch: String,
-      embeddings: Option[DataFrame] = None,
       ivfIndexPath: Option[String] = None,
+      pqIndexPath: Option[String] = None,
+      spanRootPath: Option[String] = None,
+      binExportRootPath: Option[String] = None,
       threshold: Double = 0.7,
       dupRatio: Double = 0.5,
       maxDf: Int = 1,
@@ -658,13 +585,11 @@ object Ingest {
       ivfNlist: Int = 0,
       ndCompactFiles: Int = 256,
       ivfCompactFiles: Int = 256,
-      outlierModelPath: Option[String] = None,
-      outlierFactor: Double = 2.0,
-      pqIndexPath: Option[String] = None,
       pqCompactFiles: Int = 256,
       pqM: Int = 8,
       pqK: Int = 16,
-      spanRootPath: Option[String] = None,
+      outlierModelPath: Option[String] = None,
+      outlierFactor: Double = 2.0,
       spanK: Int = 5,
       maxBoilerplate: Double = 0.5,
       spanCompactEvery: Int = 64,
@@ -672,45 +597,115 @@ object Ingest {
       samplingGate: Option[(String, Long)] = None,
       splitTag: Option[(Seq[(String, Long)], String)] = None,
       tokenizerModelPath: Option[String] = None,
-      tokenizerModel: Option[Bpe.TokenizerModel] = None,
       leakGate: Option[Double] = None,
-      binExportRootPath: Option[String] = None,
       binExportShards: Int = 8,
       binExportBudget: Int = 256,
-      binExportCompactEvery: Int = 64): IngestReport = {
+      binExportCompactEvery: Int = 64) {
     require(leakGate.isEmpty ||
         splitTag.exists { case (_, byCol) => byCol.isEmpty },
-      "ingestBatch: the leak gate derives the STORED side's split from " +
+      "Ingest.Loop: the leak gate derives the STORED side's split from " +
         "the doc-id draw, so it requires splitTag with byCol = \"\" (the " +
         "id-keyed split); a grouped split's draw key is not recoverable " +
         "from the near-dup index")
     leakGate.foreach(t => require(t > 0.0 && t <= threshold,
-      s"ingestBatch: leakThreshold must be in (0, threshold=$threshold] " +
+      s"Ingest.Loop: leakThreshold must be in (0, threshold=$threshold] " +
         s"— above the dedup threshold the dup screen fires first; got $t"))
-    require(tokenizerModelPath.isEmpty || tokenizerModel.isEmpty,
-      "ingestBatch: pass tokenizerModelPath OR a pre-loaded " +
-        "tokenizerModel, not both — two models could disagree")
-    require(binExportRootPath.isEmpty ||
-        tokenizerModelPath.nonEmpty || tokenizerModel.nonEmpty,
-      "ingestBatch: the bin-export family PACKS model-token id " +
+    require(binExportRootPath.isEmpty || tokenizerModelPath.nonEmpty,
+      "Ingest.Loop: the bin-export family PACKS model-token id " +
         "sequences — arming binExportRootPath requires the tokenizer " +
-        "(tokenizerModelPath or a pre-loaded tokenizerModel)")
+        "(tokenizerModelPath)")
     require(binExportShards > 0 && binExportBudget > 0 &&
         binExportCompactEvery >= 2,
-      "ingestBatch: binExportShards/binExportBudget must be positive " +
+      "Ingest.Loop: binExportShards/binExportBudget must be positive " +
         "and binExportCompactEvery >= 2")
-    require(epoch.nonEmpty, "ingestBatch: epoch must be non-empty")
-    require(compactEvery >= 2, "ingestBatch: compactEvery must be >= 2")
-    require(ndCompactFiles >= 2, "ingestBatch: ndCompactFiles must be >= 2")
-    require(ivfCompactFiles >= 2, "ingestBatch: ivfCompactFiles must be >= 2")
-    require(pqCompactFiles >= 2, "ingestBatch: pqCompactFiles must be >= 2")
-    require(spanCompactEvery >= 2, "ingestBatch: spanCompactEvery must be >= 2")
+    require(compactEvery >= 2, "Ingest.Loop: compactEvery must be >= 2")
+    require(ndCompactFiles >= 2, "Ingest.Loop: ndCompactFiles must be >= 2")
+    require(ivfCompactFiles >= 2, "Ingest.Loop: ivfCompactFiles must be >= 2")
+    require(pqCompactFiles >= 2, "Ingest.Loop: pqCompactFiles must be >= 2")
+    require(spanCompactEvery >= 2,
+      "Ingest.Loop: spanCompactEvery must be >= 2")
     require(maxBoilerplate > 0.0 && maxBoilerplate <= 1.0,
-      s"ingestBatch: maxBoilerplate must be in (0, 1], got $maxBoilerplate")
-    require(outlierModelPath.isEmpty || embeddings.nonEmpty,
+      s"Ingest.Loop: maxBoilerplate must be in (0, 1], got $maxBoilerplate")
+  }
+
+  /**
+   * Screen `batch` against the PERSISTED indexes of `loop` and append the
+   * accepted docs under the epoch name `epoch` — the whole crash-safe
+   * ingestion step as one call.
+   *
+   * Idempotence & crash windows (append order is load-bearing):
+   *  1. near-dup index append FIRST ([[Dedup.indexAppend]], by-doc-id
+   *     idempotent). A doc lands here exactly when accepted, so on any
+   *     later retry it short-circuits to `accepted_prior` — decisions
+   *     are stable across retries no matter where the previous run died.
+   *  2. chunk epoch append ([[Dedup.chunkIndexAppend]], by-epoch-name
+   *     idempotent) writes the chunks of ALL accepted docs in the batch
+   *     (new + prior): a retry that died between steps 1 and 2 still
+   *     records the crashed docs' chunks when it rewrites the epoch.
+   *     Corollary, documented trade: a doc ACCEPTED in an earlier epoch
+   *     and re-offered in a later batch re-counts its chunks once more —
+   *     the conservative direction for a duplication screen (re-offers
+   *     of identical content are themselves duplication evidence).
+   *  3. vector append last ([[IVF.indexAppend]], by-vec-id idempotent)
+   *     for all accepted docs' embeddings; bootstraps the IVF index by
+   *     training on the first accepted batch.
+   *
+   * The chunk index lives under a MANAGED generation layout at
+   * `chunkRootPath` (see [[ManagedRoot]]): epochs append into the
+   * current generation; once it holds >= `compactEvery` committed
+   * epochs, the generation is compacted into a single-epoch successor
+   * and the `CURRENT` pointer flips — [[Dedup.chunkIndexRead]]'s
+   * per-screen merge cost stays flat no matter how many batches have
+   * ever been ingested. Epoch-name idempotence survives compaction via
+   * per-epoch marker files under `<root>/epochs/` (the generation-local
+   * `_SUCCESS` markers die with their generation). Single writer
+   * assumed, as for all the index-append family.
+   *
+   * The NEAR-DUP index gets the same treatment: a FRESH `ndIndexPath`
+   * is laid out as a managed root (CURRENT pointer + generation dirs),
+   * [[Dedup.indexAppend]] lands each batch's signatures in the current
+   * generation, and once the generation holds >= `ndCompactFiles`
+   * committed parquet files it is folded ([[Dedup.nearDupIndexCompact]])
+   * into a bounded-file-count successor — the screen reads this index IN
+   * FULL every batch, so unbounded small-file accumulation is the first
+   * thing that would rot in a long-running loop. A pre-existing FLAT
+   * index (committed parquet files at the root, the pre-generation
+   * layout) keeps working append-only and is never compacted in place —
+   * point a fresh root at it via one [[Dedup.nearDupIndexCompact]] copy
+   * to adopt the managed layout. Read the index for ad-hoc screening via
+   * [[ndIndexAt]], which resolves either layout. Each roll rewrites the
+   * whole index, so choose `ndCompactFiles` such that rolls stay rare
+   * relative to append volume (the default folds every ~few hundred
+   * batches; a leveled scheme is deliberately out of scope — one flat
+   * fold keeps every reader a plain parquet scan).
+   *
+   * `embeddings` (vec_id = doc id, embedding Array[Float]) covers
+   * whatever batch docs have vectors; it is semi-joined to the accepted
+   * ids before the append.
+   */
+  def ingestBatch(
+      batch: DataFrame,
+      epoch: String,
+      loop: Loop,
+      embeddings: Option[DataFrame] = None): IngestReport = {
+    require(epoch.nonEmpty, "ingestBatch: epoch must be non-empty")
+    require(loop.outlierModelPath.isEmpty || embeddings.nonEmpty,
       "ingestBatch: the outlier gate screens EMBEDDINGS — passing " +
         "outlierModelPath without an embeddings frame would silently " +
         "gate nothing")
+    ingest(batch, epoch, loop, embeddings, loop.tokenizerModelPath.map(
+      Bpe.TokenizerModel.read(batch.sparkSession, _)))
+  }
+
+  /** [[ingestBatch]]'s body, with the tokenizer model already read
+    * ([[ingestSink]] reads it once per stream, not once per batch). */
+  private def ingest(
+      batch: DataFrame,
+      epoch: String,
+      loop: Loop,
+      embeddings: Option[DataFrame],
+      model: Option[Bpe.TokenizerModel]): IngestReport = {
+    import loop._
     val spark = batch.sparkSession
     val b = batch
       .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("text"))
@@ -762,18 +757,14 @@ object Ingest {
     // reads the SNAPSHOT-stable committed-epoch listing
     // ([[Spans.spanIndexRead]]), so the cached decisions survive this
     // call's own span append.
-    val decisions0 = gatedDecisions(b, ndIndex, chunkIdx,
+    val decisions0 = gatedDecisions(batch, idCol, b, ndIndex, chunkIdx,
       threshold, dupRatio, maxDf, shingleN, divisor, maxChunkTokens,
       qualityGate,
       spanDirOpt.map(d =>
         (Spans.spanIndexRead(spark, d), spanK, maxBoilerplate)),
       outlierModelPath.map(mp =>
         (IVF.OutlierModel.read(spark, mp), outlierFactor, embeddings.get)),
-      samplingGate.map { case (scoreCol, maxScore) =>
-        (batch.select(col(idCol).cast("long").as("doc_id"),
-          col(scoreCol).cast("long").as("score")), maxScore)
-      },
-      leakGate.map(t => (t, splitTag.get._1)))
+      samplingGate, leakGate.map(t => (t, splitTag.get._1)))
     // Optional split tag: a stateless md5 projection of the batch joined
     // onto the decisions — bookkeeping only (no decision changes, no
     // store), inside the SAME cached/materialized frame so a caller's
@@ -789,13 +780,10 @@ object Ingest {
     // Optional model-token stamp: same bookkeeping posture as the split
     // tag (stateless broadcast-model pass over the batch, batch-sized
     // join inside the cached frame, no decision changes) — see
-    // [[withTokenCounts]]. A recurring caller passes the pre-loaded
-    // model (ingestSink resolves the path ONCE and reuses the instance,
-    // whose memoized rank table makes the per-batch cost one broadcast,
-    // not one model read + collect).
-    val resolvedModel = tokenizerModel.orElse(
-      tokenizerModelPath.map(Bpe.TokenizerModel.read(spark, _)))
-    val decisions = (resolvedModel match {
+    // [[withTokenCounts]]. ingestSink reads the model ONCE per stream and
+    // reuses the instance, whose memoized rank table makes the per-batch
+    // cost one broadcast, not one model read + collect.
+    val decisions = (model match {
       case Some(m) => withTokenCounts(decisionsTagged, b, "doc_id", "text", m)
       case None => decisionsTagged
     })
@@ -949,7 +937,7 @@ object Ingest {
     //    the replay re-reaches this step with identical acceptances.
     val appendedBinShards = binExportRootPath match {
       case Some(root) =>
-        val m = resolvedModel.get
+        val m = model.get
         graft.sources.BinFamily.appendEpoch(
           graft.ops.TrainShuffle.packIdSequences(acceptedAll, "doc_id",
             "text", m, binExportShards, binExportBudget, salt = epoch),
@@ -994,11 +982,12 @@ object Ingest {
 
   /**
    * The STREAM-NATIVE entry to the ingestion loop: a `foreachBatch` body
-   * that runs [[ingestBatch]] on every micro-batch with the epoch
-   * derived from the streaming batch id —
+   * that runs [[ingestBatch]]'s step with `loop` on every micro-batch,
+   * the epoch derived from the streaming batch id —
    * {{{
    *   stream.writeStream
-   *     .foreachBatch(Ingest.ingestSink("doc_id", "text", nd, chunks))
+   *     .foreachBatch(Ingest.ingestSink(
+   *       Ingest.Loop("doc_id", "text", nd, chunks)))
    *     .option("checkpointLocation", ck)
    *     .start()
    * }}}
@@ -1006,29 +995,19 @@ object Ingest {
    * Streaming replays a failed or restarted micro-batch under the SAME
    * batch id, the epoch name is a pure function of that id, and every
    * [[ingestBatch]] step is idempotent under a repeated epoch (by-doc-id
-   * near-dup append, epoch-marker chunk and span appends, by-vec-id
-   * vector/code appends) — so a replay reaches the same decisions and appends
-   * nothing new. The single-writer assumption is the streaming runtime's
-   * own guarantee (one micro-batch in flight per query).
+   * near-dup append, epoch-marker chunk, span and bin appends, by-vec-id
+   * vector/code appends) — so a replay reaches the same decisions and
+   * appends nothing new. Every gate is replay-stable under the same
+   * batch id for the same reason. The single-writer assumption is the
+   * streaming runtime's own guarantee (one micro-batch in flight per
+   * query).
    *
    * `embeddingCol` lifts embeddings from the stream itself: when set,
    * each micro-batch's (idCol, embeddingCol) pairs feed the vector
    * families (and the outlier gate, when armed) — no side channel to
-   * join at ingest time.
-   *
-   * `leakGate` forwards to [[ingestBatch]]'s split-leakage gate
-   * unchanged — the stream twin arms the same prevention as the batch
-   * loop (requires `splitTag` with byCol = "", checked loud at sink
-   * CONSTRUCTION so a mis-armed stream fails before `.start()`).
-   * Replay-stable under the same batch id exactly like every other
-   * gate: the decision is a pure function of (batch, store), the store
-   * only gains docs, and gated docs never touch a store.
-   *
-   * `binExportRootPath` forwards to [[ingestBatch]]'s sixth managed
-   * family unchanged — the stream refreshes the loader-native binary
-   * artifact one epoch per micro-batch (epoch = the batch id, so the
-   * family's own root marker makes a replayed micro-batch a no-op).
-   * Requires `tokenizerModelPath`, checked loud at sink CONSTRUCTION.
+   * join at ingest time. Arming `loop.outlierModelPath` requires it,
+   * checked here at sink CONSTRUCTION, like every [[Loop]] contract, so
+   * a mis-armed stream fails before `.start()`.
    *
    * `onReport` sees each batch's [[IngestReport]] INSIDE the per-batch
    * cache scope ([[graft.GraftCaches.scoped]]): consume
@@ -1039,61 +1018,15 @@ object Ingest {
    * correct, but re-screens the batch).
    */
   def ingestSink(
-      idCol: String,
-      textCol: String,
-      ndIndexPath: String,
-      chunkRootPath: String,
+      loop: Loop,
       epochPrefix: String = "stream",
       embeddingCol: Option[String] = None,
-      ivfIndexPath: Option[String] = None,
-      pqIndexPath: Option[String] = None,
-      threshold: Double = 0.7,
-      dupRatio: Double = 0.5,
-      maxDf: Int = 1,
-      shingleN: Int = 3,
-      divisor: Int = 8,
-      maxChunkTokens: Int = 32,
-      compactEvery: Int = 64,
-      ivfNlist: Int = 0,
-      ndCompactFiles: Int = 256,
-      ivfCompactFiles: Int = 256,
-      pqCompactFiles: Int = 256,
-      pqM: Int = 8,
-      pqK: Int = 16,
-      outlierModelPath: Option[String] = None,
-      outlierFactor: Double = 2.0,
-      spanRootPath: Option[String] = None,
-      spanK: Int = 5,
-      maxBoilerplate: Double = 0.5,
-      spanCompactEvery: Int = 64,
-      qualityGate: Boolean = false,
-      samplingGate: Option[(String, Long)] = None,
-      splitTag: Option[(Seq[(String, Long)], String)] = None,
-      tokenizerModelPath: Option[String] = None,
-      leakGate: Option[Double] = None,
-      binExportRootPath: Option[String] = None,
-      binExportShards: Int = 8,
-      binExportBudget: Int = 256,
-      binExportCompactEvery: Int = 64,
       onReport: (Long, IngestReport) => Unit = (_, _) => ())
       : (DataFrame, Long) => Unit = {
     require(epochPrefix.nonEmpty, "ingestSink: epochPrefix must be non-empty")
-    // Same construction-time posture as the leak gate below: the bin
-    // family packs MODEL-token sequences, so arming it without the
-    // tokenizer must fail before `.start()`, not on batch 0.
-    require(binExportRootPath.isEmpty || tokenizerModelPath.nonEmpty,
-      "ingestSink: binExportRootPath requires tokenizerModelPath — the " +
-        "bin-export family packs model-token id sequences")
-    // Fail at sink-CONSTRUCTION time, not on the first micro-batch: the
-    // leak gate's splitTag requirement ([[ingestBatch]]'s contract — the
-    // stored side's split is re-derived from the id draw) is a pure
-    // function of the arguments, so a mis-armed stream should never
-    // start. ingestBatch re-checks per batch; this copy just moves the
-    // loud failure before `.start()`.
-    require(leakGate.isEmpty ||
-        splitTag.exists { case (_, byCol) => byCol.isEmpty },
-      "ingestSink: leakGate requires splitTag with byCol = \"\" (the " +
-        "id-keyed draw) — see ingestBatch's leak-gate contract")
+    require(loop.outlierModelPath.isEmpty || embeddingCol.nonEmpty,
+      "ingestSink: the outlier gate screens EMBEDDINGS — arming " +
+        "outlierModelPath requires embeddingCol")
     // Tokenizer model resolved ONCE, on the first micro-batch (the sink
     // closure is built before any session/batch exists) and reused for
     // the stream's lifetime: the persisted artifact is immutable, so a
@@ -1104,33 +1037,15 @@ object Ingest {
     var tokModel: Option[Bpe.TokenizerModel] = None
     (batch: DataFrame, batchId: Long) =>
       graft.GraftCaches.scoped {
-        if (tokModel.isEmpty && tokenizerModelPath.isDefined)
+        if (tokModel.isEmpty && loop.tokenizerModelPath.isDefined)
           tokModel = Some(Bpe.TokenizerModel.read(
-            batch.sparkSession, tokenizerModelPath.get))
+            batch.sparkSession, loop.tokenizerModelPath.get))
         val emb = embeddingCol.map(c => batch
-          .select(col(idCol).cast("long").as("vec_id"), col(c).as("embedding"))
+          .select(col(loop.idCol).cast("long").as("vec_id"),
+            col(c).as("embedding"))
           .filter(col("embedding").isNotNull))
-        val report = ingestBatch(batch, idCol, textCol, ndIndexPath,
-          chunkRootPath, epoch = f"$epochPrefix%s-$batchId%09d",
-          embeddings = emb, ivfIndexPath = ivfIndexPath,
-          threshold = threshold, dupRatio = dupRatio, maxDf = maxDf,
-          shingleN = shingleN, divisor = divisor,
-          maxChunkTokens = maxChunkTokens, compactEvery = compactEvery,
-          ivfNlist = ivfNlist, ndCompactFiles = ndCompactFiles,
-          ivfCompactFiles = ivfCompactFiles,
-          outlierModelPath = outlierModelPath,
-          outlierFactor = outlierFactor, pqIndexPath = pqIndexPath,
-          pqCompactFiles = pqCompactFiles, pqM = pqM, pqK = pqK,
-          spanRootPath = spanRootPath, spanK = spanK,
-          maxBoilerplate = maxBoilerplate,
-          spanCompactEvery = spanCompactEvery, qualityGate = qualityGate,
-          samplingGate = samplingGate, splitTag = splitTag,
-          tokenizerModel = tokModel, leakGate = leakGate,
-          binExportRootPath = binExportRootPath,
-          binExportShards = binExportShards,
-          binExportBudget = binExportBudget,
-          binExportCompactEvery = binExportCompactEvery)
-        onReport(batchId, report)
+        onReport(batchId, ingest(batch, f"$epochPrefix%s-$batchId%09d",
+          loop, emb, tokModel))
       }
   }
 

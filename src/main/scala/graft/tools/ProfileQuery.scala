@@ -41,11 +41,21 @@ object ProfileQuery {
     override def onJobStart(e: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet()
       // A caller-set call site when there is one, else the name of the
-      // job's result stage (e.g. `foreach at BinShards.scala:…`).
-      val site = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short")))
-        .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name))
-        .getOrElse("?")
+      // job's result stage (e.g. `foreach at BinShards.scala:…`). Jobs
+      // Spark SQL starts on its own broadcast/subquery threads name their
+      // result stage after the thread wrapper (`$anonfun$withThreadLocal
+      // Captured$2 at CompletableFuture.java:…`), which names no caller:
+      // those are labelled from the job description Spark sets (e.g.
+      // `broadcast exchange (runId …)`) and the SQL execution they serve.
+      def prop(k: String) =
+        Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      val stage = e.stageInfos.maxByOption(_.stageId).map(_.name)
+      val sqlThread = Seq(prop("spark.job.description"),
+        prop("spark.sql.execution.id").map("sql execution " + _)).flatten
+      val site = prop("callSite.short")
+        .orElse(stage.filterNot(n =>
+          n.contains("withThreadLocalCaptured") && sqlThread.nonEmpty))
+        .getOrElse(if (sqlThread.nonEmpty) sqlThread.mkString(", ") else "?")
       jobStart.put(e.jobId, (e.time, site))
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = {

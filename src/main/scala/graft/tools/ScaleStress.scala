@@ -201,8 +201,10 @@ object ScaleStress {
       graft.functions.Ingest.ingestBatch(
         spark.range(2).select(col("id").as("doc_id"),
           concat(lit(passage + " seed variant "), col("id")).as("text")),
-        "doc_id", "text", s"$seedDir/nd", s"$seedDir/chunks", "seed",
-        dupRatio = 2.0, spanRootPath = Some(s"$seedDir/spans"), spanK = 5)
+        "seed",
+        graft.functions.Ingest.Loop("doc_id", "text", s"$seedDir/nd",
+          s"$seedDir/chunks", dupRatio = 2.0,
+          spanRootPath = Some(s"$seedDir/spans"), spanK = 5))
       graft.GraftCaches.clearAll()
       val n = 100000L
       // Per-doc ALPHABETIC pseudo-tokens derived from the id (digits

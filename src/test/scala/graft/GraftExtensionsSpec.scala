@@ -90,7 +90,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
         1L -> "the quick brown fox jumps over the lazy dog near the river bank",
         2L -> s"spark is a distributed engine that runs queries $boiler")
         .toDF("doc_id", "text"),
-      "doc_id", "text", nd, ch, "epoch-1")
+      "epoch-1", graft.functions.Ingest.Loop("doc_id", "text", nd, ch))
     graft.GraftCaches.clearAll()
     val batchDir = base + "/batch"
     Seq[(Long, String)](
@@ -142,8 +142,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
         1L -> s"$passage plus a perfectly original closing thought here",
         2L -> "completely novel prose about migratory birds over the delta")
         .toDF("doc_id", "text"),
-      "doc_id", "text", nd, ch, "e1", dupRatio = 2.0,
-      spanRootPath = Some(sp), spanK = 5)
+      "e1", graft.functions.Ingest.Loop("doc_id", "text", nd, ch,
+        dupRatio = 2.0, spanRootPath = Some(sp), spanK = 5))
     graft.GraftCaches.clearAll()
     // Outlier yardstick: 20 identical vectors, p90 distance 0 — any
     // deviation flags (the StreamScoringSpec fixture).
@@ -543,7 +543,8 @@ class GraftExtensionsSpec extends AnyFunSuite {
     graft.functions.Ingest.ingestBatch(
       Seq((1L, "the river flows past the old mill near the quiet village"))
         .toDF("doc_id", "text"),
-      "doc_id", "text", base + "/nd", base + "/chunks", "e1")
+      "e1", graft.functions.Ingest.Loop("doc_id", "text", base + "/nd",
+        base + "/chunks"))
     graft.GraftCaches.clearAll()
     // '' = no vector index in this loop -> two family rows.
     val rows = spark.sql(

@@ -62,10 +62,10 @@ class IngestSpec extends AnyFunSuite {
     val ivf = base + "/ivf"
 
     def run(batch: DataFrame, emb: Map[Long, Array[Float]], epoch: String) = {
-      val r = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, epoch,
+      val r = Ingest.ingestBatch(batch, epoch, Ingest.Loop("doc_id", "text",
+        nd, ch, ivfIndexPath = Some(ivf), threshold = 0.7, ivfNlist = 1),
         embeddings = Some(emb.toSeq.map { case (id, v) => (id, v) }
-          .toDF("vec_id", "embedding")),
-        ivfIndexPath = Some(ivf), threshold = 0.7, ivfNlist = 1)
+          .toDF("vec_id", "embedding")))
       val d = decisionsOf(r.decisions)
       graft.GraftCaches.clearAll()
       (r, d)
@@ -140,7 +140,8 @@ class IngestSpec extends AnyFunSuite {
     // The retry short-circuits the doc to accepted_prior AND still
     // records its chunks when it writes the epoch (acceptedAll, not
     // acceptedNew, feeds the chunk append).
-    val r = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "epoch-9")
+    val r = Ingest.ingestBatch(batch, "epoch-9", Ingest.Loop("doc_id", "text",
+      nd, ch))
     assert(decisionsOf(r.decisions) == Map(9L -> Ingest.AcceptedPrior))
     assert(r.appendedDocs == 0 && r.appendedChunks > 0)
     // The pre-generation FLAT layout (committed parquet at the root, as
@@ -168,8 +169,8 @@ class IngestSpec extends AnyFunSuite {
       3L -> "ancient pottery fragments reveal trade routes across the mediterranean basin",
       4L -> "migratory birds navigate vast distances using magnetic fields and stars")
     def run(id: Long, epoch: String) = {
-      val r = Ingest.ingestBatch(docs(id -> texts(id)),
-        "doc_id", "text", nd, ch, epoch, compactEvery = 3)
+      val r = Ingest.ingestBatch(docs(id -> texts(id)), epoch,
+        Ingest.Loop("doc_id", "text", nd, ch, compactEvery = 3))
       graft.GraftCaches.clearAll()
       r
     }
@@ -213,8 +214,8 @@ class IngestSpec extends AnyFunSuite {
     val clean = (1 to 60).map(i => Seq("the", "river", "of", "ancient",
       "stories")(i % 5)).mkString(" ")
     val batch = docs(1L -> clean, 2L -> "far too short")
-    val r1 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      qualityGate = true)
+    val r1 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, qualityGate = true))
     val d1 = decisionsOf(r1.decisions)
     assert(d1 == Map(1L -> Ingest.Accepted, 2L -> Ingest.RejectedQuality),
       s"$d1")
@@ -225,16 +226,16 @@ class IngestSpec extends AnyFunSuite {
     graft.GraftCaches.clearAll()
     // Retry: the accepted doc short-circuits to accepted_prior; the
     // gated doc re-screens identically (pure function of its text).
-    val r2 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      qualityGate = true)
+    val r2 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, qualityGate = true))
     val d2 = decisionsOf(r2.decisions)
     assert(d2 == Map(1L -> Ingest.AcceptedPrior,
       2L -> Ingest.RejectedQuality), s"$d2")
     assert(r2.appendedDocs == 0 && r2.appendedChunks == -1L)
     // Unarmed (default), the same batch accepts both — the gate is
     // strictly opt-in.
-    val r3 = Ingest.ingestBatch(batch, "doc_id", "text",
-      base + "/nd2", base + "/chunks2", "e1")
+    val r3 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text",
+      base + "/nd2", base + "/chunks2"))
     assert(decisionsOf(r3.decisions).values.forall(_ == Ingest.Accepted))
     graft.GraftCaches.clearAll()
   }
@@ -249,8 +250,8 @@ class IngestSpec extends AnyFunSuite {
       (1L, "the river flows past the old mill near the quiet village green", 100L),
       (2L, "quantum processors require cryogenic cooling for stable operation", 0L))
       .toDF("doc_id", "text", "score")
-    val r1 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      samplingGate = Some(("score", 100L)))
+    val r1 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, samplingGate = Some(("score", 100L))))
     val d1 = decisionsOf(r1.decisions)
     assert(d1 == Map(1L -> Ingest.Accepted, 2L -> Ingest.RejectedSampled),
       s"$d1")
@@ -265,8 +266,8 @@ class IngestSpec extends AnyFunSuite {
       (1L, "the river flows past the old mill near the quiet village green", 0L),
       (2L, "quantum processors require cryogenic cooling for stable operation", 0L))
       .toDF("doc_id", "text", "score")
-    val r2 = Ingest.ingestBatch(retryBatch, "doc_id", "text", nd, ch, "e1",
-      samplingGate = Some(("score", 100L)))
+    val r2 = Ingest.ingestBatch(retryBatch, "e1", Ingest.Loop("doc_id", "text",
+      nd, ch, samplingGate = Some(("score", 100L))))
     val d2 = decisionsOf(r2.decisions)
     assert(d2 == Map(1L -> Ingest.AcceptedPrior,
       2L -> Ingest.RejectedSampled), s"$d2")
@@ -279,9 +280,8 @@ class IngestSpec extends AnyFunSuite {
         null.asInstanceOf[java.lang.Long]))
       .toDF("doc_id", "text", "score")
     val e = intercept[Exception] {
-      Ingest.ingestBatch(nullBatch, "doc_id", "text",
-        base + "/nd2", base + "/ch2", "e1",
-        samplingGate = Some(("score", 100L)))
+      Ingest.ingestBatch(nullBatch, "e1", Ingest.Loop("doc_id", "text",
+        base + "/nd2", base + "/ch2", samplingGate = Some(("score", 100L))))
     }
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
@@ -299,9 +299,9 @@ class IngestSpec extends AnyFunSuite {
     // fox = 13 words -> 11 trigram shingles; a one-word swap changes 2
     // shingles -> jaccard 9/13 ~ 0.69: inside the [0.5, 0.9) leak band,
     // below the strict dup cut.
-    val r1 = Ingest.ingestBatch(docs(1L -> foxDoc), "doc_id", "text",
-      nd, ch, "e1", threshold = 0.9,
-      splitTag = Some((splits, "")), leakGate = Some(0.5))
+    val r1 = Ingest.ingestBatch(docs(1L -> foxDoc), "e1", Ingest.Loop("doc_id",
+      "text", nd, ch, threshold = 0.9, splitTag = Some((splits, "")),
+      leakGate = Some(0.5)))
     assert(decisionsOf(r1.decisions.select("doc_id", "decision")) ==
       Map(1L -> Ingest.Accepted))
     graft.GraftCaches.clearAll()
@@ -310,8 +310,8 @@ class IngestSpec extends AnyFunSuite {
       4L -> foxDoc.replace("bank", "bend"),   // test: cross-split leak
       5L -> foxDoc,                           // test, but jaccard 1.0: dup
       6L -> "an entirely novel report about the weather and the harvest")
-    val r2 = Ingest.ingestBatch(batch2, "doc_id", "text", nd, ch, "e2",
-      threshold = 0.9, splitTag = Some((splits, "")), leakGate = Some(0.5))
+    val r2 = Ingest.ingestBatch(batch2, "e2", Ingest.Loop("doc_id", "text", nd,
+      ch, threshold = 0.9, splitTag = Some((splits, "")), leakGate = Some(0.5)))
     val d2 = decisionsOf(r2.decisions.select("doc_id", "decision"))
     assert(d2 == Map(
       2L -> Ingest.Accepted,        // same-split near-dup passes the gate
@@ -326,8 +326,9 @@ class IngestSpec extends AnyFunSuite {
     // Retry of epoch 2: accepted docs short-circuit to accepted_prior
     // BEFORE the gate; the leak rejection replays identically (the
     // store only gained docs, the split draws are stateless).
-    val r2b = Ingest.ingestBatch(batch2, "doc_id", "text", nd, ch, "e2",
-      threshold = 0.9, splitTag = Some((splits, "")), leakGate = Some(0.5))
+    val r2b = Ingest.ingestBatch(batch2, "e2", Ingest.Loop("doc_id", "text",
+      nd, ch, threshold = 0.9, splitTag = Some((splits, "")),
+      leakGate = Some(0.5)))
     val d2b = decisionsOf(r2b.decisions.select("doc_id", "decision"))
     assert(d2b == Map(
       2L -> Ingest.AcceptedPrior, 4L -> Ingest.RejectedLeak,
@@ -338,30 +339,30 @@ class IngestSpec extends AnyFunSuite {
     // just the bootstrap doc — the gate reads the growing store.
     val r3 = Ingest.ingestBatch(
       docs(13L -> foxDoc.replace("quick", "swift").replace("bank", "bend")),
-      "doc_id", "text", nd, ch, "e3",
-      threshold = 0.9, splitTag = Some((splits, "")), leakGate = Some(0.5))
+      "e3", Ingest.Loop("doc_id", "text", nd, ch, threshold = 0.9,
+        splitTag = Some((splits, "")), leakGate = Some(0.5)))
     assert(decisionsOf(r3.decisions.select("doc_id", "decision")) ==
       Map(13L -> Ingest.RejectedLeak))
     graft.GraftCaches.clearAll()
     // Loud contracts: the gate needs the id-keyed splitTag, and a leak
     // radius above the dup threshold is dead jurisdiction.
     val e1 = intercept[IllegalArgumentException] {
-      Ingest.ingestBatch(docs(7L -> foxDoc), "doc_id", "text",
-        base + "/nd2", base + "/ch2", "e1", leakGate = Some(0.5))
+      Ingest.ingestBatch(docs(7L -> foxDoc), "e1", Ingest.Loop("doc_id",
+        "text", base + "/nd2", base + "/ch2", leakGate = Some(0.5)))
     }
     assert(e1.getMessage.contains("splitTag"), s"$e1")
     val e2 = intercept[IllegalArgumentException] {
       Ingest.ingestBatch(
         docs(7L -> foxDoc).withColumn("source",
           org.apache.spark.sql.functions.lit("a")),
-        "doc_id", "text", base + "/nd2", base + "/ch2", "e1",
-        splitTag = Some((splits, "source")), leakGate = Some(0.5))
+        "e1", Ingest.Loop("doc_id", "text", base + "/nd2", base + "/ch2",
+          splitTag = Some((splits, "source")), leakGate = Some(0.5)))
     }
     assert(e2.getMessage.contains("id-keyed"), s"$e2")
     val e3 = intercept[IllegalArgumentException] {
-      Ingest.ingestBatch(docs(7L -> foxDoc), "doc_id", "text",
-        base + "/nd2", base + "/ch2", "e1", threshold = 0.7,
-        splitTag = Some((splits, "")), leakGate = Some(0.8))
+      Ingest.ingestBatch(docs(7L -> foxDoc), "e1", Ingest.Loop("doc_id",
+        "text", base + "/nd2", base + "/ch2", threshold = 0.7,
+        splitTag = Some((splits, "")), leakGate = Some(0.8)))
     }
     assert(e3.getMessage.contains("leakThreshold"), s"$e3")
     graft.GraftCaches.clearAll()
@@ -377,10 +378,9 @@ class IngestSpec extends AnyFunSuite {
     // rejected_leak included.
     val sinkReports =
       scala.collection.mutable.ArrayBuffer.empty[Map[Long, String]]
-    val sink = Ingest.ingestSink("doc_id", "text",
-      base + "/ndS", base + "/chS", threshold = 0.9,
-      splitTag = Some((splits, "")), leakGate = Some(0.5),
-      onReport = (_, r) => sinkReports +=
+    val sink = Ingest.ingestSink(Ingest.Loop("doc_id", "text", base + "/ndS",
+      base + "/chS", threshold = 0.9, splitTag = Some((splits, "")),
+      leakGate = Some(0.5)), onReport = (_, r) => sinkReports +=
         decisionsOf(r.decisions.select("doc_id", "decision")))
     val batch1 = docs(1L -> foxDoc)
     val batch2 = docs(
@@ -390,14 +390,14 @@ class IngestSpec extends AnyFunSuite {
       6L -> "an entirely novel report about the weather and the harvest")
     sink(batch1, 0L); sink(batch2, 1L)
     graft.GraftCaches.clearAll()
-    val b1 = Ingest.ingestBatch(batch1, "doc_id", "text",
-      base + "/ndB", base + "/chB", "stream-000000000", threshold = 0.9,
-      splitTag = Some((splits, "")), leakGate = Some(0.5))
+    val b1 = Ingest.ingestBatch(batch1, "stream-000000000",
+      Ingest.Loop("doc_id", "text", base + "/ndB", base + "/chB",
+        threshold = 0.9, splitTag = Some((splits, "")), leakGate = Some(0.5)))
     val d1 = decisionsOf(b1.decisions.select("doc_id", "decision"))
     graft.GraftCaches.clearAll()
-    val b2 = Ingest.ingestBatch(batch2, "doc_id", "text",
-      base + "/ndB", base + "/chB", "stream-000000001", threshold = 0.9,
-      splitTag = Some((splits, "")), leakGate = Some(0.5))
+    val b2 = Ingest.ingestBatch(batch2, "stream-000000001",
+      Ingest.Loop("doc_id", "text", base + "/ndB", base + "/chB",
+        threshold = 0.9, splitTag = Some((splits, "")), leakGate = Some(0.5)))
     val d2 = decisionsOf(b2.decisions.select("doc_id", "decision"))
     graft.GraftCaches.clearAll()
     assert(sinkReports.toSeq == Seq(d1, d2),
@@ -415,17 +415,24 @@ class IngestSpec extends AnyFunSuite {
       s"${sinkReports(2)}")
     graft.GraftCaches.clearAll()
     // A mis-armed sink fails at CONSTRUCTION, before any micro-batch:
-    // leakGate without the id-keyed splitTag (grouped, or absent).
+    // leakGate without the id-keyed splitTag (grouped, or absent), and
+    // the outlier gate without the embedding column it screens.
     val e1 = intercept[IllegalArgumentException] {
-      Ingest.ingestSink("doc_id", "text", base + "/nd2", base + "/ch2",
-        leakGate = Some(0.5))
+      Ingest.ingestSink(Ingest.Loop("doc_id", "text", base + "/nd2",
+        base + "/ch2", leakGate = Some(0.5)))
     }
     assert(e1.getMessage.contains("splitTag"), s"$e1")
     val e2 = intercept[IllegalArgumentException] {
-      Ingest.ingestSink("doc_id", "text", base + "/nd2", base + "/ch2",
-        splitTag = Some((splits, "source")), leakGate = Some(0.5))
+      Ingest.ingestSink(Ingest.Loop("doc_id", "text", base + "/nd2",
+        base + "/ch2", splitTag = Some((splits, "source")),
+        leakGate = Some(0.5)))
     }
     assert(e2.getMessage.contains("id-keyed"), s"$e2")
+    val e3 = intercept[IllegalArgumentException] {
+      Ingest.ingestSink(Ingest.Loop("doc_id", "text", base + "/nd2",
+        base + "/ch2", outlierModelPath = Some(base + "/om")))
+    }
+    assert(e3.getMessage.contains("embeddingCol"), s"$e3")
   }
 
   test("split tag: decisions carry a retry-stable grouped split; bookkeeping only") {
@@ -438,8 +445,8 @@ class IngestSpec extends AnyFunSuite {
       (3L, "ancient pottery fragments reveal trade routes across the basin", "domB"))
       .toDF("doc_id", "text", "source")
     val splits = Seq(("train", 2L), ("test", 1L))
-    val r1 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      splitTag = Some((splits, "source")))
+    val r1 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, splitTag = Some((splits, "source"))))
     val rows1 = r1.decisions.collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     // Every decision row carries a tag; the grouped draw is a pure
@@ -457,8 +464,8 @@ class IngestSpec extends AnyFunSuite {
     graft.GraftCaches.clearAll()
     // Replayed epoch: decisions flip to accepted_prior, tags IDENTICAL
     // (stateless md5 draw — no store, nothing to drift), appends no-op.
-    val r2 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      splitTag = Some((splits, "source")))
+    val r2 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, splitTag = Some((splits, "source"))))
     val rows2 = r2.decisions.collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getString(2)))).toMap
     assert(rows2.values.forall(_._1 == Ingest.AcceptedPrior), s"$rows2")
@@ -472,8 +479,8 @@ class IngestSpec extends AnyFunSuite {
     graft.GraftCaches.clearAll()
     // ...and an UNTAGGED call keeps the two-column shape (asserted on
     // an actual untagged run, not inferred).
-    val rPlain = Ingest.ingestBatch(batch, "doc_id", "text",
-      base + "/nd-plain", base + "/ch-plain", "e1")
+    val rPlain = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text",
+      base + "/nd-plain", base + "/ch-plain"))
     assert(rPlain.decisions.columns.toSeq == Seq("doc_id", "decision"),
       s"${rPlain.decisions.columns.toSeq}")
     graft.GraftCaches.clearAll()
@@ -490,8 +497,8 @@ class IngestSpec extends AnyFunSuite {
     val model = graft.functions.Bpe.bpeTrain(batch, "text", numMerges = 8)
     val mp = base + "/tokenizer"
     model.write(mp)
-    val r1 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      tokenizerModelPath = Some(mp))
+    val r1 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, tokenizerModelPath = Some(mp)))
     assert(r1.decisions.columns.toSeq ==
       Seq("doc_id", "decision", "n_tokens_bpe"), s"${r1.decisions.columns.toSeq}")
     val rows1 = r1.decisions.collect()
@@ -505,8 +512,8 @@ class IngestSpec extends AnyFunSuite {
     // Replayed epoch: decisions flip to accepted_prior, counts
     // IDENTICAL (stateless broadcast-model pass — nothing to drift),
     // appends no-op.
-    val r2 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      tokenizerModelPath = Some(mp))
+    val r2 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, tokenizerModelPath = Some(mp)))
     val rows2 = r2.decisions.collect()
       .map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(rows2.values.forall(_._1 == Ingest.AcceptedPrior), s"$rows2")
@@ -515,9 +522,9 @@ class IngestSpec extends AnyFunSuite {
       s"replay re-counted differently: $rows2 vs $rows1")
     assert(r2.appendedDocs == 0 && r2.appendedChunks == -1L)
     // Composes with the split tag: both bookkeeping columns appear.
-    val r3 = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, "e1",
-      splitTag = Some((Seq(("train", 1L)), "")),
-      tokenizerModelPath = Some(mp))
+    val r3 = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text", nd,
+      ch, splitTag = Some((Seq(("train", 1L)), "")),
+      tokenizerModelPath = Some(mp)))
     assert(r3.decisions.columns.toSeq ==
       Seq("doc_id", "decision", "split", "n_tokens_bpe"),
       s"${r3.decisions.columns.toSeq}")
@@ -538,13 +545,13 @@ class IngestSpec extends AnyFunSuite {
       numMerges = 8)
     val mp = base + "/tok"
     model.write(mp)
-    val r1 = Ingest.ingestBatch(b1, "doc_id", "text", nd, ch, "e1",
+    val r1 = Ingest.ingestBatch(b1, "e1", Ingest.Loop("doc_id", "text", nd, ch,
       tokenizerModelPath = Some(mp), binExportRootPath = Some(root),
-      binExportShards = 2, binExportBudget = 8)
+      binExportShards = 2, binExportBudget = 8))
     graft.GraftCaches.clearAll()
-    val r2 = Ingest.ingestBatch(b2, "doc_id", "text", nd, ch, "e2",
+    val r2 = Ingest.ingestBatch(b2, "e2", Ingest.Loop("doc_id", "text", nd, ch,
       tokenizerModelPath = Some(mp), binExportRootPath = Some(root),
-      binExportShards = 2, binExportBudget = 8)
+      binExportShards = 2, binExportBudget = 8))
     graft.GraftCaches.clearAll()
     assert(r1.binShards >= 1L && r2.binShards >= r1.binShards,
       s"append counts: ${r1.binShards} -> ${r2.binShards}")
@@ -575,9 +582,9 @@ class IngestSpec extends AnyFunSuite {
     assert(dig(root) == dig(twin) && dig(root).nonEmpty,
       "loop-exported artifact drifted from the standalone family twin")
     // Replayed epoch: the family's own root marker makes it a no-op.
-    val r3 = Ingest.ingestBatch(b2, "doc_id", "text", nd, ch, "e2",
+    val r3 = Ingest.ingestBatch(b2, "e2", Ingest.Loop("doc_id", "text", nd, ch,
       tokenizerModelPath = Some(mp), binExportRootPath = Some(root),
-      binExportShards = 2, binExportBudget = 8)
+      binExportShards = 2, binExportBudget = 8))
     graft.GraftCaches.clearAll()
     assert(r3.binShards == -1L && dig(root) == dig(twin),
       s"replayed epoch must not touch the artifact: ${r3.binShards}")
@@ -589,22 +596,22 @@ class IngestSpec extends AnyFunSuite {
     val eVocab = intercept[Exception] {
       Ingest.ingestBatch(
         docs(9L -> "completely fresh unrelated sentence for epoch three"),
-        "doc_id", "text", nd, ch, "e3",
-        tokenizerModelPath = Some(mp), binExportRootPath = Some(root),
-        binExportShards = 2, binExportBudget = 8)
+        "e3", Ingest.Loop("doc_id", "text", nd, ch,
+          tokenizerModelPath = Some(mp), binExportRootPath = Some(root),
+          binExportShards = 2, binExportBudget = 8))
     }
     assert(eVocab.getMessage.contains("config mismatch"), s"$eVocab")
     graft.GraftCaches.clearAll()
     // Mis-armed contracts fail loud — batch (no tokenizer) and sink
     // (at CONSTRUCTION, before any micro-batch).
     val eB = intercept[IllegalArgumentException] {
-      Ingest.ingestBatch(b1, "doc_id", "text", nd, ch, "e9",
-        binExportRootPath = Some(root))
+      Ingest.ingestBatch(b1, "e9", Ingest.Loop("doc_id", "text", nd, ch,
+        binExportRootPath = Some(root)))
     }
     assert(eB.getMessage.contains("tokenizer"), s"$eB")
     val eS = intercept[IllegalArgumentException] {
-      Ingest.ingestSink("doc_id", "text", nd, ch,
-        binExportRootPath = Some(root))
+      Ingest.ingestSink(Ingest.Loop("doc_id", "text", nd, ch,
+        binExportRootPath = Some(root)))
     }
     assert(eS.getMessage.contains("tokenizerModelPath"), s"$eS")
   }
@@ -624,10 +631,10 @@ class IngestSpec extends AnyFunSuite {
       val base = java.nio.file.Files.createTempDirectory("ingest-orphan-").toString
       val root = s"$base/$family"
       def run(id: Long, epoch: String) = {
-        val r = Ingest.ingestBatch(docs(id -> texts(id)),
-          "doc_id", "text", base + "/nd", base + "/chunks", epoch,
-          compactEvery = 3, spanRootPath = Some(base + "/spans"),
-          spanCompactEvery = 3)
+        val r = Ingest.ingestBatch(docs(id -> texts(id)), epoch,
+          Ingest.Loop("doc_id", "text", base + "/nd", base + "/chunks",
+            compactEvery = 3, spanRootPath = Some(base + "/spans"),
+            spanCompactEvery = 3))
         graft.GraftCaches.clearAll()
         r
       }
@@ -667,8 +674,8 @@ class IngestSpec extends AnyFunSuite {
     // Each 1-doc append lands exactly one right-sized file, so
     // ndCompactFiles = 2 rolls the generation on every second accept.
     def run(id: Long, epoch: String) = {
-      val r = Ingest.ingestBatch(docs(id -> texts(id)),
-        "doc_id", "text", nd, ch, epoch, ndCompactFiles = 2)
+      val r = Ingest.ingestBatch(docs(id -> texts(id)), epoch,
+        Ingest.Loop("doc_id", "text", nd, ch, ndCompactFiles = 2))
       val d = decisionsOf(r.decisions)
       graft.GraftCaches.clearAll()
       (r, d)
@@ -717,8 +724,8 @@ class IngestSpec extends AnyFunSuite {
       1L -> "the river flows past the old mill near the quiet village green",
       2L -> "quantum processors require cryogenic cooling for stable overnight operation")
     def run(id: Long, epoch: String) = {
-      val r = Ingest.ingestBatch(docs(id -> texts(id)),
-        "doc_id", "text", nd, ch, epoch, ndCompactFiles = 2)
+      val r = Ingest.ingestBatch(docs(id -> texts(id)), epoch,
+        Ingest.Loop("doc_id", "text", nd, ch, ndCompactFiles = 2))
       graft.GraftCaches.clearAll()
       r
     }
@@ -743,10 +750,10 @@ class IngestSpec extends AnyFunSuite {
       2L -> "quantum processors require cryogenic cooling for stable overnight operation")
     // Only doc 1 has an embedding: doc 2 is accepted but never reaches
     // the vector index — the report must say so.
-    val r = Ingest.ingestBatch(batch, "doc_id", "text",
-      base + "/nd", base + "/chunks", "e1",
-      embeddings = Some(Seq((1L, vecOf(1))).toDF("vec_id", "embedding")),
-      ivfIndexPath = Some(base + "/ivf"), ivfNlist = 1)
+    val r = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text",
+      base + "/nd", base + "/chunks", ivfIndexPath = Some(base + "/ivf"),
+      ivfNlist = 1),
+      embeddings = Some(Seq((1L, vecOf(1))).toDF("vec_id", "embedding")))
     assert(decisionsOf(r.decisions).values.forall(_ == Ingest.Accepted))
     assert(r.appendedVectors == 1 && r.acceptedWithoutVector == 1,
       s"got vectors=${r.appendedVectors} noVec=${r.acceptedWithoutVector}")
@@ -772,10 +779,11 @@ class IngestSpec extends AnyFunSuite {
     val r1 = Ingest.ingestBatch(docs(
         1L -> "the river flows past the old mill near the quiet village green",
         2L -> "quantum processors require cryogenic cooling for stable operation"),
-      "doc_id", "text", nd, ch, "e1",
+      "e1",
+      Ingest.Loop("doc_id", "text", nd, ch, ivfIndexPath = Some(ivf),
+        ivfNlist = 1),
       embeddings = Some(Seq((1L, vecOf(1)), (2L, vecOf(2)))
-        .toDF("vec_id", "embedding")),
-      ivfIndexPath = Some(ivf), ivfNlist = 1)
+        .toDF("vec_id", "embedding")))
     assert(r1.appendedDocs == 2)
     graft.GraftCaches.clearAll()
     val rep = Ingest.indexReport(spark, nd, ch, Some(ivf))
@@ -811,10 +819,10 @@ class IngestSpec extends AnyFunSuite {
       (2L, Array.fill(8)(9.0f))) // far off the yardstick: gated
       .toDF("vec_id", "embedding") // doc 3 has NO embedding: passes
     def run() = {
-      val r = Ingest.ingestBatch(batch, "doc_id", "text",
-        base + "/nd", base + "/chunks", "e1",
-        embeddings = Some(emb), ivfIndexPath = Some(base + "/ivf"),
-        ivfNlist = 1, outlierModelPath = Some(base + "/om"))
+      val r = Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text",
+        base + "/nd", base + "/chunks", ivfIndexPath = Some(base + "/ivf"),
+        ivfNlist = 1, outlierModelPath = Some(base + "/om")),
+        embeddings = Some(emb))
       val d = decisionsOf(r.decisions)
       graft.GraftCaches.clearAll()
       (r, d)
@@ -839,9 +847,9 @@ class IngestSpec extends AnyFunSuite {
     assert(r1b.appendedDocs == 0 && r1b.appendedVectors == 0)
     // Arming the gate without embeddings is a loud misuse.
     val ex = intercept[IllegalArgumentException] {
-      Ingest.ingestBatch(batch, "doc_id", "text",
-        base + "/nd2", base + "/chunks2", "e1",
-        outlierModelPath = Some(base + "/om"))
+      Ingest.ingestBatch(batch, "e1", Ingest.Loop("doc_id", "text",
+        base + "/nd2", base + "/chunks2",
+        outlierModelPath = Some(base + "/om")))
     }
     assert(ex.getMessage.contains("outlier gate"))
     graft.GraftCaches.clearAll()
@@ -858,10 +866,9 @@ class IngestSpec extends AnyFunSuite {
       // are attributable to the SPAN gate alone (CDC chunk boundaries
       // inside the shared passage would otherwise be a second, chunking-
       // dependent rejection path).
-      val r = Ingest.ingestBatch(b, "doc_id", "text", nd, ch, epoch,
-        dupRatio = 2.0,
-        spanRootPath = Some(sp), spanK = 5, maxBoilerplate = 0.5,
-        spanCompactEvery = 3)
+      val r = Ingest.ingestBatch(b, epoch, Ingest.Loop("doc_id", "text", nd,
+        ch, dupRatio = 2.0, spanRootPath = Some(sp), spanK = 5,
+        maxBoilerplate = 0.5, spanCompactEvery = 3))
       val d = decisionsOf(r.decisions)
       graft.GraftCaches.clearAll()
       (r, d)
@@ -934,10 +941,10 @@ class IngestSpec extends AnyFunSuite {
       3L -> "ancient pottery fragments reveal trade routes across the mediterranean basin",
       4L -> "migratory birds navigate vast distances using magnetic fields and stars")
     def run(id: Long, epoch: String) = {
-      val r = Ingest.ingestBatch(docs(id -> texts(id)), "doc_id", "text",
-        nd, ch, epoch,
-        embeddings = Some(Seq((id, vecOf(id.toInt))).toDF("vec_id", "embedding")),
-        ivfIndexPath = Some(ivf), ivfNlist = 1, ivfCompactFiles = 2)
+      val r = Ingest.ingestBatch(docs(id -> texts(id)), epoch,
+        Ingest.Loop("doc_id", "text", nd, ch, ivfIndexPath = Some(ivf),
+          ivfNlist = 1, ivfCompactFiles = 2),
+        embeddings = Some(Seq((id, vecOf(id.toInt))).toDF("vec_id", "embedding")))
       graft.GraftCaches.clearAll()
       r
     }
@@ -1000,10 +1007,10 @@ class IngestSpec extends AnyFunSuite {
       3L -> "ancient pottery fragments reveal trade routes across the mediterranean basin",
       4L -> "migratory birds navigate vast distances using magnetic fields and stars")
     def run(id: Long, epoch: String) = {
-      val r = Ingest.ingestBatch(docs(id -> texts(id)), "doc_id", "text",
-        nd, ch, epoch,
-        embeddings = Some(Seq((id, vecOf(id.toInt))).toDF("vec_id", "embedding")),
-        pqIndexPath = Some(pq), ivfNlist = 1, pqCompactFiles = 2, pqM = 4)
+      val r = Ingest.ingestBatch(docs(id -> texts(id)), epoch,
+        Ingest.Loop("doc_id", "text", nd, ch, pqIndexPath = Some(pq),
+          ivfNlist = 1, pqCompactFiles = 2, pqM = 4),
+        embeddings = Some(Seq((id, vecOf(id.toInt))).toDF("vec_id", "embedding")))
       graft.GraftCaches.clearAll()
       r
     }
@@ -1078,12 +1085,10 @@ class IngestSpec extends AnyFunSuite {
       val emb =
         if (withVec) Seq((id, vecOf(id.toInt))).toDF("vec_id", "embedding")
         else Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-      val r = Ingest.ingestBatch(docs(id -> texts(id)), "doc_id", "text",
-        base + "/nd", base + "/chunks", epoch,
-        embeddings = Some(emb),
-        ivfIndexPath = Some(base + "/ivf"),
-        pqIndexPath = Some(base + "/pq"),
-        ivfNlist = 1, pqM = 4)
+      val r = Ingest.ingestBatch(docs(id -> texts(id)), epoch,
+        Ingest.Loop("doc_id", "text", base + "/nd", base + "/chunks",
+          ivfIndexPath = Some(base + "/ivf"), pqIndexPath = Some(base + "/pq"),
+          ivfNlist = 1, pqM = 4), embeddings = Some(emb))
       graft.GraftCaches.clearAll()
       r
     }

@@ -52,12 +52,11 @@ class ManagedRootSpec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     Bpe.bpeTrain(batch, "text", numMerges = 8).write(tok)
     def ingest(epoch: String) = {
-      val r = Ingest.ingestBatch(batch, "doc_id", "text", nd, ch, epoch,
-        embeddings = Some(emb), ivfIndexPath = Some(ivf),
-        pqIndexPath = Some(pq), ivfNlist = 1, pqM = 4,
-        spanRootPath = Some(sp), tokenizerModelPath = Some(tok),
+      val r = Ingest.ingestBatch(batch, epoch, Ingest.Loop("doc_id", "text",
+        nd, ch, ivfIndexPath = Some(ivf), pqIndexPath = Some(pq), ivfNlist = 1,
+        pqM = 4, spanRootPath = Some(sp), tokenizerModelPath = Some(tok),
         binExportRootPath = Some(bins), binExportShards = 2,
-        binExportBudget = 8)
+        binExportBudget = 8), embeddings = Some(emb))
       val d = r.decisions.select("decision").as[String].collect().toSet
       graft.GraftCaches.clearAll()
       (r, d)

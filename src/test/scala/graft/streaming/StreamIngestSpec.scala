@@ -47,10 +47,10 @@ class StreamIngestSpec extends AnyFunSuite {
     // the scoped-cache contract.
     val reports = ArrayBuffer.empty[(Long, Map[Long, String], Long, Long, Long, Long)]
     val sink: (DataFrame, Long) => Unit = Ingest.ingestSink(
-      "doc_id", "text", nd, ch,
+      Ingest.Loop("doc_id", "text", nd, ch,
+        ivfIndexPath = Some(ivf), ivfNlist = 1,
+        spanRootPath = Some(base + "/spans")),
       embeddingCol = Some("embedding"),
-      ivfIndexPath = Some(ivf), ivfNlist = 1,
-      spanRootPath = Some(base + "/spans"),
       onReport = (id, r) => reports += ((id,
         r.decisions.as[(Long, String)].collect().toMap,
         r.appendedDocs, r.appendedVectors, r.appendedChunks,
@@ -130,8 +130,8 @@ class StreamIngestSpec extends AnyFunSuite {
 
     val reports = ArrayBuffer.empty[(Long, Map[Long, (String, Long)])]
     val sink: (DataFrame, Long) => Unit = Ingest.ingestSink(
-      "doc_id", "text", base + "/nd", base + "/chunks",
-      tokenizerModelPath = Some(mp),
+      Ingest.Loop("doc_id", "text", base + "/nd", base + "/chunks",
+        tokenizerModelPath = Some(mp)),
       onReport = (id, r) => reports += ((id,
         r.decisions.collect()
           .map(x => x.getLong(0) -> ((x.getString(1), x.getLong(2))))
